@@ -44,6 +44,13 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _tmpfs_root() -> str:
+    """Root of the cross-session fixture caches: tmpfs when there is one."""
+    import os
+
+    return "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+
+
 def _content_stamp(sf_dir: str, table: str) -> str:
     """mtime_ns+size stamp of a table's parquet under ``sf_dir``.
 
@@ -78,7 +85,7 @@ def _ivf_codebook_cached(
     import json
     import os
 
-    tmp_root = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    tmp_root = _tmpfs_root()
     key = hashlib.md5(
         f"{sf_dir}|{_content_stamp(sf_dir, 'embeddings')}"
         f"|l{n_lists}|i{kmeans_iters}|s{seed}".encode()
@@ -2381,7 +2388,7 @@ def q_streaming_asof(spark, sf_dir):
 
     from deep_ner_spark.streaming.asof import streaming_asof_attach
 
-    tmp_root = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    tmp_root = _tmpfs_root()
     # content stamp in the key: regenerating events.parquet in place must
     # invalidate the cached chunks, or the streaming result silently
     # diverges from the fresh batch oracle (round-6 ADVICE)

@@ -21,18 +21,37 @@ from deep_ner_spark import textfns
 
 _DASHES_TO = "-" * len(textfns.DASH_VARIANTS)
 
+# Java regex classes equal to Python's ``re`` classes on str.  Java's
+# ``(?U)\w`` also takes combining marks, connector punctuation and ZWJ/ZWNJ
+# and leaves out No digits such as '²'; Python's ``\w`` is exactly
+# letters, numbers and '_'.  Java's ``(?U)\s`` is Unicode White_Space,
+# which lacks the \x1c-\x1f separators that Python's ``\s`` includes.
+# tests/test_spark_text.py pins both over every assigned BMP code point.
+_W = r"\p{L}\p{N}_"
+_S = r"\s\x1c-\x1f"
+JVM_SPACE = rf"(?U)[{_S}]"
+# textfns._TOKEN_RE, ``\w+|[^\w\s]``, with the classes above
+JVM_TOKEN = rf"(?U)[{_W}]+|[^{_W}{_S}]"
+
 
 def normalize_text_col(col: Column) -> Column:
     """JVM-side equivalent of textfns.normalize_text (utils.py:1174-1182).
 
-    ``(?U)`` turns on Java's UNICODE_CHARACTER_CLASS so ``\\s`` matches the
-    same Unicode White_Space set Python's ``re`` uses; equality with the
-    Python function is pinned by tests/test_spark_text.py.
+    Equality with the Python function is pinned by tests/test_spark_text.py.
     Length-preserving (1 char -> 1 char), so downstream char offsets hold.
     """
     return F.regexp_replace(
-        F.translate(col, textfns.DASH_VARIANTS, _DASHES_TO), r"(?U)\s", " "
+        F.translate(col, textfns.DASH_VARIANTS, _DASHES_TO), JVM_SPACE, " "
     )
+
+
+def word_token_count_col(col: Column) -> Column:
+    """JVM-side ``len(textfns.tokenize(normalize_text(text)))``.
+
+    Normalization never changes the count (dashes stay punctuation,
+    whitespace stays whitespace), so it runs on the raw text.
+    """
+    return F.regexp_count(col, F.lit(JVM_TOKEN))
 
 
 def shape_col_sql(col: Column) -> Column:

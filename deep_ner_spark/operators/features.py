@@ -207,7 +207,7 @@ def make_feature_matrix_udf(
 
     * the per-token feature vector (embedding ‖ shape one-hot ‖ linguistic
       one-hot) depends only on (token, pos, dep), so it is computed once per
-      distinct triple and cached for the executor's lifetime — the per-turn
+      distinct triple and cached per Arrow batch — the per-turn
       work is a stack of cached rows plus the BOS/EOS position flags.  This
       also removes the reference's linear vocab.index() per-token hot spot
       (elmo_ner.py:507).
@@ -268,6 +268,69 @@ def make_feature_matrix_udf(
     return assemble
 
 
+def _token_row_table(
+    vocab: Tuple[str, ...], emb_dim: int, cache_max_entries: int | None
+):
+    """Token feature rows for the fused featurizers, cached per Spark task.
+
+    Distinct (token, is_first, parity) triples map to a row of a growing
+    float32 table V, so the per-batch work is ONE fancy-index gather
+    ``V[ids]`` plus vectorized BOS/EOS flag scatters — no per-token row
+    copies, no per-turn np.zeros (the VERDICT r2 item: batch numpy one-hot
+    scatter).  The featurize closure is unpickled once per task, so the
+    table lives for one task (across its Arrow batches); it is allocated
+    on the task's first batch, because a table built here would ride in
+    every task's pickled closure (~300 KB of zeros at the flagship width).
+
+    The table is BOUNDED: a Zipf-tailed corpus (ids, numbers, typos) over
+    a large partition would otherwise grow it without limit.  At
+    ``cache_max_entries`` distinct triples (~width*4 bytes each; the
+    default caps V at ~100-200MB) it resets — output is unaffected (rows
+    are recomputed), only the tail of rare tokens re-pays its vector build.
+
+    Returns ``(start_batch, row_of, gather)``.  ``start_batch()`` runs
+    BETWEEN batches only: a mid-batch reset would orphan row ids already
+    collected for the batch.
+    """
+    S = len(vocab)
+    vocab_index = {s: i for i, s in enumerate(vocab)}
+    width = feature_width(vocab, emb_dim)
+    if cache_max_entries is None:
+        cache_max_entries = max(int(50_000_000 / max(width, 1)), 65_536)
+    state = {"V": None, "n": 0, "idx": {}}
+
+    def start_batch() -> None:
+        if state["V"] is None or state["n"] >= cache_max_entries:
+            state["V"] = np.zeros((1024, width), dtype=np.float32)
+            state["n"] = 0
+            state["idx"] = {}
+
+    def row_of(tok: str, is_first: bool, parity: int) -> int:
+        key = (tok, is_first, parity)
+        idx = state["idx"]
+        i = idx.get(key)
+        if i is None:
+            shape = textfns.shape_of_string(tok)
+            p, d = textfns._pos_dep_cached(tok, is_first, parity)
+            v = np.zeros(width, dtype=np.float32)
+            v[:emb_dim] = textfns.hash_embedding(tok, emb_dim)
+            v[emb_dim + vocab_index.get(shape, S)] = 1.0
+            v[emb_dim + S + 3:] = textfns.pos_dep_one_hot(p, d)
+            i = state["n"]
+            if i == state["V"].shape[0]:
+                state["V"] = np.concatenate([state["V"], np.zeros_like(state["V"])])
+            state["V"][i] = v
+            state["n"] = i + 1
+            idx[key] = i
+        return i
+
+    def gather(ids: list) -> np.ndarray:
+        # fancy indexing copies rows, so later flag writes never alias V
+        return state["V"][np.asarray(ids, dtype=np.int64)]
+
+    return start_batch, row_of, gather
+
+
 def make_fused_featurize_udf(
     vocab: Tuple[str, ...],
     max_seq_length: int,
@@ -295,7 +358,6 @@ def make_fused_featurize_udf(
     from deep_ner_spark import textfns
 
     S = len(vocab)
-    vocab_index = {s: i for i, s in enumerate(vocab)}
     width = feature_width(vocab, emb_dim)
     bos_col = emb_dim + S + 1
     eos_col = emb_dim + S + 2
@@ -314,49 +376,13 @@ def make_fused_featurize_udf(
     fields.append(T.StructField("features", T.BinaryType()))
     schema = T.StructType(fields)
 
-    # executor-lifetime caches shared across Arrow batches: distinct
-    # (token, is_first, parity) triples map to a row in a growing vector
-    # table V, so the per-batch work is ONE fancy-index gather V[ids] plus
-    # vectorized BOS/EOS flag scatters — no per-token row copies, no
-    # per-turn np.zeros (the VERDICT r2 item: batch numpy one-hot scatter).
-    # The cache is BOUNDED: with Python worker reuse (default on) and a
-    # Zipf-tailed corpus (ids, numbers, typos) an unbounded table would
-    # grow without limit over a long-lived worker.  At cache_max_entries
-    # distinct triples (~width*4 bytes each; default caps V at ~100-200MB)
-    # the table is reset — correctness is unaffected (rows are recomputed),
-    # only the tail of rare tokens re-pays its vector build.
-    state = {"V": np.zeros((1024, width), dtype=np.float32), "n": 0, "idx": {}}
-    if cache_max_entries is None:
-        cache_max_entries = max(int(50_000_000 / max(width, 1)), 65_536)
-
-    def row_of(tok: str, is_first: bool, parity: int) -> int:
-        key = (tok, is_first, parity)
-        idx = state["idx"]
-        i = idx.get(key)
-        if i is None:
-            shape = textfns.shape_of_string(tok)
-            p, d = textfns._pos_dep_cached(tok, is_first, parity)
-            v = np.zeros(width, dtype=np.float32)
-            v[:emb_dim] = textfns.hash_embedding(tok, emb_dim)
-            v[emb_dim + vocab_index.get(shape, S)] = 1.0
-            v[emb_dim + S + 3:] = textfns.pos_dep_one_hot(p, d)
-            i = state["n"]
-            if i == state["V"].shape[0]:
-                state["V"] = np.concatenate([state["V"], np.zeros_like(state["V"])])
-            state["V"][i] = v
-            state["n"] = i + 1
-            idx[key] = i
-        return i
+    start_batch, row_of, gather = _token_row_table(vocab, emb_dim, cache_max_entries)
 
     @pandas_udf(schema)
     def fused(texts: pd.Series) -> pd.DataFrame:
-        # bound the executor-lifetime cache BETWEEN batches (a mid-batch
-        # reset would orphan row ids already collected for this batch);
-        # one batch adds at most batch_rows*max_seq_length entries on top.
-        if state["n"] >= cache_max_entries:
-            state["V"] = np.zeros((1024, width), dtype=np.float32)
-            state["n"] = 0
-            state["idx"] = {}
+        # one batch adds at most batch_rows*max_seq_length entries on top
+        # of the cap
+        start_batch()
         cols: dict = {
             "tokens": [],
             "starts": [],
@@ -385,8 +411,7 @@ def make_fused_featurize_udf(
                 cols["pos"].append([p for p, _ in tags])
                 cols["dep"].append([d for _, d in tags])
         # one gather for the whole batch, then vectorized BOS/EOS scatters
-        # (fancy indexing copies rows, so the flag writes never alias V)
-        stacked = state["V"][np.asarray(ids, dtype=np.int64)]
+        stacked = gather(ids)
         offs = np.zeros(len(lens) + 1, dtype=np.int64)
         np.cumsum(np.asarray(lens, dtype=np.int64), out=offs[1:])
         nonempty = offs[:-1][np.asarray(lens, dtype=np.int64) > 0]
@@ -419,7 +444,7 @@ def make_fused_featurize_arrow_fn(
     norm_col: str = "norm_text",
 ):
     """``mapInArrow`` twin of :func:`make_fused_featurize_udf` — same
-    per-token vector table, same bounded executor-lifetime cache, same
+    per-token vector table, same bounded per-task cache, same
     outputs bit-for-bit, minus two full copies of the feature bytes.
 
     The pandas_udf path materialized the batch matrix three times:
@@ -444,7 +469,6 @@ def make_fused_featurize_arrow_fn(
     from deep_ner_spark import textfns
 
     S = len(vocab)
-    vocab_index = {s: i for i, s in enumerate(vocab)}
     width = feature_width(vocab, emb_dim)
     bos_col = emb_dim + S + 1
     eos_col = emb_dim + S + 2
@@ -454,40 +478,14 @@ def make_fused_featurize_arrow_fn(
         1, min(chunk_rows, (1 << 30) // max(max_seq_length * row_bytes, 1))
     )
 
-    state = {"V": np.zeros((1024, width), dtype=np.float32), "n": 0, "idx": {}}
-    if cache_max_entries is None:
-        cache_max_entries = max(int(50_000_000 / max(width, 1)), 65_536)
-
-    def row_of(tok: str, is_first: bool, parity: int) -> int:
-        key = (tok, is_first, parity)
-        idx = state["idx"]
-        i = idx.get(key)
-        if i is None:
-            shape = textfns.shape_of_string(tok)
-            p, d = textfns._pos_dep_cached(tok, is_first, parity)
-            v = np.zeros(width, dtype=np.float32)
-            v[:emb_dim] = textfns.hash_embedding(tok, emb_dim)
-            v[emb_dim + vocab_index.get(shape, S)] = 1.0
-            v[emb_dim + S + 3:] = textfns.pos_dep_one_hot(p, d)
-            i = state["n"]
-            if i == state["V"].shape[0]:
-                state["V"] = np.concatenate([state["V"], np.zeros_like(state["V"])])
-            state["V"][i] = v
-            state["n"] = i + 1
-            idx[key] = i
-        return i
+    start_batch, row_of, gather = _token_row_table(vocab, emb_dim, cache_max_entries)
 
     def fn(batches):
         for rb in batches:
             ncol = rb.schema.get_field_index(norm_col)
             for off in range(0, rb.num_rows, chunk_rows):
                 sub = rb.slice(off, min(chunk_rows, rb.num_rows - off))
-                # bound the executor-lifetime cache BETWEEN chunks (a
-                # mid-chunk reset would orphan row ids already collected)
-                if state["n"] >= cache_max_entries:
-                    state["V"] = np.zeros((1024, width), dtype=np.float32)
-                    state["n"] = 0
-                    state["idx"] = {}
+                start_batch()
                 texts = sub.column(ncol).to_pylist()
                 ids: list = []
                 lens: list = []
@@ -516,9 +514,8 @@ def make_fused_featurize_arrow_fn(
                         ]
                         pos_l.append([p for p, _ in tags])
                         dep_l.append([d for _, d in tags])
-                # one gather for the whole chunk, then vectorized BOS/EOS
-                # scatters (fancy indexing copies rows, never aliasing V)
-                stacked = state["V"][np.asarray(ids, dtype=np.int64)]
+                # one gather for the whole chunk, then vectorized BOS/EOS scatters
+                stacked = gather(ids)
                 lens_np = np.asarray(lens, dtype=np.int64)
                 offs = np.zeros(len(lens) + 1, dtype=np.int64)
                 np.cumsum(lens_np, out=offs[1:])

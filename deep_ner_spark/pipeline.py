@@ -24,6 +24,7 @@ from typing import Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deep_ner_spark.functions.text import word_token_count_col
 from deep_ner_spark.operators.asof import asof_join, asof_join_salted
 from deep_ner_spark.operators.features import featurize_fused, fit_shape_vocab_from_text
 from deep_ner_spark.operators.windows import forward_fill, lag_lead, sessionize
@@ -77,15 +78,14 @@ def featurize_transcripts(
         slim, ["conv_id"], "ts", session_gap_seconds, order_cols=["turn_idx"]
     )
     slim = forward_fill(slim, ["conv_id"], ["turn_idx"], ["role", "tool"])
-    # token count JVM-side (regexp identical to the pinned tokenizer; (?U)
-    # gives Python's Unicode \w/\s classes) so the lag/lead window runs in
-    # the slim phase — a Python-eval node would lose the partitioning info
-    # and force a second exchange if this ran after tokenize_turns
+    # token count JVM-side (same count as the Python tokenizer) so the
+    # lag/lead window runs in the slim phase — a Python-eval node would lose
+    # the partitioning info and force a second exchange if this ran after
+    # tokenize_turns
     slim = slim.withColumn(
         "n_tokens",
         F.least(
-            F.regexp_count(F.col("text"), F.lit(r"(?U)\w+|[^\w\s]")),
-            F.lit(max_seq_length),
+            word_token_count_col(F.col("text")), F.lit(max_seq_length)
         ).cast("int"),
     )
     slim = lag_lead(slim, ["conv_id"], ["turn_idx"], ["n_tokens"], offsets=(1,))

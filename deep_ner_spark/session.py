@@ -40,13 +40,22 @@ def package_zip() -> str:
     return out
 
 
+def _usable_cpus() -> int:
+    """Cores this process may run on: every Python worker pays its import
+    and per-task start-up, so more workers than cores only costs CPU."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "deep-ner-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # one-ish partition per core locally; on a cluster this is overridden

@@ -36,7 +36,7 @@ import numpy as np
 # The ten dash variants the reference folds to '-' (utils.py:1175-1176).
 DASH_VARIANTS = "—–‒‑‐﹣－⁃֊᠆"
 _DASH_TABLE = str.maketrans({c: "-" for c in DASH_VARIANTS})
-_WS_RE = re.compile(r"\s")  # Python \s == Unicode White_Space for str
+_WS_RE = re.compile(r"\s")  # Unicode White_Space plus \x1c-\x1f
 
 
 def normalize_text(s: str) -> str:

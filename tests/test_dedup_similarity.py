@@ -353,15 +353,20 @@ def test_ivf_kmeans_codebook(spark):
     assert full == exact3
 
 
-def test_ivf_codebook_cache_misses_on_fixture_regeneration(spark, tmp_path):
+def test_ivf_codebook_cache_misses_on_fixture_regeneration(
+    spark, tmp_path, monkeypatch
+):
     """The entry harness's tmpfs codebook cache is keyed on the fixture's
     CONTENT stamp, not just its path: regenerating embeddings.parquet in
     place (different bytes, same path) must miss the cache and refit, so
     a stale codebook can never be served against fresh data (the r6
     streaming-cache bug class, IVF edition — r7 VERDICT task 7).  Fails
-    if the key drops the `_content_stamp` component."""
+    if the key drops the `_content_stamp` component.  The cache root is
+    pointed at tmp_path so the test leaves nothing in the shared tmpfs."""
     import __spark_entry__ as e
 
+    cache_root = tmp_path / "tmpfs"
+    monkeypatch.setattr(e, "_tmpfs_root", lambda: str(cache_root))
     rng = np.random.default_rng(5)
 
     def write_emb(scale):
@@ -390,6 +395,7 @@ def test_ivf_codebook_cache_misses_on_fixture_regeneration(spark, tmp_path):
     cb3 = e._ivf_codebook_cached(spark, str(tmp_path), n_lists=2,
                                  kmeans_iters=2, seed=7)
     assert cb3 != cb1
+    assert len(list((cache_root / "deep_ner_ivf_codebook").glob("*.json"))) == 2
 
 
 def test_jaccard_prefix_exact_at_all_thresholds(spark):

@@ -42,7 +42,6 @@ def main():
     for name in ONLY:
         best, jobs_per = None, None
         for _ in range(REPS):
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
             ids0 = set(tracker.getJobIdsForGroup() or [])
             sc.setJobDescription(f"r8b:{name}")
             t0 = time.time()

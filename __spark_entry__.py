@@ -1281,7 +1281,8 @@ def q_lsh_candidates(spark, sf_dir):
     "simhash_bits",
     """
     WITH toks AS (
-      SELECT doc_id, md5(unnest(string_split_regex(trim(text), '\\s+'))) AS h
+      SELECT doc_id,
+             md5(unnest(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))) AS h
       FROM documents WHERE doc_id < 100),
     bits AS (
       SELECT doc_id, h, unnest(generate_series(0, 63)) AS b FROM toks),
@@ -1295,25 +1296,17 @@ def q_lsh_candidates(spark, sf_dir):
     """,
 )
 def q_simhash_bits(spark, sf_dir):
-    """SimHash bit vector (long form, engine-portable md5 bit derivation)."""
+    """SimHash bit vector of ``simhash64`` (long form: bit b of the
+    fingerprint, unpacked with ``shiftright(simhash, b) & 1``)."""
+    from deep_ner_spark.operators.dedup import simhash64
+
     docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    toks = docs.select(
+    return simhash64(docs, "doc_id", "text").select(
+        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("b"), "simhash"
+    ).select(
         "doc_id",
-        F.explode(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias(
-            "token"
-        ),
-    ).select("doc_id", F.md5("token").alias("h"))
-    bits = toks.select(
-        "doc_id", "h", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("b")
-    ).withColumn(
-        "hexd",
-        F.expr("instr('0123456789abcdef', substring(h, CAST(b / 4 AS INT) + 1, 1)) - 1"),
-    ).withColumn("bit", F.expr("shiftright(hexd, CAST(b % 4 AS INT)) & 1"))
-    return (
-        bits.groupBy("doc_id", F.col("b").cast("long").alias("b"))
-        .agg(
-            F.when(F.sum(F.col("bit") * 2 - 1) > 0, 1).otherwise(0).cast("int").alias("bit")
-        )
+        F.col("b").cast("long").alias("b"),
+        F.expr("shiftright(simhash, b) & 1").cast("int").alias("bit"),
     )
 
 
@@ -1389,7 +1382,8 @@ def q_asof_salted(spark, sf_dir):
     "simhash_near_pairs",
     """
     WITH toks AS (
-      SELECT doc_id, md5(unnest(string_split_regex(trim(text), '\\s+'))) AS h
+      SELECT doc_id,
+             md5(unnest(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))) AS h
       FROM documents),
     bits AS (
       SELECT doc_id, h, unnest(generate_series(0, 63)) AS b FROM toks),

@@ -68,6 +68,148 @@ def test_simhash_identical_for_dups_and_near_pairs(docs, spark):
     assert near[(0, 2)] == 0
 
 
+def _md5_bits(tok: str) -> int:
+    """The 64 SimHash vote bits of one token: bit b = bit (b % 4) of hex
+    digit (b // 4) of md5(tok), as an unsigned int."""
+    import hashlib
+
+    h = hashlib.md5(tok.encode()).hexdigest()
+    return sum(1 << b for b in range(64) if (int(h[b // 4], 16) >> (b % 4)) & 1)
+
+
+def _signed(v: int) -> int:
+    return v - (1 << 64) if v >> 63 else v
+
+
+def _simhash_reference(texts) -> dict:
+    """doc_id -> signed SimHash over the tokens of ALL of that id's rows;
+    ids without a token get no entry."""
+    import re
+
+    sums: dict = {}
+    for doc_id, text in texts:
+        for tok in re.split(r"\s+", text or ""):
+            if tok:
+                bits = _md5_bits(tok)
+                s = sums.setdefault(doc_id, [0] * 64)
+                for b in range(64):
+                    s[b] += 1 if (bits >> b) & 1 else -1
+    out = {}
+    for doc_id, s in sums.items():
+        out[doc_id] = _signed(sum(1 << b for b in range(64) if s[b] > 0))
+    return out
+
+
+def test_simhash64_matches_hashlib_reference(spark):
+    from deep_ner_spark.operators.dedup import simhash64
+
+    words = [f"w{i}" for i in range(200)]
+    # a token whose vote sets bit 63 (hex digit 15 >= 8)
+    top = next(w for w in words if _md5_bits(w) >> 63)
+    # two tokens that disagree on some bit: every disagreement is a tie
+    x, y = "alpha", "beta"
+    assert _md5_bits(x) ^ _md5_bits(y)
+    rng = np.random.default_rng(11)
+    rows = [
+        (0, f"{x} {y}"),                # ties -> bit 0: x AND y
+        (1, top),                       # bit 63 -> negative long
+        (2, f"{x} {x} {y}"),            # repeated token outvotes y
+        (3, x),                         # single token
+        (4, ""),                        # no tokens: no row
+        (5, " \t\n "),
+        (6, None),
+        (7, f"\t{x}  {y}\n"),           # edge tab/newline, double space
+        (8, f"\n{top} {x}\t{y}\t"),
+        (9, f"{x} {top}"),              # same id twice: one fingerprint
+        (9, f"{y}\n"),
+    ] + [(10 + i, " ".join(rng.choice(words, size=int(rng.integers(1, 30)))))
+         for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r["doc_id"]: r["simhash"] for r in simhash64(df, "doc_id", "text").collect()}
+    assert got == _simhash_reference(rows)
+    assert got[0] == _signed(_md5_bits(x) & _md5_bits(y))
+    assert got[1] < 0 and got[1] == _signed(_md5_bits(top))
+    assert got[2] == got[3] == _signed(_md5_bits(x))
+    assert got[7] == got[0]
+    assert not {4, 5, 6} & got.keys()
+    assert got[9] == _simhash_reference([(9, f"{x} {top} {y}")])[9]
+
+
+def _count_in_plan(df, cls: str) -> int:
+    js = df._jdf.queryExecution().optimizedPlan().toJSON()
+    return js.count(f'"class":"org.apache.spark.sql.catalyst.{cls}"')
+
+
+def test_simhash64_plan_has_few_aggregate_functions(spark):
+    """Pins the per-digit kernel: count + 4 bit sums + one bit_or (the
+    64-column form held 64 sums, each re-referenced by the bit pack)."""
+    from deep_ner_spark.operators.dedup import simhash64
+
+    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    n = _count_in_plan(simhash64(df, "doc_id", "text"), "expressions.aggregate.AggregateExpression")
+    assert 0 < n <= 8
+
+
+def test_hamming_near_pairs_once_each_without_aggregate(spark):
+    """Pairs sharing several blocks (identical hashes share all four) come
+    out once each, with no Aggregate (distinct) in the plan, and equal the
+    brute-force pair set."""
+    from deep_ner_spark.operators.dedup import hamming_near_pairs
+
+    rng = np.random.default_rng(5)
+    base = [int(v) for v in rng.integers(-(1 << 63), (1 << 63) - 1, size=12, dtype=np.int64)]
+    hashes = list(base)
+    for k, v in enumerate(base[:8]):  # copies 0-3 bits away, flips anywhere
+        flips = rng.choice(64, size=k % 4, replace=False)
+        hashes.append(_signed((v & ((1 << 64) - 1)) ^ sum(1 << int(b) for b in flips)))
+    hashes.append(base[0])  # a second exact copy of doc 0
+    sh = spark.createDataFrame(list(enumerate(hashes)), "doc_id long, simhash long")
+    out = hamming_near_pairs(sh, "doc_id", max_hamming=3, n_blocks=4, materialize=False)
+    assert _count_in_plan(out, "plans.logical.Aggregate") == 0
+    got = [(r["id_a"], r["id_b"], r["hamming"]) for r in out.collect()]
+    want = [
+        (i, j, bin((hashes[i] ^ hashes[j]) & ((1 << 64) - 1)).count("1"))
+        for i in range(len(hashes)) for j in range(i + 1, len(hashes))
+    ]
+    want = [p for p in want if p[2] <= 3]
+    assert len(got) == len(set(got))
+    assert sorted(got) == sorted(want)
+    assert len(want) >= 10
+
+
+def test_simhash_twins_ignore_edge_whitespace(spark, tmp_path):
+    """The simhash_bits / simhash_near_pairs driver queries and their DuckDB
+    twins agree on texts that start or end with a tab or newline (DuckDB's
+    trim strips spaces only, so an unfiltered split votes md5(''))."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    texts = [
+        "\tspark shuffle join",
+        "spark shuffle join\n",
+        "\nspark shuffle join stage\t",
+        "alpha beta\tgamma\n",
+        "\t\nalpha beta gamma",
+        "plain words only here",
+    ]
+    pd.DataFrame({"doc_id": np.arange(len(texts), dtype="int64"), "text": texts}).to_parquet(
+        tmp_path / "documents.parquet"
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    sql, queries = e.oracle_sql(), e.queries()
+    for name in ("simhash_bits", "simhash_near_pairs"):
+        want = sorted(con.execute(sql[name]).fetchall())
+        got = sorted(tuple(r) for r in queries[name](spark, str(tmp_path)).collect())
+        assert got == want, name
+        if name == "simhash_near_pairs":
+            assert (0, 1, 0) in got and (3, 4, 0) in got
+    con.close()
+
+
 def test_cosine_topk_exact_and_lsh_recall(spark):
     from deep_ner_spark.operators.similarity import cosine_topk, lsh_cosine_topk
 

@@ -7,7 +7,8 @@ old: ids = union(cand.id_a, cand.id_b).distinct(); sh_i JOIN ids (inner)
 new: ids = union (non-distinct);                    sh_i JOIN ids (semi)
 """
 import sys, time
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from deep_ner_spark.session import get_spark
 from pyspark.sql import functions as F
 

@@ -6,7 +6,8 @@ NOT the driver's generator — used only for A/B deltas at candidate-volume
 scale, never for oracles.
 """
 import sys, random
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from deep_ner_spark.session import get_spark
 
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000

@@ -1,6 +1,7 @@
 """Stage split of jaccard_pairs at the synthetic 50k-doc scale."""
 import sys, time
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from deep_ner_spark.session import get_spark
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window

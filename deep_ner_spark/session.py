@@ -86,16 +86,17 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     if master.startswith("local"):
-        # Locally the driver JVM runs every task, so its heap takes all the
-        # task garbage and the 32 MB Tungsten pages.  G1's adaptive young
-        # generation grows eden GC by GC from pause predictions, so how much
-        # of the heap a job touches (its RSS) depended on when collections
-        # fell: `near_dup` (2k docs, 3 GB heap, 4-core VM) ended a run at
-        # 4.13-4.19 GB or at 4.52-4.58 GB.  A young generation fixed at a
-        # third of the heap touches the same pages every run (3.48-3.55 GB,
-        # job times unchanged).  Spark puts these defaults before
-        # extraJavaOptions, so a user's -Xmn or NewRatio there still wins.
-        b = b.config("spark.driver.defaultJavaOptions", "-XX:NewRatio=2")
+        # Locally the driver JVM runs every task.  G1's adaptive young
+        # generation grows eden collection by collection from its pause
+        # predictions, and a touched heap page is never given back when
+        # -Xms = -Xmx, so the RSS of a run depended on when collections
+        # fell (±0.4 GB on perfbench `near_dup`, 3 GB heap, 4-core VM).  A
+        # young generation fixed at half the heap touches the same pages
+        # every run; a third of the heap did too, but its extra
+        # collections cost `backfill` ~5% of its throughput.  Spark puts
+        # these defaults before extraJavaOptions, so a caller's -Xmn or
+        # NewRatio there still wins.
+        b = b.config("spark.driver.defaultJavaOptions", "-XX:NewRatio=1")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -3,5 +3,4 @@ from deep_ner_spark.functions.text import (  # noqa: F401
     shape_col_sql,
     tokenize_struct_udf,
     shape_udf,
-    shapes_of_tokens_udf,
 )

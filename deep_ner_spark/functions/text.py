@@ -168,34 +168,3 @@ def shape_udf(tokens: pd.Series) -> pd.Series:
     """token -> shape string (full reference semantics, lru-cached)."""
     return tokens.map(lambda t: textfns.shape_of_string(t) if t is not None else None)
 
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def shapes_of_tokens_udf(token_arrays: pd.Series) -> pd.Series:
-    shape = textfns.shape_of_string
-    return token_arrays.map(
-        lambda arr: None if arr is None else [shape(t) for t in arr]
-    )
-
-
-@pandas_udf(T.StringType())
-def subword_shape_udf(subwords: pd.Series) -> pd.Series:
-    """BERT shape variant (bert_ner.py:1230-1261)."""
-    return subwords.map(
-        lambda t: textfns.shape_of_subword(t) if t is not None else None
-    )
-
-
-@pandas_udf(T.ArrayType(T.FloatType()))
-def hash_embedding_udf(tokens: pd.Series) -> pd.Series:
-    """Deterministic hash-projection embedding (see textfns.hash_embedding)."""
-    emb = textfns.hash_embedding
-    cache: dict = {}
-
-    def get(tok: str):
-        v = cache.get(tok)
-        if v is None:
-            v = emb(tok).tolist()
-            cache[tok] = v
-        return v
-
-    return tokens.map(lambda t: get(t) if t is not None else None)

@@ -1,10 +1,12 @@
 """Fitted aggregates + per-turn feature-matrix assembly (SURVEY A1/A2, §2.8).
 
 The reference builds dense padded per-channel ndarrays by hand
-(elmo_ner.py:503-541); here the columnar batch is Arrow, and the one-hot
-scatter happens vectorized in NumPy inside a ``pandas_udf``.  The fitted
-shape vocabulary (a global aggregate) is computed once with a hash
-aggregation and broadcast — the two-pass fit/reuse structure of the
+(elmo_ner.py:503-541); here the columnar batch is Arrow, and one
+``mapInArrow`` kernel (:func:`featurize_fused`) tokenizes each turn and
+gathers its one-hot rows vectorized in NumPy.  The pure-NumPy
+:func:`turn_feature_matrix` is the reference the tests compare it with.
+The fitted shape vocabulary (a global aggregate) is computed once with a
+hash aggregation and broadcast — the two-pass fit/reuse structure of the
 reference (fit at elmo_ner.py:103, reuse at :274) made explicit.
 
 Scale notes: the vocab agg is a map-side-combinable groupBy on a low-
@@ -23,7 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from deep_ner_spark import textfns
 
@@ -61,8 +62,6 @@ def fit_shape_vocab_from_text(
     combine).  On the flagship this removes most of the second full Python
     pass the vocab fit used to cost.
     """
-    from pyspark.sql import types as T
-
     out_schema = T.StructType(
         [
             T.StructField("shape", T.StringType()),
@@ -110,7 +109,7 @@ def fit_classes_list(entity_spans: DataFrame, ne_col: str = "ne_type") -> Tuple[
     return tuple(r[ne_col] for r in rows)
 
 
-# --- pure assembly functions (shared by UDF bodies and parity tests) ---------
+# --- pure assembly functions (the NumPy reference the tests compare with) ---
 
 
 def shape_one_hot_matrix(
@@ -194,84 +193,10 @@ def decode_feature_matrix(blob: bytes, width: int) -> np.ndarray:
     return np.frombuffer(blob, dtype="<f4").reshape(-1, width)
 
 
-def make_feature_matrix_udf(
-    vocab: Tuple[str, ...],
-    max_seq_length: int,
-    emb_dim: int = 16,
-    padded: bool = False,
-    fmt: str = "binary",
-):
-    """pandas_udf: (tokens, shapes, pos, dep) arrays -> per-turn matrix.
-
-    Performance: two deliberate choices, each worth ~10-20x at sf0.1:
-
-    * the per-token feature vector (embedding ‖ shape one-hot ‖ linguistic
-      one-hot) depends only on (token, pos, dep), so it is computed once per
-      distinct triple and cached per Arrow batch — the per-turn
-      work is a stack of cached rows plus the BOS/EOS position flags.  This
-      also removes the reference's linear vocab.index() per-token hot spot
-      (elmo_ner.py:507).
-    * ``fmt='binary'`` packs the matrix as little-endian float32 bytes (one
-      BinaryType cell per turn) instead of Arrow list<list<float>> — the
-      nested-list encoding dominated the job wall-clock (67s -> 3s at sf0.1).
-      ``decode_feature_matrix`` restores the ndarray; ``fmt='array'`` keeps
-      the self-describing nested form.
-
-    ``padded=False`` (engine default) emits only real-token rows — the
-    reference's padding rows are all-zero; parity tests use ``padded=True``.
-    """
-    S = len(vocab)
-    vocab_index = {s: i for i, s in enumerate(vocab)}
-    width = feature_width(vocab, emb_dim)
-    bos_col = emb_dim + S + 1
-    eos_col = emb_dim + S + 2
-
-    def build(tokens, shapes, pos, dep, to_cell):
-        cache: dict = {}
-
-        def vec(token: str, shape: str, p: str, d: str) -> np.ndarray:
-            key = (token, p, d)
-            v = cache.get(key)
-            if v is None:
-                v = np.zeros(width, dtype=np.float32)
-                v[:emb_dim] = textfns.hash_embedding(token, emb_dim)
-                v[emb_dim + vocab_index.get(shape, S)] = 1.0
-                v[emb_dim + S + 3:] = textfns.pos_dep_one_hot(p, d)
-                cache[key] = v
-            return v
-
-        out = []
-        for tk, sh, p, d in zip(tokens, shapes, pos, dep):
-            n = min(len(tk), max_seq_length)
-            rows = max_seq_length if padded else n
-            m = np.zeros((rows, width), dtype=np.float32)
-            for i in range(n):
-                m[i] = vec(tk[i], sh[i], p[i], d[i])
-            if rows:
-                m[0, bos_col] = 1.0
-                m[n - 1 if n > 0 else rows - 1, eos_col] = 1.0
-            out.append(to_cell(m))
-        return pd.Series(out)
-
-    if fmt == "binary":
-
-        @pandas_udf(T.BinaryType())
-        def assemble(tokens, shapes, pos, dep):
-            return build(tokens, shapes, pos, dep, lambda m: m.tobytes())
-
-    else:
-
-        @pandas_udf(T.ArrayType(T.ArrayType(T.FloatType())))
-        def assemble(tokens, shapes, pos, dep):
-            return build(tokens, shapes, pos, dep, list)
-
-    return assemble
-
-
 def _token_row_table(
     vocab: Tuple[str, ...], emb_dim: int, cache_max_entries: int | None
 ):
-    """Token feature rows for the fused featurizers, cached per Spark task.
+    """Token feature rows for the featurize kernel, cached per Spark task.
 
     Distinct (token, is_first, parity) triples map to a row of a growing
     float32 table V, so the per-batch work is ONE fancy-index gather
@@ -331,130 +256,37 @@ def _token_row_table(
     return start_batch, row_of, gather
 
 
-def make_fused_featurize_udf(
-    vocab: Tuple[str, ...],
-    max_seq_length: int,
-    emb_dim: int = 16,
-    emit_linguistics: bool = False,
-    cache_max_entries: int | None = None,
-):
-    """One Arrow round-trip: normalized text -> tokens + bounds + binary
-    feature matrix (+ shapes/pos/dep arrays when ``emit_linguistics``).
-
-    The split tokenize-then-featurize form ships the token arrays from
-    Python to the JVM and back into a second Python eval; fusing the two
-    stages halves the Arrow traffic on the dominant stage (the arrays are
-    produced and consumed inside one worker call).
-
-    ``emit_linguistics=False`` (default): shapes/pos/dep are still computed
-    (the matrix needs them) but NOT returned — the flagship pipeline's
-    final select discards those three string-array columns, so emitting
-    them only inflated the Arrow transfer with dead data; the split
-    tokenize path (operators/tokens.py) remains the source for consumers
-    that want the arrays themselves.
-    """
-    import pandas as pd
-
-    from deep_ner_spark import textfns
-
-    S = len(vocab)
-    width = feature_width(vocab, emb_dim)
-    bos_col = emb_dim + S + 1
-    eos_col = emb_dim + S + 2
-
-    fields = [
+# the columns the featurize kernel appends to its input, in output order
+FEATURIZE_FIELDS = T.StructType(
+    [
         T.StructField("tokens", T.ArrayType(T.StringType())),
         T.StructField("starts", T.ArrayType(T.IntegerType())),
         T.StructField("ends", T.ArrayType(T.IntegerType())),
+        T.StructField("features", T.BinaryType()),
     ]
-    if emit_linguistics:
-        fields += [
-            T.StructField("shapes", T.ArrayType(T.StringType())),
-            T.StructField("pos", T.ArrayType(T.StringType())),
-            T.StructField("dep", T.ArrayType(T.StringType())),
-        ]
-    fields.append(T.StructField("features", T.BinaryType()))
-    schema = T.StructType(fields)
-
-    start_batch, row_of, gather = _token_row_table(vocab, emb_dim, cache_max_entries)
-
-    @pandas_udf(schema)
-    def fused(texts: pd.Series) -> pd.DataFrame:
-        # one batch adds at most batch_rows*max_seq_length entries on top
-        # of the cap
-        start_batch()
-        cols: dict = {
-            "tokens": [],
-            "starts": [],
-            "ends": [],
-            "features": [],
-        }
-        if emit_linguistics:
-            cols["shapes"], cols["pos"], cols["dep"] = [], [], []
-        ids: list = []
-        lens: list = []
-        for text in texts:
-            if text is None:
-                text = ""
-            triples = textfns.tokenize_with_bounds(text)
-            toks = [t for t, _, _ in triples]
-            n = min(len(toks), max_seq_length)
-            for i in range(n):
-                ids.append(row_of(toks[i], i == 0, i & 1))
-            lens.append(n)
-            cols["tokens"].append(toks)
-            cols["starts"].append([s for _, s, _ in triples])
-            cols["ends"].append([e for _, _, e in triples])
-            if emit_linguistics:
-                cols["shapes"].append([textfns.shape_of_string(t) for t in toks])
-                tags = [textfns.heuristic_pos_dep(t, i) for i, t in enumerate(toks)]
-                cols["pos"].append([p for p, _ in tags])
-                cols["dep"].append([d for _, d in tags])
-        # one gather for the whole batch, then vectorized BOS/EOS scatters
-        stacked = gather(ids)
-        offs = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(np.asarray(lens, dtype=np.int64), out=offs[1:])
-        nonempty = offs[:-1][np.asarray(lens, dtype=np.int64) > 0]
-        last_rows = offs[1:][np.asarray(lens, dtype=np.int64) > 0] - 1
-        if len(nonempty):
-            stacked[nonempty, bos_col] = 1.0
-            stacked[last_rows, eos_col] = 1.0
-        blob = stacked.tobytes()
-        row_bytes = width * 4
-        cols["features"] = [
-            blob[offs[i] * row_bytes: offs[i + 1] * row_bytes]
-            for i in range(len(lens))
-        ]
-        # emit columns in declared-schema order: Arrow struct conversion
-        # assigns by name only while assignColumnsByName stays true; under
-        # positional assignment a (…, features, shapes, …) dict order would
-        # hand the binary field the shapes array.
-        return pd.DataFrame({f.name: cols[f.name] for f in schema.fields})
-
-    return fused
+)
 
 
 def make_fused_featurize_arrow_fn(
     vocab: Tuple[str, ...],
     max_seq_length: int,
     emb_dim: int = 16,
-    emit_linguistics: bool = False,
     cache_max_entries: int | None = None,
     chunk_rows: int = 2048,
-    norm_col: str = "norm_text",
 ):
-    """``mapInArrow`` twin of :func:`make_fused_featurize_udf` — same
-    per-token vector table, same bounded per-task cache, same
-    outputs bit-for-bit, minus two full copies of the feature bytes.
+    """``mapInArrow`` body: a ``norm_text`` column -> every input column
+    plus :data:`FEATURIZE_FIELDS` (tokens, char bounds, binary feature
+    matrix of the real-token rows).
 
-    The pandas_udf path materialized the batch matrix three times:
-    ``V[ids]`` gather, ``.tobytes()``, and one ``bytes`` slice per row —
-    then pandas->Arrow copied the binary cells a fourth time (~19 GB of
-    memcpy per bench pass at the 1.1M-turn scale).  Here the binary column
-    is built ZERO-copy over the gathered matrix: a ``BinaryArray`` is its
-    offsets plus one contiguous data buffer, so ``pa.py_buffer(stacked)``
-    with a row-scaled offsets array IS the column (guide §4.2).  Only the
-    gather remains.
+    Per-token rows come from the bounded per-task table of
+    :func:`_token_row_table`, so a chunk's matrix is one ``V[ids]`` gather
+    plus vectorized BOS/EOS scatters.  That gather is the only copy of the
+    feature bytes: a ``BinaryArray`` is its offsets plus one contiguous
+    data buffer, so ``pa.py_buffer(stacked)`` with a row-scaled offsets
+    array IS the column (guide §4.2).  Serializing each row with
+    ``.tobytes()``, slicing one ``bytes`` per turn and converting the cells
+    through pandas would copy the bytes three more times (~19 GB of memcpy
+    per bench pass at the 1.1M-turn scale).
 
     ``chunk_rows`` additionally bounds each *output* record batch: the
     session's 10k-row Arrow batches amplify ~20-80x through this function
@@ -477,12 +309,13 @@ def make_fused_featurize_arrow_fn(
     chunk_rows = max(
         1, min(chunk_rows, (1 << 30) // max(max_seq_length * row_bytes, 1))
     )
+    out_names = FEATURIZE_FIELDS.names
 
     start_batch, row_of, gather = _token_row_table(vocab, emb_dim, cache_max_entries)
 
     def fn(batches):
         for rb in batches:
-            ncol = rb.schema.get_field_index(norm_col)
+            ncol = rb.schema.get_field_index("norm_text")
             for off in range(0, rb.num_rows, chunk_rows):
                 sub = rb.slice(off, min(chunk_rows, rb.num_rows - off))
                 start_batch()
@@ -492,8 +325,6 @@ def make_fused_featurize_arrow_fn(
                 toks_l: list = []
                 starts_l: list = []
                 ends_l: list = []
-                if emit_linguistics:
-                    shapes_l, pos_l, dep_l = [], [], []
                 for text in texts:
                     if text is None:
                         text = ""
@@ -506,14 +337,6 @@ def make_fused_featurize_arrow_fn(
                     toks_l.append(toks)
                     starts_l.append([s for _, s, _ in triples])
                     ends_l.append([e for _, _, e in triples])
-                    if emit_linguistics:
-                        shapes_l.append([textfns.shape_of_string(t) for t in toks])
-                        tags = [
-                            textfns.heuristic_pos_dep(t, i)
-                            for i, t in enumerate(toks)
-                        ]
-                        pos_l.append([p for p, _ in tags])
-                        dep_l.append([d for _, d in tags])
                 # one gather for the whole chunk, then vectorized BOS/EOS scatters
                 stacked = gather(ids)
                 lens_np = np.asarray(lens, dtype=np.int64)
@@ -534,25 +357,15 @@ def make_fused_featurize_arrow_fn(
                         pa.py_buffer(stacked),
                     ],
                 )
-                arrays = [sub.column(i) for i in range(sub.num_columns)]
-                names = list(sub.schema.names)
-                arrays.append(pa.array(toks_l, type=pa.list_(pa.string())))
-                names.append("tokens")
-                arrays.append(pa.array(starts_l, type=pa.list_(pa.int32())))
-                names.append("starts")
-                arrays.append(pa.array(ends_l, type=pa.list_(pa.int32())))
-                names.append("ends")
-                if emit_linguistics:
-                    for nm, vals in (
-                        ("shapes", shapes_l),
-                        ("pos_tags", pos_l),
-                        ("dep_tags", dep_l),
-                    ):
-                        arrays.append(pa.array(vals, type=pa.list_(pa.string())))
-                        names.append(nm)
-                arrays.append(feats)
-                names.append("features")
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
+                new = [
+                    pa.array(toks_l, type=pa.list_(pa.string())),
+                    pa.array(starts_l, type=pa.list_(pa.int32())),
+                    pa.array(ends_l, type=pa.list_(pa.int32())),
+                    feats,
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    sub.columns + new, names=sub.schema.names + out_names
+                )
 
     return fn
 
@@ -563,61 +376,33 @@ def featurize_fused(
     max_seq_length: int,
     emb_dim: int = 16,
     text_col: str = "text",
-    emit_linguistics: bool = False,
 ) -> DataFrame:
     """Fused normalize+tokenize+featurize over windowed slim turns.
 
-    Runs as ONE ``mapInArrow`` pass (r8; previously a struct pandas_udf):
-    the slim columns pass through as untouched Arrow buffers, the feature
-    blobs are emitted zero-copy (see
+    Runs as ONE ``mapInArrow`` pass: the slim columns pass through as
+    untouched Arrow buffers, the feature blobs are emitted zero-copy (see
     :func:`make_fused_featurize_arrow_fn`), and each output record batch
     is bounded to ``chunk_rows`` rows so the 20-80x byte amplification of
     the blob column cannot produce 100+ MB batches on either side of the
     boundary.  Because ``mapInArrow`` is opaque over all its input
     columns, every upstream window stage stays live no matter which
-    output columns a consumer selects — the bench-agg pruning hazard of
-    the struct-UDF form is gone by construction.
+    output columns a consumer selects (a struct-returning UDF let the
+    bench aggregate prune them).
+
+    ``features`` holds only the real-token rows, ``n_tokens`` of them; the
+    reference's padding rows (elmo_ner.py:503-541) are all zero except on
+    an EMPTY turn, where the reference still sets the BOS flag on row 0
+    and the EOS flag on row ``max_seq_length - 1`` (see
+    :func:`shape_one_hot_matrix`).  Here an empty or null text gives
+    ``tokens == []`` and a 0-byte blob, with no flags.
     """
     from deep_ner_spark.functions.text import normalize_text_col
 
     base = slim_turns.withColumn("norm_text", normalize_text_col(F.col(text_col)))
-    fn = make_fused_featurize_arrow_fn(
-        vocab, max_seq_length, emb_dim, emit_linguistics=emit_linguistics
-    )
-    new_fields = [
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-        T.StructField("starts", T.ArrayType(T.IntegerType())),
-        T.StructField("ends", T.ArrayType(T.IntegerType())),
-    ]
-    if emit_linguistics:
-        new_fields += [
-            T.StructField("shapes", T.ArrayType(T.StringType())),
-            T.StructField("pos_tags", T.ArrayType(T.StringType())),
-            T.StructField("dep_tags", T.ArrayType(T.StringType())),
-        ]
-    new_fields.append(T.StructField("features", T.BinaryType()))
-    out_schema = T.StructType(list(base.schema.fields) + new_fields)
+    fn = make_fused_featurize_arrow_fn(vocab, max_seq_length, emb_dim)
+    out_schema = T.StructType(base.schema.fields + FEATURIZE_FIELDS.fields)
     return (
         base.mapInArrow(fn, out_schema)
-        .withColumn("n_tokens", F.least(F.size("tokens"), F.lit(max_seq_length)))
-        .withColumn("feature_width", F.lit(feature_width(vocab, emb_dim)))
-    )
-
-
-def with_feature_matrix(
-    tokenized_turns: DataFrame,
-    vocab: Tuple[str, ...],
-    max_seq_length: int,
-    emb_dim: int = 16,
-    out_col: str = "features",
-    padded: bool = False,
-    fmt: str = "binary",
-) -> DataFrame:
-    udf = make_feature_matrix_udf(vocab, max_seq_length, emb_dim, padded, fmt)
-    return (
-        tokenized_turns.withColumn(
-            out_col, udf("tokens", "shapes", "pos_tags", "dep_tags")
-        )
         .withColumn("n_tokens", F.least(F.size("tokens"), F.lit(max_seq_length)))
         .withColumn("feature_width", F.lit(feature_width(vocab, emb_dim)))
     )

@@ -8,8 +8,8 @@ shuffle-aware order:
       -> sessionize on ts gaps (W4)                          [reuses it]
       -> forward-fill sparse role/tool (W3)                  [reuses it]
       -> token-count lag/lead turn context (W8, JVM regexp)  [reuses it]
-      -> normalize + tokenize + bounds + shapes + pos/dep    [narrow Arrow]
-      -> per-turn feature matrix, binary float32             [narrow Arrow]
+      -> normalize + tokenize + bounds + per-turn binary     [ONE narrow
+         float32 feature matrix                              mapInArrow]
 
 Shuffle budget: exactly ONE exchange by conv_id — the as-of union's —
 serves every window (verified by tests/test_plans.py); everything after it
@@ -39,15 +39,14 @@ def featurize_transcripts(
     session_gap_seconds: float = 1800.0,
     salted: bool = False,
     n_salts: int = 8,
-    features_fmt: str = "binary",
     state_seq_col: str | None = None,
 ) -> Tuple[DataFrame, Tuple[str, ...]]:
     """Returns (featurized turns DataFrame, fitted shape vocabulary).
 
     Stage order is shuffle-aware: the windowed operators and the as-of join
     run FIRST, on the slim transcript columns (one small exchange by
-    conv_id), and the tokenizer + feature assembly run LAST as narrow Arrow
-    passes over the already-exchanged rows — the multi-GB feature blobs are
+    conv_id), and the tokenizer + feature assembly run LAST as one narrow
+    Arrow pass over the already-exchanged rows — the multi-GB feature blobs are
     produced after the last exchange and never shuffle.  (The reverse
     order pushed ~20x the bytes through every window exchange.)
     """
@@ -81,11 +80,13 @@ def featurize_transcripts(
     # token count JVM-side (same count as the Python tokenizer) so the
     # lag/lead window runs in the slim phase — a Python-eval node would lose
     # the partitioning info and force a second exchange if this ran after
-    # tokenize_turns
+    # tokenize_turns.  A null text counts 0 tokens, as featurize gives it:
+    # least() skips nulls, so an uncoalesced count would read max_seq_length
     slim = slim.withColumn(
         "n_tokens",
         F.least(
-            word_token_count_col(F.col("text")), F.lit(max_seq_length)
+            F.coalesce(word_token_count_col(F.col("text")), F.lit(0)),
+            F.lit(max_seq_length),
         ).cast("int"),
     )
     slim = lag_lead(slim, ["conv_id"], ["turn_idx"], ["n_tokens"], offsets=(1,))
@@ -98,8 +99,8 @@ def featurize_transcripts(
         # (shape, count) pairs instead of six token arrays — same functions,
         # same vocabulary, fraction of the Python+Arrow cost.
         vocab = fit_shape_vocab_from_text(transcripts)
-    # fused normalize+tokenize+featurize: ONE Arrow round trip (the split
-    # form ships token arrays Python->JVM->Python through two eval nodes)
+    # fused normalize+tokenize+featurize: ONE Arrow round trip (a split
+    # form would ship token arrays Python->JVM->Python through two passes)
     feats = featurize_fused(slim, vocab, max_seq_length, emb_dim)
     out_cols = [
         "conv_id",

@@ -44,6 +44,23 @@ def reference_vocab(t):
     return tuple(s for s in sorted(counts) if counts[s] >= 3)
 
 
+def reference_blob(text, vocab, max_seq, emb):
+    """The NumPy reference's real-token rows of one (normalized) text,
+    packed as the engine packs them."""
+    toks = textfns.tokenize(text)
+    tags = [textfns.heuristic_pos_dep(x, i) for i, x in enumerate(toks)]
+    want = turn_feature_matrix(
+        toks,
+        [textfns.shape_of_string(x) for x in toks],
+        [p for p, _ in tags],
+        [d for _, d in tags],
+        vocab,
+        max_seq,
+        emb,
+    )
+    return want[: min(len(toks), max_seq)].astype("<f4").tobytes()
+
+
 def test_shape_vocab_parity(data, spark):
     tdf, _, _, t, _, _ = data
     toks = tokenize_turns(tdf)
@@ -98,33 +115,6 @@ def test_per_turn_text_equality_and_feature_parity(data, spark):
         assert got.shape == (n, want.shape[1])
         assert np.allclose(got, want[:n]), (turn.conv_id, turn.turn_idx)
         assert np.allclose(want[n:], 0.0)
-
-
-def test_padded_feature_matrix_parity(data, spark):
-    """padded=True reproduces the reference's full [max_seq, F] matrices."""
-    from deep_ner_spark.operators.features import with_feature_matrix
-    from deep_ner_spark.operators.tokens import tokenize_turns
-
-    tdf, _, _, t, _, _ = data
-    toks = tokenize_turns(tdf)
-    vocab = reference_vocab(t)
-    out = with_feature_matrix(toks, vocab, MAX_SEQ, EMB, padded=True, fmt="array")
-    rows = {(r["conv_id"], r["turn_idx"]): r for r in out.limit(2000).collect()}
-    checked = 0
-    for _, turn in t.head(40).iterrows():
-        r = rows[(turn.conv_id, turn.turn_idx)]
-        toks_ = textfns.tokenize(textfns.normalize_text(turn.text))
-        shapes = [textfns.shape_of_string(x) for x in toks_]
-        tags = [textfns.heuristic_pos_dep(x, i) for i, x in enumerate(toks_)]
-        want = turn_feature_matrix(
-            toks_, shapes, [p for p, _ in tags], [d for _, d in tags],
-            vocab, MAX_SEQ, EMB,
-        )
-        got = np.array(r["features"], dtype=np.float32)
-        assert got.shape == want.shape
-        assert np.allclose(got, want)
-        checked += 1
-    assert checked == 40
 
 
 def test_lag_lead_counts_consistent(data, spark):
@@ -190,45 +180,16 @@ def test_entity_spans_slice_to_phrases(data, spark):
         assert row.text[row.start:row.end] in phrases
 
 
-def test_fused_featurize_cache_cap_resets_without_changing_output():
-    """The per-task vector table is bounded (ADVICE r3): when the
-    distinct-triple count exceeds cache_max_entries the table resets
-    BETWEEN Arrow batches.  A capped udf must emit byte-identical features
-    to an uncapped one across repeated calls (rows recomputed, not stale)."""
-    import pandas as pd
-
-    from deep_ner_spark.operators.features import make_fused_featurize_udf
-
-    vocab = ("a", "A", "D")
-    texts = pd.Series(
-        ["alpha beta 42", "Gamma delta", "x1 y2 z3 alpha", "", "beta 42"]
-    )
-    free = make_fused_featurize_udf(vocab, 8, emb_dim=4).func
-    capped = make_fused_featurize_udf(vocab, 8, emb_dim=4, cache_max_entries=2).func
-    ref = free(texts)
-    for _ in range(3):  # several batches: reset fires between each
-        got = capped(texts)
-        assert list(got.columns) == list(ref.columns)
-        for c in ref.columns:
-            assert list(got[c].map(bytes) if c == "features" else got[c].map(tuple)) == list(
-                ref[c].map(bytes) if c == "features" else ref[c].map(tuple)
-            ), c
-
-
-def test_arrow_featurize_fn_matches_pandas_udf_bitwise(spark):
-    """The r8 mapInArrow featurize (zero-copy binary column, chunked
-    output batches) must emit byte-identical features and identical
-    token/bounds arrays to the struct-pandas_udf path it replaced,
-    including None/empty texts, truncation past max_seq_length, the
-    emit_linguistics variant, and a chunk size that forces mid-batch
-    splits."""
-    import pandas as pd
+def test_arrow_featurize_fn_matches_numpy_reference_bitwise():
+    """The mapInArrow featurize kernel (zero-copy binary column, chunked
+    output batches) emits, per turn, the tokens and char bounds of
+    ``tokenize_with_bounds`` and the real-token rows of the NumPy
+    reference byte for byte: None/empty texts, truncation past
+    max_seq_length, a chunk size that splits the input batch mid-way, and
+    an input column passed through untouched."""
     import pyarrow as pa
 
-    from deep_ner_spark.operators.features import (
-        make_fused_featurize_arrow_fn,
-        make_fused_featurize_udf,
-    )
+    from deep_ner_spark.operators.features import make_fused_featurize_arrow_fn
 
     vocab = ("a", "A", "Aa", "D")
     texts = [
@@ -238,31 +199,31 @@ def test_arrow_featurize_fn_matches_pandas_udf_bitwise(spark):
         "x " * 40,  # truncates past max_seq_length=8
         "Gamma—delta v2.7, ok?",
     ]
-    for ling in (False, True):
-        ref = make_fused_featurize_udf(
-            vocab, 8, emb_dim=4, emit_linguistics=ling
-        ).func(pd.Series(texts))
-        rb = pa.RecordBatch.from_arrays(
-            [pa.array(["meta"] * len(texts)), pa.array(texts)],
-            names=["other", "norm_text"],
-        )
-        fn = make_fused_featurize_arrow_fn(
-            vocab, 8, emb_dim=4, emit_linguistics=ling, chunk_rows=2
-        )
-        got = pa.Table.from_batches(list(fn(iter([rb])))).to_pandas()
-        assert list(got["other"]) == ["meta"] * len(texts)  # passthrough
-        name_map = {"pos": "pos_tags", "dep": "dep_tags"}
-        for c in ref.columns:
-            g = got[name_map.get(c, c)]
-            if c == "features":
-                assert [bytes(x) for x in g] == [bytes(x) for x in ref[c]], c
-            else:
-                assert [list(x) for x in g] == [list(x) for x in ref[c]], c
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(["meta"] * len(texts)), pa.array(texts)],
+        names=["other", "norm_text"],
+    )
+    fn = make_fused_featurize_arrow_fn(vocab, 8, emb_dim=4, chunk_rows=2)
+    batches = list(fn(iter([rb])))
+    assert [b.num_rows for b in batches] == [2, 2, 1]
+    assert batches[0].schema.names == [
+        "other", "norm_text", "tokens", "starts", "ends", "features"
+    ]
+    for text, row in zip(texts, pa.Table.from_batches(batches).to_pylist()):
+        triples = textfns.tokenize_with_bounds(text or "")
+        assert row["other"] == "meta"
+        assert row["norm_text"] == text
+        assert row["tokens"] == [t for t, _, _ in triples]
+        assert row["starts"] == [s for _, s, _ in triples]
+        assert row["ends"] == [e for _, _, e in triples]
+        assert row["features"] == reference_blob(text or "", vocab, 8, 4), text
 
 
 def test_arrow_featurize_cache_cap_resets_without_changing_output():
-    """Same bounded-cache contract as the pandas_udf path: a capped arrow
-    fn emits byte-identical features across repeated calls."""
+    """The per-task vector table is bounded (ADVICE r3): past
+    cache_max_entries distinct triples it resets BETWEEN Arrow batches.
+    A capped fn must emit byte-identical features to an uncapped one
+    across repeated calls (rows recomputed, not stale)."""
     import pyarrow as pa
 
     from deep_ner_spark.operators.features import make_fused_featurize_arrow_fn
@@ -273,7 +234,7 @@ def test_arrow_featurize_cache_cap_resets_without_changing_output():
     free = make_fused_featurize_arrow_fn(vocab, 8, emb_dim=4)
     ref = pa.Table.from_batches(list(free(iter([rb])))).to_pandas()
     capped = make_fused_featurize_arrow_fn(vocab, 8, emb_dim=4, cache_max_entries=2)
-    for _ in range(3):
+    for _ in range(3):  # several batches: reset fires between each
         got = pa.Table.from_batches(list(capped(iter([rb])))).to_pandas()
         assert [bytes(x) for x in got["features"]] == [
             bytes(x) for x in ref["features"]
@@ -289,14 +250,9 @@ def test_fused_featurize_closure_ships_no_vector_table():
     import pyarrow as pa
     from pyspark import cloudpickle
 
-    from deep_ner_spark.operators.features import (
-        make_fused_featurize_arrow_fn,
-        make_fused_featurize_udf,
-    )
+    from deep_ner_spark.operators.features import make_fused_featurize_arrow_fn
 
     vocab = ("a",)
-    pandas_fn = make_fused_featurize_udf(vocab, MAX_SEQ, emb_dim=16).func
-    assert len(cloudpickle.dumps(pandas_fn)) < 64 * 1024
     payload = cloudpickle.dumps(
         make_fused_featurize_arrow_fn(vocab, MAX_SEQ, emb_dim=16)
     )
@@ -309,15 +265,74 @@ def test_fused_featurize_closure_ships_no_vector_table():
     rb = pa.RecordBatch.from_arrays([pa.array(texts)], names=["norm_text"])
     out = pa.Table.from_batches(list(cloudpickle.loads(payload)(iter([rb]))))
     for text, blob in zip(texts, out.column("features").to_pylist()):
-        toks = textfns.tokenize(text)
-        tags = [textfns.heuristic_pos_dep(x, i) for i, x in enumerate(toks)]
-        want = turn_feature_matrix(
-            toks,
-            [textfns.shape_of_string(x) for x in toks],
-            [p for p, _ in tags],
-            [d for _, d in tags],
-            vocab,
-            MAX_SEQ,
-            16,
-        )[: min(len(toks), MAX_SEQ)]
-        assert blob == want.astype("<f4").tobytes(), text
+        assert blob == reference_blob(text, vocab, MAX_SEQ, 16), text
+
+
+def test_featurize_transcripts_edge_texts(spark):
+    """One conversation mixing null, empty, whitespace-only, Unicode and
+    over-long turns: every turn is kept, n_tokens is the tokenizer's
+    count, each lag1/lead1 is its neighbour's n_tokens (a null text once
+    read as max_seq_length there), an empty turn has no tokens and a
+    0-byte blob, and predict_entities runs over the result.
+
+    The 0-byte blob is a deliberate divergence from the reference's
+    padded matrix, which flags BOS on row 0 and EOS on row max_seq-1 of
+    an empty turn (elmo_ner.py:503-512)."""
+    import datetime as dt
+
+    from deep_ner_spark.operators.features import feature_width
+    from deep_ner_spark.pipeline import predict_entities
+
+    max_seq, emb = 8, 4
+    texts = [
+        "hello world",
+        None,
+        "",
+        " \t\n ",
+        "Ёлка 7",
+        "a—b",
+        "x " * 20,
+        "ok then go",
+    ]
+    t0 = dt.datetime(2024, 1, 1)
+    tdf = spark.createDataFrame(
+        [
+            ("c0", i, "user", text, None, t0 + dt.timedelta(minutes=i))
+            for i, text in enumerate(texts)
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    out, vocab = featurize_transcripts(tdf, None, max_seq_length=max_seq, emb_dim=emb)
+    rows = sorted(out.collect(), key=lambda r: r["turn_idx"])
+    assert [r["turn_idx"] for r in rows] == list(range(len(texts)))
+
+    norm = [textfns.normalize_text(x or "") for x in texts]
+    want_n = [min(len(textfns.tokenize(x)), max_seq) for x in norm]
+    assert want_n == [2, 0, 0, 0, 2, 3, 8, 3]
+    assert [r["n_tokens"] for r in rows] == want_n
+    assert [r["n_tokens_lag1"] for r in rows] == [None] + want_n[:-1]
+    assert [r["n_tokens_lead1"] for r in rows] == want_n[1:] + [None]
+    for text, r in zip(norm, rows):
+        assert bytes(r["features"]) == reference_blob(text, vocab, max_seq, emb)
+
+    width = feature_width(vocab, emb)
+    S = len(vocab)
+    ref_empty = turn_feature_matrix([], [], [], [], vocab, max_seq, emb)
+    assert ref_empty[0, emb + S + 1] == 1.0
+    assert ref_empty[max_seq - 1, emb + S + 2] == 1.0
+    for r in rows[1:4]:
+        assert r["tokens"] == []
+        assert r["features"] == bytearray()
+
+    n_tags = 7
+    rng = np.random.default_rng(3)
+    spans = predict_entities(
+        out,
+        ("LOCATION", "ORG", "PERSON"),
+        rng.standard_normal((width, n_tags)).astype(np.float32),
+        rng.standard_normal((n_tags, n_tags)),
+    ).collect()
+    for s in spans:
+        assert want_n[s["turn_idx"]] > 0
+        assert 0 <= s["start"] < s["end"] <= len(norm[s["turn_idx"]])

@@ -1,19 +1,24 @@
 """Fitted aggregates + per-turn feature-matrix assembly (SURVEY A1/A2, §2.8).
 
-The reference builds dense padded per-channel ndarrays by hand
-(elmo_ner.py:503-541); here the columnar batch is Arrow, and one
-``mapInArrow`` kernel (:func:`featurize_fused`) tokenizes each turn and
-gathers its one-hot rows vectorized in NumPy.  The pure-NumPy
-:func:`turn_feature_matrix` is the reference the tests compare it with.
+The reference builds dense padded per-channel ndarrays one token at a
+time in Python (elmo_ner.py:503-541); here the columnar batch is Arrow,
+and one ``mapInArrow`` kernel (:func:`featurize_fused`) does the per-token
+work in C: one regex split per chunk of turns, NumPy offsets for the char
+bounds, Arrow dictionary encoding plus ``np.unique`` for the distinct
+(token, is_first, parity) keys, and one gather of their feature rows.
+Python runs once per distinct key of a chunk, not once per token.  The
+pure-NumPy :func:`turn_feature_matrix` (and ``textfns.tokenize_with_bounds``)
+is the reference the tests compare it with.
 The fitted shape vocabulary (a global aggregate) is computed once with a
 hash aggregation and broadcast — the two-pass fit/reuse structure of the
 reference (fit at elmo_ner.py:103, reuse at :274) made explicit.
 
 Scale notes: the vocab agg is a map-side-combinable groupBy on a low-
-cardinality key (shape strings) — partial aggregation makes the exchange
-tiny.  The matrix assembly is a narrow Arrow pass, no shuffle.  The linear
-``vocab.index(shape)`` hot spot of the reference (elmo_ner.py:507) becomes a
-dict lookup.
+cardinality key (shape strings) — each Arrow batch ships its (shape,
+count) pairs, so the exchange is tiny, and the vocab is sorted on the
+driver.  The matrix assembly is a narrow Arrow pass, no shuffle.  The
+linear ``vocab.index(shape)`` hot spot of the reference (elmo_ner.py:507)
+becomes a dict lookup, paid once per distinct token.
 """
 
 from __future__ import annotations
@@ -21,7 +26,6 @@ from __future__ import annotations
 from typing import Dict, Sequence, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,6 +39,9 @@ def fit_shape_vocab(
     """Shape vocabulary: corpus frequency >= min_freq, sorted (elmo_ner.py:492-500).
 
     Empty shapes are excluded (elmo_ner.py:419-421 skips '' before counting).
+    The vocab is sorted on the driver: Spark's UTF-8 binary order is
+    Python's code-point order, and a Spark ``orderBy`` would cost two more
+    jobs (the range-partition sample and the sort).
     """
     rows = (
         tokenized_turns.select(F.explode(shapes_col).alias("shape"))
@@ -42,11 +49,10 @@ def fit_shape_vocab(
         .groupBy("shape")
         .count()
         .where(F.col("count") >= min_freq)
-        .orderBy("shape")
         .select("shape")
         .collect()
     )
-    return tuple(r["shape"] for r in rows)
+    return tuple(sorted(r["shape"] for r in rows))
 
 
 def fit_shape_vocab_from_text(
@@ -56,51 +62,49 @@ def fit_shape_vocab_from_text(
 
     Same result as ``fit_shape_vocab(tokenize_turns(df))`` — identical
     normalize -> tokenize -> shape functions — but the fit pass computes
-    nothing it doesn't need: no bounds, no pos/dep tags, no token arrays,
-    and the Arrow transfer back is per-batch (shape, count) pairs instead
-    of six per-turn arrays (the Python pre-aggregation is the map-side
-    combine).  On the flagship this removes most of the second full Python
-    pass the vocab fit used to cost.
+    nothing it doesn't need: no bounds, no pos/dep tags, no token arrays.
+    Each Arrow batch's non-null texts are joined with ``"\\n"`` (whitespace,
+    so no token spans two texts), normalized and tokenized by one
+    ``findall``; the tokens are dictionary-encoded and counted with
+    ``np.bincount``, so ``shape_of_string`` runs once per distinct token
+    and the batch ships its (shape, count) pairs (the map-side combine).
+    Two Spark jobs: the partial aggregate and the final collect; the
+    vocab is sorted on the driver as in :func:`fit_shape_vocab`.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField("shape", T.StringType()),
-            T.StructField("cnt", T.LongType()),
-        ]
-    )
 
     def count_shapes(batches):
-        from collections import Counter
+        import numpy as np
+        import pyarrow as pa
 
         from deep_ner_spark import textfns
 
-        # bind the hot callables locally and let Counter.update consume a
-        # C-level map iterator — same functions, same counts, ~25% less
-        # pure-Python dispatch in the per-token loop
-        normalize = textfns.normalize_text
-        tokenize = textfns.tokenize
-        shape_of = textfns.shape_of_string
-        counts: Counter = Counter()
-        for pdf in batches:
-            for text in pdf[text_col]:
-                if text is None:
-                    continue
-                counts.update(map(shape_of, tokenize(normalize(text))))
-        yield pd.DataFrame(
-            {"shape": list(counts.keys()), "cnt": list(counts.values())}
-        )
+        for rb in batches:
+            texts = rb.column(0).drop_null().to_pylist()
+            toks = textfns.tokenize(textfns.normalize_text("\n".join(texts)))
+            enc = pa.array(toks, type=pa.string()).dictionary_encode()
+            tok_cnt = np.bincount(enc.indices.to_numpy(), minlength=len(enc.dictionary))
+            shapes = pa.array(
+                list(map(textfns.shape_of_string, enc.dictionary.to_pylist())),
+                type=pa.string(),
+            ).dictionary_encode()
+            # float64 weights sum exactly: a batch holds far fewer than 2^53 tokens
+            cnt = np.bincount(
+                shapes.indices.to_numpy(), weights=tok_cnt, minlength=len(shapes.dictionary)
+            )
+            yield pa.RecordBatch.from_arrays(
+                [shapes.dictionary, pa.array(cnt.astype(np.int64))], names=["shape", "cnt"]
+            )
 
     rows = (
         turns.select(text_col)
-        .mapInPandas(count_shapes, schema=out_schema)
+        .mapInArrow(count_shapes, "shape string, cnt long")
         .groupBy("shape")
         .agg(F.sum("cnt").alias("cnt"))
         .where((F.col("cnt") >= min_freq) & (F.col("shape") != ""))
-        .orderBy("shape")
         .select("shape")
         .collect()
     )
-    return tuple(r["shape"] for r in rows)
+    return tuple(sorted(r["shape"] for r in rows))
 
 
 def fit_classes_list(entity_spans: DataFrame, ne_col: str = "ne_type") -> Tuple[str, ...]:
@@ -199,13 +203,15 @@ def _token_row_table(
     """Token feature rows for the featurize kernel, cached per Spark task.
 
     Distinct (token, is_first, parity) triples map to a row of a growing
-    float32 table V, so the per-batch work is ONE fancy-index gather
-    ``V[ids]`` plus vectorized BOS/EOS flag scatters — no per-token row
-    copies, no per-turn np.zeros (the VERDICT r2 item: batch numpy one-hot
-    scatter).  The featurize closure is unpickled once per task, so the
-    table lives for one task (across its Arrow batches); it is allocated
-    on the task's first batch, because a table built here would ride in
-    every task's pickled closure (~300 KB of zeros at the flagship width).
+    float32 table V, so a chunk's matrix is ONE fancy-index gather
+    ``V[ids]`` plus vectorized BOS/EOS flag scatters.  The kernel calls
+    ``row_of`` once per distinct triple of a chunk, never per token; a miss
+    builds the row once (hash embedding, shape one-hot, and the POS/dep
+    one-hot, itself cached per (pos, dep) pair: only a handful exist).
+    The featurize closure is unpickled once per task, so the table lives
+    for one task (across its Arrow batches); it is allocated on the task's
+    first batch, because a table built here would ride in every task's
+    pickled closure (~300 KB of zeros at the flagship width).
 
     The table is BOUNDED: a Zipf-tailed corpus (ids, numbers, typos) over
     a large partition would otherwise grow it without limit.  At
@@ -223,6 +229,7 @@ def _token_row_table(
     if cache_max_entries is None:
         cache_max_entries = max(int(50_000_000 / max(width, 1)), 65_536)
     state = {"V": None, "n": 0, "idx": {}}
+    pos_dep_rows: dict = {}
 
     def start_batch() -> None:
         if state["V"] is None or state["n"] >= cache_max_entries:
@@ -236,11 +243,14 @@ def _token_row_table(
         i = idx.get(key)
         if i is None:
             shape = textfns.shape_of_string(tok)
-            p, d = textfns._pos_dep_cached(tok, is_first, parity)
+            tags = textfns._pos_dep_cached(tok, is_first, parity)
+            tags_row = pos_dep_rows.get(tags)
+            if tags_row is None:
+                tags_row = pos_dep_rows[tags] = textfns.pos_dep_one_hot(*tags)
             v = np.zeros(width, dtype=np.float32)
             v[:emb_dim] = textfns.hash_embedding(tok, emb_dim)
             v[emb_dim + vocab_index.get(shape, S)] = 1.0
-            v[emb_dim + S + 3:] = textfns.pos_dep_one_hot(p, d)
+            v[emb_dim + S + 3:] = tags_row
             i = state["n"]
             if i == state["V"].shape[0]:
                 state["V"] = np.concatenate([state["V"], np.zeros_like(state["V"])])
@@ -249,9 +259,9 @@ def _token_row_table(
             idx[key] = i
         return i
 
-    def gather(ids: list) -> np.ndarray:
+    def gather(ids: np.ndarray) -> np.ndarray:
         # fancy indexing copies rows, so later flag writes never alias V
-        return state["V"][np.asarray(ids, dtype=np.int64)]
+        return state["V"][ids]
 
     return start_batch, row_of, gather
 
@@ -278,15 +288,31 @@ def make_fused_featurize_arrow_fn(
     plus :data:`FEATURIZE_FIELDS` (tokens, char bounds, binary feature
     matrix of the real-token rows).
 
-    Per-token rows come from the bounded per-task table of
-    :func:`_token_row_table`, so a chunk's matrix is one ``V[ids]`` gather
-    plus vectorized BOS/EOS scatters.  That gather is the only copy of the
-    feature bytes: a ``BinaryArray`` is its offsets plus one contiguous
-    data buffer, so ``pa.py_buffer(stacked)`` with a row-scaled offsets
-    array IS the column (guide §4.2).  Serializing each row with
-    ``.tobytes()``, slicing one ``bytes`` per turn and converting the cells
-    through pandas would copy the bytes three more times (~19 GB of memcpy
-    per bench pass at the 1.1M-turn scale).
+    No Python code runs per token.  Per chunk:
+
+    * **Tokens and bounds.**  The chunk's texts are joined with ``"\\n"``
+      (whitespace, so no token spans two texts) and cut by ONE ``re.split``
+      with the tokenizer's pattern in capturing form: odd parts are the
+      tokens of ``tokenize_with_bounds``, even parts the gaps.  Cumulative
+      part lengths give each token's code-point offset (``m.start()``,
+      never an Arrow byte offset); ``searchsorted`` over the texts' own
+      offsets gives its text and its start/end within that text.
+    * **Output columns.**  ``tokens``/``starts``/``ends`` are
+      ``ListArray`` columns over the flat arrays and one offsets array.
+    * **Row ids.**  The flat tokens are dictionary-encoded, each kept
+      token's ``(is_first, parity)`` is folded into its dictionary index
+      as one int key, and ``np.unique`` finds the chunk's distinct keys.
+      ``row_of`` (:func:`_token_row_table`) runs once per distinct key,
+      and ``rid[inverse]`` expands the row ids back to token order.
+
+    The matrix is then one ``V[ids]`` gather plus vectorized BOS/EOS
+    scatters.  That gather is the only copy of the feature bytes: a
+    ``BinaryArray`` is its offsets plus one contiguous data buffer, so
+    ``pa.py_buffer(stacked)`` with a row-scaled offsets array IS the
+    column (guide §4.2).  Serializing each row with ``.tobytes()``, slicing
+    one ``bytes`` per turn and converting the cells through pandas would
+    copy the bytes three more times (~19 GB of memcpy per bench pass at
+    the 1.1M-turn scale).
 
     ``chunk_rows`` additionally bounds each *output* record batch: the
     session's 10k-row Arrow batches amplify ~20-80x through this function
@@ -296,6 +322,8 @@ def make_fused_featurize_arrow_fn(
     batch stays in the tens of MB; the cap also keeps the int32 binary
     offsets far from overflow at any (max_seq_length, vocab) shape.
     """
+    import re
+
     import pyarrow as pa
 
     from deep_ner_spark import textfns
@@ -310,8 +338,63 @@ def make_fused_featurize_arrow_fn(
         1, min(chunk_rows, (1 << 30) // max(max_seq_length * row_bytes, 1))
     )
     out_names = FEATURIZE_FIELDS.names
+    split = re.compile(f"({textfns._TOKEN_RE.pattern})").split
 
     start_batch, row_of, gather = _token_row_table(vocab, emb_dim, cache_max_entries)
+
+    def featurize_chunk(texts: list) -> list:
+        n_texts = len(texts)
+        parts = split("\n".join(texts))
+        part_len = np.fromiter(map(len, parts), np.int64, len(parts))
+        part_at = np.zeros(len(parts), dtype=np.int64)
+        np.cumsum(part_len[:-1], out=part_at[1:])
+        text_at = np.zeros(n_texts, dtype=np.int64)
+        np.cumsum(np.fromiter(map(len, texts), np.int64, n_texts)[:-1] + 1, out=text_at[1:])
+        tok_at = part_at[1::2]
+        text_of = np.searchsorted(text_at, tok_at, side="right") - 1
+        starts = tok_at - text_at[text_of]
+        ends = starts + part_len[1::2]
+        n_toks = np.bincount(text_of, minlength=n_texts)
+        tok_offs = np.zeros(n_texts + 1, dtype=np.int64)
+        np.cumsum(n_toks, out=tok_offs[1:])
+        pos = np.arange(len(tok_at)) - tok_offs[text_of]
+
+        # one row_of call per distinct (token, is_first, parity) key
+        words = pa.array(parts[1::2], type=pa.string())
+        enc = words.dictionary_encode()
+        key = enc.indices.to_numpy().astype(np.int64) << 2
+        key |= (pos == 0) << 1
+        key |= pos & 1
+        uniq, inv = np.unique(key[pos < max_seq_length], return_inverse=True)
+        uniq_words = enc.dictionary.take(pa.array(uniq >> 2)).to_pylist()
+        rid = np.fromiter(
+            map(row_of, uniq_words, (uniq & 2).astype(bool).tolist(), (uniq & 1).tolist()),
+            np.int64,
+            len(uniq),
+        )
+
+        # one gather for the whole chunk, then vectorized BOS/EOS scatters
+        stacked = gather(rid[inv])
+        lens = np.minimum(n_toks, max_seq_length)
+        offs = np.zeros(n_texts + 1, dtype=np.int64)
+        np.cumsum(lens, out=offs[1:])
+        nonempty = offs[:-1][lens > 0]
+        if len(nonempty):
+            stacked[nonempty, bos_col] = 1.0
+            stacked[offs[1:][lens > 0] - 1, eos_col] = 1.0
+        # zero-copy binary column: offsets over the gathered buffer
+        feats = pa.Array.from_buffers(
+            pa.binary(),
+            n_texts,
+            [None, pa.py_buffer((offs * row_bytes).astype(np.int32)), pa.py_buffer(stacked)],
+        )
+        list_offs = pa.array(tok_offs.astype(np.int32))
+        return [
+            pa.ListArray.from_arrays(list_offs, words),
+            pa.ListArray.from_arrays(list_offs, pa.array(starts.astype(np.int32))),
+            pa.ListArray.from_arrays(list_offs, pa.array(ends.astype(np.int32))),
+            feats,
+        ]
 
     def fn(batches):
         for rb in batches:
@@ -319,50 +402,7 @@ def make_fused_featurize_arrow_fn(
             for off in range(0, rb.num_rows, chunk_rows):
                 sub = rb.slice(off, min(chunk_rows, rb.num_rows - off))
                 start_batch()
-                texts = sub.column(ncol).to_pylist()
-                ids: list = []
-                lens: list = []
-                toks_l: list = []
-                starts_l: list = []
-                ends_l: list = []
-                for text in texts:
-                    if text is None:
-                        text = ""
-                    triples = textfns.tokenize_with_bounds(text)
-                    toks = [t for t, _, _ in triples]
-                    n = min(len(toks), max_seq_length)
-                    for i in range(n):
-                        ids.append(row_of(toks[i], i == 0, i & 1))
-                    lens.append(n)
-                    toks_l.append(toks)
-                    starts_l.append([s for _, s, _ in triples])
-                    ends_l.append([e for _, _, e in triples])
-                # one gather for the whole chunk, then vectorized BOS/EOS scatters
-                stacked = gather(ids)
-                lens_np = np.asarray(lens, dtype=np.int64)
-                offs = np.zeros(len(lens) + 1, dtype=np.int64)
-                np.cumsum(lens_np, out=offs[1:])
-                nonempty = offs[:-1][lens_np > 0]
-                last_rows = offs[1:][lens_np > 0] - 1
-                if len(nonempty):
-                    stacked[nonempty, bos_col] = 1.0
-                    stacked[last_rows, eos_col] = 1.0
-                # zero-copy binary column: offsets over the gathered buffer
-                feats = pa.Array.from_buffers(
-                    pa.binary(),
-                    len(lens),
-                    [
-                        None,
-                        pa.py_buffer((offs * row_bytes).astype(np.int32)),
-                        pa.py_buffer(stacked),
-                    ],
-                )
-                new = [
-                    pa.array(toks_l, type=pa.list_(pa.string())),
-                    pa.array(starts_l, type=pa.list_(pa.int32())),
-                    pa.array(ends_l, type=pa.list_(pa.int32())),
-                    feats,
-                ]
+                new = featurize_chunk(sub.column(ncol).fill_null("").to_pylist())
                 yield pa.RecordBatch.from_arrays(
                     sub.columns + new, names=sub.schema.names + out_names
                 )

@@ -84,6 +84,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
+        # On, every PySpark Column/DataFrame call makes extra Py4J calls and
+        # runs inspect.stack() to record its Python call site, on the
+        # driver, for every frame built.  The cost of turning it off:
+        # analysis errors lose that call-site context.  extra_conf wins.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master.startswith("local"):
         # Locally the driver JVM runs every task.  G1's adaptive young

@@ -77,6 +77,43 @@ def test_fit_shape_vocab_from_text_equals_tokenized_fit(data, spark):
     assert fit_shape_vocab_from_text(tdf) == reference_vocab(t)
 
 
+def test_text_vocab_fit_edge_texts(spark):
+    """fit_shape_vocab_from_text equals a pure-Python Counter over
+    ``shape_of_string(tokenize(normalize_text(t)))`` cut at min_freq, on
+    null, empty, whitespace-only, NBSP, dash-variant, Cyrillic/accented,
+    superscript and over-long turns spread over several partitions."""
+    from collections import Counter
+
+    from deep_ner_spark.operators.features import fit_shape_vocab_from_text
+
+    texts = [
+        None,
+        "",
+        " \t\n ",
+        "a\u00a0b c\u00a0d",
+        "x—y–z ‒ w",
+        "Ёлка ёж Crème brûlée",
+        "x² y² 7²",
+        "Élan vital, Ёж!",
+        "q1 " * 300,  # far past any max_seq_length
+        "мир—мир Мир",
+        None,
+        "ok ok ok",
+        "ZZ9 ZZ9 ZZ9",  # the only "AD" token: its count is its repeats
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string").repartition(3)
+    counts = Counter(
+        textfns.shape_of_string(tok)
+        for t in texts
+        if t is not None
+        for tok in textfns.tokenize(textfns.normalize_text(t))
+    )
+    assert counts["AD"] == 3
+    for min_freq in (1, 2, 3):
+        want = tuple(sorted(s for s, c in counts.items() if c >= min_freq))
+        assert fit_shape_vocab_from_text(df, min_freq=min_freq) == want, min_freq
+
+
 def test_classes_list_parity(data, spark):
     _, sdf, _, _, s, _ = data
     assert fit_classes_list(sdf) == tuple(sorted(s["ne_type"].unique()))
@@ -186,37 +223,51 @@ def test_arrow_featurize_fn_matches_numpy_reference_bitwise():
     ``tokenize_with_bounds`` and the real-token rows of the NumPy
     reference byte for byte: None/empty texts, truncation past
     max_seq_length, a chunk size that splits the input batch mid-way, and
-    an input column passed through untouched."""
+    an input column passed through untouched.
+
+    Also: an astral-plane character, whose UTF-8 bytes would shift any
+    byte offset past the code-point bounds; one token at the first, an odd
+    and an even position of one chunk (its row key must carry is_first and
+    parity); a punctuation-only turn; and a row table reset between
+    chunks (``cache_max_entries=2``)."""
     import pyarrow as pa
 
     from deep_ner_spark.operators.features import make_fused_featurize_arrow_fn
 
-    vocab = ("a", "A", "Aa", "D")
+    vocab = ("a", "A", "Aa", "D", "P")
     texts = [
         "alpha beta 42 CamelCase",
         None,
         "",
         "x " * 40,  # truncates past max_seq_length=8
         "Gamma—delta v2.7, ok?",
+        "a😀b c",
+        "w w w",  # one chunk: "w" first, at an odd and at an even position
+        "?!...",
+        "x² ёж",
     ]
     rb = pa.RecordBatch.from_arrays(
         [pa.array(["meta"] * len(texts)), pa.array(texts)],
         names=["other", "norm_text"],
     )
-    fn = make_fused_featurize_arrow_fn(vocab, 8, emb_dim=4, chunk_rows=2)
-    batches = list(fn(iter([rb])))
-    assert [b.num_rows for b in batches] == [2, 2, 1]
-    assert batches[0].schema.names == [
-        "other", "norm_text", "tokens", "starts", "ends", "features"
-    ]
-    for text, row in zip(texts, pa.Table.from_batches(batches).to_pylist()):
-        triples = textfns.tokenize_with_bounds(text or "")
-        assert row["other"] == "meta"
-        assert row["norm_text"] == text
-        assert row["tokens"] == [t for t, _, _ in triples]
-        assert row["starts"] == [s for _, s, _ in triples]
-        assert row["ends"] == [e for _, _, e in triples]
-        assert row["features"] == reference_blob(text or "", vocab, 8, 4), text
+    assert textfns.tokenize_with_bounds("a😀b c")[2:] == [("b", 2, 3), ("c", 4, 5)]
+    for cap in (None, 2):
+        fn = make_fused_featurize_arrow_fn(
+            vocab, 8, emb_dim=4, chunk_rows=2, cache_max_entries=cap
+        )
+        batches = list(fn(iter([rb])))
+        assert [b.num_rows for b in batches] == [2, 2, 2, 2, 1]
+        assert batches[0].schema.names == [
+            "other", "norm_text", "tokens", "starts", "ends", "features"
+        ]
+        for text, row in zip(texts, pa.Table.from_batches(batches).to_pylist()):
+            triples = textfns.tokenize_with_bounds(text or "")
+            assert row["other"] == "meta"
+            assert row["norm_text"] == text
+            assert row["tokens"] == [t for t, _, _ in triples]
+            assert row["starts"] == [s for _, s, _ in triples]
+            assert row["ends"] == [e for _, _, e in triples]
+            assert row["features"] == reference_blob(text or "", vocab, 8, 4), (cap, text)
 
 
 def test_arrow_featurize_cache_cap_resets_without_changing_output():

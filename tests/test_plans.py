@@ -123,6 +123,26 @@ def test_vocab_agg_has_partial_aggregation(tables, spark):
     assert "partial_count" in plan or "Partial" in plan, plan
 
 
+def test_text_vocab_fit_runs_two_jobs(tables, spark):
+    """The flagship's vocab fit is two Spark jobs: the map stage (Arrow
+    count + partial aggregate) and the final aggregate's collect.  The
+    vocab is sorted on the driver; a Spark orderBy would add the range
+    partitioner's sample job and a sort job."""
+    from deep_ner_spark.operators.features import fit_shape_vocab_from_text
+
+    tdf, _ = tables
+    sc = spark.sparkContext
+    group = "test.features.fit"
+    sc.setJobGroup(group, "vocab fit job count")
+    try:
+        vocab = fit_shape_vocab_from_text(tdf)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert vocab == tuple(sorted(vocab)) and len(vocab) > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
 def test_whole_stage_codegen_covers_window_ops(tables, spark):
     from deep_ner_spark.operators.windows import sessionize
 

@@ -64,28 +64,29 @@ def fit_shape_vocab_from_text(
     normalize -> tokenize -> shape functions — but the fit pass computes
     nothing it doesn't need: no bounds, no pos/dep tags, no token arrays.
     Each Arrow batch's non-null texts are joined with ``"\\n"`` (whitespace,
-    so no token spans two texts), normalized and tokenized by one
-    ``findall``; the tokens are dictionary-encoded and counted with
-    ``np.bincount``, so ``shape_of_string`` runs once per distinct token
+    so no token spans two texts) and tokenized by one ``findall``; the
+    tokens are dictionary-encoded and counted with ``np.bincount``, so
+    ``normalize_text`` and ``shape_of_string`` run once per distinct token
     and the batch ships its (shape, count) pairs (the map-side combine).
+    Normalizing tokens instead of text gives the same tokens:
+    normalization maps whitespace to a space and each dash variant (never
+    a word char) to ``-``, one char to one char of the same token class.
     Two Spark jobs: the partial aggregate and the final collect; the
     vocab is sorted on the driver as in :func:`fit_shape_vocab`.
     """
 
     def count_shapes(batches):
-        import numpy as np
         import pyarrow as pa
 
         from deep_ner_spark import textfns
 
         for rb in batches:
-            texts = rb.column(0).drop_null().to_pylist()
-            toks = textfns.tokenize(textfns.normalize_text("\n".join(texts)))
+            toks = textfns.tokenize("\n".join(rb.column(0).drop_null().to_pylist()))
             enc = pa.array(toks, type=pa.string()).dictionary_encode()
             tok_cnt = np.bincount(enc.indices.to_numpy(), minlength=len(enc.dictionary))
+            words = map(textfns.normalize_text, enc.dictionary.to_pylist())
             shapes = pa.array(
-                list(map(textfns.shape_of_string, enc.dictionary.to_pylist())),
-                type=pa.string(),
+                list(map(textfns.shape_of_string, words)), type=pa.string()
             ).dictionary_encode()
             # float64 weights sum exactly: a batch holds far fewer than 2^53 tokens
             cnt = np.bincount(

@@ -81,7 +81,8 @@ def test_text_vocab_fit_edge_texts(spark):
     """fit_shape_vocab_from_text equals a pure-Python Counter over
     ``shape_of_string(tokenize(normalize_text(t)))`` cut at min_freq, on
     null, empty, whitespace-only, NBSP, dash-variant, Cyrillic/accented,
-    superscript and over-long turns spread over several partitions."""
+    superscript and over-long turns spread over several partitions (the
+    fit normalizes distinct tokens, not texts)."""
     from collections import Counter
 
     from deep_ner_spark.operators.features import fit_shape_vocab_from_text
@@ -92,6 +93,8 @@ def test_text_vocab_fit_edge_texts(spark):
         " \t\n ",
         "a\u00a0b c\u00a0d",
         "x—y–z ‒ w",
+        "q".join(textfns.DASH_VARIANTS),  # every dash variant between words
+        "a\u2003b\x1fc\u3000d",
         "Ёлка ёж Crème brûlée",
         "x² y² 7²",
         "Élan vital, Ёж!",

@@ -1,6 +1,4 @@
 from deep_ner_spark.functions.text import (  # noqa: F401
     normalize_text_col,
-    shape_col_sql,
-    tokenize_struct_udf,
     shape_udf,
 )

@@ -2,9 +2,10 @@
 
 Design rule (BASELINE.json input_hint): *no per-row Python*.  Everything
 here is either a JVM-side built-in column expression (preferred — stays in
-whole-stage codegen) or an Arrow-batched ``pandas_udf``.  Order-dependent
-work (tokenize + char bounds) lives inside one UDF call per turn, so it is
-embarrassingly parallel across turns and never crosses rows.
+whole-stage codegen) or an Arrow-batched ``pandas_udf``.  Tokenize + char
+bounds is not here: it runs in the ``mapInArrow`` chunk tokenizer of
+``operators/features.py`` (``tokenize_chunk``), one regex split per chunk
+of turns, shared by ``tokenize_turns`` and the featurize kernel.
 """
 
 from __future__ import annotations
@@ -52,76 +53,6 @@ def word_token_count_col(col: Column) -> Column:
     whitespace stays whitespace), so it runs on the raw text.
     """
     return F.regexp_count(col, F.lit(JVM_TOKEN))
-
-
-def shape_col_sql(col: Column) -> Column:
-    """Built-in-only token shape for ASCII-ish tokens.
-
-    A JVM-side fallback of textfns.shape_of_string restricted to the Latin-1
-    range (classify via translate chains, collapse runs via regexp).  The
-    pandas UDF below is the full-Unicode authority; tests assert the two
-    agree on the common subset.
-    """
-    upper = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-    lower = upper.lower()
-    digits = "0123456789"
-    punct = ".,:;+!?#@$&=^`~*/\\()[]{}|<>" + "'" + '"' + "-"
-    # NB: reference classifies ASCII '-' and quotes as P (elmo_ner.py:1078-1080)
-    classified = F.translate(
-        col,
-        upper + lower + digits + punct,
-        "A" * 26 + "a" * 26 + "D" * 10 + "P" * len(punct),
-    )
-    return F.regexp_replace(classified, r"(.)\1+", "$1")
-
-
-# --- tokenizer UDF: one call per turn, struct of aligned arrays --------------
-
-TOKENS_SCHEMA = T.StructType(
-    [
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-        T.StructField("starts", T.ArrayType(T.IntegerType())),
-        T.StructField("ends", T.ArrayType(T.IntegerType())),
-        T.StructField("shapes", T.ArrayType(T.StringType())),
-        T.StructField("pos", T.ArrayType(T.StringType())),
-        T.StructField("dep", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-@pandas_udf(TOKENS_SCHEMA)
-def tokenize_struct_udf(texts: pd.Series) -> pd.DataFrame:
-    """normalized text -> aligned token arrays (token, bounds, shape, pos, dep).
-
-    Mirrors the per-text section of tokenize_all (elmo_ner.py:398-437) with
-    the pinned tokenizer; bounds come from the same scan so the forward
-    substring search of calculate_bounds_of_tokens (elmo_ner.py:952-963) is
-    reproduced by construction.
-    """
-    tokens_out, starts_out, ends_out = [], [], []
-    shapes_out, pos_out, dep_out = [], [], []
-    for text in texts:
-        if text is None:
-            text = ""
-        triples = textfns.tokenize_with_bounds(text)
-        toks = [t for t, _, _ in triples]
-        tags = [textfns.heuristic_pos_dep(t, i) for i, t in enumerate(toks)]
-        tokens_out.append(toks)
-        starts_out.append([s for _, s, _ in triples])
-        ends_out.append([e for _, _, e in triples])
-        shapes_out.append([textfns.shape_of_string(t) for t in toks])
-        pos_out.append([p for p, _ in tags])
-        dep_out.append([d for _, d in tags])
-    return pd.DataFrame(
-        {
-            "tokens": tokens_out,
-            "starts": starts_out,
-            "ends": ends_out,
-            "shapes": shapes_out,
-            "pos": pos_out,
-            "dep": dep_out,
-        }
-    )
 
 
 _TAGGED_SCHEMA = T.StructType(

@@ -23,6 +23,7 @@ becomes a dict lookup, paid once per distinct token.
 
 from __future__ import annotations
 
+import re
 from typing import Dict, Sequence, Tuple
 
 import numpy as np
@@ -33,36 +34,15 @@ from pyspark.sql import types as T
 from deep_ner_spark import textfns
 
 
-def fit_shape_vocab(
-    tokenized_turns: DataFrame, min_freq: int = 3, shapes_col: str = "shapes"
-) -> Tuple[str, ...]:
-    """Shape vocabulary: corpus frequency >= min_freq, sorted (elmo_ner.py:492-500).
-
-    Empty shapes are excluded (elmo_ner.py:419-421 skips '' before counting).
-    The vocab is sorted on the driver: Spark's UTF-8 binary order is
-    Python's code-point order, and a Spark ``orderBy`` would cost two more
-    jobs (the range-partition sample and the sort).
-    """
-    rows = (
-        tokenized_turns.select(F.explode(shapes_col).alias("shape"))
-        .where(F.col("shape") != "")
-        .groupBy("shape")
-        .count()
-        .where(F.col("count") >= min_freq)
-        .select("shape")
-        .collect()
-    )
-    return tuple(sorted(r["shape"] for r in rows))
-
-
 def fit_shape_vocab_from_text(
     turns: DataFrame, min_freq: int = 3, text_col: str = "text"
 ) -> Tuple[str, ...]:
-    """Shape vocabulary fitted with a COUNT-ONLY pass over raw text.
+    """Shape vocabulary: corpus frequency >= min_freq, sorted
+    (elmo_ner.py:492-500), fitted with a COUNT-ONLY pass over raw text.
 
-    Same result as ``fit_shape_vocab(tokenize_turns(df))`` — identical
-    normalize -> tokenize -> shape functions — but the fit pass computes
-    nothing it doesn't need: no bounds, no pos/dep tags, no token arrays.
+    Empty shapes are excluded (elmo_ner.py:419-421 skips '' before
+    counting).  The pass computes nothing it doesn't need: no bounds, no
+    pos/dep tags, no token arrays.
     Each Arrow batch's non-null texts are joined with ``"\\n"`` (whitespace,
     so no token spans two texts) and tokenized by one ``findall``; the
     tokens are dictionary-encoded and counted with ``np.bincount``, so
@@ -71,8 +51,10 @@ def fit_shape_vocab_from_text(
     Normalizing tokens instead of text gives the same tokens:
     normalization maps whitespace to a space and each dash variant (never
     a word char) to ``-``, one char to one char of the same token class.
-    Two Spark jobs: the partial aggregate and the final collect; the
-    vocab is sorted on the driver as in :func:`fit_shape_vocab`.
+    Two Spark jobs: the partial aggregate and the final collect.  The
+    vocab is sorted on the driver: Spark's UTF-8 binary order is Python's
+    code-point order, and a Spark ``orderBy`` would cost two more jobs
+    (the range-partition sample and the sort).
     """
 
     def count_shapes(batches):
@@ -267,15 +249,83 @@ def _token_row_table(
     return start_batch, row_of, gather
 
 
-# the columns the featurize kernel appends to its input, in output order
-FEATURIZE_FIELDS = T.StructType(
+# the columns the tokenizer appends to its input, in output order
+TOKEN_FIELDS = T.StructType(
     [
         T.StructField("tokens", T.ArrayType(T.StringType())),
         T.StructField("starts", T.ArrayType(T.IntegerType())),
         T.StructField("ends", T.ArrayType(T.IntegerType())),
-        T.StructField("features", T.BinaryType()),
     ]
 )
+# the columns the featurize kernel appends: the tokenizer's plus the blob
+FEATURIZE_FIELDS = T.StructType(
+    TOKEN_FIELDS.fields + [T.StructField("features", T.BinaryType())]
+)
+
+# textfns._TOKEN_RE in capturing form: odd parts of a split are tokens
+_split_tokens = re.compile(f"({textfns._TOKEN_RE.pattern})").split
+
+
+def tokenize_chunk(texts: list):
+    """Texts -> (``[tokens, starts, ends]`` list columns, per-text token
+    offsets), the bounds of ``textfns.tokenize_with_bounds`` with no
+    Python code run per token.
+
+    The texts are joined with ``"\\n"`` (whitespace, so no token spans two
+    texts) and cut by ONE ``re.split``: odd parts are the tokens, even
+    parts the gaps.  Cumulative part lengths give each token's code-point
+    offset (``m.start()``, never an Arrow byte offset); ``searchsorted``
+    over the texts' own offsets gives its text and its start/end within
+    that text.  The columns are ``ListArray``s over the flat arrays and
+    one offsets array, which is returned too (int64, ``len(texts) + 1``).
+    """
+    import pyarrow as pa
+
+    n_texts = len(texts)
+    parts = _split_tokens("\n".join(texts))
+    part_len = np.fromiter(map(len, parts), np.int64, len(parts))
+    part_at = np.zeros(len(parts), dtype=np.int64)
+    np.cumsum(part_len[:-1], out=part_at[1:])
+    text_at = np.zeros(n_texts, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, texts), np.int64, n_texts)[:-1] + 1, out=text_at[1:])
+    tok_at = part_at[1::2]
+    text_of = np.searchsorted(text_at, tok_at, side="right") - 1
+    starts = tok_at - text_at[text_of]
+    tok_offs = np.zeros(n_texts + 1, dtype=np.int64)
+    np.cumsum(np.bincount(text_of, minlength=n_texts), out=tok_offs[1:])
+    list_offs = pa.array(tok_offs.astype(np.int32))
+    flat = [
+        pa.array(parts[1::2], type=pa.string()),
+        pa.array(starts.astype(np.int32)),
+        pa.array((starts + part_len[1::2]).astype(np.int32)),
+    ]
+    return [pa.ListArray.from_arrays(list_offs, a) for a in flat], tok_offs
+
+
+def _map_text_chunks(batches, chunk_fn, out_names, chunk_rows: int = 2048):
+    """The ``mapInArrow`` loop of the text kernels: each input batch in
+    zero-copy slices of at most ``chunk_rows`` rows, every input column
+    passed through and ``chunk_fn``'s columns (``out_names``) appended.
+    ``chunk_fn`` gets the slice's ``norm_text`` as a list, null read as
+    ``""``."""
+    import pyarrow as pa
+
+    for rb in batches:
+        ncol = rb.schema.get_field_index("norm_text")
+        for off in range(0, rb.num_rows, chunk_rows):
+            sub = rb.slice(off, min(chunk_rows, rb.num_rows - off))
+            new = chunk_fn(sub.column(ncol).fill_null("").to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                sub.columns + new, names=sub.schema.names + out_names
+            )
+
+
+def tokenize_arrow_fn(batches):
+    """``mapInArrow`` body: a ``norm_text`` column -> every input column
+    plus :data:`TOKEN_FIELDS`."""
+    return _map_text_chunks(
+        batches, lambda texts: tokenize_chunk(texts)[0], TOKEN_FIELDS.names
+    )
 
 
 def make_fused_featurize_arrow_fn(
@@ -291,15 +341,8 @@ def make_fused_featurize_arrow_fn(
 
     No Python code runs per token.  Per chunk:
 
-    * **Tokens and bounds.**  The chunk's texts are joined with ``"\\n"``
-      (whitespace, so no token spans two texts) and cut by ONE ``re.split``
-      with the tokenizer's pattern in capturing form: odd parts are the
-      tokens of ``tokenize_with_bounds``, even parts the gaps.  Cumulative
-      part lengths give each token's code-point offset (``m.start()``,
-      never an Arrow byte offset); ``searchsorted`` over the texts' own
-      offsets gives its text and its start/end within that text.
-    * **Output columns.**  ``tokens``/``starts``/``ends`` are
-      ``ListArray`` columns over the flat arrays and one offsets array.
+    * **Tokens and bounds.**  :func:`tokenize_chunk`, the tokenizer
+      :func:`deep_ner_spark.operators.tokens.tokenize_turns` runs too.
     * **Row ids.**  The flat tokens are dictionary-encoded, each kept
       token's ``(is_first, parity)`` is folded into its dictionary index
       as one int key, and ``np.unique`` finds the chunk's distinct keys.
@@ -319,15 +362,12 @@ def make_fused_featurize_arrow_fn(
     session's 10k-row Arrow batches amplify ~20-80x through this function
     (feature blobs), and 100+ MB batches spike both the Python worker and
     the JVM reader.  Input batches are processed (and yielded) in
-    zero-copy slices of at most ``chunk_rows`` rows, sized so one output
-    batch stays in the tens of MB; the cap also keeps the int32 binary
-    offsets far from overflow at any (max_seq_length, vocab) shape.
+    zero-copy slices of at most ``chunk_rows`` rows
+    (:func:`_map_text_chunks`), sized so one output batch stays in the tens
+    of MB; the cap also keeps the int32 binary offsets far from overflow
+    at any (max_seq_length, vocab) shape.
     """
-    import re
-
     import pyarrow as pa
-
-    from deep_ner_spark import textfns
 
     S = len(vocab)
     width = feature_width(vocab, emb_dim)
@@ -338,31 +378,17 @@ def make_fused_featurize_arrow_fn(
     chunk_rows = max(
         1, min(chunk_rows, (1 << 30) // max(max_seq_length * row_bytes, 1))
     )
-    out_names = FEATURIZE_FIELDS.names
-    split = re.compile(f"({textfns._TOKEN_RE.pattern})").split
 
     start_batch, row_of, gather = _token_row_table(vocab, emb_dim, cache_max_entries)
 
     def featurize_chunk(texts: list) -> list:
-        n_texts = len(texts)
-        parts = split("\n".join(texts))
-        part_len = np.fromiter(map(len, parts), np.int64, len(parts))
-        part_at = np.zeros(len(parts), dtype=np.int64)
-        np.cumsum(part_len[:-1], out=part_at[1:])
-        text_at = np.zeros(n_texts, dtype=np.int64)
-        np.cumsum(np.fromiter(map(len, texts), np.int64, n_texts)[:-1] + 1, out=text_at[1:])
-        tok_at = part_at[1::2]
-        text_of = np.searchsorted(text_at, tok_at, side="right") - 1
-        starts = tok_at - text_at[text_of]
-        ends = starts + part_len[1::2]
-        n_toks = np.bincount(text_of, minlength=n_texts)
-        tok_offs = np.zeros(n_texts + 1, dtype=np.int64)
-        np.cumsum(n_toks, out=tok_offs[1:])
-        pos = np.arange(len(tok_at)) - tok_offs[text_of]
+        start_batch()
+        cols, tok_offs = tokenize_chunk(texts)
+        n_toks = np.diff(tok_offs)
+        pos = np.arange(tok_offs[-1]) - np.repeat(tok_offs[:-1], n_toks)
 
         # one row_of call per distinct (token, is_first, parity) key
-        words = pa.array(parts[1::2], type=pa.string())
-        enc = words.dictionary_encode()
+        enc = cols[0].values.dictionary_encode()
         key = enc.indices.to_numpy().astype(np.int64) << 2
         key |= (pos == 0) << 1
         key |= pos & 1
@@ -377,7 +403,7 @@ def make_fused_featurize_arrow_fn(
         # one gather for the whole chunk, then vectorized BOS/EOS scatters
         stacked = gather(rid[inv])
         lens = np.minimum(n_toks, max_seq_length)
-        offs = np.zeros(n_texts + 1, dtype=np.int64)
+        offs = np.zeros(len(texts) + 1, dtype=np.int64)
         np.cumsum(lens, out=offs[1:])
         nonempty = offs[:-1][lens > 0]
         if len(nonempty):
@@ -386,27 +412,13 @@ def make_fused_featurize_arrow_fn(
         # zero-copy binary column: offsets over the gathered buffer
         feats = pa.Array.from_buffers(
             pa.binary(),
-            n_texts,
+            len(texts),
             [None, pa.py_buffer((offs * row_bytes).astype(np.int32)), pa.py_buffer(stacked)],
         )
-        list_offs = pa.array(tok_offs.astype(np.int32))
-        return [
-            pa.ListArray.from_arrays(list_offs, words),
-            pa.ListArray.from_arrays(list_offs, pa.array(starts.astype(np.int32))),
-            pa.ListArray.from_arrays(list_offs, pa.array(ends.astype(np.int32))),
-            feats,
-        ]
+        return cols + [feats]
 
     def fn(batches):
-        for rb in batches:
-            ncol = rb.schema.get_field_index("norm_text")
-            for off in range(0, rb.num_rows, chunk_rows):
-                sub = rb.slice(off, min(chunk_rows, rb.num_rows - off))
-                start_batch()
-                new = featurize_chunk(sub.column(ncol).fill_null("").to_pylist())
-                yield pa.RecordBatch.from_arrays(
-                    sub.columns + new, names=sub.schema.names + out_names
-                )
+        return _map_text_chunks(batches, featurize_chunk, FEATURIZE_FIELDS.names, chunk_rows)
 
     return fn
 

@@ -1,27 +1,18 @@
-"""Entity labeling: the token <-> entity interval-overlap join (SURVEY J1)
-plus the exact char-paint/majority/BIO pipeline of the reference.
+"""Entity labeling: tokens of a turn get the BIO labels of the entity
+spans that overlap them (SURVEY J1), with the exact char-paint/majority/BIO
+semantics of the reference.
 
-Two implementations, deliberately:
-
-* :func:`label_tokens_colocated` — the *authoritative* path.  Entities and
-  tokens of one turn are colocated (a single groupBy on the turn key), and
-  the per-turn labeling runs the exact reference semantics
-  (char paint -> per-token majority -> BIO ints; elmo_ner.py:1026-1064)
-  vectorized in NumPy inside ``applyInPandas``.  One shuffle (group spans to
-  turns); no interval join at table scope.
-
-* :func:`label_tokens_relational` — pure-DataFrame range-join form used for
-  oracle cross-checks: overlap theta-join + max_by(overlap) majority.  It
-  matches the colocated path whenever no two entity instances tie on a
-  token's majority count (the reference breaks such ties by paint instance
-  id, which the relational form reproduces via min(instance)).
+:func:`label_tokens_colocated` colocates the entities and tokens of one
+turn (a single groupBy on the turn key) and runs the reference semantics
+(char paint -> per-token majority -> BIO ints; elmo_ner.py:1026-1064)
+vectorized in NumPy inside one Arrow pass.  One shuffle (group spans to
+turns); no interval join at table scope.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,73 +84,3 @@ def label_tokens_colocated(
         lambda it: (run(pdf) for pdf in it), schema=_LABELS_SCHEMA
     )
 
-
-def label_tokens_relational(
-    token_df: DataFrame,
-    entity_spans: DataFrame,
-    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """Range-join labeling (J1 relational form).
-
-    tokens (key..., token_idx, start, end) x spans (key..., ne_type, start,
-    end, instance_id) on char-interval overlap; per token keep the instance
-    with max overlap (ties -> lowest instance id, like distr.argmax);
-    overlap below half the token length floors to O (utils.py:998 analog).
-
-    Known divergences from :func:`label_tokens_colocated` (which follows
-    elmo_ner.py:1026-1064 and is the authoritative path):
-
-    * instance-vs-instance majority ties resolve by lowest instance id in
-      both paths, but the colocated path counts painted CHARS while this
-      path compares interval overlaps — equal on non-overlapping spans;
-    * an exact O-vs-entity tie (overlap == tok_len - overlap, i.e. a token
-      exactly half-covered) labels the ENTITY here (utils.py:998 keeps
-      overlap >= floor(tok_len / 2)) but O in the colocated path
-      (bincount argmax picks index 0, elmo_ner.py:1050).  Both reference
-      files exist with these exact semantics; this function mirrors
-      utils.py, the colocated one mirrors elmo_ner.py.
-    """
-    t = token_df.alias("t")
-    e = entity_spans.alias("e")
-    cond = [F.col(f"t.{k}") == F.col(f"e.{k}") for k in key_cols]
-    cond.append(F.col("t.start") < F.col("e.end"))
-    cond.append(F.col("e.start") < F.col("t.end"))
-    overlap = F.least(F.col("t.end"), F.col("e.end")) - F.greatest(
-        F.col("t.start"), F.col("e.start")
-    )
-    tok_len = F.col("t.end") - F.col("t.start")
-    joined = (
-        t.join(e, on=cond, how="left")
-        .select(
-            *[F.col(f"t.{k}").alias(k) for k in key_cols],
-            F.col("t.token_idx").alias("token_idx"),
-            F.col("t.start").alias("start"),
-            F.col("t.end").alias("end"),
-            F.col("e.ne_type").alias("ne_type"),
-            F.col("e.instance_id").alias("instance_id"),
-            overlap.alias("overlap"),
-            tok_len.alias("tok_len"),
-        )
-    )
-    best = (
-        joined.groupBy(*key_cols, "token_idx", "start", "end", "tok_len")
-        .agg(
-            F.max_by(
-                F.struct("ne_type", "instance_id"),
-                F.struct(F.col("overlap"), -F.col("instance_id")),
-            ).alias("best"),
-            F.max("overlap").alias("best_overlap"),
-        )
-    )
-    # utils.py:998: O unless overlap >= floor(token_len / 2)
-    keep = (F.col("best_overlap").isNotNull()) & (
-        F.col("best_overlap") >= F.floor(F.col("tok_len") / 2)
-    )
-    return best.select(
-        *key_cols,
-        "token_idx",
-        "start",
-        "end",
-        F.when(keep, F.col("best.ne_type")).alias("ne_type"),
-        F.when(keep, F.col("best.instance_id")).alias("instance_id"),
-    )

@@ -1,39 +1,34 @@
 """Turn -> token pipeline (SURVEY §1.3 token rows, §2.5 W5).
 
-``tokenize_turns`` keeps everything turn-local (one UDF call per turn, Arrow
-batched); ``token_table`` explodes to the long form used by relational
-operators.  No shuffle in either step — posexplode is a narrow transform.
+``tokenize_turns`` keeps everything turn-local: one ``mapInArrow`` pass
+running the featurize kernel's chunk tokenizer
+(:func:`deep_ner_spark.operators.features.tokenize_chunk`, one regex split
+per chunk of turns); ``token_table`` explodes to the long form used by
+relational operators.  No shuffle in either step — posexplode is a narrow
+transform.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from deep_ner_spark.functions.text import normalize_text_col, tokenize_struct_udf
+from deep_ner_spark.functions.text import normalize_text_col
+from deep_ner_spark.operators.features import TOKEN_FIELDS, tokenize_arrow_fn
 
 
 def tokenize_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add ``norm_text`` + aligned token arrays (tokens/starts/ends/shapes/pos/dep).
+    """Add ``norm_text`` + aligned token arrays (tokens/starts/ends).
 
     Offsets are computed against the normalized text, exactly as the
     reference does (elmo_ner.py:400,463: normalize first, tokenize second) —
-    normalization is 1:1 on char length so offsets remain valid.
+    normalization is 1:1 on char length so offsets remain valid.  A null
+    text has no tokens.
     """
-    return (
-        df.withColumn("norm_text", normalize_text_col(F.col(text_col)))
-        .withColumn("__tok", tokenize_struct_udf(F.col("norm_text")))
-        .select(
-            "*",
-            F.col("__tok.tokens").alias("tokens"),
-            F.col("__tok.starts").alias("starts"),
-            F.col("__tok.ends").alias("ends"),
-            F.col("__tok.shapes").alias("shapes"),
-            F.col("__tok.pos").alias("pos_tags"),
-            F.col("__tok.dep").alias("dep_tags"),
-        )
-        .drop("__tok")
-    )
+    base = df.withColumn("norm_text", normalize_text_col(F.col(text_col)))
+    out_schema = T.StructType(base.schema.fields + TOKEN_FIELDS.fields)
+    return base.mapInArrow(tokenize_arrow_fn, out_schema)
 
 
 def token_table(df: DataFrame, keep_cols: list[str] | None = None) -> DataFrame:
@@ -44,14 +39,11 @@ def token_table(df: DataFrame, keep_cols: list[str] | None = None) -> DataFrame:
     ``posexplode`` — order within a turn is array order, no window needed.
     """
     keep = keep_cols if keep_cols is not None else ["conv_id", "turn_idx"]
-    zipped = F.arrays_zip("tokens", "starts", "ends", "shapes", "pos_tags", "dep_tags")
+    zipped = F.arrays_zip("tokens", "starts", "ends")
     return df.select(*keep, F.posexplode(zipped).alias("token_idx", "t")).select(
         *keep,
         "token_idx",
         F.col("t.tokens").alias("token"),
         F.col("t.starts").alias("start"),
         F.col("t.ends").alias("end"),
-        F.col("t.shapes").alias("shape"),
-        F.col("t.pos_tags").alias("pos"),
-        F.col("t.dep_tags").alias("dep"),
     )

@@ -21,11 +21,11 @@ from __future__ import annotations
 
 from typing import Sequence, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deep_ner_spark.functions.text import word_token_count_col
-from deep_ner_spark.operators.asof import asof_join, asof_join_salted
+from deep_ner_spark.operators.asof import asof_join
 from deep_ner_spark.operators.features import featurize_fused, fit_shape_vocab_from_text
 from deep_ner_spark.operators.windows import forward_fill, lag_lead, sessionize
 
@@ -37,8 +37,6 @@ def featurize_transcripts(
     max_seq_length: int = 32,
     emb_dim: int = 16,
     session_gap_seconds: float = 1800.0,
-    salted: bool = False,
-    n_salts: int = 8,
     state_seq_col: str | None = None,
 ) -> Tuple[DataFrame, Tuple[str, ...]]:
     """Returns (featurized turns DataFrame, fitted shape vocabulary).
@@ -55,15 +53,13 @@ def featurize_transcripts(
         # as-of runs first: its union-tag window hash-partitions by conv_id,
         # and every later window reuses that partitioning (sorts only)
         state = entity_state.withColumnRenamed("entity_id", "conv_id")
-        join = asof_join_salted if salted else asof_join
-        kwargs = {"n_salts": n_salts} if salted else {}
         # state_seq_col breaks ties among state rows sharing one (conv, ts):
         # without it, F.last over fully-equal sort keys picks whichever row
         # the shuffle ordered last, making the attached state nondeterministic
         state_cols = ["conv_id", "ts", "state"] + (
             [state_seq_col] if state_seq_col else []
         )
-        slim = join(
+        slim = asof_join(
             slim,
             state.select(*state_cols),
             key_cols=["conv_id"],
@@ -71,7 +67,6 @@ def featurize_transcripts(
             state_cols=["state"],
             seq_col="turn_idx",
             state_seq_col=state_seq_col,
-            **kwargs,
         )
     slim = sessionize(
         slim, ["conv_id"], "ts", session_gap_seconds, order_cols=["turn_idx"]

@@ -7,11 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from deep_ner_spark import datagen, textfns
-from deep_ner_spark.operators.features import (
-    fit_classes_list,
-    fit_shape_vocab,
-    turn_feature_matrix,
-)
+from deep_ner_spark.operators.features import fit_classes_list, turn_feature_matrix
 from deep_ner_spark.operators.labeling import label_tokens_colocated
 from deep_ner_spark.operators.tokens import token_table, tokenize_turns
 from deep_ner_spark.pipeline import featurize_transcripts
@@ -61,16 +57,10 @@ def reference_blob(text, vocab, max_seq, emb):
     return want[: min(len(toks), max_seq)].astype("<f4").tobytes()
 
 
-def test_shape_vocab_parity(data, spark):
-    tdf, _, _, t, _, _ = data
-    toks = tokenize_turns(tdf)
-    assert fit_shape_vocab(toks) == reference_vocab(t)
-
-
 def test_fit_shape_vocab_from_text_equals_tokenized_fit(data, spark):
     """The count-only fit pass (the flagship's vocab source) must produce
-    the exact vocabulary of the full tokenized fit and of the reference
-    computation."""
+    the exact vocabulary of the reference computation, which tokenizes
+    every normalized turn and counts its token shapes."""
     from deep_ner_spark.operators.features import fit_shape_vocab_from_text
 
     tdf, _, _, t, _, _ = data

@@ -106,21 +106,60 @@ def test_cosine_topk_broadcasts_query_side(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
+def executed_plans(spark, description: str, action) -> list:
+    """Physical plans (final, after AQE) of the SQL executions ``action``
+    ran, read from the SQL status store under a unique job description."""
+    sc = spark.sparkContext
+    sc.setJobDescription(description)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    tail = store.executionsList(max(n - 50, 0), 50)
+    runs = [tail.apply(i) for i in range(tail.size())]
+    return [x.physicalPlanDescription() for x in runs if x.description() == description]
+
+
 def test_vocab_agg_has_partial_aggregation(tables, spark):
-    """The shape-vocab fit must map-side combine (partial_count before the
-    exchange) so the shuffle moves (shape, count) pairs, not tokens."""
-    from deep_ner_spark.operators.tokens import tokenize_turns
+    """The flagship's shape-vocab fit must map-side combine (partial_sum
+    before the exchange) so the shuffle moves (shape, count) pairs, not
+    tokens.  Checked on the plan the fit itself executed, so the check
+    follows the fit wherever its code goes."""
+    from deep_ner_spark.operators.features import fit_shape_vocab_from_text
 
     tdf, _ = tables
-    toks = tokenize_turns(tdf)
-    agg = (
-        toks.select(F.explode("shapes").alias("shape"))
-        .groupBy("shape")
-        .count()
-        .where(F.col("count") >= 3)
-    )
-    plan = plan_of(agg)
-    assert "partial_count" in plan or "Partial" in plan, plan
+    plans = executed_plans(spark, "test.vocab_fit_plan", lambda: fit_shape_vocab_from_text(tdf))
+    assert len(plans) == 1, plans
+    final = plans[0].split("== Initial Plan ==")[0]
+    assert "MapInArrow" in final, final
+    # formatted tree lists nodes root first: the partial aggregate sits
+    # below (after) the exchange, the final one above (before) it
+    nodes = re.findall(r"\b(HashAggregate|Exchange|MapInArrow) \(\d+\)", final)
+    assert nodes == ["HashAggregate", "Exchange", "HashAggregate", "MapInArrow"], nodes
+    assert "partial_sum(cnt" in plans[0], plans[0]
+
+
+def test_tokenize_turns_is_one_arrow_map_no_python_eval(spark, tmp_path):
+    """tokenize_turns, and the token_explode driver query built on it, run
+    the chunk tokenizer as one MapInArrow node: no scalar Python UDF
+    (ArrowEvalPython / BatchEvalPython) evaluates per-row tokens."""
+    import __spark_entry__ as entry
+
+    from deep_ner_spark.operators.tokens import tokenize_turns
+
+    docs = spark.createDataFrame([(1, "a b"), (2, None)], "doc_id long, text string")
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    for df in (
+        tokenize_turns(docs),
+        entry.queries()["token_explode"](spark, str(tmp_path)),
+    ):
+        plan = plan_of(df)
+        assert plan.count("MapInArrow (") == 1, plan
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_text_vocab_fit_runs_two_jobs(tables, spark):

@@ -6,11 +6,10 @@ from pyspark.sql import functions as F
 from deep_ner_spark import textfns
 from deep_ner_spark.functions.text import (
     normalize_text_col,
-    shape_col_sql,
     shape_udf,
-    tokenize_struct_udf,
     word_token_count_col,
 )
+from deep_ner_spark.operators.tokens import token_table, tokenize_turns
 
 TRICKY = [
     "a—b–c‒d‑e‐f﹣g－h⁃i֊j᠆k",
@@ -85,35 +84,56 @@ def test_jvm_classes_match_python_on_every_bmp_code_point(spark):
     assert bad == []
 
 
-def test_tokenize_udf_matches_python(spark):
-    texts = [t for t in TRICKY if t] + ["Anna Karenina flew to New York in 1997 — twice."]
-    df = spark.createDataFrame(pd.DataFrame({"text": [textfns.normalize_text(t) for t in texts]}))
-    rows = (
-        df.withColumn("tok", tokenize_struct_udf(F.col("text")))
-        .select("text", "tok.*")
-        .collect()
+def test_tokenize_turns_matches_python_on_edge_texts(spark):
+    """tokenize_turns gives each row the tokens and char bounds of
+    ``tokenize_with_bounds(normalize_text(text))``, which also equal the
+    reference's sequential-find alignment (``bounds_of_tokens``), and
+    token_table explodes them in order: TRICKY and CLASS_EDGES texts,
+    null (no tokens, no crash), empty, whitespace-only, doubled inner
+    spaces, NBSP, an astral character (its UTF-8 bytes would shift a byte
+    offset), a superscript digit, punctuation only and a 300+-token turn."""
+    texts = TRICKY + list(CLASS_EDGES) + [
+        None,
+        "",
+        " \t\n ",
+        "two  spaces   inside",
+        "a\u00a0b c\u00a0d",
+        "a\U0001F600b c \U0001D400x",
+        "x\u00b2 7\u00b2",
+        "?!...,;",
+        "w1 " * 320,
+        "Anna Karenina flew to New York in 1997 \u2014 twice.",
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "conv_id int, text string"
+    ).repartition(3)
+    toks = tokenize_turns(df).withColumn("turn_idx", F.lit(0))
+    rows = {r["conv_id"]: r for r in toks.collect()}
+    assert len(rows) == len(texts)
+    want_long = []
+    for i, text in enumerate(texts):
+        r = rows[i]
+        norm = textfns.normalize_text(text or "")
+        triples = textfns.tokenize_with_bounds(norm)
+        assert r["norm_text"] == (None if text is None else norm), i
+        assert r["tokens"] == [t for t, _, _ in triples], i
+        assert r["starts"] == [s for _, s, _ in triples], i
+        assert r["ends"] == [e for _, _, e in triples], i
+        assert list(zip(r["starts"], r["ends"])) == textfns.bounds_of_tokens(
+            norm, r["tokens"]
+        ), i
+        want_long += [(i, k, t, s, e) for k, (t, s, e) in enumerate(triples)]
+    assert len(rows[texts.index("w1 " * 320)]["tokens"]) == 320
+    long = token_table(toks)
+    got_long = sorted(
+        tuple(r) for r in long.select("conv_id", "token_idx", "token", "start", "end").collect()
     )
-    for r in rows:
-        triples = textfns.tokenize_with_bounds(r["text"])
-        assert r["tokens"] == [t for t, _, _ in triples]
-        assert r["starts"] == [s for _, s, _ in triples]
-        assert r["ends"] == [e for _, _, e in triples]
-        assert r["shapes"] == [textfns.shape_of_string(t) for t, _, _ in triples]
-        # bounds also equal the reference's sequential-find alignment
-        if r["tokens"]:
-            assert list(zip(r["starts"], r["ends"])) == textfns.bounds_of_tokens(
-                r["text"], r["tokens"]
-            )
+    assert got_long == want_long
 
 
-def test_shape_udf_and_sql_fallback_agree_on_ascii(spark):
-    tokens = ["Hello", "HELLO", "abc123", "CamelCase", "1,234.56", "a+b", "!!", "x"]
+def test_shape_udf_matches_python(spark):
+    tokens = ["Hello", "HELLO", "abc123", "CamelCase", "1,234.56", "a+b", "!!", "x", "Ёлка", "x²"]
     df = spark.createDataFrame(pd.DataFrame({"token": tokens}))
-    rows = df.select(
-        "token",
-        shape_udf(F.col("token")).alias("py"),
-        shape_col_sql(F.col("token")).alias("sql"),
-    ).collect()
+    rows = df.select("token", shape_udf(F.col("token")).alias("py")).collect()
     for r in rows:
         assert r["py"] == textfns.shape_of_string(r["token"])
-        assert r["sql"] == r["py"]

@@ -660,7 +660,9 @@ def q_token_explode(spark, sf_dir):
     """SURVEY W5/J4: pinned tokenizer + char bounds, long-form token table."""
     from deep_ner_spark.operators.tokens import token_table, tokenize_turns
 
-    docs = _read(spark, sf_dir, "documents")
+    # only doc_id and the tokens are read afterwards, and every column
+    # that enters tokenize_turns crosses its mapInArrow twice
+    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     toks = tokenize_turns(docs, "text")
     long = token_table(toks, keep_cols=["doc_id"])
     return long.select("doc_id", "token_idx", "token", "start", "end")

@@ -145,17 +145,6 @@ def gen_transcripts(
     )
 
 
-def spark_transcripts(spark, n_convs=20, mean_turns=10, seed=42, partitions=None):
-    """Small-scale helper: sequential generation, then createDataFrame."""
-    t, s, st = gen_transcripts(n_convs, mean_turns, seed)
-    tdf = spark.createDataFrame(t)
-    sdf = spark.createDataFrame(s)
-    stdf = spark.createDataFrame(st)
-    if partitions:
-        tdf = tdf.repartition(partitions, "conv_id")
-    return tdf, sdf, stdf
-
-
 def spark_gen_table(spark, which: str, n_convs: int, mean_turns: int, seed: int,
                     n_tasks: int = 64):
     """Cluster-parallel generation of one of the three tables.

@@ -55,45 +55,6 @@ def word_token_count_col(col: Column) -> Column:
     return F.regexp_count(col, F.lit(JVM_TOKEN))
 
 
-_TAGGED_SCHEMA = T.StructType(
-    [
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-        T.StructField("pos", T.ArrayType(T.StringType())),
-        T.StructField("dep", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-def udpipe_tagger_udf(lang: str | None = None, strict: bool = False):
-    """Arrow-batched ``text -> struct(tokens, pos, dep)`` UDF factory.
-
-    The documented adapter over the §2.10 tagger seam
-    (:func:`textfns.make_text_tagger`): real UDPipe tags when ``lang`` is
-    given AND spacy-udpipe is importable on the executors (pipeline loaded
-    lazily once per Python worker, inside the first batch), else the
-    pinned deterministic heuristic.  ``strict=True`` makes a missing
-    spacy-udpipe an executor-side ImportError instead of a silent
-    heuristic fallback.  Token alignment follows the reference
-    (elmo_ner.py:402-415): with UDPipe the TOKENS THEMSELVES come from the
-    UDPipe tokenization, not the in-repo tokenizer.
-    """
-
-    @pandas_udf(_TAGGED_SCHEMA)
-    def tag(texts: pd.Series) -> pd.DataFrame:
-        tagger = textfns.make_text_tagger(lang, strict=strict)
-        tokens_out, pos_out, dep_out = [], [], []
-        for text in texts:
-            toks, pos, dep = tagger("" if text is None else text)
-            tokens_out.append(toks)
-            pos_out.append(pos)
-            dep_out.append(dep)
-        return pd.DataFrame(
-            {"tokens": tokens_out, "pos": pos_out, "dep": dep_out}
-        )
-
-    return tag
-
-
 @pandas_udf(T.StringType())
 def shape_udf(tokens: pd.Series) -> pd.Series:
     """token -> shape string (full reference semantics, lru-cached)."""

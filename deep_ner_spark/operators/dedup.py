@@ -19,18 +19,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deep_ner_spark.compat import CONNECT_ERRS
+from deep_ner_spark.compat import CONNECT_ERRS, local_checkpoint
 
-
-def _local_ckpt(frame: DataFrame) -> DataFrame:
-    """localCheckpoint if the session supports it, else the frame as-is
-    (self-join sides then recompute — slower, never wrong).  Only the
-    Connect unsupported-surface exceptions are downgraded; a genuine
-    checkpoint failure (disk full, dead executors) still raises."""
-    try:
-        return frame.localCheckpoint(eager=False)
-    except CONNECT_ERRS:
-        return frame
+# past this many candidate documents the verify joins shuffle instead of
+# broadcasting the per-doc shingle-id arrays (~0.5 GB at web-doc shingle
+# counts)
+VERIFY_BROADCAST_MAX_DOCS = 500_000
 
 
 def tokens_col(text: Column) -> Column:
@@ -135,44 +129,36 @@ def jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    strategy: str = "auto",
-    materialize: bool = True,
-    verify_broadcast_max_docs: int = 500_000,
 ) -> DataFrame:
-    """Near-duplicate pairs by n-gram Jaccard similarity — EXACT under
-    every strategy; the strategy only changes candidate generation.
+    """Near-duplicate pairs by n-gram Jaccard similarity — EXACT; PPJoin
+    prefix filtering only prunes candidate generation.
 
-    * ``prefix`` (PPJoin-style, the default at every threshold): J(x,y) >= t
-      implies |x ∩ y| >= ceil(t*|x|), so a qualifying pair shares a shingle
-      among each side's first |x| - ceil(t*|x|) + 1 shingles in a global
-      rare-shingle-first order.  Candidate generation is ASYMMETRIC (the
-      PPJoin indexing/probing split, Xiao et al. WWW'08): per pair the
-      lesser side by (size, id) only needs its first
-      |x| - ceil(2t/(1+t)*|x|) + 1 shingles ("index prefix") — if every
-      common shingle sat deeper, overlap < 2t/(1+t)*|x| <= the required
-      t/(1+t)*(|x|+|y|) since |y| >= |x| — which cuts the candidate join
-      ~35% over symmetric prefixes.  Candidates are further pruned by
-      PPJoin's length filter (min(|x|,|y|) >= t*max(|x|,|y|)) and
-      positional filter (for the matched prefix shingle at positions
-      (pa, pb), overlap <= 1 + min(|x|-pa, |y|-pb), which must reach the
-      Jaccard-equivalent overlap t/(1+t)*(|x|+|y|); the first common shingle
-      of a qualifying pair always survives all three filters, so recall
-      stays exact).  On a web-scale corpus a stop-shingle's join group no
-      longer scales with the number of documents containing it, only with
-      the number whose PREFIX contains it.
-    * ``naive``: full shared-shingle self-join.  O(corpus^2) on hot
-      shingles — kept only as a cross-check/baseline; never chosen by auto.
+    J(x,y) >= t implies |x ∩ y| >= ceil(t*|x|), so a qualifying pair shares
+    a shingle among each side's first |x| - ceil(t*|x|) + 1 shingles in a
+    global rare-shingle-first order.  Candidate generation is ASYMMETRIC
+    (the PPJoin indexing/probing split, Xiao et al. WWW'08): per pair the
+    lesser side by (size, id) only needs its first
+    |x| - ceil(2t/(1+t)*|x|) + 1 shingles ("index prefix") — if every
+    common shingle sat deeper, overlap < 2t/(1+t)*|x| <= the required
+    t/(1+t)*(|x|+|y|) since |y| >= |x| — which cuts the candidate join ~35%
+    over symmetric prefixes.  Candidates are further pruned by PPJoin's
+    length filter (min(|x|,|y|) >= t*max(|x|,|y|)) and positional filter
+    (for the matched prefix shingle at positions (pa, pb), overlap <=
+    1 + min(|x|-pa, |y|-pb), which must reach the Jaccard-equivalent
+    overlap t/(1+t)*(|x|+|y|); the first common shingle of a qualifying
+    pair always survives all three filters, so recall stays exact).  On a
+    web-scale corpus a stop-shingle's join group no longer scales with the
+    number of documents containing it, only with the number whose PREFIX
+    contains it.
 
     Output: (id_a, id_b, inter, size_a, size_b, jaccard), id_a < id_b.
 
-    ``materialize`` (default on): the prefix frame feeds BOTH sides of the
-    candidate self-join, and Spark duplicates the whole upstream plan
-    (scan -> shingle -> freq join -> window) per side — ``localCheckpoint``
-    computes each intermediate once (measured ~2x end-to-end).  Unlike
-    ``.cache()`` the blocks are freed by the ContextCleaner when the frame
-    is garbage-collected, so repeated calls don't accumulate storage; the
-    trade-off is no lineage recompute on executor loss (re-run the query),
-    the standard choice for multi-pass set-similarity joins.
+    Checkpoints (:func:`~deep_ner_spark.compat.local_checkpoint`): the
+    shingle, dictionary, prefix, candidate and array frames each feed more
+    than one consumer (the prefix frame feeds BOTH sides of the candidate
+    self-join), and Spark would otherwise duplicate the whole upstream plan
+    (scan -> shingle -> freq join -> window) per consumer — checkpointing
+    computes each intermediate once (measured ~2x end-to-end).
 
     Verification physics (r8, measured at a 50k-doc sf with a SATURATED
     shingle space — 28k distinct shingles, mean df 94, 18.5M candidates
@@ -182,157 +168,127 @@ def jaccard_pairs(
     changes, exact by construction, took it to 7.8s:
 
     * shingles are dictionary-encoded to dense ints (``row_number`` over
-      the distinct-shingle frame — deterministic, so safe to recompute
-      under ``materialize=False``; the bijection makes int-array
+      the distinct-shingle frame; the bijection makes int-array
       intersection counts equal string-set intersection counts).  At
       corpus scale the single-partition id window would not fly — swap in
-      ``monotonically_increasing_id`` over the *materialized* dictionary
+      ``monotonically_increasing_id`` over the checkpointed dictionary
       (injectivity is all that is needed) when the dictionary outgrows one
       task.
     * the per-doc array side is BROADCAST when it has at most
-      ``verify_broadcast_max_docs`` rows (~0.5 GB at web-doc shingle
-      counts): candidates then flow through two broadcast hash joins with
-      no exchange at all.  Catalyst's own size estimate for a
-      collect_list aggregate is far above threshold, so the hint is
-      explicit; past the cap the shuffle join keeps working at any scale.
+      ``VERIFY_BROADCAST_MAX_DOCS`` rows: candidates then flow through two
+      broadcast hash joins with no exchange at all.  Catalyst's own size
+      estimate for a collect_list aggregate is far above threshold, so the
+      hint is explicit; past the cap the shuffle join keeps working at any
+      scale.
     """
-    if strategy == "auto":
-        strategy = "prefix"
-
-    def _mat(frame: DataFrame) -> DataFrame:
-        return _local_ckpt(frame) if materialize else frame
+    from pyspark.sql.window import Window
 
     # doc_shingles carries the per-doc size narrowly (no groupBy pass) and
     # evaluates the shingle HOF exactly once per row
-    sh = _mat(doc_shingles(df, id_col, text_col, n))
+    sh = local_checkpoint(doc_shingles(df, id_col, text_col, n))
 
-    if strategy == "prefix":
-        from pyspark.sql.window import Window
+    freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
+    # dense-int dictionary: sid monotone in shingle, so ordering by
+    # (df, sid) equals the canonical (df, shingle) rare-first order
+    sids = local_checkpoint(
+        freq.withColumn("sid", F.row_number().over(Window.orderBy("shingle")))
+    )
+    sh_i = sh.join(sids, "shingle").select(id_col, "size", "df", "sid")
 
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        # dense-int dictionary: sid monotone in shingle, so ordering by
-        # (df, sid) equals the canonical (df, shingle) rare-first order
-        sids = _mat(
-            freq.withColumn("sid", F.row_number().over(Window.orderBy("shingle")))
+    w = Window.partitionBy(id_col).orderBy("df", "sid")
+    probe_len = F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1
+    index_len = (
+        F.col("size")
+        - F.ceil(F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("size"))
+        + 1
+    )
+    prefix = local_checkpoint(
+        sh_i.withColumn("pos", F.row_number().over(w))
+        .where(F.col("pos") <= probe_len)
+        .select(
+            id_col,
+            "sid",
+            "pos",
+            "size",
+            (F.col("pos") <= index_len).alias("in_index"),
         )
-        sh_i = sh.join(sids, "shingle").select(id_col, "size", "df", "sid")
-
-        w = Window.partitionBy(id_col).orderBy("df", "sid")
-        probe_len = (
-            F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1
+    )
+    a = prefix.alias("a")  # index side: lesser (size, id)
+    b = prefix.alias("b")  # probe side
+    sa_c, sb_c = F.col("a.size"), F.col("b.size")
+    aid, bid = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    overlap_needed = F.lit(threshold / (1.0 + threshold)) * (sa_c + sb_c)
+    cand = (
+        a.join(b, on="sid")
+        # asymmetric prefix: the (size, id)-lesser side must match
+        # within its shorter index prefix
+        .where(F.col("a.in_index"))
+        .where((sa_c < sb_c) | ((sa_c == sb_c) & (aid < bid)))
+        # length filter: min size must reach t * max size
+        .where(F.least(sa_c, sb_c) >= F.lit(threshold) * F.greatest(sa_c, sb_c))
+        # positional filter: remaining-suffix overlap bound
+        .where(
+            F.least(sa_c - F.col("a.pos"), sb_c - F.col("b.pos")) + 1
+            >= overlap_needed
         )
-        index_len = (
-            F.col("size")
-            - F.ceil(F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("size"))
-            + 1
+        .select(F.least(aid, bid).alias("id_a"), F.greatest(aid, bid).alias("id_b"))
+        .distinct()
+    )
+    # the candidate frame feeds BOTH the id semi-join below and the
+    # verify joins; unchecked, the whole candidate self-join runs twice
+    # (measured ~3.8s/pass at the 50k-doc sf)
+    cand = local_checkpoint(cand)
+    # exact verification: JVM array_intersect on the two shingle-id
+    # arrays.  The arrays are REBUILT from the checkpointed long form
+    # (semi-join on candidate ids, then collect_list) — the shingle HOF
+    # chain is never re-evaluated and the corpus text is never re-scanned
+    # for this step (shingle sets are distinct by construction, so
+    # collect_list reconstructs the set and order is irrelevant to
+    # array_intersect).
+    cand_ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .union(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    cand_arrays = local_checkpoint(
+        sh_i.join(cand_ids, id_col)
+        .groupBy(id_col, "size")
+        .agg(F.collect_list("sid").alias("__sh"))
+    )
+    # broadcast the (checkpointed, hence cheaply countable) array side
+    # when small: candidates then never enter an exchange
+    bcast = cand_arrays.count() <= VERIFY_BROADCAST_MAX_DOCS
+    wrap = F.broadcast if bcast else (lambda d: d)
+    arr_a = cand_arrays.select(
+        F.col(id_col).alias("id_a"),
+        F.col("__sh").alias("__sh_a"),
+        F.col("size").alias("size_a"),
+    )
+    arr_b = cand_arrays.select(
+        F.col(id_col).alias("id_b"),
+        F.col("__sh").alias("__sh_b"),
+        F.col("size").alias("size_b"),
+    )
+    # explode(array(x)) is a Generate BARRIER: the downstream jaccard
+    # filter cannot be pushed below a generator's output, so the
+    # intersection is evaluated exactly ONCE per pair.  Without it,
+    # PushDownPredicate inlines the filter into the broadcast join's
+    # condition and the plan carries THREE array_intersect copies
+    # (2x in the join condition + 1x in the project) — measured
+    # 7.4s -> 3.9s on 18.5M candidates at the 50k-doc sf.
+    out = (
+        cand.join(wrap(arr_a), "id_a")
+        .join(wrap(arr_b), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            "size_a",
+            "size_b",
+            F.explode(
+                F.array(F.size(F.array_intersect("__sh_a", "__sh_b")).cast("long"))
+            ).alias("inter"),
         )
-        prefix = _mat(
-            sh_i.withColumn("pos", F.row_number().over(w))
-            .where(F.col("pos") <= probe_len)
-            .select(
-                id_col,
-                "sid",
-                "pos",
-                "size",
-                (F.col("pos") <= index_len).alias("in_index"),
-            )
-        )
-        a = prefix.alias("a")  # index side: lesser (size, id)
-        b = prefix.alias("b")  # probe side
-        sa_c, sb_c = F.col("a.size"), F.col("b.size")
-        aid, bid = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-        overlap_needed = F.lit(threshold / (1.0 + threshold)) * (sa_c + sb_c)
-        cand = (
-            a.join(b, on="sid")
-            # asymmetric prefix: the (size, id)-lesser side must match
-            # within its shorter index prefix
-            .where(F.col("a.in_index"))
-            .where((sa_c < sb_c) | ((sa_c == sb_c) & (aid < bid)))
-            # length filter: min size must reach t * max size
-            .where(F.least(sa_c, sb_c) >= F.lit(threshold) * F.greatest(sa_c, sb_c))
-            # positional filter: remaining-suffix overlap bound
-            .where(
-                F.least(sa_c - F.col("a.pos"), sb_c - F.col("b.pos")) + 1
-                >= overlap_needed
-            )
-            .select(
-                F.least(aid, bid).alias("id_a"), F.greatest(aid, bid).alias("id_b")
-            )
-            .distinct()
-        )
-        # the candidate frame feeds BOTH the id semi-join below and the
-        # verify joins; without materialization the whole candidate
-        # self-join runs twice (measured ~3.8s/pass at the 50k-doc sf)
-        cand = _mat(cand)
-        # exact verification: JVM array_intersect on the two shingle-id
-        # arrays.  The arrays are REBUILT from the already-materialized
-        # long form (semi-join on candidate ids, then collect_list) — the
-        # shingle HOF chain is never re-evaluated and the corpus text is
-        # never re-scanned for this step (shingle sets are distinct by
-        # construction, so collect_list reconstructs the set and order is
-        # irrelevant to array_intersect).
-        cand_ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .union(cand.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        cand_arrays = _mat(
-            sh_i.join(cand_ids, id_col)
-            .groupBy(id_col, "size")
-            .agg(F.collect_list("sid").alias("__sh"))
-        )
-        # broadcast the (materialized, hence cheaply countable) array side
-        # when small: candidates then never enter an exchange
-        bcast = (
-            materialize
-            and cand_arrays.count() <= verify_broadcast_max_docs
-        )
-        wrap = F.broadcast if bcast else (lambda d: d)
-        arr_a = cand_arrays.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__sh").alias("__sh_a"),
-            F.col("size").alias("size_a"),
-        )
-        arr_b = cand_arrays.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__sh").alias("__sh_b"),
-            F.col("size").alias("size_b"),
-        )
-        # explode(array(x)) is a Generate BARRIER: the downstream jaccard
-        # filter cannot be pushed below a generator's output, so the
-        # intersection is evaluated exactly ONCE per pair.  Without it,
-        # PushDownPredicate inlines the filter into the broadcast join's
-        # condition and the plan carries THREE array_intersect copies
-        # (2x in the join condition + 1x in the project) — measured
-        # 7.4s -> 3.9s on 18.5M candidates at the 50k-doc sf.
-        out = (
-            cand.join(wrap(arr_a), "id_a")
-            .join(wrap(arr_b), "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                "size_a",
-                "size_b",
-                F.explode(
-                    F.array(
-                        F.size(F.array_intersect("__sh_a", "__sh_b")).cast("long")
-                    )
-                ).alias("inter"),
-            )
-        )
-    else:
-        a = sh.select(
-            F.col(id_col).alias("id_a"), F.col("size").alias("size_a"), "shingle"
-        )
-        b = sh.select(
-            F.col(id_col).alias("id_b"), F.col("size").alias("size_b"), "shingle"
-        )
-        out = (
-            a.join(b, on="shingle")
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "size_a", "size_b")
-            .agg(F.count("*").alias("inter"))
-        )
+    )
     out = out.withColumn(
         "jaccard",
         F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
@@ -346,8 +302,7 @@ def connected_components(
     id_col: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
-    materialize: bool = True,
+    max_iter: int = 100,
 ) -> DataFrame:
     """Connected components over an undirected pair list: (id, cluster_id),
     where cluster_id is the component's minimum node id.
@@ -361,22 +316,31 @@ def connected_components(
     does (1) neighbor-min — every node takes the min of its own label and
     its neighbors' labels (one join keyed on the uniformly-distributed node
     id + one map-side-combined min agg), then (2) pointer jumping —
-    ``lab <- lab(lab)``, one self-join, which halves every node's distance
-    to its component minimum.  Rounds are therefore O(log diameter) (the
-    MapReduce CC bound of Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SOCC'14); near-dup graphs are short-diameter so
-    3-5 rounds is typical.  No step enumerates a component's cross
-    product, and every shuffle is keyed on node ids or label values —
-    skewed (giant) components cost nothing extra because a component is
-    never collected onto one task.
+    ``lab <- lab(lab)``, one self-join.  The jump speeds propagation but
+    does not bound the rounds by log(diameter): when ids are not ordered
+    along the graph, the rounds grow with the diameter.  Replayed in NumPy
+    over 30 shuffles each, paths need up to 24 rounds at 30 nodes, 34 at
+    40, 56 at 60 and 62 at 100 (hence the default ``max_iter`` of 100),
+    and 10k-node random trees need 15-20; near-dup graphs are mostly
+    short-diameter, where 3-5 rounds is typical.  No step enumerates
+    a component's cross product, and every shuffle is keyed on node ids or
+    label values — skewed (giant) components cost nothing extra because a
+    component is never collected onto one task.
 
     Convergence detection is the monotone label-sum invariant: labels only
     ever decrease, so ``sum(lab)`` strictly decreases until fixpoint — one
     tiny aggregate per round (decimal(38,0), overflow-safe at any id
-    range), no change-count join.  Each round ``localCheckpoint``s the new
-    label frame (GC-freed, see jaccard_pairs) so lineage doesn't grow
-    exponentially across iterations — the standard iterative-algorithm
-    pattern on Spark.
+    range), no change-count join.  If ``max_iter`` rounds pass without the
+    sum settling, the call raises ``RuntimeError`` rather than return
+    split clusters.
+
+    Each round checkpoints the new label frame so lineage does not grow
+    across rounds, and then rebuilds it as a fresh relation over the
+    checkpointed rows.  A checkpoint keeps the optimizer's size estimate of
+    the plan it replaced, and that plan joins the labels with themselves,
+    so the inherited estimate squared every round: on a 60-node path the
+    checkpoint call took 0.3-0.5 s through round 15, then 1.2, 1.9, 4.3,
+    11.4 and 27.4 s at rounds 16-20 (``local[4]``).
     """
     # the label-sum convergence scalar below needs integral node ids: with a
     # string id column (ANSI off) the decimal cast yields NULL per row, the
@@ -419,8 +383,7 @@ def connected_components(
             )
         ).alias("__e")
     ).select("__e.src", "__e.dst")
-    if materialize:
-        edges = _local_ckpt(edges)
+    edges = local_checkpoint(edges)
     labels = nodes.select(
         F.col(id_col).alias("id"), F.col(id_col).alias("lab")
     )
@@ -431,9 +394,9 @@ def connected_components(
         # broadcast the small nmin side and keep the label frame narrow,
         # while a union forces both branches through a full exchange.  The
         # convergence scalar below is already fused into this round's
-        # single action via the lazy localCheckpoint; the residual
-        # per-round cost is AQE stage-materialization job latency,
-        # measured ~6 jobs/round at fixture scale.)
+        # single action via the lazy checkpoint; the residual per-round
+        # cost is AQE stage-materialization job latency, measured ~6
+        # jobs/round at fixture scale.)
         lab_of = labels.select(
             F.col("id").alias("dst"), F.col("lab").alias("nlab")
         )
@@ -456,14 +419,32 @@ def connected_components(
             "id",
             F.least(F.col("lab"), F.coalesce("plab", F.col("lab"))).alias("lab"),
         )
-        labels = _local_ckpt(jumped) if materialize else jumped
+        labels = _fresh_relation(local_checkpoint(jumped))
         cur_sum = labels.agg(
             F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
         if cur_sum == prev_sum:
-            break
+            return labels.select(
+                F.col("id").alias(id_col), F.col("lab").alias("cluster_id")
+            )
         prev_sum = cur_sum
-    return labels.select(F.col("id").alias(id_col), F.col("lab").alias("cluster_id"))
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_iter} "
+        f"rounds; raise max_iter (rounds grow with the graph's diameter)"
+    )
+
+
+def _fresh_relation(frame: DataFrame) -> DataFrame:
+    """The rows of ``frame`` as a new relation with no inherited size
+    estimate (the optimizer's default applies), so a loop that rebuilds a
+    frame from itself plans each round at the same cost.  Sessions without
+    a JVM handle (Spark Connect) keep the frame as-is."""
+    try:
+        jdf = frame._jdf
+        fresh = jdf.sparkSession().createDataFrame(jdf.rdd(), jdf.schema())
+    except CONNECT_ERRS:
+        return frame
+    return type(frame)(fresh, frame.sparkSession)
 
 
 def dup_clusters(
@@ -486,7 +467,8 @@ def dup_clusters(
     min_by themselves).
 
     Scale: pair generation is exact PPJoin (see jaccard_pairs), clustering
-    is O(log diameter) hash-min rounds (see connected_components), and the
+    is hash-min rounds that grow with the pair graph's diameter (see
+    connected_components), and the
     size join back is keyed on cluster_id — a giant cluster makes that
     join key hot, which AQE's skew-join split handles; nothing collects a
     cluster onto one task or the driver.
@@ -562,18 +544,15 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
     band_size: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash-LSH banding: docs sharing any full band are candidates.
 
     band key = md5 of the concatenated band signature; pairs enumerate
     within buckets only.  Output: distinct (id_a, id_b), id_a < id_b.
-    ``materialize`` computes the banded frame once instead of once per
-    self-join side (localCheckpoint; GC-freed, see jaccard_pairs).
+    The banded frame is checkpointed, so it is computed once instead of
+    once per self-join side.
     """
-    banded = banded_buckets(signatures, id_col, band_size)
-    if materialize:
-        banded = _local_ckpt(banded)
+    banded = local_checkpoint(banded_buckets(signatures, id_col, band_size))
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -636,7 +615,6 @@ def hamming_near_pairs(
     id_col: str,
     max_hamming: int = 3,
     n_blocks: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs via block permutation (pigeonhole).
 
@@ -657,12 +635,10 @@ def hamming_near_pairs(
     fails (block i* < j of the xor is zero).  So exactly one row per pair
     survives, and no shuffle is spent on deduplicating candidates.
 
-    ``materialize`` computes the upstream simhash aggregation once instead
-    of once per self-join side (localCheckpoint; GC-freed, see
-    jaccard_pairs).
+    The input is checkpointed, so the upstream simhash aggregation runs
+    once instead of once per self-join side.
     """
-    if materialize:
-        simhashes = _local_ckpt(simhashes)
+    simhashes = local_checkpoint(simhashes)
     width = 64 // n_blocks
     mask = (1 << width) - 1
     blocks = simhashes.select(
@@ -700,7 +676,6 @@ def dedup_against_corpus(
     new_df: DataFrame,
     corpus_df: DataFrame,
     text_col: str,
-    broadcast_fingerprints: bool = False,
 ) -> DataFrame:
     """Incremental EXACT dedup: rows of ``new_df`` whose md5(text) does not
     already appear in ``corpus_df`` (the training-pipeline "new shard vs
@@ -709,15 +684,11 @@ def dedup_against_corpus(
 
     Scale shape: the corpus collapses to DISTINCT 32-hex fingerprints
     before the left-anti join, so the shuffle moves one hash per corpus
-    doc, never document bodies; with ``broadcast_fingerprints`` a small
-    fingerprint set (e.g. a single day's corpus delta) broadcasts and the
-    new side is scanned shuffle-free.  New-vs-new duplicates are NOT
+    doc, never document bodies.  New-vs-new duplicates are NOT
     collapsed here — that is :func:`exact_dedup`'s job; this operator's
     contract is exactly "already known to the corpus".
     """
     fp = corpus_df.select(F.md5(F.col(text_col)).alias("__fp")).distinct()
-    if broadcast_fingerprints:
-        fp = F.broadcast(fp)
     return (
         new_df.withColumn("__fp", F.md5(F.col(text_col)))
         .join(fp, "__fp", "left_anti")
@@ -734,7 +705,6 @@ def lsh_dedup_against_corpus(
     band_size: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup dedup: drop a new doc when it shares an LSH
     band bucket with any corpus doc AND the verified distinct-shingle
@@ -744,8 +714,10 @@ def lsh_dedup_against_corpus(
     Scale shape: both sides reduce to (id, band, bucket) keys before the
     equi-join, so candidate generation touches only bucket-key collisions
     (never new x corpus); Jaccard verification re-joins shingles for
-    candidate ids only.  Near-dups *within* ``new_df`` are untouched —
-    run :func:`jaccard_pairs` / :func:`dup_clusters` for that.
+    candidate ids only; the candidate frame is checkpointed because it
+    feeds both semi-join prunes and the verify join.  Near-dups *within*
+    ``new_df`` are untouched — run :func:`jaccard_pairs` /
+    :func:`dup_clusters` for that.
     """
     sig_new = minhash_signatures(new_df, id_col, text_col, n_hashes, n)
     sig_cor = minhash_signatures(corpus_df, id_col, text_col, n_hashes, n)
@@ -755,13 +727,11 @@ def lsh_dedup_against_corpus(
     b_cor = banded_buckets(sig_cor, id_col, band_size).withColumnRenamed(
         id_col, "__id_cor"
     )
-    cand = (
+    cand = local_checkpoint(
         b_new.join(b_cor, on=["band", "bucket"])
         .select("__id_new", "__id_cor")
         .distinct()
     )
-    if materialize:
-        cand = _local_ckpt(cand)
 
     # Verification joins the candidate pairs back to each side's distinct
     # shingle SET (one shingles_col array per candidate doc, after a
@@ -823,7 +793,6 @@ def eval_contamination(
     id_col: str,
     text_col: str,
     n: int = 13,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: per-train-doc n-gram overlap with an
     eval/benchmark set — (id, n_shared, n_shingles, contam_frac,
@@ -837,17 +806,15 @@ def eval_contamination(
     ``min_eval_id`` names one offending eval doc for auditing.
 
     Scale: eval sets are tiny next to the corpus, so the shingled eval
-    side broadcasts (``broadcast_eval``) and the corpus-side shingle
-    explode streams map-side — no corpus shuffle at all on the broadcast
-    path.  With a large eval set, the fallback is a shuffle join keyed by
-    the shingle hash (uniform by construction).
+    side broadcasts and the corpus-side shingle explode streams map-side —
+    no corpus shuffle before the per-doc aggregation.
     """
     tr = doc_shingles(train_df, id_col, text_col, n)
-    ev = doc_shingles(eval_df, id_col, text_col, n).select(
-        F.col(id_col).alias("__eval_id"), "shingle"
+    ev = F.broadcast(
+        doc_shingles(eval_df, id_col, text_col, n).select(
+            F.col(id_col).alias("__eval_id"), "shingle"
+        )
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     return (
         tr.join(ev, "shingle")
         .groupBy(id_col)

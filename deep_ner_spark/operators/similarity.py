@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from deep_ner_spark.compat import CONNECT_ERRS
+from deep_ner_spark.compat import local_checkpoint
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -191,10 +191,7 @@ def fit_ivf_codebook(
     sample = data.select(vec_col) if frac >= 1.0 else data.select(vec_col).sample(
         frac, seed=seed
     )
-    try:
-        sample = sample.localCheckpoint(eager=False)  # reused every iteration
-    except CONNECT_ERRS:
-        pass  # Connect session: recompute the sample per iteration
+    sample = local_checkpoint(sample)  # reused every iteration
     cents = [list(r[0]) for r in sample.limit(n_lists).collect()]
     if len(cents) < n_lists:
         raise ValueError(f"not enough vectors ({len(cents)}) for {n_lists} lists")
@@ -351,7 +348,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     n_planes: int = 8,
     seed: int = 42,
-    materialize: bool = True,
     occupancy_guard: int | None = 200_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup family, brief item).
@@ -359,41 +355,37 @@ def embedding_near_dup_pairs(
     Candidates share a hyperplane-LSH bucket (near-identical vectors almost
     surely do; exact duplicates always do), then the exact cosine filter
     applies.  Self-join happens bucket-locally — never a cross join.
-    Output: (id_a, id_b, cosine), id_a < id_b.  ``materialize`` computes
-    the n_planes dot-product bucket projection once instead of once per
-    self-join side (localCheckpoint; GC-freed).
+    Output: (id_a, id_b, cosine), id_a < id_b.  The slim bucket projection
+    is checkpointed, so its n_planes dot products are computed once instead
+    of once per self-join side.
 
     ``occupancy_guard``: the bucket-local self-join is O(sum_i b_i^2), so
     it stops being subquadratic once buckets outgrow 2^n_planes' ability to
     spread the corpus (n_planes must grow like log2(N / target_bucket)).
-    Before building pairs, one cheap agg over the (already materialized)
-    slim (id, bucket) projection checks the largest bucket; if it exceeds
+    Before building pairs, one cheap agg over the (checkpointed) slim
+    (id, bucket) projection checks the largest bucket; if it exceeds
     the guard the call raises with the n_planes value that would bound
     buckets near ``occupancy_guard`` — the same keep-it-subquadratic role
     the prefix-membership bound plays in jaccard_pairs.  NOTE: the check is
     an EAGER Spark job at call time (this function is otherwise a lazy plan
-    builder), and with ``materialize=False`` — or a session without
-    localCheckpoint — it costs one extra evaluation of the bucket
-    projection.  Pass ``None`` to skip the check (and its job) when the
-    corpus size is known; any other non-positive value is rejected rather
-    than silently disabling the guard.
+    builder), and in a session without localCheckpoint it costs one extra
+    evaluation of the bucket projection.  Pass ``None`` to skip the check
+    (and its job) when the corpus size is known; any other non-positive
+    value is rejected rather than silently disabling the guard.
     """
     planes = _hyperplanes(dim, n_planes, seed)
     b = lsh_bucket_col(F.col(vec_col), planes)
-    # the per-row norm rides the (materialized) slim projection: the
+    # the per-row norm rides the (checkpointed) slim projection: the
     # bucket-local self-join then pays one dot HOF per pair instead of
     # dot + two norm folds (bit-identical, see cosine_topk)
-    tagged = data.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm_col(F.col(vec_col)).alias("__n"),
-        b.alias("__bucket"),
+    tagged = local_checkpoint(
+        data.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("v"),
+            norm_col(F.col(vec_col)).alias("__n"),
+            b.alias("__bucket"),
+        )
     )
-    if materialize:
-        try:
-            tagged = tagged.localCheckpoint(eager=False)
-        except CONNECT_ERRS:
-            pass  # session without localCheckpoint: recompute per side
     if occupancy_guard is not None:
         if occupancy_guard <= 0:
             raise ValueError(

@@ -267,17 +267,3 @@ def test_tagger_seam_heuristic_fallback_without_dep():
         assert all(p in textfns.UNIVERSAL_POS_TAGS for p in pos)
     with pytest.raises(ImportError):
         textfns.make_text_tagger("ru", strict=True)
-
-
-def test_tagger_udf_heuristic_path(spark):
-    from deep_ner_spark.functions.text import udpipe_tagger_udf
-
-    df = spark.createDataFrame([("Moscow is big",), (None,)], ["text"])
-    rows = (
-        df.select(udpipe_tagger_udf()("text").alias("t"))
-        .select("t.tokens", "t.pos", "t.dep")
-        .collect()
-    )
-    assert rows[0]["tokens"] == ["Moscow", "is", "big"]
-    assert len(rows[0]["pos"]) == len(rows[0]["dep"]) == 3
-    assert rows[1]["tokens"] == []  # null text -> empty arrays, not a crash

@@ -51,8 +51,8 @@ def main():
     docs.count()
 
     # ---------------- jaccard_pairs stage split ----------------
-    from deep_ner_spark.operators.dedup import (
-        doc_shingles, jaccard_pairs, _local_ckpt)
+    from deep_ner_spark.compat import local_checkpoint
+    from deep_ner_spark.operators.dedup import doc_shingles, jaccard_pairs
     from pyspark.sql.window import Window
 
     print(f"== jaccard_pairs @ {SF} ==", flush=True)
@@ -65,7 +65,7 @@ def main():
     sc.setJobDescription("jp: shingle long-form")
     sh_plain = doc_shingles(docs, id_col, text_col, n)
     t("1 shingle long-form (noop, no ckpt)", lambda: noop(sh_plain))
-    sh = _local_ckpt(doc_shingles(docs, id_col, text_col, n))
+    sh = local_checkpoint(doc_shingles(docs, id_col, text_col, n))
     t("1b shingle localCheckpoint materialize", lambda: sh.count(), reps=1)
 
     sc.setJobDescription("jp: freq+rank+prefix")
@@ -79,7 +79,7 @@ def main():
         ).select(id_col, "shingle", "pos", "size")
     )
     t("2 freq join + window + prefix filter (noop)", lambda: noop(prefix_plain))
-    prefix = _local_ckpt(prefix_plain)
+    prefix = local_checkpoint(prefix_plain)
     t("2b prefix localCheckpoint materialize", lambda: prefix.count(), reps=1)
 
     a = prefix.alias("a")
@@ -105,14 +105,14 @@ def main():
     n_cand = cand.count()
     print(f"    candidates: {n_cand}")
 
-    cand_m = _local_ckpt(cand)
+    cand_m = local_checkpoint(cand)
     cand_m.count()
     cand_ids = (
         cand_m.select(F.col("id_a").alias(id_col))
         .union(cand_m.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    cand_arrays = _local_ckpt(
+    cand_arrays = local_checkpoint(
         sh.join(cand_ids, id_col)
         .groupBy(id_col, "size")
         .agg(F.collect_list("shingle").alias("__sh"))

@@ -5,7 +5,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from deep_ner_spark.session import get_spark
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from deep_ner_spark.operators.dedup import doc_shingles, _local_ckpt
+from deep_ner_spark.compat import local_checkpoint
+from deep_ner_spark.operators.dedup import doc_shingles
 
 spark = get_spark("jp-split", master="local[32]")
 spark.sparkContext.setLogLevel("ERROR")
@@ -29,13 +30,13 @@ id_col, text_col, n, threshold = "doc_id", "text", 3, 0.5
 sc.setJobDescription("1 shingle long form")
 t("1 shingle long form (noop)", lambda: noop(doc_shingles(docs, id_col, text_col, n)))
 
-sh = _local_ckpt(doc_shingles(docs, id_col, text_col, n)); sh.count()
+sh = local_checkpoint(doc_shingles(docs, id_col, text_col, n)); sh.count()
 
 freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
 sc.setJobDescription("2 freq")
 t("2 freq agg (noop)", lambda: noop(freq))
 
-sids = _local_ckpt(freq.withColumn("sid", F.row_number().over(Window.orderBy("shingle")))); sids.count()
+sids = local_checkpoint(freq.withColumn("sid", F.row_number().over(Window.orderBy("shingle")))); sids.count()
 sh_i = sh.join(sids, "shingle").select(id_col, "size", "df", "sid")
 sc.setJobDescription("3 sh_i join")
 t("3 sh_i dictionary join (noop)", lambda: noop(sh_i))
@@ -49,7 +50,7 @@ prefix_df = (sh_i.withColumn("pos", F.row_number().over(w))
 sc.setJobDescription("4 prefix")
 t("4 prefix window (noop)", lambda: noop(prefix_df))
 
-prefix = _local_ckpt(prefix_df); prefix.count()
+prefix = local_checkpoint(prefix_df); prefix.count()
 
 a = prefix.alias("a"); b = prefix.alias("b")
 sa_c, sb_c = F.col("a.size"), F.col("b.size")
@@ -66,7 +67,7 @@ sc.setJobDescription("5 cand")
 t("5 candidate join+distinct (noop)", lambda: noop(cand_df))
 print("   candidates:", cand_df.count(), flush=True)
 
-cand = _local_ckpt(cand_df); cand.count()
+cand = local_checkpoint(cand_df); cand.count()
 cand_ids = (cand.select(F.col("id_a").alias(id_col))
     .union(cand.select(F.col("id_b").alias(id_col))).distinct())
 cand_arrays_df = (sh_i.join(cand_ids, id_col)
@@ -74,7 +75,7 @@ cand_arrays_df = (sh_i.join(cand_ids, id_col)
 sc.setJobDescription("6 arrays")
 t("6 cand arrays build (noop)", lambda: noop(cand_arrays_df))
 
-cand_arrays = _local_ckpt(cand_arrays_df); cand_arrays.count()
+cand_arrays = local_checkpoint(cand_arrays_df); cand_arrays.count()
 arr_a = cand_arrays.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a"), F.col("size").alias("size_a"))
 arr_b = cand_arrays.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b"), F.col("size").alias("size_b"))
 out = (cand.join(F.broadcast(arr_a), "id_a").join(F.broadcast(arr_b), "id_b")

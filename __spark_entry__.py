@@ -1767,7 +1767,7 @@ def q_stratified_split(spark, sf_dir):
 def _lsh_plane_dots_sql():
     """Per-plane dot expressions over column ``embedding`` — DuckDB twins of
     the dots inside similarity.lsh_bucket_col / lsh_probe_buckets_col for
-    _hyperplanes(64, 6, 42), bit-exact: the plane values are embedded as
+    _hyperplanes(64, 6) (seed 42), bit-exact: the plane values are embedded as
     double literals (Spark lifts each float32 plane entry to an exact double
     literal too); Spark's zip_with float*double products are mirrored by the
     CAST placement, and DuckDB's list_reduce left fold equals Spark's
@@ -2265,7 +2265,7 @@ def q_ivf_cosine_topk(spark, sf_dir):
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
     cb = _ivf_codebook_cached(spark, sf_dir, n_lists=8, kmeans_iters=2, seed=42)
-    out = ivf_cosine_topk(emb, queries, k=3, n_lists=8, n_probe=8, codebook=cb)
+    out = ivf_cosine_topk(emb, queries, cb, k=3, n_probe=8)
     return out.select("query_id", F.col("rank").cast("long").alias("rnk"), "neighbor_id")
 
 

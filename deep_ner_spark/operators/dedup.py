@@ -25,6 +25,9 @@ from deep_ner_spark.compat import CONNECT_ERRS, local_checkpoint
 # broadcasting the per-doc shingle-id arrays (~0.5 GB at web-doc shingle
 # counts)
 VERIFY_BROADCAST_MAX_DOCS = 500_000
+# connected_components raises after this many label-propagation rounds
+# without convergence (see its docstring for measured round counts)
+CC_MAX_ROUNDS = 100
 
 
 def tokens_col(text: Column) -> Column:
@@ -302,7 +305,6 @@ def connected_components(
     id_col: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 100,
 ) -> DataFrame:
     """Connected components over an undirected pair list: (id, cluster_id),
     where cluster_id is the component's minimum node id.
@@ -320,7 +322,7 @@ def connected_components(
     does not bound the rounds by log(diameter): when ids are not ordered
     along the graph, the rounds grow with the diameter.  Replayed in NumPy
     over 30 shuffles each, paths need up to 24 rounds at 30 nodes, 34 at
-    40, 56 at 60 and 62 at 100 (hence the default ``max_iter`` of 100),
+    40, 56 at 60 and 62 at 100 (hence ``CC_MAX_ROUNDS`` = 100),
     and 10k-node random trees need 15-20; near-dup graphs are mostly
     short-diameter, where 3-5 rounds is typical.  No step enumerates
     a component's cross product, and every shuffle is keyed on node ids or
@@ -330,8 +332,8 @@ def connected_components(
     Convergence detection is the monotone label-sum invariant: labels only
     ever decrease, so ``sum(lab)`` strictly decreases until fixpoint — one
     tiny aggregate per round (decimal(38,0), overflow-safe at any id
-    range), no change-count join.  If ``max_iter`` rounds pass without the
-    sum settling, the call raises ``RuntimeError`` rather than return
+    range), no change-count join.  If ``CC_MAX_ROUNDS`` rounds pass without
+    the sum settling, the call raises ``RuntimeError`` rather than return
     split clusters.
 
     Each round checkpoints the new label frame so lineage does not grow
@@ -388,7 +390,7 @@ def connected_components(
         F.col(id_col).alias("id"), F.col(id_col).alias("lab")
     )
     prev_sum = None
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # (1) neighbor-min.  (Round-7 note: a union+groupBy fold of this
         # join+coalesce was tried and is SLOWER — the left join lets AQE
         # broadcast the small nmin side and keep the label frame narrow,
@@ -429,8 +431,8 @@ def connected_components(
             )
         prev_sum = cur_sum
     raise RuntimeError(
-        f"connected_components: labels still changing after {max_iter} "
-        f"rounds; raise max_iter (rounds grow with the graph's diameter)"
+        f"connected_components: labels still changing after {CC_MAX_ROUNDS} "
+        f"rounds (rounds grow with the pair graph's diameter)"
     )
 
 

@@ -18,8 +18,8 @@ magic:
   per-frame index; MJPEG frames decode through the JPEG seam above,
   uncompressed DIB frames (8-bit gray / 24-bit BGR, bottom-up, 4-byte row
   stride) through struct+numpy; other FourCCs raise naming pyav/ffmpeg;
-- anything unrecognized -> the md5-chain deterministic fake (when
-  ``DETERMINISTIC_FAKE``), which is what the hermetic driver oracles pin.
+- anything unrecognized -> the md5-chain deterministic fake, which is
+  what the hermetic driver oracles pin.
 
 So real PNG/JPEG/WAV/MJPEG-AVI content decodes for real even in this
 dependency-free container, and swapping in a full codec stack
@@ -80,8 +80,6 @@ AUDIO_SCHEMA = T.StructType(
 )
 
 # --- codec seams -------------------------------------------------------------
-
-DETERMINISTIC_FAKE = True  # container has no image/audio libs; see module doc
 
 
 def _md5_chain_bytes(content: bytes, n: int) -> np.ndarray:
@@ -459,8 +457,6 @@ def _decode_image(content: bytes, width: int, height: int) -> np.ndarray:
                 f"declares {height}x{width}"
             )
         return img
-    if not DETERMINISTIC_FAKE:
-        raise NotImplementedError("unrecognized image container and fakes disabled")
     return _md5_chain_bytes(content, height * width * 3).reshape(height, width, 3)
 
 
@@ -470,8 +466,6 @@ def _decode_audio(content: bytes, n_samples: int) -> np.ndarray:
     content = bytes(content)
     if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
         return _wav_decode(content)
-    if not DETERMINISTIC_FAKE:
-        raise NotImplementedError("unrecognized audio container and fakes disabled")
     raw = _md5_chain_bytes(content, n_samples).astype(np.float32)
     return (raw - 128.0) / 128.0
 
@@ -751,8 +745,6 @@ def _decode_video_frame(content: bytes, frame_idx: int, width: int, height: int)
                 f"metadata ({height}, {width})"
             )
         return frame
-    if not DETERMINISTIC_FAKE:
-        raise NotImplementedError("video codec not available in this container")
     seed_hex = hashlib.md5(content).hexdigest()
     frame_key = f"{seed_hex}:f{frame_idx}".encode()
     return _md5_chain_bytes(frame_key, height * width).reshape(height, width)

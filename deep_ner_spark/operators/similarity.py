@@ -1,10 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k as the exact baseline (broadcast the query side —
-it is small by definition), and a seeded random-hyperplane LSH variant as
-the 100TB scale path (bucket join instead of full scan).  Dot products use
-built-in higher-order functions (zip_with + aggregate) — JVM-side, no
-Python in the hot path.
+it is small by definition), and two approximate variants as the 100TB
+scale path: random-hyperplane LSH (bucket join instead of full scan) and
+IVF (probe the nearest lists of a codebook fitted by
+:func:`fit_ivf_codebook`).  The three top-k operators differ only in the
+key they join on; scoring and ranking are one shared tail (:func:`_topk`).
+Hyperplanes are always seeded with ``_LSH_SEED``, the seed the driver
+oracles embed.  Dot products use built-in higher-order functions
+(zip_with + aggregate) — JVM-side, no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -14,6 +18,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from deep_ner_spark.compat import local_checkpoint
+
+_LSH_SEED = 42
+# k-means training-sample size, see fit_ivf_codebook
+IVF_SAMPLE_ROWS = 100_000
+# largest LSH bucket embedding_near_dup_pairs lets into its self-join
+OCCUPANCY_GUARD = 200_000
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -53,18 +63,22 @@ def _const_vec(values) -> Column:
     return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
 
 
-def cosine_topk(
+def _topk(
     data: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    include_self: bool = False,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    key: tuple[str, Column, Column] | None,
 ) -> DataFrame:
-    """Exact top-k neighbors per query by cosine similarity.
+    """Per-query top-k by cosine over the pairs that share a join key.
 
-    queries is broadcast (small side); the scan over data is a single pass
-    with no shuffle until the per-query top-k window.  Output:
+    ``key`` is ``(name, data_side, query_side)``: the data side carries one
+    key per row and the (broadcast, small) query side may explode to
+    several distinct keys, so each (query, neighbor) pair occurs at most
+    once and no dedup aggregation (an extra exchange) sits between the join
+    and the top-k window.  ``None`` cross-joins (the exact scan).
+    Self-pairs are dropped; ties on cosine break by neighbor_id.  Output:
     (query_id, rank, neighbor_id, cosine).
     """
     # norms are hoisted to each join INPUT: the join is a projection
@@ -77,17 +91,17 @@ def cosine_topk(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("__qv"),
             norm_col(F.col(vec_col)).alias("__qn"),
+            *([key[2].alias(key[0])] if key else []),
         )
     )
     d = data.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__dv"),
         norm_col(F.col(vec_col)).alias("__dn"),
+        *([key[1].alias(key[0])] if key else []),
     )
-    pairs = q.crossJoin(d)
-    if not include_self:
-        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
+    pairs = q.join(d, on=key[0]) if key else q.crossJoin(d)
+    scored = pairs.where(F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
         (dot_col(F.col("__qv"), F.col("__dv")) / (F.col("__qn") * F.col("__dn"))).alias("cosine"),
@@ -102,21 +116,41 @@ def cosine_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
+def cosine_topk(
+    data: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+) -> DataFrame:
+    """Exact top-k neighbors per query by cosine similarity.
+
+    queries is broadcast (small side); the scan over data is a single pass
+    with no shuffle until the per-query top-k window.  Output:
+    (query_id, rank, neighbor_id, cosine).
+    """
+    return _topk(data, queries, id_col, vec_col, k, None)
+
+
+def _hyperplanes(dim: int, n_planes: int):
     """Deterministic random hyperplanes (seeded numpy, no wall clock)."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(_LSH_SEED)
     return rng.standard_normal((n_planes, dim)).astype("float32")
+
+
+def _sign_bucket(dots) -> Column:
+    """Bucket id whose bit i is set when ``dots[i] > 0``."""
+    bucket = F.lit(0).cast("long")
+    for i, d in enumerate(dots):
+        bucket = bucket + F.shiftleft((d > 0).cast("long"), i)
+    return bucket
 
 
 def lsh_bucket_col(vec: Column, planes) -> Column:
     """Sign-bit bucket id from dot products with fixed hyperplanes."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        bit = (dot_col(vec, _const_vec(p)) > 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
+    return _sign_bucket([dot_col(vec, _const_vec(p)) for p in planes])
 
 
 def lsh_probe_buckets_col(vec: Column, planes, n_probe_buckets: int = 1) -> Column:
@@ -134,9 +168,7 @@ def lsh_probe_buckets_col(vec: Column, planes, n_probe_buckets: int = 1) -> Colu
     base-bucket array.
     """
     dots = [dot_col(vec, _const_vec(p)) for p in planes]
-    bucket = F.lit(0).cast("long")
-    for i, d in enumerate(dots):
-        bucket = bucket + F.shiftleft((d > 0).cast("long"), i)
+    bucket = _sign_bucket(dots)
     if n_probe_buckets <= 1 or not len(planes):
         return F.array(bucket)
     margins = F.array_sort(
@@ -162,21 +194,23 @@ def fit_ivf_codebook(
     vec_col: str = "embedding",
     n_lists: int = 16,
     kmeans_iters: int = 0,
-    sample_rows: int = 100_000,
     seed: int = 42,
 ) -> list:
     """Spherical k-means codebook for IVF, trained on a bounded sample.
 
     At corpus scale an IVF codebook is fit on a SAMPLE (the FAISS-style
-    train/add split), so each Lloyd iteration touches ``sample_rows``-ish
+    train/add split), so each Lloyd iteration touches ``IVF_SAMPLE_ROWS``-ish
     vectors, never the corpus: assignment = argmax cosine against broadcast
     centroid literals (JVM expression, narrow); recenter = per-(list, dim)
     mean via one small aggregation whose output is n_lists x dim rows —
     driver traffic is the codebook itself, nothing corpus-sized.
 
-    ``kmeans_iters=0`` returns the deterministic seed codebook (lowest-id
-    rows of the sample).  Empty lists keep their previous centroid.
-    Returns a plain list of ``n_lists`` float lists.
+    ``kmeans_iters=0`` returns the seed codebook (the first ``n_lists``
+    rows).  Pass ``data.orderBy(id)`` to make it the lowest-id vectors:
+    Catalyst plans that orderBy under the limit as TakeOrderedAndProject
+    (per-partition top-k, then a driver merge of n_lists rows; no sort
+    exchange).  Empty lists keep their previous centroid.  Returns a plain
+    list of ``n_lists`` float lists.
     """
     if kmeans_iters == 0:
         # seed codebook only: a bounded limit() read, no corpus-sized
@@ -187,7 +221,7 @@ def fit_ivf_codebook(
             raise ValueError(f"not enough vectors ({len(cents)}) for {n_lists} lists")
         return cents
     n_data = data.count()
-    frac = min(1.0, sample_rows / max(n_data, 1))
+    frac = min(1.0, IVF_SAMPLE_ROWS / max(n_data, 1))
     sample = data.select(vec_col) if frac >= 1.0 else data.select(vec_col).sample(
         frac, seed=seed
     )
@@ -231,57 +265,29 @@ def fit_ivf_codebook(
 def ivf_cosine_topk(
     data: DataFrame,
     queries: DataFrame,
+    codebook: list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_lists: int = 16,
     n_probe: int = 2,
-    include_self: bool = False,
-    kmeans_iters: int = 0,
-    seed: int = 42,
-    codebook: list | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse quantize to centroid lists,
     probe the query's ``n_probe`` nearest lists only.
 
-    Centroids come from :func:`fit_ivf_codebook` — ``kmeans_iters=0`` keeps
-    the deterministic seed codebook (lowest-id vectors); >0 runs spherical
-    k-means on a bounded sample (the FAISS train/add split).  A caller may
-    instead pass a pre-trained ``codebook`` (list of ``n_lists`` centroid
-    vectors) — the FAISS train-once/add-many split: fitting is a separate,
-    cacheable step, and at corpus scale the same codebook serves every
-    probe batch without retraining.  Assignment = argmax cosine to a
-    centroid — computed JVM-side against broadcast centroid literals, so
-    both the build and the probe are single narrow passes; the probe join
-    touches ~n_probe/n_lists of the corpus instead of all of it.  With
-    ``n_probe == n_lists`` the result equals the exact top-k REGARDLESS of
-    the codebook (every list probed) — the property the driver oracle
-    checks.  Same output schema as cosine_topk.
+    ``codebook`` is a list of centroid vectors from :func:`fit_ivf_codebook`
+    — the FAISS train-once/add-many split: fitting is a separate, cacheable
+    step, and at corpus scale the same codebook serves every probe batch
+    without retraining.  There are ``len(codebook)`` lists.  Assignment =
+    argmax cosine to a centroid — computed JVM-side against broadcast
+    centroid literals, so both the build and the probe are single narrow
+    passes; the probe join touches ~n_probe/len(codebook) of the corpus
+    instead of all of it.  With ``n_probe == len(codebook)`` the result
+    equals the exact top-k REGARDLESS of the codebook (every list probed)
+    — the property the driver oracle checks.  Same output schema as
+    cosine_topk.
     """
-    if codebook is not None:
-        if len(codebook) != n_lists:
-            raise ValueError(
-                f"codebook has {len(codebook)} centroids, expected {n_lists}"
-            )
-        cents = [(i, list(c)) for i, c in enumerate(codebook)]
-    else:
-        # orderBy(id) keeps the seed codebook deterministic (lowest-id
-        # vectors).  NOT a full sort at corpus scale: Catalyst rewrites
-        # orderBy + the limit(n_lists) inside fit_ivf_codebook into
-        # TakeOrderedAndProject — per-partition top-k then a driver merge
-        # of k rows, no sort exchange.
-        cents = [
-            (i, c)
-            for i, c in enumerate(
-                fit_ivf_codebook(
-                    data.orderBy(id_col).select(vec_col), vec_col, n_lists,
-                    kmeans_iters, seed=seed,
-                )
-            )
-        ]
-
     # the sorted (score, list_id) array is built ONCE and the same Column
-    # object reused by both selects below (both sides read ``vec_col``):
+    # object reused by both sides of the join (both read ``vec_col``):
     # column construction is py4j-bound (round-7 profile — ~0.5s per copy
     # at 8x64 dims), and the d/q assignment trees are identical
     scored_lists = F.reverse(
@@ -292,51 +298,24 @@ def ivf_cosine_topk(
                         cosine_col(F.col(vec_col), _const_vec(c)).alias("s"),
                         F.lit(i).alias("list_id"),
                     )
-                    for i, (_, c) in enumerate(cents)
+                    for i, c in enumerate(codebook)
                 ]
             )
         )
     )
-    # per-side norms are hoisted below the join (a projection barrier):
-    # the interpreted aggregate HOF then folds once per ROW, not per pair,
-    # and dot/(qn*dn) keeps cosine_col's operation order bit-identically
-    d = data.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__dv"),
-        norm_col(F.col(vec_col)).alias("__dn"),
-        scored_lists.getItem(0)["list_id"].alias("__list"),
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm_col(F.col(vec_col)).alias("__qn"),
-            F.explode(
-                F.transform(
-                    F.slice(scored_lists, 1, n_probe), lambda s: s["list_id"]
-                )
-            ).alias("__list"),
-        )
-    )
-    pairs = q.join(d, on="__list")
-    if not include_self:
-        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
-    # each (query, neighbor) pair occurs at most once: a data row carries
-    # exactly ONE list id and a query's probe lists are distinct by
-    # construction, so no dedup aggregation (an extra exchange) is needed
-    # between the join and the per-query top-k window
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        (dot_col(F.col("__qv"), F.col("__dv")) / (F.col("__qn") * F.col("__dn"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    # a data row carries exactly ONE list id and a query's probe lists are
+    # distinct by construction
+    return _topk(
+        data,
+        queries,
+        id_col,
+        vec_col,
+        k,
+        (
+            "__list",
+            scored_lists.getItem(0)["list_id"],
+            F.explode(F.transform(F.slice(scored_lists, 1, n_probe), lambda s: s["list_id"])),
+        ),
     )
 
 
@@ -347,8 +326,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     n_planes: int = 8,
-    seed: int = 42,
-    occupancy_guard: int | None = 200_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup family, brief item).
 
@@ -359,25 +336,23 @@ def embedding_near_dup_pairs(
     is checkpointed, so its n_planes dot products are computed once instead
     of once per self-join side.
 
-    ``occupancy_guard``: the bucket-local self-join is O(sum_i b_i^2), so
-    it stops being subquadratic once buckets outgrow 2^n_planes' ability to
+    Occupancy guard: the bucket-local self-join is O(sum_i b_i^2), so it
+    stops being subquadratic once buckets outgrow 2^n_planes' ability to
     spread the corpus (n_planes must grow like log2(N / target_bucket)).
     Before building pairs, one cheap agg over the (checkpointed) slim
     (id, bucket) projection checks the largest bucket; if it exceeds
-    the guard the call raises with the n_planes value that would bound
-    buckets near ``occupancy_guard`` — the same keep-it-subquadratic role
-    the prefix-membership bound plays in jaccard_pairs.  NOTE: the check is
-    an EAGER Spark job at call time (this function is otherwise a lazy plan
+    ``OCCUPANCY_GUARD`` the call raises with the n_planes value that would
+    bound buckets near it — the same keep-it-subquadratic role the
+    prefix-membership bound plays in jaccard_pairs.  NOTE: the check is an
+    EAGER Spark job at call time (this function is otherwise a lazy plan
     builder), and in a session without localCheckpoint it costs one extra
-    evaluation of the bucket projection.  Pass ``None`` to skip the check
-    (and its job) when the corpus size is known; any other non-positive
-    value is rejected rather than silently disabling the guard.
+    evaluation of the bucket projection.
     """
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     b = lsh_bucket_col(F.col(vec_col), planes)
     # the per-row norm rides the (checkpointed) slim projection: the
     # bucket-local self-join then pays one dot HOF per pair instead of
-    # dot + two norm folds (bit-identical, see cosine_topk)
+    # dot + two norm folds (bit-identical, see _topk)
     tagged = local_checkpoint(
         data.select(
             F.col(id_col).alias("id"),
@@ -386,34 +361,24 @@ def embedding_near_dup_pairs(
             b.alias("__bucket"),
         )
     )
-    if occupancy_guard is not None:
-        if occupancy_guard <= 0:
-            raise ValueError(
-                "occupancy_guard must be a positive bucket-size bound, or "
-                "None to skip the check (0 would previously disable it "
-                "silently — be explicit)"
-            )
-        occ = (
-            tagged.groupBy("__bucket")
-            .count()
-            .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
-            .first()
-        )
-        biggest, total = int(occ["mx"] or 0), int(occ["n"] or 0)
-        if biggest > occupancy_guard:
-            import math
+    occ = (
+        tagged.groupBy("__bucket")
+        .count()
+        .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
+        .first()
+    )
+    biggest, total = int(occ["mx"] or 0), int(occ["n"] or 0)
+    if biggest > OCCUPANCY_GUARD:
+        import math
 
-            want = n_planes + max(
-                1, math.ceil(math.log2(biggest / occupancy_guard))
-            )
-            raise ValueError(
-                f"embedding_near_dup_pairs: largest LSH bucket holds "
-                f"{biggest} of {total} rows (> occupancy_guard="
-                f"{occupancy_guard}); the bucket-local self-join would be "
-                f"effectively quadratic.  Raise n_planes to ~{want} "
-                f"(planes should grow like log2(N/target_bucket_size)), or "
-                f"raise/disable occupancy_guard if the blow-up is intended."
-            )
+        want = n_planes + max(1, math.ceil(math.log2(biggest / OCCUPANCY_GUARD)))
+        raise ValueError(
+            f"embedding_near_dup_pairs: largest LSH bucket holds "
+            f"{biggest} of {total} rows (> OCCUPANCY_GUARD="
+            f"{OCCUPANCY_GUARD}); the bucket-local self-join would be "
+            f"effectively quadratic.  Raise n_planes to ~{want} "
+            f"(planes should grow like log2(N/target_bucket_size))."
+        )
     a = tagged.alias("a")
     c = tagged.alias("b")
     pairs = (
@@ -440,8 +405,6 @@ def lsh_cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 8,
-    seed: int = 42,
-    include_self: bool = False,
     n_probe_buckets: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates share one of the query's probe buckets.
@@ -458,38 +421,16 @@ def lsh_cosine_topk(
     via n_planes (bucket granularity) x n_probe_buckets (probe width).
     Same output schema as cosine_topk.
     """
-    planes = _hyperplanes(dim, n_planes, seed)
-    # norms hoisted below the join — one fold per row, not per pair
-    # (bit-identical, see cosine_topk)
-    d = data.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__dv"),
-        norm_col(F.col(vec_col)).alias("__dn"),
-        lsh_bucket_col(F.col(vec_col), planes).alias("__bucket"),
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm_col(F.col(vec_col)).alias("__qn"),
-            F.explode(
-                lsh_probe_buckets_col(F.col(vec_col), planes, n_probe_buckets)
-            ).alias("__bucket"),
-        )
-    )
-    pairs = q.join(d, on="__bucket")
-    if not include_self:
-        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        (dot_col(F.col("__qv"), F.col("__dv")) / (F.col("__qn") * F.col("__dn"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    planes = _hyperplanes(dim, n_planes)
+    return _topk(
+        data,
+        queries,
+        id_col,
+        vec_col,
+        k,
+        (
+            "__bucket",
+            lsh_bucket_col(F.col(vec_col), planes),
+            F.explode(lsh_probe_buckets_col(F.col(vec_col), planes, n_probe_buckets)),
+        ),
     )

@@ -23,6 +23,31 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# most sample ids split_assignment / sample_assignment hold on the driver
+# (~hundreds of MB of heap at 10M)
+MAX_DRIVER_SAMPLES = 10_000_000
+
+
+def _driver_ids(units: DataFrame, sample_col: str) -> list:
+    """Every sample id in ascending order, from one job that collects at
+    most ``MAX_DRIVER_SAMPLES + 1`` ids; raises past the ceiling."""
+    # limit BEFORE the sort: under the ceiling that is still every id, and
+    # the plan stays a plain limit + sort (orderBy().limit() plans a top-k
+    # whose per-task queue is preallocated at the limit, 10M slots)
+    rows = (
+        units.select(sample_col)
+        .limit(MAX_DRIVER_SAMPLES + 1)
+        .orderBy(sample_col)
+        .collect()
+    )
+    if len(rows) > MAX_DRIVER_SAMPLES:
+        raise ValueError(
+            f"more than {MAX_DRIVER_SAMPLES} samples exceed the driver-side "
+            "ceiling; use split_assignment_hashed or stratified_sample_bottomk "
+            "for corpus-scale inputs."
+        )
+    return [r[sample_col] for r in rows]
+
 
 def _class_sets(spans: DataFrame, sample_col: str, class_col: str):
     rows = (
@@ -41,7 +66,6 @@ def split_assignment(
     n_restarts: int = 10,
     sample_col: str = "sample_id",
     class_col: str = "ne_type",
-    max_driver_samples: int = 10_000_000,
 ) -> DataFrame:
     """Returns (sample_id, is_test boolean) assignment table.
 
@@ -50,21 +74,13 @@ def split_assignment(
 
     Scale ceiling: the shuffle/retry loop needs the full (sample_id,
     class_set) list on the driver — exact parity with the reference's
-    whole-permutation semantics requires it.  Above ``max_driver_samples``
-    (default 10M ids; ~hundreds of MB of driver heap) this raises and
-    points to :func:`split_assignment_hashed`, the fully distributed
-    restart search for corpus-scale inputs.
+    whole-permutation semantics requires it.  Above ``MAX_DRIVER_SAMPLES``
+    ids this raises and points to :func:`split_assignment_hashed`, the
+    fully distributed restart search for corpus-scale inputs.
     """
     if n_restarts < 2:
         raise ValueError(f"{n_restarts} is too small value of restarts number.")
-    n_total = units.count()
-    if n_total > max_driver_samples:
-        raise ValueError(
-            f"{n_total} samples exceed the driver-side ceiling "
-            f"({max_driver_samples}); use split_assignment_hashed for "
-            "corpus-scale inputs."
-        )
-    ids = [r[sample_col] for r in units.select(sample_col).orderBy(sample_col).collect()]
+    ids = _driver_ids(units, sample_col)
     n_samples = len(ids)
     if n_samples < 2:
         raise ValueError("There are too few samples in the data set!")
@@ -217,12 +233,13 @@ def sample_assignment(
 ) -> DataFrame:
     """Stratified subsample keeping all classes when possible
     (sample_from_dataset, dataset_splitting.py:76-115).  Returns the
-    selected (sample_id) rows."""
+    selected (sample_id) rows.  Same driver-side ceiling as
+    :func:`split_assignment`."""
     if n < 1:
         raise ValueError(f"{n} is wrong size of sampled dataset.")
     if n_restarts < 2:
         raise ValueError(f"{n_restarts} is too small value of restarts number.")
-    ids = [r[sample_col] for r in units.select(sample_col).orderBy(sample_col).collect()]
+    ids = _driver_ids(units, sample_col)
     n_samples = len(ids)
     if n_samples < 2:
         raise ValueError("There are too few samples in the data set!")

@@ -210,12 +210,41 @@ def test_simhash_twins_ignore_edge_whitespace(spark, tmp_path):
     con.close()
 
 
+def _numpy_topk(vecs, query_ids, k):
+    """Brute-force top-k by cosine in NumPy: self-pairs dropped, ties
+    broken by neighbor id.  {(query_id, rank): (neighbor_id, cosine)}.
+    Sums are exactly rounded (fsum), so equal or power-of-2-scaled vectors
+    score exactly equal, whatever the summation order."""
+    import math
+
+    v = vecs.astype(np.float64)
+    norms = [math.sqrt(math.fsum(x * x)) for x in v]
+    out = {}
+    for q in query_ids:
+        scored = [(math.fsum(v[q] * v[n]) / (norms[q] * norms[n]), n)
+                  for n in range(len(v)) if n != q]
+        ranked = sorted(scored, key=lambda t: (-t[0], t[1]))[:k]
+        out.update({(q, r + 1): (n, c) for r, (c, n) in enumerate(ranked)})
+    return out
+
+
 def test_cosine_topk_exact_and_lsh_recall(spark):
-    from deep_ner_spark.operators.similarity import cosine_topk, lsh_cosine_topk
+    """The shared top-k tail against an independent NumPy brute force: the
+    exact scan, 0-plane LSH and fully probed IVF all see every pair, so all
+    three must return its ranking, cosine ties broken by neighbor_id."""
+    from deep_ner_spark.operators.similarity import (
+        cosine_topk,
+        fit_ivf_codebook,
+        ivf_cosine_topk,
+        lsh_cosine_topk,
+    )
 
     rng = np.random.default_rng(7)
     base = rng.standard_normal((40, 16)).astype("float32")
     base[1] = base[0]  # exact copy: same bucket under any hyperplane set
+    # exact ties for every query: 12 and 25 copy 7, 30 is 7 scaled by 2
+    base[12] = base[25] = base[7]
+    base[30] = base[7] * 2
     emb = spark.createDataFrame(
         pd.DataFrame({"vec_id": range(40), "embedding": [list(map(float, v)) for v in base]})
     )
@@ -225,6 +254,23 @@ def test_cosine_topk_exact_and_lsh_recall(spark):
     # LSH with 1 plane: near-identical vectors land in the same bucket
     approx = lsh_cosine_topk(emb, q, 16, k=1, n_planes=1).collect()
     assert approx and approx[0]["neighbor_id"] == 1
+
+    k, query_ids = 6, range(10)
+    want = _numpy_topk(base, query_ids, k)
+    assert [want[(7, r)][0] for r in (1, 2, 3)] == [12, 25, 30]
+    qs = emb.where(F.col("vec_id") < 10)
+    cb = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=4)
+    for name, out in (
+        ("cosine_topk", cosine_topk(emb, qs, k=k)),
+        ("lsh_cosine_topk", lsh_cosine_topk(emb, qs, 16, k=k, n_planes=0)),
+        ("ivf_cosine_topk", ivf_cosine_topk(emb, qs, cb, k=k, n_probe=len(cb))),
+    ):
+        got = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
+               for r in out.collect()}
+        assert got.keys() == want.keys(), name
+        for key, (nid, cos) in want.items():
+            assert got[key][0] == nid, (name, key)
+            assert got[key][1] == pytest.approx(cos, rel=1e-12), (name, key)
 
 
 def test_lsh_multiprobe_recall_rises(spark):
@@ -432,7 +478,11 @@ def test_rolling_fingerprint(spark):
 
 
 def test_ivf_cosine_topk(spark):
-    from deep_ner_spark.operators.similarity import cosine_topk, ivf_cosine_topk
+    from deep_ner_spark.operators.similarity import (
+        cosine_topk,
+        fit_ivf_codebook,
+        ivf_cosine_topk,
+    )
 
     rng = np.random.default_rng(3)
     base = rng.standard_normal((60, 16)).astype("float32")
@@ -441,13 +491,14 @@ def test_ivf_cosine_topk(spark):
         pd.DataFrame({"vec_id": range(60), "embedding": [list(map(float, v)) for v in base]})
     )
     q = emb.where(F.col("vec_id") == 7)
-    approx = ivf_cosine_topk(emb, q, k=1, n_lists=8, n_probe=2).collect()
+    cb = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=8)
+    approx = ivf_cosine_topk(emb, q, cb, k=1, n_probe=2).collect()
     assert approx and approx[0]["neighbor_id"] == 30
     # with n_probe == n_lists the probe is exhaustive -> equals exact top-k
     exact = {(r["query_id"], r["rank"]): r["neighbor_id"]
              for r in cosine_topk(emb, q, k=3).collect()}
     full = {(r["query_id"], r["rank"]): r["neighbor_id"]
-            for r in ivf_cosine_topk(emb, q, k=3, n_lists=8, n_probe=8).collect()}
+            for r in ivf_cosine_topk(emb, q, cb, k=3, n_probe=8).collect()}
     assert full == exact
 
 
@@ -478,13 +529,12 @@ def test_ivf_kmeans_codebook(spark):
     exact = {(r["query_id"], r["rank"]): r["neighbor_id"]
              for r in cosine_topk(emb, q, k=1).collect()}
     refined = {(r["query_id"], r["rank"]): r["neighbor_id"]
-               for r in ivf_cosine_topk(emb, q, k=1, n_lists=4, n_probe=2,
-                                        kmeans_iters=3).collect()}
+               for r in ivf_cosine_topk(emb, q, cb1, k=1, n_probe=2).collect()}
     assert refined == exact  # clustered data + refined codebook -> full recall
     # exhaustive probe equals exact top-k regardless of kmeans_iters
+    cb2 = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=4, kmeans_iters=2)
     full = {(r["query_id"], r["rank"]): r["neighbor_id"]
-            for r in ivf_cosine_topk(emb, q, k=3, n_lists=4, n_probe=4,
-                                     kmeans_iters=2).collect()}
+            for r in ivf_cosine_topk(emb, q, cb2, k=3, n_probe=4).collect()}
     exact3 = {(r["query_id"], r["rank"]): r["neighbor_id"]
               for r in cosine_topk(emb, q, k=3).collect()}
     assert full == exact3
@@ -576,27 +626,26 @@ def test_jaccard_prefix_exact_at_all_thresholds(spark):
         assert want, f"threshold {t}: corpus has no qualifying pair"
 
 
-def test_embedding_near_dup_occupancy_guard(spark):
+def test_embedding_near_dup_occupancy_guard(spark, monkeypatch):
     """A skewed corpus (every vector in one LSH bucket) with default-shaped
     params must raise with n_planes guidance instead of silently running an
-    effectively quadratic bucket-local self-join; disabling the guard (or a
-    loose enough bound) still returns correct pairs."""
-    from deep_ner_spark.operators.similarity import embedding_near_dup_pairs
+    effectively quadratic bucket-local self-join; a loose enough bound
+    still returns correct pairs."""
+    from deep_ner_spark.operators import similarity as sim
 
     vecs = [[1.0] + [0.0] * 15] * 40  # identical vectors -> one bucket
     emb = spark.createDataFrame(
         pd.DataFrame({"vec_id": range(40), "embedding": vecs})
     )
+    monkeypatch.setattr(sim, "OCCUPANCY_GUARD", 10)
     with pytest.raises(ValueError) as ei:
-        embedding_near_dup_pairs(emb, 16, occupancy_guard=10)
+        sim.embedding_near_dup_pairs(emb, 16)
     msg = str(ei.value)
     assert "n_planes" in msg and "log2" in msg and "40" in msg
 
-    pairs = embedding_near_dup_pairs(emb, 16, occupancy_guard=None)
-    assert pairs.count() == 40 * 39 // 2  # all-pairs of exact duplicates
-
-    ok = embedding_near_dup_pairs(emb, 16, occupancy_guard=10_000)
-    assert ok.count() == 40 * 39 // 2
+    monkeypatch.setattr(sim, "OCCUPANCY_GUARD", 10_000)
+    ok = sim.embedding_near_dup_pairs(emb, 16)
+    assert ok.count() == 40 * 39 // 2  # all-pairs of exact duplicates
 
 
 def _union_find_clusters(node_ids, edges):
@@ -616,20 +665,21 @@ def _union_find_clusters(node_ids, edges):
     return {v: find(v) for v in node_ids}
 
 
-def test_connected_components_vs_union_find(spark):
+def test_connected_components_vs_union_find(spark, monkeypatch):
     """Hash-min + pointer-jumping CC equals a Python union-find on a graph
     with a chain (forces multi-round propagation), a star, a triangle and
     isolated nodes, and on a 30-node path whose ids are shuffled along it
     (23 rounds).  With too few rounds it raises instead of returning split
     clusters."""
+    from deep_ner_spark.operators import dedup
     from deep_ner_spark.operators.dedup import connected_components
 
-    def run(node_ids, edges, **kw):
+    def run(node_ids, edges):
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         nodes = spark.createDataFrame([(v,) for v in node_ids], "nid long")
         return {
             r["nid"]: r["cluster_id"]
-            for r in connected_components(pairs, nodes, "nid", **kw).collect()
+            for r in connected_components(pairs, nodes, "nid").collect()
         }
 
     edges = [
@@ -646,8 +696,9 @@ def test_connected_components_vs_union_find(spark):
     path = list(zip(perm, perm[1:]))
     assert run(range(30), path) == {v: 0 for v in range(30)}
 
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 3)
     with pytest.raises(RuntimeError, match="after 3 rounds"):
-        run(range(30), path, max_iter=3)
+        run(range(30), path)
 
 
 def test_connected_components_rejects_string_ids(spark):

@@ -59,14 +59,6 @@ def test_media_dedup_hash(images, spark):
     assert all(len(r["content_hash"]) == 32 for r in rows)
 
 
-def test_codec_seam_raises_without_fake(monkeypatch):
-    monkeypatch.setattr(mm, "DETERMINISTIC_FAKE", False)
-    with pytest.raises(NotImplementedError):
-        mm._decode_image(b"xx", 4, 4)
-    with pytest.raises(NotImplementedError):
-        mm._decode_audio(b"xx", 100)
-
-
 # --- real-codec dispatch (PNG via stdlib zlib, WAV via stdlib wave) ----------
 
 
@@ -208,13 +200,12 @@ def test_real_codec_dispatch_end_to_end(spark):
         assert got[k] == pytest.approx(want[k], rel=1e-6)
 
 
-def test_unrecognized_container_still_raises_without_fake(monkeypatch):
-    monkeypatch.setattr(mm, "DETERMINISTIC_FAKE", False)
+def test_unrecognized_container_still_raises_without_fake():
     # JPEG magic but a truncated/garbage stream: a clear ValueError from
     # the stdlib decoder (it no longer needs Pillow for baseline JPEG)
     with pytest.raises(ValueError):
         mm._decode_image(b"\xff\xd8\xff\xe0rest", 4, 4)
-    # real PNG decodes even with fakes disabled
+    # real PNG decodes for real, not through the fake
     img = np.zeros((2, 2, 3), dtype=np.uint8)
     assert mm._decode_image(_png_encode(img, [0]), 2, 2).shape == (2, 2, 3)
 

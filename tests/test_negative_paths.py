@@ -136,10 +136,25 @@ def test_json_dataset_unknown_key_raises(spark, tmp_path):
         load_json_dataset(spark, str(p2))
 
 
-def test_split_assignment_driver_ceiling_raises(spark):
+def test_split_assignment_driver_ceiling_raises(spark, monkeypatch):
+    from deep_ner_spark.operators import splitting
     from deep_ner_spark.operators.splitting import split_assignment
 
+    monkeypatch.setattr(splitting, "MAX_DRIVER_SAMPLES", 10)
     units = spark.range(100).withColumnRenamed("id", "sample_id")
     spans = units.select("sample_id").withColumn("ne_type", F.lit("X"))
     with pytest.raises(ValueError, match="ceiling"):
-        split_assignment(units, spans, 0.3, seed=1, max_driver_samples=10)
+        split_assignment(units, spans, 0.3, seed=1)
+
+
+def test_sample_assignment_driver_ceiling_raises(spark, monkeypatch):
+    """sample_assignment collects its ids under the same ceiling as
+    split_assignment instead of pulling every id to the driver."""
+    from deep_ner_spark.operators import splitting
+    from deep_ner_spark.operators.splitting import sample_assignment
+
+    monkeypatch.setattr(splitting, "MAX_DRIVER_SAMPLES", 10)
+    units = spark.range(100).withColumnRenamed("id", "sample_id")
+    spans = units.select("sample_id").withColumn("ne_type", F.lit("X"))
+    with pytest.raises(ValueError, match="ceiling"):
+        sample_assignment(units, spans, n=5, seed=1)

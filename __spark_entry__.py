@@ -1022,7 +1022,7 @@ def q_mixture_weights(spark, sf_dir):
 _PACK_REC_SQL = """
     WITH RECURSIVE ord AS (
       SELECT doc_id, doc_id % 8 AS shard,
-             len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')) AS n_tokens,
+             coalesce(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')), 0) AS n_tokens,
              row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
       FROM documents),
     rec AS (

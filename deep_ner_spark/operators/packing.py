@@ -62,7 +62,9 @@ def pack_sequences(
     slim = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         (F.col(id_col).cast("long") % n_shards).alias("shard"),
-        token_count_col(F.col(text_col)).cast("long").alias("n_tokens"),
+        # a null text packs as 0 tokens, the count featurize gives it
+        F.coalesce(token_count_col(F.col(text_col)), F.lit(0))
+        .cast("long").alias("n_tokens"),
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:

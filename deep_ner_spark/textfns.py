@@ -463,10 +463,10 @@ def make_text_tagger(lang: str | None = None, strict: bool = False):
     """``text -> (tokens, pos_tags, dep_tags)`` tagger factory.
 
     The pluggable seam behind the linguistic one-hot channel (§2.10): REAL
-    UD tags when ``lang`` is given and spacy-udpipe is importable (same
-    import-guard pattern as the Pillow/soundfile codec seams in
-    operators/multimodal.py), else the pinned deterministic heuristic with
-    the in-repo tokenizer.  ``strict=True`` raises ImportError instead of
+    UD tags when ``lang`` is given and spacy-udpipe is importable, else
+    the pinned deterministic heuristic with the in-repo tokenizer (unlike
+    the codec seams in operators/multimodal.py, which raise when their
+    package is missing).  ``strict=True`` raises ImportError instead of
     silently falling back — for callers that must not train on heuristic
     tags.  Both paths return the same shape, so downstream
     ``pos_dep_one_hot`` consumes either.

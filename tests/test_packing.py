@@ -9,7 +9,8 @@ def _docs(spark, counts):
         pd.DataFrame(
             {
                 "doc_id": list(range(len(counts))),
-                "text": [" ".join(["w"] * c) for c in counts],
+                # None stands for a null text
+                "text": [None if c is None else " ".join(["w"] * c) for c in counts],
             }
         )
     )
@@ -18,7 +19,7 @@ def _docs(spark, counts):
 def test_pack_sequences_next_fit(spark):
     from deep_ner_spark.operators.packing import pack_sequences, packing_stats
 
-    df = _docs(spark, [5, 4, 3, 7, 2, 9])
+    df = _docs(spark, [5, 4, 3, 7, 2, 9, None])
     got = {
         r["doc_id"]: (r["bin_in_shard"], r["offset_in_bin"], r["n_tokens"])
         for r in pack_sequences(df, "doc_id", "text", max_len=10, n_shards=1).collect()
@@ -30,11 +31,12 @@ def test_pack_sequences_next_fit(spark):
         3: (1, 3, 7),   # exactly fills bin 1
         4: (2, 0, 2),
         5: (3, 0, 9),   # 2+9 > 10 -> new bin
+        6: (3, 9, 0),   # null text packs as 0 tokens
     }
     stats = packing_stats(
         pack_sequences(df, "doc_id", "text", max_len=10, n_shards=1), max_len=10
     ).collect()[0]
-    assert (stats["n_bins"], stats["n_docs"], stats["max_fill"]) == (4, 6, 10)
+    assert (stats["n_bins"], stats["n_docs"], stats["max_fill"]) == (4, 7, 10)
     assert abs(stats["fill_ratio"] - 30 / 40) < 1e-12
 
 

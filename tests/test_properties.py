@@ -123,100 +123,3 @@ def test_match_spans_bounds(gold_raw, pred_raw):
     assert tp + fn == sum(b - a for a, b in gold)
     assert tp + fp == sum(b - a for a, b in pred)
     assert tp >= 0 and fp >= 0 and fn >= 0
-
-
-# --- stdlib PNG/WAV codec round-trips (multimodal real-decode path) ---------
-
-_img_strategy = st.tuples(
-    st.integers(min_value=1, max_value=12),   # height
-    st.integers(min_value=1, max_value=12),   # width
-    st.sampled_from([1, 3, 4]),               # channels: gray/RGB/RGBA
-    st.integers(min_value=0, max_value=2**32 - 1),  # pixel seed
-    st.lists(st.integers(min_value=0, max_value=4), min_size=1, max_size=6),
-)
-
-
-@given(_img_strategy)
-@settings(max_examples=40, deadline=None)
-def test_png_decode_roundtrip_property(params):
-    """decode(encode(img, any per-row filter mix)) == img for every shape,
-    channel count and scanline-filter combination."""
-    import numpy as np
-
-    from deep_ner_spark.operators.multimodal import _decode_image
-    from tests.test_multimodal import _png_encode
-
-    h, w, nch, seed, filters = params
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, size=(h, w, nch), dtype=np.uint8)
-    got = _decode_image(_png_encode(img, row_filters=filters), w, h)
-    want = img if nch == 3 else (
-        np.repeat(img, 3, axis=2) if nch == 1 else img[:, :, :3]
-    )
-    assert got.shape == (h, w, 3)
-    assert np.array_equal(got, want)
-
-
-@given(
-    st.lists(st.integers(min_value=-32768, max_value=32767),
-             min_size=1, max_size=200),
-    st.sampled_from([1, 2]),
-)
-@settings(max_examples=40, deadline=None)
-def test_wav_decode_roundtrip_property(samples, nch):
-    import numpy as np
-
-    from deep_ner_spark.operators.multimodal import _decode_audio
-    from tests.test_multimodal import _wav_encode
-
-    i16 = np.asarray(samples, dtype=np.int16)
-    if nch == 2:  # interleave a junk second channel; decode keeps the first
-        blob = _wav_encode(
-            np.stack([i16, np.roll(i16, 1)], axis=1).reshape(-1), nch=2
-        )
-    else:
-        blob = _wav_encode(i16)
-    got = _decode_audio(blob, n_samples=0)
-    assert np.array_equal(got, i16.astype(np.float32) / 32768.0)
-
-
-_jpeg_strategy = st.tuples(
-    st.integers(min_value=1, max_value=20),   # height
-    st.integers(min_value=1, max_value=20),   # width
-    st.sampled_from(["gray", "rgb", "rgb420"]),
-    st.integers(min_value=0, max_value=2**32 - 1),  # pixel seed
-    st.sampled_from([0, 0, 1, 3]),            # restart interval (0 = none)
-)
-
-
-@given(_jpeg_strategy)
-@settings(max_examples=40, deadline=None)
-def test_jpeg_decode_roundtrip_property(params):
-    """Baseline-JPEG round-trip with unit quant tables stays within DCT
-    rounding error for every shape / colorspace / sampling / restart mix
-    (4:2:0 uses 2x2-block-constant pixels so chroma subsampling is
-    lossless and the same bound applies)."""
-    import numpy as np
-
-    from deep_ner_spark.operators.multimodal import _decode_image
-    from tests.test_multimodal import _jpeg_encode
-
-    h, w, mode, seed, rst = params
-    rng = np.random.default_rng(seed)
-    if mode == "gray":
-        img = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-        blob = _jpeg_encode(img, restart_interval=rst)
-        want = np.repeat(img[:, :, None], 3, axis=2)
-    elif mode == "rgb":
-        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        blob = _jpeg_encode(img, restart_interval=rst)
-        want = img
-    else:  # rgb420: 2x2-constant pixels survive mean-down + nearest-up
-        small = rng.integers(0, 256, size=(-(-h // 2), -(-w // 2), 3),
-                             dtype=np.uint8)
-        img = np.repeat(np.repeat(small, 2, axis=0), 2, axis=1)[:h, :w]
-        blob = _jpeg_encode(img, subsample=True, restart_interval=rst)
-        want = img
-    got = _decode_image(blob, w, h)
-    assert got.shape == (h, w, 3)
-    assert int(np.abs(got.astype(int) - want.astype(int)).max()) <= 4

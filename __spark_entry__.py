@@ -23,6 +23,15 @@ if str(REPO) not in sys.path:
 
 SESSION_GAP_US = 1800 * 1_000_000
 
+# Java's ``\s`` for the DuckDB twins.  RE2's ``\s`` lacks \x0B, so the
+# class is spelled out.
+_WS = r"\t\n\x0B\f\r "
+# The whitespace token list of every DuckDB twin, the SQL spelling of
+# functions.text.tokens_col: split on runs of _WS, empty tokens dropped,
+# null text in gives null out.  No trim: DuckDB's trim strips spaces only,
+# and the filter already drops the empty edge tokens.
+_WS_TOKENS = f"list_filter(string_split_regex(text, '[{_WS}]+'), x -> x <> '')"
+
 
 def _ensure_shipped(spark: SparkSession) -> None:
     """Ship the package to executors (idempotent; driver may own the session)."""
@@ -374,19 +383,48 @@ def q_merge_value_intervals(spark, sf_dir):
 
 # --- W1/W2: BIO encode/decode over a deterministic token stream --------------
 
-_BIO_TOKENS_SQL = """
-    WITH toks AS (
+
+def _token_spans_sql(max_doc: int) -> str:
+    """CTEs ``toks`` and ``pos``: the twin of :func:`_token_spans`."""
+    return f"""toks AS (
       SELECT doc_id, unnest(t) AS token,
              unnest(generate_series(1, len(t))) - 1 AS token_idx
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-            FROM documents WHERE doc_id < 200)),
+      FROM (SELECT doc_id, {_WS_TOKENS} AS t
+            FROM documents WHERE doc_id < {max_doc})),
     pos AS (
       SELECT doc_id, token_idx, token,
              CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start,
              CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + length(token) AS BIGINT) AS "end"
-      FROM toks),
+      FROM toks)"""
+
+
+def _token_spans(spark, sf_dir, max_doc: int):
+    """Whitespace tokens of the documents with doc_id < max_doc, numbered
+    and given char spans as if single-space separated: (doc_id, token_idx,
+    token, start, end)."""
+    from pyspark.sql.window import Window
+
+    from deep_ner_spark.functions.text import tokens_col
+
+    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < max_doc)
+    toks = docs.select(
+        "doc_id", F.posexplode(tokens_col("text")).alias("token_idx", "token")
+    )
+    wprev = (
+        Window.partitionBy("doc_id")
+        .orderBy("token_idx")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return toks.withColumn(
+        "start",
+        F.coalesce(F.sum(F.length("token") + 1).over(wprev), F.lit(0)).cast("long"),
+    ).withColumn("end", (F.col("start") + F.length("token")).cast("long"))
+
+
+_BIO_TOKENS_SQL = f"""
+    WITH {_token_spans_sql(200)},
     inst AS (
       SELECT *,
              CASE WHEN token IN ('data', 'spark') THEN
@@ -411,20 +449,9 @@ def _bio_token_stream(spark, sf_dir):
     of 'spark' (class 2) are entity instances over documents text."""
     from pyspark.sql.window import Window
 
-    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias(
-            "token_idx", "token"
-        ),
-    )
+    toks = _token_spans(spark, sf_dir, 200)
     w = Window.partitionBy("doc_id").orderBy("token_idx")
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wprev = w.rowsBetween(Window.unboundedPreceding, -1)
-    toks = toks.withColumn(
-        "start",
-        F.coalesce(F.sum(F.length("token") + 1).over(wprev), F.lit(0)).cast("long"),
-    ).withColumn("end", (F.col("start") + F.length("token")).cast("long"))
     is_ent = F.col("token").isin("data", "spark")
     opens = F.when(
         is_ent & (F.coalesce(F.lag("token").over(w), F.lit("")) != F.col("token")), 1
@@ -558,8 +585,8 @@ def q_classes_distinct(spark, sf_dir):
 
 @_q(
     "corpus_stats",
-    """
-    WITH n AS (SELECT len(string_split_regex(trim(text), '\\s+')) AS n_tokens
+    f"""
+    WITH n AS (SELECT len({_WS_TOKENS}) AS n_tokens
                FROM documents)
     SELECT max(n_tokens) AS max_tokens,
            CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
@@ -569,11 +596,10 @@ def q_classes_distinct(spark, sf_dir):
 )
 def q_corpus_stats(spark, sf_dir):
     """SURVEY A6/A7: corpus max/total/median token counts (exact percentile)."""
-    docs = _read(spark, sf_dir, "documents")
-    n = docs.select(
-        F.size(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias(
-            "n_tokens"
-        )
+    from deep_ner_spark.functions.text import tokens_col
+
+    n = _read(spark, sf_dir, "documents").select(
+        F.size(tokens_col("text")).alias("n_tokens")
     )
     return n.agg(
         F.max("n_tokens").alias("max_tokens"),
@@ -640,20 +666,31 @@ def q_normalize_dashes(spark, sf_dir):
 
 # --- tokenizer + shapes ------------------------------------------------------
 
+# textfns._TOKEN_RE, ``\w+|[^\w\s]`` on str, in RE2: Python's ``\s`` is
+# RE2's ``\s`` plus \x0B, \x1c-\x1f, \x85 and the Unicode separators \p{Z}
+_WORD_TOKEN_RE2 = r"[\p{L}\p{N}_]+|[^\p{L}\p{N}_\s\x0B\x1c-\x1f\x85\p{Z}]"
+
 
 @_q(
     "token_explode",
-    """
-    WITH toks AS (
-      SELECT doc_id, unnest(t) AS token,
-             unnest(generate_series(1, len(t))) - 1 AS token_idx
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents))
-    SELECT doc_id, token_idx, token,
-           CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS INT) AS start,
-           CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + length(token) AS INT) AS "end"
-    FROM toks
+    f"""
+    WITH parts AS (
+      SELECT doc_id,
+             regexp_extract_all(text, '{_WORD_TOKEN_RE2}') AS tk,
+             string_split_regex(text, '{_WORD_TOKEN_RE2}') AS gap
+      FROM documents),
+    toks AS (
+      -- gap i is the text between token i-1 and token i (1-based)
+      SELECT doc_id, unnest(tk) AS token, unnest(gap[1:len(tk)]) AS gap,
+             unnest(generate_series(1, len(tk))) - 1 AS token_idx
+      FROM parts),
+    pos AS (
+      SELECT doc_id, token_idx, token,
+             CAST(sum(length(gap) + length(token)) OVER (PARTITION BY doc_id ORDER BY token_idx
+                  ROWS UNBOUNDED PRECEDING) - length(token) AS INT) AS start
+      FROM toks)
+    SELECT doc_id, token_idx, token, start, CAST(start + length(token) AS INT) AS "end"
+    FROM pos
     """,
 )
 def q_token_explode(spark, sf_dir):
@@ -670,9 +707,9 @@ def q_token_explode(spark, sf_dir):
 
 @_q(
     "shape_strings",
-    """
+    f"""
     WITH toks AS (
-      SELECT DISTINCT unnest(string_split_regex(trim(text), '\\s+')) AS token
+      SELECT DISTINCT unnest({_WS_TOKENS}) AS token
       FROM documents),
     dec AS (SELECT token, upper(substr(token, 1, 1)) || substr(token, 2) || '-12' AS decorated
             FROM toks)
@@ -688,14 +725,10 @@ def q_token_explode(spark, sf_dir):
 def q_shape_strings(spark, sf_dir):
     """SURVEY P2: token shape (classify chars, collapse runs) on decorated
     tokens (Upper + '-12' suffix exercises A/a/P/D classes)."""
-    from deep_ner_spark.functions.text import shape_udf
+    from deep_ner_spark.functions.text import shape_udf, tokens_col
 
     docs = _read(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias(
-            "token"
-        )
-    ).distinct()
+    toks = docs.select(F.explode(tokens_col("text")).alias("token")).distinct()
     decorated = F.concat(
         F.upper(F.substring("token", 1, 1)),
         F.expr("substring(token, 2)"),
@@ -706,9 +739,9 @@ def q_shape_strings(spark, sf_dir):
 
 @_q(
     "shape_vocab",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS token
+      SELECT doc_id, unnest({_WS_TOKENS}) AS token
       FROM documents),
     mixed AS (
       SELECT regexp_replace(regexp_replace(regexp_replace(
@@ -724,14 +757,10 @@ def q_shape_strings(spark, sf_dir):
 def q_shape_vocab(spark, sf_dir):
     """SURVEY A1: fitted shape vocabulary (freq >= 3, sorted) over initcapped
     tokens (so 'A' and 'Aa' both appear)."""
-    from deep_ner_spark.functions.text import shape_udf
+    from deep_ner_spark.functions.text import shape_udf, tokens_col
 
     docs = _read(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias(
-            "token"
-        )
-    )
+    toks = docs.select(F.explode(tokens_col("text")).alias("token"))
     decorated = F.concat(F.upper(F.substring("token", 1, 1)), F.expr("substring(token, 2)"))
     return (
         toks.select(shape_udf(decorated).alias("shape"))
@@ -747,16 +776,16 @@ def q_shape_vocab(spark, sf_dir):
 
 @_q(
     "quality_features",
-    """
+    f"""
     WITH base AS (
-      SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS t FROM documents)
+      SELECT doc_id, text, {_WS_TOKENS} AS t FROM documents)
     SELECT doc_id,
            length(text) AS n_chars,
            len(t) AS n_tokens,
-           length(regexp_replace(text, '\\s', '', 'g')) / greatest(len(t), 1) AS mean_token_len,
+           length(regexp_replace(text, '[{_WS}]', '', 'g')) / greatest(len(t), 1) AS mean_token_len,
            len(list_filter(t, x -> lower(x) IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this','be','are')))
              / greatest(len(t), 1) AS stopword_ratio,
-           (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))) / greatest(length(text), 1) AS punct_ratio,
+           (length(text) - length(regexp_replace(text, '[^\\w{_WS}]', '', 'g'))) / greatest(length(text), 1) AS punct_ratio,
            len(list_distinct(t)) AS n_distinct_tokens,
            len(list_distinct(t)) / greatest(len(t), 1) AS distinct_ratio
     FROM base
@@ -782,11 +811,11 @@ def q_quality_features(spark, sf_dir):
 
 @_q(
     "token_counts",
-    """
+    f"""
     SELECT doc_id,
            length(text) AS n_chars,
-           len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')) AS ws_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]{1,3}|[^A-Za-z0-9\\s]')) AS bpe_tokens
+           len({_WS_TOKENS}) AS ws_tokens,
+           len(regexp_extract_all(text, '[A-Za-z]{{1,4}}|[0-9]{{1,3}}|[^A-Za-z0-9{_WS}]')) AS bpe_tokens
     FROM documents
     """,
 )
@@ -805,8 +834,8 @@ def q_token_counts(spark, sf_dir):
 
 @_q(
     "lang_id",
-    """
-    WITH base AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents)
+    f"""
+    WITH base AS (SELECT doc_id, {_WS_TOKENS} AS t FROM documents)
     SELECT doc_id,
            CASE WHEN len(list_filter(t, x -> lower(x) IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this','be','are')))
                      / greatest(len(t), 1) >= 0.05
@@ -823,9 +852,12 @@ def q_lang_id(spark, sf_dir):
 
 @_q(
     "doc_fingerprint",
-    """
+    f"""
     SELECT doc_id,
-           md5(array_to_string(list_sort(list_distinct(string_split_regex(trim(text), '\\s+'))), ' ')) AS fingerprint
+           -- DuckDB's array_to_string([], ' ') is NULL, Spark's concat_ws ''
+           CASE WHEN text IS NOT NULL THEN md5(coalesce(
+             array_to_string(list_sort(list_distinct({_WS_TOKENS})), ' '), ''))
+           END AS fingerprint
     FROM documents
     """,
 )
@@ -838,11 +870,8 @@ def q_doc_fingerprint(spark, sf_dir):
 
 @_q(
     "repetition_stats",
-    """
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS t
-      FROM documents),
+    f"""
+    WITH toks AS (SELECT doc_id, {_WS_TOKENS} AS t FROM documents),
     bi AS (
       SELECT doc_id,
              unnest(list_transform(range(1, greatest(len(t) - 2 + 2, 1)),
@@ -940,10 +969,10 @@ def q_redact_pii(spark, sf_dir):
 
 @_q(
     "chunk_documents",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS t
+      -- a null text chunks like an empty one: least(NULL, 1) would be 1
+      SELECT doc_id, coalesce({_WS_TOKENS}, []) AS t
       FROM documents),
     st AS (
       -- starts capped at n-1-overlap (range end exclusive: s < n-8), so a
@@ -972,9 +1001,9 @@ def q_chunk_documents(spark, sf_dir):
 
 @_q(
     "term_frequencies",
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')) AS token
+      SELECT unnest({_WS_TOKENS}) AS token
       FROM documents),
     c AS (SELECT token, count(*) AS cnt FROM toks GROUP BY 1 HAVING count(*) >= 5)
     SELECT token, cnt, row_number() OVER (ORDER BY cnt DESC, token ASC) AS rank
@@ -991,10 +1020,10 @@ def q_term_frequencies(spark, sf_dir):
 
 @_q(
     "mixture_weights",
-    """
+    f"""
     WITH g AS (
       SELECT lang, count(*) AS n_docs,
-             CAST(sum(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))) AS BIGINT) AS n_tokens
+             CAST(sum(len({_WS_TOKENS})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY 1)
     SELECT lang, n_docs, n_tokens,
            n_tokens / sum(n_tokens) OVER () AS natural_frac,
@@ -1019,10 +1048,10 @@ def q_mixture_weights(spark, sf_dir):
 
 # the next-fit recurrence shared by both packing oracles: DuckDB replays the
 # per-shard sequential scan as a recursive CTE carrying (bin, offset, fill)
-_PACK_REC_SQL = """
+_PACK_REC_SQL = f"""
     WITH RECURSIVE ord AS (
       SELECT doc_id, doc_id % 8 AS shard,
-             coalesce(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')), 0) AS n_tokens,
+             coalesce(len({_WS_TOKENS}), 0) AS n_tokens,
              row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
       FROM documents),
     rec AS (
@@ -1107,14 +1136,20 @@ def q_exact_dup_groups(spark, sf_dir):
     return out.select("text_hash", "n_copies")
 
 
+def _shingles_sql(n: int) -> str:
+    """CTEs ``toks`` and ``sh``: the distinct word n-gram shingles of each
+    document, the twin of dedup.shingles_of_tokens over tokens_col."""
+    return f"""toks AS (SELECT doc_id, {_WS_TOKENS} AS t FROM documents),
+    sh AS (SELECT DISTINCT doc_id, shingle FROM (
+        SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - {n - 1}, 0)),
+               i -> array_to_string(t[i:i+{n - 1}], ' '))) AS shingle
+        FROM toks))"""
+
+
 @_q(
     "eval_contamination",
-    """
-    WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - 3, 0)),
-               i -> array_to_string(t[i:i+3], ' '))) AS shingle
-        FROM toks)),
+    f"""
+    WITH {_shingles_sql(4)},
     tr AS (SELECT * FROM sh WHERE doc_id % 20 <> 0),
     ev AS (SELECT doc_id AS eval_id, shingle FROM sh WHERE doc_id % 20 = 0),
     sizes AS (SELECT doc_id, count(*) AS sz FROM tr GROUP BY 1),
@@ -1146,12 +1181,8 @@ def q_eval_contamination(spark, sf_dir):
 
 @_q(
     "jaccard_pairs",
-    """
-    WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-               i -> array_to_string(t[i:i+2], ' '))) AS shingle
-        FROM toks)),
+    f"""
+    WITH {_shingles_sql(3)},
     sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
     inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
               FROM sh a JOIN sh b USING (shingle)
@@ -1181,13 +1212,9 @@ def q_jaccard_pairs(spark, sf_dir):
 
 @_q(
     "dup_clusters",
-    """
+    f"""
     WITH RECURSIVE
-    toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-               i -> array_to_string(t[i:i+2], ' '))) AS shingle
-        FROM toks)),
+    {_shingles_sql(3)},
     sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
     inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
               FROM sh a JOIN sh b USING (shingle)
@@ -1225,17 +1252,23 @@ def q_dup_clusters(spark, sf_dir):
     )
 
 
+# CTEs over ``sh``: 8 MinHash slots per doc in ``sig``, banded 4 at a time
+# in ``banded`` (dedup.minhash_signatures, dedup.banded_buckets)
+_MINHASH_BANDS_SQL = """expanded AS (SELECT doc_id, shingle, unnest(generate_series(0, 7)) AS h_idx FROM sh),
+    sig AS (SELECT doc_id, h_idx, min(md5(shingle || ':' || h_idx)) AS minhash
+            FROM expanded GROUP BY 1, 2),
+    banded AS (
+      SELECT doc_id, CAST(h_idx // 4 AS INT) AS band,
+             md5(string_agg(h_idx || ':' || minhash, '|' ORDER BY h_idx || ':' || minhash)) AS bucket
+      FROM sig GROUP BY 1, 2)"""
+
+
 @_q(
     "minhash_signatures",
-    """
-    WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-               i -> array_to_string(t[i:i+2], ' '))) AS shingle
-        FROM toks)),
-    expanded AS (SELECT doc_id, shingle, unnest(generate_series(0, 7)) AS h_idx FROM sh)
-    SELECT doc_id, h_idx, min(md5(shingle || ':' || h_idx)) AS minhash
-    FROM expanded GROUP BY 1, 2
+    f"""
+    WITH {_shingles_sql(3)},
+    {_MINHASH_BANDS_SQL}
+    SELECT doc_id, h_idx, minhash FROM sig
     """,
 )
 def q_minhash_signatures(spark, sf_dir):
@@ -1250,19 +1283,9 @@ def q_minhash_signatures(spark, sf_dir):
 
 @_q(
     "lsh_candidates",
-    """
-    WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-               i -> array_to_string(t[i:i+2], ' '))) AS shingle
-        FROM toks)),
-    expanded AS (SELECT doc_id, shingle, unnest(generate_series(0, 7)) AS h_idx FROM sh),
-    sig AS (SELECT doc_id, h_idx, min(md5(shingle || ':' || h_idx)) AS minhash
-            FROM expanded GROUP BY 1, 2),
-    banded AS (
-      SELECT doc_id, CAST(h_idx // 4 AS INT) AS band,
-             md5(string_agg(h_idx || ':' || minhash, '|' ORDER BY h_idx || ':' || minhash)) AS bucket
-      FROM sig GROUP BY 1, 2)
+    f"""
+    WITH {_shingles_sql(3)},
+    {_MINHASH_BANDS_SQL}
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM banded a JOIN banded b USING (band, bucket)
     WHERE a.doc_id < b.doc_id
@@ -1279,22 +1302,26 @@ def q_lsh_candidates(spark, sf_dir):
     return out.select(F.col("id_a").cast("long"), F.col("id_b").cast("long"))
 
 
-@_q(
-    "simhash_bits",
-    """
-    WITH toks AS (
-      SELECT doc_id,
-             md5(unnest(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))) AS h
-      FROM documents WHERE doc_id < 100),
-    bits AS (
-      SELECT doc_id, h, unnest(generate_series(0, 63)) AS b FROM toks),
+def _simhash_sql(where: str) -> str:
+    """CTEs ending in ``sh`` (doc_id, b, bit): bit b of the SimHash of each
+    document ``where`` selects, voted by md5 token hashes (dedup.simhash64)."""
+    return f"""toks AS (SELECT doc_id, md5(unnest({_WS_TOKENS})) AS h FROM documents {where}),
+    bits AS (SELECT doc_id, h, unnest(generate_series(0, 63)) AS b FROM toks),
     scored AS (
       SELECT doc_id, b,
              ((strpos('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1)
                >> (b % 4)) & 1 AS bit
-      FROM bits)
-    SELECT doc_id, b, CAST(CASE WHEN sum(bit * 2 - 1) > 0 THEN 1 ELSE 0 END AS INT) AS bit
-    FROM scored GROUP BY 1, 2
+      FROM bits),
+    sh AS (
+      SELECT doc_id, b, CAST(CASE WHEN sum(bit * 2 - 1) > 0 THEN 1 ELSE 0 END AS INT) AS bit
+      FROM scored GROUP BY 1, 2)"""
+
+
+@_q(
+    "simhash_bits",
+    f"""
+    WITH {_simhash_sql("WHERE doc_id < 100")}
+    SELECT doc_id, b, bit FROM sh
     """,
 )
 def q_simhash_bits(spark, sf_dir):
@@ -1382,21 +1409,8 @@ def q_asof_salted(spark, sf_dir):
 
 @_q(
     "simhash_near_pairs",
-    """
-    WITH toks AS (
-      SELECT doc_id,
-             md5(unnest(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))) AS h
-      FROM documents),
-    bits AS (
-      SELECT doc_id, h, unnest(generate_series(0, 63)) AS b FROM toks),
-    scored AS (
-      SELECT doc_id, b,
-             ((strpos('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1)
-               >> (b % 4)) & 1 AS bit
-      FROM bits),
-    sh AS (
-      SELECT doc_id, b, CASE WHEN sum(bit * 2 - 1) > 0 THEN 1 ELSE 0 END AS bit
-      FROM scored GROUP BY 1, 2),
+    f"""
+    WITH {_simhash_sql("")},
     pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              CAST(sum(abs(a.bit - b.bit)) AS INT) AS hamming
@@ -1423,19 +1437,8 @@ def q_simhash_near_pairs(spark, sf_dir):
 
 # --- quality metric (equal-count regime is SQL-expressible) -------------------
 
-_QUALITY_BASE_SQL = """
-    WITH toks AS (
-      SELECT doc_id, unnest(t) AS token,
-             unnest(generate_series(1, len(t))) - 1 AS token_idx
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-            FROM documents WHERE doc_id < 300)),
-    pos AS (
-      SELECT doc_id, token_idx, token,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + length(token) AS BIGINT) AS "end"
-      FROM toks),
+_QUALITY_BASE_SQL = f"""
+    WITH {_token_spans_sql(300)},
     gold AS (
       SELECT doc_id AS sample_id, 'KEY' AS ne_class, start, "end"
       FROM pos WHERE token IN ('merge', 'filter'))
@@ -1474,21 +1477,7 @@ def q_quality_prf1(spark, sf_dir):
     shifted (+1, +3)."""
     from deep_ner_spark.operators.quality import entity_match_metrics
 
-    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias(
-            "token_idx", "token"
-        ),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy("token_idx")
-    wprev = w.rowsBetween(Window.unboundedPreceding, -1)
-    toks = toks.withColumn(
-        "start",
-        F.coalesce(F.sum(F.length("token") + 1).over(wprev), F.lit(0)).cast("long"),
-    ).withColumn("end", (F.col("start") + F.length("token")).cast("long"))
+    toks = _token_spans(spark, sf_dir, 300)
     gold = toks.where(F.col("token").isin("merge", "filter")).select(
         F.col("doc_id").alias("sample_id"),
         F.lit("KEY").alias("ne_class"),
@@ -1712,7 +1701,7 @@ def _split_threshold_hex(test_part: float) -> str:
     WITH docs AS (SELECT doc_id AS sample_id FROM documents),
     spans AS (
       SELECT DISTINCT doc_id AS sample_id, token AS ne_type FROM (
-        SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS token
+        SELECT doc_id, unnest({_WS_TOKENS}) AS token
         FROM documents)
       WHERE token IN ('spark', 'merge', 'filter')),
     restarts AS (SELECT unnest(generate_series(0, 9)) AS r),
@@ -1749,6 +1738,7 @@ def q_stratified_split(spark, sf_dir):
     chosen restart's full per-sample assignment reproducible by the DuckDB
     twin, which re-runs the same acceptance search declaratively.  The
     reference-exact driver-side permutation variant stays pytest-pinned."""
+    from deep_ner_spark.functions.text import tokens_col
     from deep_ner_spark.operators.splitting import split_assignment_hashed
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -1756,7 +1746,7 @@ def q_stratified_split(spark, sf_dir):
     )
     spans = docs.select(
         "sample_id",
-        F.explode(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias("tok"),
+        F.explode(tokens_col("text")).alias("tok"),
     ).where(F.col("tok").isin("spark", "merge", "filter")).select(
         "sample_id", F.col("tok").alias("ne_type")
     )
@@ -2874,20 +2864,10 @@ def q_dedup_corpus_exact(spark, sf_dir):
 
 @_q(
     "dedup_corpus_lsh",
-    """
-    WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-               i -> array_to_string(t[i:i+2], ' '))) AS shingle
-        FROM toks)),
+    f"""
+    WITH {_shingles_sql(3)},
     sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    expanded AS (SELECT doc_id, shingle, unnest(generate_series(0, 7)) AS h_idx FROM sh),
-    sig AS (SELECT doc_id, h_idx, min(md5(shingle || ':' || h_idx)) AS minhash
-            FROM expanded GROUP BY 1, 2),
-    banded AS (
-      SELECT doc_id, CAST(h_idx // 4 AS INT) AS band,
-             md5(string_agg(h_idx || ':' || minhash, '|' ORDER BY h_idx || ':' || minhash)) AS bucket
-      FROM sig GROUP BY 1, 2),
+    {_MINHASH_BANDS_SQL},
     cand AS (SELECT DISTINCT n.doc_id AS id_new, c.doc_id AS id_cor
              FROM banded n JOIN banded c USING (band, bucket)
              WHERE n.doc_id % 5 = 0 AND c.doc_id % 5 <> 0),

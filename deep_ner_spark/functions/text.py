@@ -46,6 +46,18 @@ def normalize_text_col(col: Column) -> Column:
     )
 
 
+def tokens_col(text: Column | str) -> Column:
+    r"""Whitespace tokens: split on runs of Java ``\s`` (``[ \t\n\x0B\f\r]``),
+    empty tokens dropped; a null text gives a null array.
+
+    This is the reference's ``str.split()`` (elmo_ner.py:408-415) on ASCII
+    whitespace: edge or doubled whitespace never yields a token.  The
+    DuckDB twins spell the same list once, as ``_WS_TOKENS`` in
+    ``__spark_entry__.py``.
+    """
+    return F.filter(F.split(text, r"\s+"), lambda t: t != "")
+
+
 def word_token_count_col(col: Column) -> Column:
     """JVM-side ``len(textfns.tokenize(normalize_text(text)))``.
 

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deep_ner_spark.compat import CONNECT_ERRS, local_checkpoint
+from deep_ner_spark.functions.text import tokens_col
 
 # past this many candidate documents the verify joins shuffle instead of
 # broadcasting the per-doc shingle-id arrays (~0.5 GB at web-doc shingle
@@ -28,11 +29,6 @@ VERIFY_BROADCAST_MAX_DOCS = 500_000
 # connected_components raises after this many label-propagation rounds
 # without convergence (see its docstring for measured round counts)
 CC_MAX_ROUNDS = 100
-
-
-def tokens_col(text: Column) -> Column:
-    """Whitespace tokenization for shingling (dedup does not need offsets)."""
-    return F.filter(F.split(text, r"\s+"), lambda t: t != "")
 
 
 def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
@@ -57,16 +53,6 @@ def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
     return F.when(
         F.size(toks) >= n, F.array_distinct(grams)
     ).otherwise(F.array().cast("array<string>"))
-
-
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (pure built-ins).
-
-    Convenience form for one-off use on a text expression; hot paths
-    should project ``tokens_col(text)`` first and call
-    :func:`shingles_of_tokens` (see its docstring for why).
-    """
-    return shingles_of_tokens(tokens_col(text), n)
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -736,7 +722,7 @@ def lsh_dedup_against_corpus(
     )
 
     # Verification joins the candidate pairs back to each side's distinct
-    # shingle SET (one shingles_col array per candidate doc, after a
+    # shingle SET (one shingles_of_tokens array per candidate doc, after a
     # semi-join prune) and intersects JVM-side.  Candidates are a tiny,
     # already-enumerated fraction of new x corpus, so a per-pair
     # array_intersect beats re-exploding to long form: two id-keyed joins

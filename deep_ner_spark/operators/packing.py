@@ -134,7 +134,7 @@ def chunk_documents(
     scan.  explode_outer + null filter on the OUTPUT attribute avoids the
     InferFiltersFromGenerate triple-eval of the HOF chain.
     """
-    from deep_ner_spark.operators.dedup import tokens_col
+    from deep_ner_spark.functions.text import tokens_col
 
     if max_tokens <= 0:
         raise ValueError(f"max_tokens must be positive, got {max_tokens}")

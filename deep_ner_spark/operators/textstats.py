@@ -10,7 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deep_ner_spark.operators.dedup import tokens_col
+from deep_ner_spark.functions.text import tokens_col
 
 EN_STOPWORDS = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
@@ -172,7 +172,7 @@ def rolling_fingerprint(
 
 def ngrams_of_tokens(toks: Column, n: int) -> Column:
     """Word n-grams WITH multiplicity from a token-array column (unlike
-    dedup.shingles_col, which is distinct — repetition stats need
+    dedup.shingles_of_tokens, which is distinct — repetition stats need
     occurrence counts).  Pass an ATTRIBUTE (a projected token array), not
     an expression: HOF lambdas get no common-subexpression elimination, so
     an embedded split+filter would re-run per gram element (measured 8x on
@@ -295,14 +295,14 @@ def doc_fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Content fingerprint: md5 of the sorted distinct token set.
 
     Invariant to token order/duplication — catches shuffled/near-identical
-    docs that exact text hashing misses; engine-portable (md5).
+    docs that exact text hashing misses; engine-portable (md5).  A text
+    with no tokens gets ``md5('')``; a null text gets a null fingerprint.
     """
-    toks = tokens_col(F.col(text_col))
+    text = F.col(text_col)
+    toks = F.array_sort(F.array_distinct(tokens_col(text)))
     return df.select(
         F.col(id_col),
-        F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))).alias(
-            "fingerprint"
-        ),
+        F.when(text.isNotNull(), F.md5(F.concat_ws(" ", toks))).alias("fingerprint"),
     )
 
 

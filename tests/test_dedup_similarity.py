@@ -177,39 +177,6 @@ def test_hamming_near_pairs_once_each_without_aggregate(spark):
     assert len(want) >= 10
 
 
-def test_simhash_twins_ignore_edge_whitespace(spark, tmp_path):
-    """The simhash_bits / simhash_near_pairs driver queries and their DuckDB
-    twins agree on texts that start or end with a tab or newline (DuckDB's
-    trim strips spaces only, so an unfiltered split votes md5(''))."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    texts = [
-        "\tspark shuffle join",
-        "spark shuffle join\n",
-        "\nspark shuffle join stage\t",
-        "alpha beta\tgamma\n",
-        "\t\nalpha beta gamma",
-        "plain words only here",
-    ]
-    pd.DataFrame({"doc_id": np.arange(len(texts), dtype="int64"), "text": texts}).to_parquet(
-        tmp_path / "documents.parquet"
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
-    )
-    sql, queries = e.oracle_sql(), e.queries()
-    for name in ("simhash_bits", "simhash_near_pairs"):
-        want = sorted(con.execute(sql[name]).fetchall())
-        got = sorted(tuple(r) for r in queries[name](spark, str(tmp_path)).collect())
-        assert got == want, name
-        if name == "simhash_near_pairs":
-            assert (0, 1, 0) in got and (3, 4, 0) in got
-    con.close()
-
-
 def _numpy_topk(vecs, query_ids, k):
     """Brute-force top-k by cosine in NumPy: self-pairs dropped, ties
     broken by neighbor id.  {(query_id, rank): (neighbor_id, cosine)}.

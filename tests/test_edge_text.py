@@ -1,0 +1,87 @@
+"""``queries()`` agree with their ``oracle_sql()`` DuckDB twins on edge
+texts: null, "", whitespace-only, tab/newline edges, doubled spaces and a
+vertical tab."""
+
+import duckdb
+import numpy as np
+import pandas as pd
+import pytest
+
+import __spark_entry__ as e
+from tools.check_oracles import compare
+
+# every twin that splits through _WS_TOKENS, the word tokenizer with
+# offsets, and the media queries, whose twins keep a null text's shape
+_QUERIES = sorted(
+    {name for name, sql in e.oracle_sql().items() if e._WS_TOKENS in sql}
+    | {"token_explode", "multimodal_image_features",
+       "multimodal_audio_energy", "multimodal_video_frames"}
+)
+
+_WORDS = "spark data merge filter shuffle join stage task the of".split()
+_EDGES = (
+    lambda s: s,
+    lambda s: None,
+    lambda s: "",
+    lambda s: "  \t \n ",
+    lambda s: "\t" + s + "\n",
+    lambda s: s.replace(" ", "  "),
+    lambda s: s.replace(" ", "\x0b", 2),
+)
+_TEXTS = [
+    "\tspark shuffle join",  # 0 and 1: one token set, so simhash distance 0
+    "spark shuffle join\n",
+    "\nspark shuffle join stage\t",
+    "alpha beta\tgamma\n",  # 3 and 4: likewise
+    "\t\nalpha beta gamma",
+    "plain words only here",
+] + [
+    _EDGES[i % len(_EDGES)](" ".join(_WORDS[: 1 + i % 9] * (1 + i % 5)))
+    for i in range(6, 60)
+]
+_N_NULL = sum(t is None for t in _TEXTS)
+
+
+@pytest.fixture(scope="module")
+def edge_docs(tmp_path_factory):
+    d = tmp_path_factory.mktemp("edge_docs")
+    pd.DataFrame(
+        {
+            "doc_id": np.arange(len(_TEXTS), dtype="int64"),
+            "text": _TEXTS,
+            "lang": ["en" if i % 3 else "de" for i in range(len(_TEXTS))],
+        }
+    ).to_parquet(d / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet')"
+    )
+    yield str(d), con
+    con.close()
+
+
+def _null_rows(got):
+    return got.isna().any(axis=1).sum()
+
+
+_CHECKS = {
+    "simhash_near_pairs": lambda got: {(0, 1, 0), (3, 4, 0)}
+    <= set(got.itertuples(index=False, name=None)),
+    # a null blob keeps its output shape with null values: 4*4*3 image
+    # cells and 4 video samples per null doc
+    "multimodal_image_features": lambda got: _null_rows(got) == _N_NULL * 48,
+    "multimodal_video_frames": lambda got: _null_rows(got) == _N_NULL * 4,
+    "multimodal_audio_energy": lambda got: _null_rows(got) > 0,
+    # a null text packs as 0 tokens
+    "pack_sequences": lambda got: _null_rows(got) == 0,
+}
+
+
+@pytest.mark.parametrize("name", _QUERIES)
+def test_edge_text_twins_agree(spark, edge_docs, name):
+    sf_dir, con = edge_docs
+    got = e.queries()[name](spark, sf_dir).toPandas()
+    assert compare(name, got, con.execute(e.oracle_sql()[name]).df()) == "OK"
+    assert len(got) > 0  # an empty result on both sides would show nothing
+    check = _CHECKS.get(name)
+    assert check is None or check(got)

@@ -98,47 +98,6 @@ def test_video_frame_sample(spark):
                for r in rows)
 
 
-def test_null_text_oracle_twins_agree(spark, tmp_path):
-    """The multimodal and packing driver queries agree with their DuckDB
-    twins over documents with null text: a null media blob keeps its
-    output shape with null values, a null text packs as 0 tokens."""
-    import duckdb
-
-    import __spark_entry__ as e
-    from tools.check_oracles import compare
-
-    words = "spark shuffle join stage task executor driver plan".split()
-    texts = [
-        None if i % 4 == 1 else " ".join(words[: 1 + i % 8] * (1 + i % 5))
-        for i in range(24)
-    ]
-    pd.DataFrame({"doc_id": np.arange(len(texts), dtype="int64"), "text": texts}).to_parquet(
-        tmp_path / "documents.parquet"
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
-    )
-    sql, queries = e.oracle_sql(), e.queries()
-    nulls = {}
-    for name in (
-        "multimodal_image_features",
-        "multimodal_audio_energy",
-        "multimodal_video_frames",
-        "pack_sequences",
-        "packing_stats",
-    ):
-        got = queries[name](spark, str(tmp_path)).toPandas()
-        assert compare(name, got, con.execute(sql[name]).df()) == "OK", name
-        nulls[name] = got.isna().any(axis=1).sum()
-    con.close()
-    # six null docs: 4*4*3 null cells each, 4 null video samples each
-    assert nulls["multimodal_image_features"] == 6 * 48
-    assert nulls["multimodal_video_frames"] == 6 * 4
-    assert nulls["multimodal_audio_energy"] > 0
-    assert nulls["pack_sequences"] == 0
-
-
 # --- codec seams: stand-in codec packages ------------------------------------
 
 _PNG = mm._PNG_MAGIC + b"opaque-png-body"

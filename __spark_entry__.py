@@ -21,6 +21,8 @@ REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+from deep_ner_spark.textfns import DASH_VARIANTS  # noqa: E402
+
 SESSION_GAP_US = 1800 * 1_000_000
 
 # Java's ``\s`` for the DuckDB twins.  RE2's ``\s`` lacks \x0B, so the
@@ -643,12 +645,26 @@ def q_epoch_mean_loglik(spark, sf_dir):
 # --- P1: normalization -------------------------------------------------------
 
 
+# Python's ``\s`` on str (textfns' whitespace) in RE2: RE2's ``\s`` plus
+# \x0B, \x1c-\x1f, \x85 and the Unicode separators \p{Z}
+_PY_SPACE_RE2 = r"\s\x0B\x1c-\x1f\x85\p{Z}"
+
+
+def _normalize_sql(text: str) -> str:
+    """SQL twin of functions.text.normalize_text_col over the expression
+    ``text``: each textfns.DASH_VARIANTS char to '-', each Python
+    whitespace char to ' ' (length-preserving; null in, null out)."""
+    return (
+        f"regexp_replace(translate({text}, '{DASH_VARIANTS}', "
+        f"'{'-' * len(DASH_VARIANTS)}'), '[{_PY_SPACE_RE2}]', ' ', 'g')"
+    )
+
+
 @_q(
     "normalize_dashes",
-    """
+    f"""
     SELECT doc_id,
-           replace(replace(replace(replace(substr(text, 1, 40) || chr(8212) || 'x' || chr(8211) || 'y' || chr(9) || 'z',
-             chr(8212), '-'), chr(8211), '-'), chr(9), ' '), chr(10), ' ') AS norm_text
+           {_normalize_sql("substr(text, 1, 40) || chr(8212) || 'x' || chr(8211) || 'y' || chr(9) || 'z'")} AS norm_text
     FROM documents
     """,
 )
@@ -666,19 +682,19 @@ def q_normalize_dashes(spark, sf_dir):
 
 # --- tokenizer + shapes ------------------------------------------------------
 
-# textfns._TOKEN_RE, ``\w+|[^\w\s]`` on str, in RE2: Python's ``\s`` is
-# RE2's ``\s`` plus \x0B, \x1c-\x1f, \x85 and the Unicode separators \p{Z}
-_WORD_TOKEN_RE2 = r"[\p{L}\p{N}_]+|[^\p{L}\p{N}_\s\x0B\x1c-\x1f\x85\p{Z}]"
+# textfns._TOKEN_RE, ``\w+|[^\w\s]`` on str, in RE2
+_WORD_TOKEN_RE2 = rf"[\p{{L}}\p{{N}}_]+|[^\p{{L}}\p{{N}}_{_PY_SPACE_RE2}]"
 
 
 @_q(
     "token_explode",
     f"""
-    WITH parts AS (
+    WITH norm AS (SELECT doc_id, {_normalize_sql("text")} AS text FROM documents),
+    parts AS (
       SELECT doc_id,
              regexp_extract_all(text, '{_WORD_TOKEN_RE2}') AS tk,
              string_split_regex(text, '{_WORD_TOKEN_RE2}') AS gap
-      FROM documents),
+      FROM norm),
     toks AS (
       -- gap i is the text between token i-1 and token i (1-based)
       SELECT doc_id, unnest(tk) AS token, unnest(gap[1:len(tk)]) AS gap,
@@ -1554,65 +1570,71 @@ def q_span_merge_reference(spark, sf_dir):
 # --- rows-only entries (non-SQL-expressible operators) ------------------------
 
 
-def _viterbi_dp_sql() -> str:
-    """Recursive-CTE twin of operators/viterbi.py:22 for the 3-tag entry:
-    forward DP carrying (scores, backpointers) per position, then a backward
-    recursion following the pointers.  Bit-exact float64: each oracle
-    expression replays numpy's exact op sequence (s_i + T_ij one addition,
-    greatest == max, + logit), and every argmax CASE is first-wins like
-    np.argmax."""
-    trans = [[0.0, 1.0, -1.0], [1.0, 0.0, 1.0], [-1.0, 1.0, 0.0]]
+# transitions of the viterbi_decode query and its twin
+_VITERBI_TRANS = ((0.0, 1.0, -1.0), (1.0, 0.0, 1.0), (-1.0, 1.0, 0.0))
 
-    def cand(i, j):
-        return f"(s{i} + ({trans[i][j]!r}))"
 
-    def back_ptr(j):
-        return (
-            f"CASE WHEN {cand(0, j)} >= {cand(1, j)} AND {cand(0, j)} >= {cand(2, j)} THEN 0 "
-            f"WHEN {cand(1, j)} >= {cand(2, j)} THEN 1 ELSE 2 END"
+def _viterbi_cte_sql(trans, keys: list[str]) -> str:
+    """Recursive-CTE twin of operators/viterbi.py's DP for K = len(trans)
+    tags, as two CTEs over a table ``lg`` with the sequence key columns
+    ``keys``, ``pos``, the length ``n`` and logits ``l0`` .. ``l{K-1}``:
+    ``dp`` carries the forward scores ``s_j`` and backpointers ``b_j`` per
+    position, ``back`` follows the pointers from ``pos = n - 1`` and
+    yields (keys, pos, label).  Bit-exact float64: each expression replays
+    numpy's op sequence (s_i + T_ij one addition, greatest == max, +
+    logit), and every argmax CASE is first-wins like np.argmax."""
+    K = len(trans)
+
+    def keyed(alias: str) -> str:
+        return ", ".join(f"{alias}.{k}" for k in keys)
+
+    def on(a: str, b: str) -> str:
+        return " AND ".join(f"{a}.{k} = {b}.{k}" for k in keys)
+
+    def argmax(v: list[str]) -> str:
+        whens = " ".join(
+            "WHEN " + " AND ".join(f"{v[i]} >= {v[m]}" for m in range(i + 1, K))
+            + f" THEN {i}"
+            for i in range(K - 1)
         )
+        return f"CASE {whens} ELSE {K - 1} END"
 
-    def best(j):
-        return f"greatest({cand(0, j)}, {cand(1, j)}, {cand(2, j)})"
+    def cand(j: int) -> list[str]:
+        return [f"(s{i} + ({trans[i][j]!r}))" for i in range(K)]
 
-    return f"""
-    WITH RECURSIVE seq AS (
-      SELECT user_id, value,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS pos,
-             count(*) OVER (PARTITION BY user_id) AS n
-      FROM events WHERE event_id < 2000),
-    lg AS (
-      SELECT user_id, pos, n, value AS l0, 100 - value AS l1, value / 2 AS l2 FROM seq),
-    dp AS (
-      SELECT user_id, pos, n, l0 AS s0, l1 AS s1, l2 AS s2,
-             0 AS b0, 0 AS b1, 0 AS b2
+    seed = ", ".join(
+        [f"l{j} AS s{j}" for j in range(K)] + [f"0 AS b{j}" for j in range(K)]
+    )
+    step = ",\n             ".join(
+        [f"greatest({', '.join(cand(j))}) + nx.l{j}" for j in range(K)]
+        + [argmax(cand(j)) for j in range(K)]
+    )
+    follow = (
+        "CASE b.label "
+        + " ".join(f"WHEN {j} THEN d.b{j}" for j in range(K - 1))
+        + f" ELSE d.b{K - 1} END"
+    )
+    return f"""dp AS (
+      SELECT {keyed("lg")}, pos, n, {seed}
       FROM lg WHERE pos = 0
       UNION ALL
-      SELECT nx.user_id, nx.pos, nx.n,
-             {best(0)} + nx.l0, {best(1)} + nx.l1, {best(2)} + nx.l2,
-             {back_ptr(0)}, {back_ptr(1)}, {back_ptr(2)}
-      FROM dp JOIN lg nx ON nx.user_id = dp.user_id AND nx.pos = dp.pos + 1),
+      SELECT {keyed("nx")}, nx.pos, nx.n,
+             {step}
+      FROM dp JOIN lg nx ON {on("nx", "dp")} AND nx.pos = dp.pos + 1),
     back AS (
-      SELECT user_id, pos,
-             CASE WHEN s0 >= s1 AND s0 >= s2 THEN 0 WHEN s1 >= s2 THEN 1 ELSE 2 END AS label
+      SELECT {keyed("dp")}, pos, {argmax([f"s{j}" for j in range(K)])} AS label
       FROM dp WHERE pos = n - 1
       UNION ALL
-      SELECT d.user_id, d.pos - 1,
-             CASE b.label WHEN 0 THEN d.b0 WHEN 1 THEN d.b1 ELSE d.b2 END
-      FROM back b JOIN dp d ON d.user_id = b.user_id AND d.pos = b.pos
-      WHERE b.pos > 0)
-    SELECT user_id, CAST(pos AS INT) AS pos, CAST(label AS INT) AS label_id
-    FROM back
-    """
+      SELECT {keyed("d")}, d.pos - 1, {follow}
+      FROM back b JOIN dp d ON {on("d", "b")} AND d.pos = b.pos
+      WHERE b.pos > 0)"""
 
 
-@_q("viterbi_decode", _viterbi_dp_sql())
-def q_viterbi_decode(spark, sf_dir):
-    """CRF Viterbi decode over deterministic synthetic logits with NONZERO
-    transitions — fully oracled: the DuckDB twin runs the same dynamic
-    program as a recursive CTE (forward scores + backpointers, backward
-    path reconstruction), bit-exact in float64 with first-wins argmax ties;
-    pytest additionally pins the decode against brute-force enumeration."""
+def _decode_synthetic_logits(spark, sf_dir, trans) -> DataFrame:
+    """``decode_labels`` over each user's events.value sequence (event_id <
+    2000, in (ts, event_id) order) with the deterministic 3-tag logits
+    [v, 100-v, v/2] and transitions ``trans``; one (user_id, pos,
+    label_id) row per event."""
     from deep_ner_spark.operators.viterbi import decode_labels
 
     ev = _read(spark, sf_dir, "events").where(F.col("event_id") < 2000)
@@ -1622,23 +1644,42 @@ def q_viterbi_decode(spark, sf_dir):
             lambda s: s["value"],
         ).alias("values")
     )
-    # logits[t] = [v, 100-v, v/2] - deterministic 3-tag scores
     logits = seqs.select(
         "user_id",
         F.flatten(
-            F.transform(
-                "values",
-                lambda v: F.array(v, 100.0 - v, v / 2.0),
-            )
+            F.transform("values", lambda v: F.array(v, 100.0 - v, v / 2.0))
         ).alias("logits"),
     )
-    trans = [[0.0, 1.0, -1.0], [1.0, 0.0, 1.0], [-1.0, 1.0, 0.0]]
     out = decode_labels(logits, "logits", trans)
-    # scalar rows (user_id, pos, label_id): the driver's canonicalizer sorts
-    # the frame and cannot hash array cells, so explode the decoded path
+    # scalar rows: the driver's canonicalizer sorts the frame and cannot
+    # hash array cells, so explode the decoded path
     return out.select(
         "user_id", F.posexplode("label_ids").alias("pos", "label_id")
     )
+
+
+@_q(
+    "viterbi_decode",
+    f"""
+    WITH RECURSIVE seq AS (
+      SELECT user_id, value,
+             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS pos,
+             count(*) OVER (PARTITION BY user_id) AS n
+      FROM events WHERE event_id < 2000),
+    lg AS (
+      SELECT user_id, pos, n, value AS l0, 100 - value AS l1, value / 2 AS l2 FROM seq),
+    {_viterbi_cte_sql(_VITERBI_TRANS, ["user_id"])}
+    SELECT user_id, CAST(pos AS INT) AS pos, CAST(label AS INT) AS label_id
+    FROM back
+    """,
+)
+def q_viterbi_decode(spark, sf_dir):
+    """CRF Viterbi decode over deterministic synthetic logits with NONZERO
+    transitions — fully oracled: the DuckDB twin runs the same dynamic
+    program as a recursive CTE (forward scores + backpointers, backward
+    path reconstruction), bit-exact in float64 with first-wins argmax ties;
+    pytest additionally pins the decode against brute-force enumeration."""
+    return _decode_synthetic_logits(spark, sf_dir, _VITERBI_TRANS)
 
 
 @_q(
@@ -1660,32 +1701,10 @@ def q_viterbi_decode_zero_transitions(spark, sf_dir):
     matrix the dynamic program reduces to per-position argmax (score_t[j] =
     max_i score_{t-1}[i] + logits_t[j], so every backpointer and the final
     argmax pick argmax(logits_t)), which IS SQL-expressible.  Runs the very
-    same ``decode_labels``/``viterbi_decode`` code path as the nonzero-
-    transition entry; numpy argmax first-wins tie rule mirrored by the CASE
-    order (s0 wins ties, then s1)."""
-    from deep_ner_spark.operators.viterbi import decode_labels
-
-    ev = _read(spark, sf_dir, "events").where(F.col("event_id") < 2000)
-    seqs = ev.groupBy("user_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))),
-            lambda s: s["value"],
-        ).alias("values")
-    )
-    logits = seqs.select(
-        "user_id",
-        F.flatten(
-            F.transform(
-                "values",
-                lambda v: F.array(v, 100.0 - v, v / 2.0),
-            )
-        ).alias("logits"),
-    )
-    trans = [[0.0, 0.0, 0.0], [0.0, 0.0, 0.0], [0.0, 0.0, 0.0]]
-    out = decode_labels(logits, "logits", trans)
-    return out.select(
-        "user_id", F.posexplode("label_ids").alias("pos", "label_id")
-    )
+    same ``decode_labels`` code path as the nonzero-transition entry; numpy
+    argmax first-wins tie rule mirrored by the CASE order (s0 wins ties,
+    then s1)."""
+    return _decode_synthetic_logits(spark, sf_dir, [[0.0] * 3] * 3)
 
 
 def _split_threshold_hex(test_part: float) -> str:
@@ -2508,71 +2527,38 @@ def _md5_head_transitions(n_tags: int):
     ]
 
 
-def _predict_full_sql() -> str:
-    """DuckDB twin of the FULL predict_entities read path with the md5-chain
-    dyadic head and NONZERO transitions: sanitized-text featurize (shape
-    vocab + bounds as window sums) -> per-tag logits from md5-derived W
-    (nonzero only on the shape/BOS/EOS one-hot rows, so the float32 matmul
-    is a sum of exact dyadics = order-independent and bit-exact) -> 7-tag
-    recursive-CTE Viterbi with md5-derived dyadic transitions (every DP
-    value stays an exact multiple of 1/256, so the SQL needs only numpy's
-    first-wins argmax tie rule, not its op order) -> BIO islands -> char
-    spans."""
-    K = 7
-    trans = _md5_head_transitions(K)
+_PREDICT_EMB_DIM = 8
 
-    def w(r_sql: str, t: int) -> str:
-        # md5-chain W entry for feature row r (a SQL expression; the row
-        # index depends on the fitted vocab size) and tag t (a literal)
-        return (
-            f"(((CAST(('0x' || substr(md5('w:' || CAST({r_sql} AS VARCHAR) "
-            f"|| ':{t}'), 1, 8)) AS BIGINT) % 8192) - 4096) / 256.0)"
-        )
 
-    def logit(t: int) -> str:
-        return (
-            f"{w('shape_r', t)}"
-            f" + CASE WHEN pos = 0 THEN {w('bos_r', t)} ELSE 0.0 END"
-            f" + CASE WHEN pos = n - 1 THEN {w('eos_r', t)} ELSE 0.0 END"
-        )
+def _sanitized_featurized(spark, sf_dir):
+    """(featurized turns, vocab, feature width) of the predict queries: the
+    derived transcripts of conv_id < 50 with text sanitized to
+    alnum+single-space, so the pinned tokenizer's bounds are SQL window
+    sums, featurized with max_seq_length 16."""
+    from deep_ner_spark.operators.features import feature_width
+    from deep_ner_spark.pipeline import featurize_transcripts
 
-    def cand(i: int, j: int) -> str:
-        return f"(s{i} + ({trans[i][j]!r}))"
-
-    def back_ptr(j: int) -> str:
-        whens = []
-        for i in range(K - 1):
-            conds = " AND ".join(
-                f"{cand(i, j)} >= {cand(m, j)}" for m in range(i + 1, K)
+    transcripts = _derived_transcripts(spark, sf_dir).where(
+        F.col("conv_id").cast("long") < 50
+    )
+    transcripts = transcripts.withColumn(
+        "text",
+        F.trim(
+            F.regexp_replace(
+                F.regexp_replace("text", r"[^A-Za-z0-9 ]", ""), r" +", " "
             )
-            whens.append(f"WHEN {conds} THEN {i}")
-        return "CASE " + " ".join(whens) + f" ELSE {K - 1} END"
-
-    def best(j: int) -> str:
-        return "greatest(" + ", ".join(cand(i, j) for i in range(K)) + ")"
-
-    def final_argmax() -> str:
-        whens = []
-        for i in range(K - 1):
-            conds = " AND ".join(f"s{i} >= s{m}" for m in range(i + 1, K))
-            whens.append(f"WHEN {conds} THEN {i}")
-        return "CASE " + " ".join(whens) + f" ELSE {K - 1} END"
-
-    scores0 = ", ".join(f"l{j} AS s{j}" for j in range(K))
-    backs0 = ", ".join(f"0 AS b{j}" for j in range(K))
-    step_scores = ",\n             ".join(
-        f"{best(j)} + nx.l{j}" for j in range(K)
+        ),
     )
-    step_backs = ",\n             ".join(back_ptr(j) for j in range(K))
-    logits = ",\n             ".join(f"{logit(j)} AS l{j}" for j in range(K))
-    follow = (
-        "CASE b.label "
-        + " ".join(f"WHEN {j} THEN d.b{j}" for j in range(K - 1))
-        + f" ELSE d.b{K - 1} END"
+    out, vocab = featurize_transcripts(
+        transcripts, None, max_seq_length=16, emb_dim=_PREDICT_EMB_DIM
     )
+    return out, vocab, feature_width(vocab, _PREDICT_EMB_DIM)
 
-    return f"""
-    WITH RECURSIVE t AS (
+
+# The predict twins' featurize half: the sanitized derived transcripts
+# of conv_id < 50 (t), their tokens and shapes, the fitted shape
+# vocabulary and each token's char bounds as window sums (bnd).
+_PREDICT_TOKENS_SQL = """t AS (
       SELECT CAST(user_id AS VARCHAR) AS conv_id,
              CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
              trim(regexp_replace(regexp_replace(event_type || ' ' || props,
@@ -2603,44 +2589,14 @@ def _predict_full_sql() -> str:
                   ORDER BY token_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                   + length(token) AS INT) AS "end",
              shape
-      FROM shaped),
-    lab AS (
-      SELECT b.conv_id, b.turn_idx, b.token_idx AS pos, b.start, b."end",
-             8 + coalesce(v.vidx, (SELECT s FROM vsize)) AS shape_r,
-             8 + (SELECT s FROM vsize) + 1 AS bos_r,
-             8 + (SELECT s FROM vsize) + 2 AS eos_r,
-             count(*) OVER (PARTITION BY b.conv_id, b.turn_idx) AS n
-      FROM bnd b LEFT JOIN vocab v USING (shape)
-      WHERE b.token_idx < 16),
-    lg AS (
-      SELECT conv_id, turn_idx, pos, n, start, "end",
-             {logits}
-      FROM lab),
-    dp AS (
-      SELECT conv_id, turn_idx, pos, n, {scores0}, {backs0}
-      FROM lg WHERE pos = 0
-      UNION ALL
-      SELECT nx.conv_id, nx.turn_idx, nx.pos, nx.n,
-             {step_scores},
-             {step_backs}
-      FROM dp JOIN lg nx
-        ON nx.conv_id = dp.conv_id AND nx.turn_idx = dp.turn_idx
-       AND nx.pos = dp.pos + 1),
-    back AS (
-      SELECT conv_id, turn_idx, pos, {final_argmax()} AS label
-      FROM dp WHERE pos = n - 1
-      UNION ALL
-      SELECT d.conv_id, d.turn_idx, d.pos - 1, {follow}
-      FROM back b JOIN dp d
-        ON d.conv_id = b.conv_id AND d.turn_idx = b.turn_idx AND d.pos = b.pos
-      WHERE b.pos > 0),
-    marked AS (
-      SELECT g.conv_id, g.turn_idx, g.pos, g.start, g."end",
-             b.label > 0 AS valid,
-             CASE WHEN b.label > 0 THEN CAST((b.label - 1) // 2 AS INT) + 1 ELSE 0 END AS cls,
-             b.label
-      FROM lg g JOIN back b
-        ON b.conv_id = g.conv_id AND b.turn_idx = g.turn_idx AND b.pos = g.pos),
+      FROM shaped)"""
+
+# Their decode half: BIO islands over
+# labeled(conv_id, turn_idx, pos, start, "end", label).
+_PREDICT_ISLANDS_SQL = """marked AS (
+      SELECT *, label > 0 AS valid,
+             CASE WHEN label > 0 THEN CAST((label - 1) // 2 AS INT) + 1 ELSE 0 END AS cls
+      FROM labeled),
     opened AS (
       SELECT *,
              CASE WHEN valid AND (
@@ -2653,7 +2609,59 @@ def _predict_full_sql() -> str:
     isl AS (
       SELECT *, sum(opens) OVER (PARTITION BY conv_id, turn_idx ORDER BY pos
                    ROWS UNBOUNDED PRECEDING) AS island
-      FROM opened)
+      FROM opened)"""
+
+
+def _predict_full_sql() -> str:
+    """DuckDB twin of the FULL predict_entities read path with the md5-chain
+    dyadic head and NONZERO transitions: sanitized-text featurize (shape
+    vocab + bounds as window sums) -> per-tag logits from md5-derived W
+    (nonzero only on the shape/BOS/EOS one-hot rows, so the float32 matmul
+    is a sum of exact dyadics = order-independent and bit-exact) -> 7-tag
+    Viterbi (:func:`_viterbi_cte_sql`) with md5-derived dyadic transitions (every DP
+    value stays an exact multiple of 1/256, so the SQL needs only numpy's
+    first-wins argmax tie rule, not its op order) -> BIO islands -> char
+    spans."""
+    K = 7
+    trans = _md5_head_transitions(K)
+
+    def w(r_sql: str, t: int) -> str:
+        # md5-chain W entry for feature row r (a SQL expression; the row
+        # index depends on the fitted vocab size) and tag t (a literal)
+        return (
+            f"(((CAST(('0x' || substr(md5('w:' || CAST({r_sql} AS VARCHAR) "
+            f"|| ':{t}'), 1, 8)) AS BIGINT) % 8192) - 4096) / 256.0)"
+        )
+
+    def logit(t: int) -> str:
+        return (
+            f"{w('shape_r', t)}"
+            f" + CASE WHEN pos = 0 THEN {w('bos_r', t)} ELSE 0.0 END"
+            f" + CASE WHEN pos = n - 1 THEN {w('eos_r', t)} ELSE 0.0 END"
+        )
+
+    logits = ",\n             ".join(f"{logit(j)} AS l{j}" for j in range(K))
+
+    return f"""
+    WITH RECURSIVE {_PREDICT_TOKENS_SQL},
+    lab AS (
+      SELECT b.conv_id, b.turn_idx, b.token_idx AS pos, b.start, b."end",
+             8 + coalesce(v.vidx, (SELECT s FROM vsize)) AS shape_r,
+             8 + (SELECT s FROM vsize) + 1 AS bos_r,
+             8 + (SELECT s FROM vsize) + 2 AS eos_r,
+             count(*) OVER (PARTITION BY b.conv_id, b.turn_idx) AS n
+      FROM bnd b LEFT JOIN vocab v USING (shape)
+      WHERE b.token_idx < 16),
+    lg AS (
+      SELECT conv_id, turn_idx, pos, n, start, "end",
+             {logits}
+      FROM lab),
+    {_viterbi_cte_sql(trans, ["conv_id", "turn_idx"])},
+    labeled AS (
+      SELECT g.conv_id, g.turn_idx, g.pos, g.start, g."end", b.label
+      FROM lg g JOIN back b
+        ON b.conv_id = g.conv_id AND b.turn_idx = g.turn_idx AND b.pos = g.pos),
+    {_PREDICT_ISLANDS_SQL}
     SELECT conv_id, turn_idx,
            CASE min(cls) WHEN 1 THEN 'LOCATION' WHEN 2 THEN 'ORG' ELSE 'PERSON' END AS ne_type,
            min(start) AS start, max("end") AS "end"
@@ -2677,24 +2685,12 @@ def q_predict_entities(spark, sf_dir):
     pinned tokenizer's bounds are SQL window sums."""
     import numpy as np
 
-    from deep_ner_spark.pipeline import featurize_transcripts, predict_entities
+    from deep_ner_spark.pipeline import predict_entities
 
-    transcripts = _derived_transcripts(spark, sf_dir).where(
-        F.col("conv_id").cast("long") < 50
-    )
-    transcripts = transcripts.withColumn(
-        "text",
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace("text", r"[^A-Za-z0-9 ]", ""), r" +", " "
-            )
-        ),
-    )
-    out, vocab = featurize_transcripts(transcripts, None, max_seq_length=16, emb_dim=8)
+    out, vocab, width = _sanitized_featurized(spark, sf_dir)
     classes = ("LOCATION", "ORG", "PERSON")
     n_tags = 2 * len(classes) + 1
-    emb_dim, S = 8, len(vocab)
-    width = emb_dim + (S + 3) + 66
+    emb_dim, S = _PREDICT_EMB_DIM, len(vocab)
     W = np.zeros((width, n_tags), dtype=np.float32)
     # md5-chain head over the one-hot block: shape rows (incl. the unknown
     # column at emb+S), BOS and EOS; embedding + pos/dep rows stay zero so
@@ -2711,62 +2707,15 @@ def q_predict_entities(spark, sf_dir):
 
 @_q(
     "predict_entities_shape_head",
-    """
-    WITH t AS (
-      SELECT CAST(user_id AS VARCHAR) AS conv_id,
-             CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-             trim(regexp_replace(regexp_replace(event_type || ' ' || props,
-                  '[^A-Za-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS text
-      FROM events WHERE user_id < 50),
-    toks AS (
-      SELECT conv_id, turn_idx, unnest(s) AS token,
-             unnest(generate_series(1, len(s))) - 1 AS token_idx
-      FROM (SELECT conv_id, turn_idx, string_split(text, ' ') AS s FROM t)),
-    shaped AS (
-      SELECT conv_id, turn_idx, token_idx, token,
-             regexp_replace(regexp_replace(regexp_replace(
-               translate(token,
-                 'ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789',
-                 'AAAAAAAAAAAAAAAAAAAAAAAAAAaaaaaaaaaaaaaaaaaaaaaaaaaaDDDDDDDDDD'),
-               'A+', 'A', 'g'), 'a+', 'a', 'g'), 'D+', 'D', 'g') AS shape
-      FROM toks),
-    vocab AS (
-      SELECT shape, row_number() OVER (ORDER BY shape) - 1 AS vidx
-      FROM (SELECT shape FROM shaped GROUP BY shape HAVING count(*) >= 3)),
-    vsize AS (SELECT count(*) AS s FROM vocab),
-    pos AS (
-      SELECT conv_id, turn_idx, token_idx,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY conv_id, turn_idx
-                  ORDER BY token_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS INT) AS start,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY conv_id, turn_idx
-                  ORDER BY token_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  + length(token) AS INT) AS "end",
-             shape
-      FROM shaped),
+    f"""
+    WITH {_PREDICT_TOKENS_SQL},
     labeled AS (
-      SELECT p.conv_id, p.turn_idx, p.token_idx, p.start, p."end",
-             CASE WHEN p.token_idx = 0 THEN 4
+      SELECT b.conv_id, b.turn_idx, b.token_idx AS pos, b.start, b."end",
+             CASE WHEN b.token_idx = 0 THEN 4
                   ELSE CAST(coalesce(v.vidx, (SELECT s FROM vsize)) % 7 AS INT) END AS label
-      FROM pos p LEFT JOIN vocab v USING (shape)
-      WHERE p.token_idx < 16),
-    marked AS (
-      SELECT *, label > 0 AS valid,
-             CASE WHEN label > 0 THEN CAST((label - 1) // 2 AS INT) + 1 ELSE 0 END AS cls
-      FROM labeled),
-    opened AS (
-      SELECT *,
-             CASE WHEN valid AND (
-                    lag(valid) OVER w IS NULL OR NOT lag(valid) OVER w
-                    OR label % 2 = 0
-                    OR lag(cls) OVER w <> cls)
-                  THEN 1 ELSE 0 END AS opens
-      FROM marked
-      WINDOW w AS (PARTITION BY conv_id, turn_idx ORDER BY token_idx)),
-    isl AS (
-      SELECT *, sum(opens) OVER (PARTITION BY conv_id, turn_idx ORDER BY token_idx
-                   ROWS UNBOUNDED PRECEDING) AS island
-      FROM opened)
+      FROM bnd b LEFT JOIN vocab v USING (shape)
+      WHERE b.token_idx < 16),
+    {_PREDICT_ISLANDS_SQL}
     SELECT conv_id, turn_idx, 'KEY' || CAST(min(cls) AS VARCHAR) AS ne_type,
            min(start) AS start, max("end") AS "end"
     FROM isl WHERE valid GROUP BY conv_id, turn_idx, island
@@ -2784,24 +2733,12 @@ def q_predict_entities_shape_head(spark, sf_dir):
     (elmo_ner.py:277-304)."""
     import numpy as np
 
-    from deep_ner_spark.pipeline import featurize_transcripts, predict_entities
+    from deep_ner_spark.pipeline import predict_entities
 
-    transcripts = _derived_transcripts(spark, sf_dir).where(
-        F.col("conv_id").cast("long") < 50
-    )
-    transcripts = transcripts.withColumn(
-        "text",
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace("text", r"[^A-Za-z0-9 ]", ""), r" +", " "
-            )
-        ),
-    )
-    out, vocab = featurize_transcripts(transcripts, None, max_seq_length=16, emb_dim=8)
+    out, vocab, width = _sanitized_featurized(spark, sf_dir)
     classes = ("KEY1", "KEY2", "KEY3")
     n_tags = 2 * len(classes) + 1
-    emb_dim, S = 8, len(vocab)
-    width = emb_dim + (S + 3) + 66
+    emb_dim, S = _PREDICT_EMB_DIM, len(vocab)
     W = np.zeros((width, n_tags), dtype=np.float32)
     for s in range(S + 1):  # vocab shapes + the unknown column
         W[emb_dim + s, s % n_tags] = 1.0

@@ -175,11 +175,6 @@ def feature_width(vocab: Tuple[str, ...], emb_dim: int) -> int:
     )
 
 
-def decode_feature_matrix(blob: bytes, width: int) -> np.ndarray:
-    """Inverse of the binary packing: bytes -> [n_tokens, width] float32."""
-    return np.frombuffer(blob, dtype="<f4").reshape(-1, width)
-
-
 def _token_row_table(
     vocab: Tuple[str, ...], emb_dim: int, cache_max_entries: int | None
 ):

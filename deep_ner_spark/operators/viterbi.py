@@ -1,22 +1,22 @@
-"""CRF Viterbi decode as a vectorized per-turn operator (SURVEY E1 step 5).
+"""CRF Viterbi decode as one packed, length-batched DP (SURVEY E1 step 5).
 
 The reference decodes each sequence with tf.contrib.crf.viterbi_decode
 (elmo_ner.py:293-296) — a deterministic dynamic program over per-token
-logits and a transition matrix.  Re-implemented with NumPy inside a
-``pandas_udf``: one call per turn, embarrassingly parallel, transitions
-broadcast via the closure.  The decoded label ids feed the BIO islands
-decode (W2) exactly like the reference's predict path.
+logits and a transition matrix.  Re-implemented with NumPy: the
+sequences of an Arrow batch arrive packed back to back (one ``[N, K]``
+logits matrix plus offsets), and :func:`viterbi_decode_packed` runs one
+batched DP per distinct sequence length, so the Python-level step loop is
+paid once per (batch, length), not once per sequence.  Both Spark callers
+— :func:`decode_labels` and ``pipeline.predict_entities`` — go through it.
+:func:`viterbi_decode` is the per-sequence reference the tests compare it
+with.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 
 def viterbi_decode(logits: np.ndarray, transitions: np.ndarray) -> np.ndarray:
@@ -69,45 +69,54 @@ def viterbi_decode_batch(
     return path
 
 
-def make_viterbi_udf(transitions: Sequence[Sequence[float]]):
-    """pandas_udf: per-turn flattened logits (+ n_tags) -> label id array.
+def viterbi_decode_packed(
+    logits: np.ndarray, offsets: np.ndarray, transitions: np.ndarray
+) -> np.ndarray:
+    """Packed Viterbi: [N, K] logits of B sequences -> [N] label ids.
 
-    Sequences within an Arrow batch are grouped by length and decoded with
-    one batched DP per distinct length, so the per-step Python overhead is
-    paid once per (batch, length) instead of once per turn — short-turn
-    corpora are loop-overhead-bound otherwise.
+    Sequence b is rows ``offsets[b]:offsets[b + 1]`` (``offsets`` has
+    B + 1 entries, non-decreasing); empty sequences decode to nothing.
+    The sequences of each distinct length are gathered into one
+    ``[count, length, K]`` block for :func:`viterbi_decode_batch`, so the
+    result is bit-identical to :func:`viterbi_decode` per sequence.
     """
+    offsets = np.asarray(offsets, dtype=np.int64)
+    lens = np.diff(offsets)
+    labels = np.zeros(len(logits), dtype=np.int32)
+    for n in np.unique(lens[lens > 0]):
+        rows = offsets[:-1][lens == n, None] + np.arange(n)  # [count, n]
+        labels[rows] = viterbi_decode_batch(logits[rows], transitions)
+    return labels
+
+
+def decode_labels(df: DataFrame, logits_col: str, transitions) -> DataFrame:
+    """Attach decoded label ids as ``label_ids``; ``logits_col`` holds the
+    flattened [n_tokens * n_tags] per-turn logits array (a null array
+    decodes to ``[]``).
+
+    One Arrow UDF call per batch: the list column's flat values ARE the
+    packed logits, and its offsets divided by n_tags the sequence offsets.
+    """
+    from pyspark.sql.functions import arrow_udf
+
     trans = np.asarray(transitions, dtype=np.float64)
     n_tags = trans.shape[0]
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def decode(logits_flat: pd.Series) -> pd.Series:
-        vals = logits_flat.tolist()
-        out: list = [None] * len(vals)
-        by_len: dict[int, list[int]] = {}
-        for i, flat in enumerate(vals):
-            if flat is None or len(flat) == 0:
-                out[i] = []
-            else:
-                by_len.setdefault(len(flat) // n_tags, []).append(i)
-        for seq_len, idxs in by_len.items():
-            stack = np.empty((len(idxs), seq_len, n_tags), dtype=np.float64)
-            for j, i in enumerate(idxs):
-                stack[j] = np.asarray(vals[i], dtype=np.float64).reshape(
-                    seq_len, n_tags
-                )
-            paths = viterbi_decode_batch(stack, trans)
-            for j, i in enumerate(idxs):
-                out[i] = paths[j].tolist()
-        return pd.Series(out)
+    @arrow_udf(T.ArrayType(T.IntegerType()))
+    def decode(logits_flat):
+        import pyarrow as pa
 
-    return decode
+        # flatten() honours the slice offset and skips null lists, which
+        # the null-as-0 lengths then count as empty
+        lens = logits_flat.value_lengths().fill_null(0).to_numpy()
+        if (lens % n_tags).any():
+            raise ValueError(f"logits length not a multiple of n_tags={n_tags}")
+        offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+        np.cumsum(lens // n_tags, out=offsets[1:])
+        flat = logits_flat.flatten().to_numpy(zero_copy_only=False)
+        labels = viterbi_decode_packed(flat.reshape(-1, n_tags), offsets, trans)
+        return pa.ListArray.from_arrays(
+            pa.array(offsets.astype(np.int32)), pa.array(labels)
+        )
 
-
-def decode_labels(
-    df: DataFrame, logits_col: str, transitions, out_col: str = "label_ids"
-) -> DataFrame:
-    """Attach decoded label ids; ``logits_col`` holds the flattened
-    [n_tokens * n_tags] per-turn logits array."""
-    udf = make_viterbi_udf(transitions)
-    return df.withColumn(out_col, udf(logits_col))
+    return df.withColumn("label_ids", decode(logits_col))

@@ -29,6 +29,9 @@ from deep_ner_spark.operators.asof import asof_join
 from deep_ner_spark.operators.features import featurize_fused, fit_shape_vocab_from_text
 from deep_ner_spark.operators.windows import forward_fill, lag_lead, sessionize
 
+# a turn more than this many seconds after the previous one opens a session
+SESSION_GAP_SECONDS = 1800.0
+
 
 def featurize_transcripts(
     transcripts: DataFrame,
@@ -36,7 +39,6 @@ def featurize_transcripts(
     vocab: Tuple[str, ...] | None = None,
     max_seq_length: int = 32,
     emb_dim: int = 16,
-    session_gap_seconds: float = 1800.0,
     state_seq_col: str | None = None,
 ) -> Tuple[DataFrame, Tuple[str, ...]]:
     """Returns (featurized turns DataFrame, fitted shape vocabulary).
@@ -69,7 +71,7 @@ def featurize_transcripts(
             state_seq_col=state_seq_col,
         )
     slim = sessionize(
-        slim, ["conv_id"], "ts", session_gap_seconds, order_cols=["turn_idx"]
+        slim, ["conv_id"], "ts", SESSION_GAP_SECONDS, order_cols=["turn_idx"]
     )
     slim = forward_fill(slim, ["conv_id"], ["turn_idx"], ["role", "tool"])
     # token count JVM-side (same count as the Python tokenizer) so the
@@ -127,73 +129,97 @@ def predict_entities(
 ) -> DataFrame:
     """The reference's read path E1 steps 4-7 (elmo_ner.py:277-304):
     feature matrices -> logits (here a deterministic linear head standing in
-    for the TF session) -> per-turn Viterbi decode -> BIO islands decode ->
+    for the TF session) -> Viterbi decode -> BIO islands decode ->
     long-form entity spans (conv_id, turn_idx, ne_type, start, end).
 
     ``weights``: [feature_width, n_tags] ndarray; ``transitions``:
     [n_tags, n_tags]; n_tags = 2 * len(classes_list) + 1 (the BIO int
-    codec's range).  One Arrow pass per turn, no shuffle.
+    codec's range).  One ``mapInArrow``, no shuffle.  Per Arrow batch, the
+    ``features`` column's data buffer IS the stacked [sum n, width] float32
+    matrix of its turns, so the head is ONE matmul over it and its byte
+    offsets are the turns' row offsets; ``viterbi_decode_packed`` decodes
+    every turn, and the BIO islands are decoded only for turns with a
+    non-O label.  A null, empty or whitespace-only turn has a 0-byte blob
+    and emits nothing.  Raises ``ValueError`` when a turn's
+    ``feature_width`` is not ``weights.shape[0]``.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    import pyarrow as pa
 
     from deep_ner_spark import textfns
-    from deep_ner_spark.operators.features import decode_feature_matrix
-    from deep_ner_spark.operators.viterbi import viterbi_decode
+    from deep_ner_spark.operators.viterbi import viterbi_decode_packed
 
     W = np.asarray(weights, dtype=np.float32)
     trans = np.asarray(transitions, dtype=np.float64)
     classes = tuple(classes_list)
+    width = W.shape[0]
+    row_bytes = 4 * width
 
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("ne_type", T.StringType()),
-            T.StructField("start", T.IntegerType()),
-            T.StructField("end", T.IntegerType()),
-        ]
-    )
+    schema = "conv_id string, turn_idx int, ne_type string, start int, `end` int"
 
     def run(batches):
-        cols = ["conv_id", "turn_idx", "ne_type", "start", "end"]
-        for pdf in batches:
-            # column zip, not iterrows: row-object construction would dominate
-            # the per-turn work at Arrow batch sizes.  The linear head runs as
-            # ONE [sum L, width] @ W matmul over the whole Arrow batch (turn
-            # slices are views into the stacked logits), so the Python loop
-            # carries only the O(L) Viterbi DP + span decode per turn.
-            mats, metas = [], []
-            for conv_id, turn_idx, features, width, starts, ends in zip(
-                pdf["conv_id"],
-                pdf["turn_idx"],
-                pdf["features"],
-                pdf["feature_width"],
-                pdf["starts"],
-                pdf["ends"],
-            ):
-                m = decode_feature_matrix(features, int(width))
-                if m.shape[0] == 0:
-                    continue
-                mats.append(m)
-                metas.append((conv_id, int(turn_idx), starts, ends, m.shape[0]))
-            if not mats:
-                yield pd.DataFrame([], columns=cols)
+        for rb in batches:
+            widths = rb.column("feature_width").to_numpy(zero_copy_only=False)
+            if (widths != width).any():
+                raise ValueError(
+                    f"feature_width {sorted(set(widths.tolist()))} != "
+                    f"weights.shape[0] {width}"
+                )
+            feats = rb.column("features")
+            if feats.null_count:
+                feats = feats.fill_null(b"")
+            # pyarrow's BinaryArray has no .offsets: read its int32 offsets
+            # buffer from the array's own slice offset
+            offs = np.frombuffer(
+                feats.buffers()[1], np.int32, len(feats) + 1, 4 * feats.offset
+            ).astype(np.int64)
+            if offs[-1] == offs[0]:
                 continue
-            logits_all = np.vstack(mats) @ W
-            rows = []
-            off = 0
-            for conv_id, turn_idx, starts, ends, n in metas:
-                logits = logits_all[off:off + n]
-                off += n
-                labels = viterbi_decode(logits, trans)
-                bounds = list(zip(starts, ends))[:n]
-                spans = textfns.decode_bio_spans(bounds, classes, labels.tolist())
-                for ne_type in spans:
-                    for s, e in spans[ne_type]:
-                        rows.append((conv_id, turn_idx, ne_type, s, e))
-            yield pd.DataFrame(rows, columns=cols)
+            if ((offs - offs[0]) % row_bytes).any():
+                raise ValueError(f"a feature blob is not a multiple of {row_bytes} bytes")
+            mat = np.frombuffer(
+                feats.buffers()[2], "<f4", (offs[-1] - offs[0]) // 4, offs[0]
+            ).reshape(-1, width)
+            rows = (offs - offs[0]) // row_bytes
+            labels = viterbi_decode_packed(mat @ W, rows, trans)
+
+            n_rows = np.diff(rows)
+            turn_of_row = np.repeat(np.arange(len(n_rows)), n_rows)
+            # ListArray.values ignores a slice; its offsets index it as sliced
+            starts, ends = rb.column("starts"), rb.column("ends")
+            s_off, e_off = starts.offsets.to_numpy(), ends.offsets.to_numpy()
+            s_val, e_val = starts.values.to_numpy(), ends.values.to_numpy()
+
+            def spans_of(b: int) -> dict:
+                # starts/ends cover every token; the rows stop at max_seq_length
+                n = n_rows[b]
+                bounds = zip(
+                    s_val[s_off[b]:s_off[b] + n].tolist(),
+                    e_val[e_off[b]:e_off[b] + n].tolist(),
+                )
+                turn_labels = labels[rows[b]:rows[b + 1]].tolist()
+                return textfns.decode_bio_spans(list(bounds), classes, turn_labels)
+
+            found = [
+                (b, ne_type, s, e)
+                for b in np.unique(turn_of_row[labels != 0]).tolist()
+                for ne_type, pairs in spans_of(b).items()
+                for s, e in pairs
+            ]
+            if not found:
+                continue
+            src, ne, st, en = zip(*found)
+            take = pa.array(src, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("conv_id").take(take),
+                    rb.column("turn_idx").take(take).cast(pa.int32()),
+                    pa.array(ne, pa.string()),
+                    pa.array(st, pa.int32()),
+                    pa.array(en, pa.int32()),
+                ],
+                names=["conv_id", "turn_idx", "ne_type", "start", "end"],
+            )
 
     cols = ["conv_id", "turn_idx", "features", "feature_width", "starts", "ends"]
-    return featurized.select(*cols).mapInPandas(run, schema=schema)
+    return featurized.select(*cols).mapInArrow(run, schema)

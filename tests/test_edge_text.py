@@ -10,11 +10,12 @@ import pytest
 import __spark_entry__ as e
 from tools.check_oracles import compare
 
-# every twin that splits through _WS_TOKENS, the word tokenizer with
-# offsets, and the media queries, whose twins keep a null text's shape
+# every twin that splits through _WS_TOKENS, the twins of the text
+# normalizer and of the word tokenizer with offsets, and the media
+# queries, whose twins keep a null text's shape
 _QUERIES = sorted(
     {name for name, sql in e.oracle_sql().items() if e._WS_TOKENS in sql}
-    | {"token_explode", "multimodal_image_features",
+    | {"normalize_dashes", "token_explode", "multimodal_image_features",
        "multimodal_audio_energy", "multimodal_video_frames"}
 )
 
@@ -85,3 +86,21 @@ def test_edge_text_twins_agree(spark, edge_docs, name):
     assert len(got) > 0  # an empty result on both sides would show nothing
     check = _CHECKS.get(name)
     assert check is None or check(got)
+
+
+def test_token_explode_twin_tokenizes_normalized_text(spark, tmp_path):
+    """Both sides of token_explode tokenize the normalized text, so a dash
+    variant comes out as the token '-' with unchanged offsets."""
+    texts = ["x—y, z!!", "a–b ‒c", "plain words"]
+    pd.DataFrame(
+        {"doc_id": np.arange(len(texts), dtype="int64"), "text": texts, "lang": "en"}
+    ).to_parquet(tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    got = e.queries()["token_explode"](spark, str(tmp_path)).toPandas()
+    want = con.execute(e.oracle_sql()["token_explode"]).df()
+    con.close()
+    assert compare("token_explode", got, want) == "OK"
+    assert "-" in set(got.token) and "—" not in set(got.token)

@@ -137,9 +137,7 @@ def test_per_turn_text_equality_and_feature_parity(data, spark):
             toks, shapes, [p for p, _ in tags], [d for _, d in tags],
             want_vocab, MAX_SEQ, EMB,
         )
-        from deep_ner_spark.operators.features import decode_feature_matrix
-
-        got = decode_feature_matrix(r["features"], r["feature_width"])
+        got = np.frombuffer(r["features"], "<f4").reshape(-1, r["feature_width"])
         n = min(len(toks), MAX_SEQ)
         # engine emits ragged (real-token rows); reference pads with zeros
         assert got.shape == (n, want.shape[1])

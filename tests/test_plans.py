@@ -169,6 +169,28 @@ def test_tokenize_turns_is_one_arrow_map_no_python_eval(spark, tmp_path):
     assert cols == ["doc_id", "text", "norm_text"], plan
 
 
+def test_predict_entities_is_one_arrow_map_no_exchange(tables, spark):
+    """predict_entities adds ONE MapInArrow to the featurized plan: the
+    head, the Viterbi decode and the BIO decode run in one Arrow pass, with
+    no MapInPandas or scalar Python UDF node and no exchange of its own."""
+    import numpy as np
+
+    from deep_ner_spark.operators.features import feature_width
+    from deep_ner_spark.pipeline import featurize_transcripts, predict_entities
+
+    vocab = ("Aa", "a")
+    out, _ = featurize_transcripts(
+        tables[0], None, vocab=vocab, max_seq_length=8, emb_dim=4
+    )
+    W = np.zeros((feature_width(vocab, 4), 7), dtype=np.float32)
+    base = plan_of(out)
+    plan = plan_of(predict_entities(out, ("A", "B", "C"), W, np.zeros((7, 7))))
+    assert plan.count("MapInArrow (") == base.count("MapInArrow (") + 1, plan
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert exchanges(plan) == exchanges(base), plan
+
+
 def test_text_vocab_fit_runs_two_jobs(tables, spark):
     """The flagship's vocab fit is two Spark jobs: the map stage (Arrow
     count + partial aggregate) and the final aggregate's collect.  The

@@ -23,8 +23,10 @@ def featurized(spark):
 
 def test_predict_pipeline_identity_head(featurized, spark):
     out, vocab, t, s = featurized
+    from deep_ner_spark.operators.features import feature_width
+
     n_tags = 2 * len(CLASSES) + 1
-    width = 8 + len(vocab) + 3 + 66
+    width = feature_width(vocab, 8)
     rng = np.random.default_rng(5)
     # a random head: predictions are arbitrary but the pipeline must emit
     # structurally valid spans decodable against each turn's bounds
@@ -47,8 +49,9 @@ def test_predict_recovers_gold_labels(featurized, spark):
     feature dominates via a huge-weight trick is impossible with real
     features, so instead run the label pipeline in reverse — compute gold
     BIO labels per turn, then check decode_bio_spans(viterbi(one-hot gold
-    logits)) == decode_bio_spans(gold labels): the Spark predict path and
-    the pure path agree for every turn when fed the same logits."""
+    logits)) == decode_bio_spans(gold labels): the pure decode path
+    recovers the gold spans from logits that encode them.  No Spark runs
+    here; test_predict_matches_per_turn_reference covers predict_entities."""
     from deep_ner_spark.operators.viterbi import viterbi_decode
 
     out, vocab, t, s = featurized
@@ -76,6 +79,70 @@ def test_predict_recovers_gold_labels(featurized, spark):
         assert spans == want
         checked += 1
     assert checked > 5
+
+
+def test_predict_matches_per_turn_reference(spark):
+    """predict_entities equals the per-turn reference path
+    normalize_text -> tokenize_with_bounds -> feature matrix -> head ->
+    viterbi_decode -> decode_bio_spans on every turn, with null, empty and
+    whitespace-only turns and turns longer than max_seq_length, over Arrow
+    batches of a few rows each.  The head is integer on the one-hot rows
+    and zero on the embedding rows, and the transitions are nonzero
+    integers, so every float sum is exact and argmax ties are real."""
+    import pandas as pd
+
+    from deep_ner_spark.operators.features import feature_width, turn_feature_matrix
+    from deep_ner_spark.operators.viterbi import viterbi_decode
+
+    max_seq, emb = 8, 4
+    t, _, _ = datagen.gen_transcripts(n_convs=6, mean_turns=6, seed=31)
+    edge = t[t.conv_id == t.conv_id.iloc[0]].tail(5).copy()
+    edge["turn_idx"] += 100
+    edge["text"] = [None, "", " \t\n\x0b ", "x—y " * 12, "Alpha beta"]
+    t = pd.concat([t, edge], ignore_index=True)
+    out, vocab = featurize_transcripts(
+        spark.createDataFrame(t), None, max_seq_length=max_seq, emb_dim=emb
+    )
+
+    n_tags = 2 * len(CLASSES) + 1
+    rng = np.random.default_rng(11)
+    W = rng.integers(-2, 3, size=(feature_width(vocab, emb), n_tags))
+    W[:emb] = 0
+    W = W.astype(np.float32)
+    trans = rng.integers(-2, 3, size=(n_tags, n_tags)).astype(np.float64)
+
+    want = []
+    for conv, tidx, text in zip(t.conv_id, t.turn_idx, t.text):
+        triples = textfns.tokenize_with_bounds(textfns.normalize_text(text or ""))
+        words = [w for w, _, _ in triples]
+        tags = [textfns.heuristic_pos_dep(w, i) for i, w in enumerate(words)]
+        n = min(len(words), max_seq)
+        m = turn_feature_matrix(
+            words,
+            [textfns.shape_of_string(w) for w in words],
+            [p for p, _ in tags],
+            [d for _, d in tags],
+            vocab,
+            max_seq,
+            emb,
+        )[:n]
+        labels = viterbi_decode(m @ W, trans).tolist()
+        bounds = [(a, b) for _, a, b in triples][:n]
+        for ne_type, spans in textfns.decode_bio_spans(bounds, CLASSES, labels).items():
+            want += [(conv, int(tidx), ne_type, a, b) for a, b in spans]
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = [tuple(r) for r in predict_entities(out, CLASSES, W, trans).collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert len(want) > 20
+    assert sorted(got) == sorted(want)
+    # a head of another width is refused, not silently re-split
+    with pytest.raises(Exception, match="feature_width"):
+        predict_entities(out, CLASSES, W[1:], trans).collect()
 
 
 def test_md5_dyadic_head_matches_duckdb_formula():

@@ -330,11 +330,13 @@ def test_split_threshold_hex_twin_matches_library():
 
 def test_viterbi_batch_bitexact_vs_per_sequence():
     """viterbi_decode_batch (one shared t-loop across same-length sequences)
-    must be BIT-identical to the per-sequence DP — including argmax
-    tie-breaks — on ties, negatives, singletons, and long sequences."""
+    and viterbi_decode_packed (mixed lengths packed back to back) must be
+    BIT-identical to the per-sequence DP — including argmax tie-breaks — on
+    ties, negatives, empty and singleton sequences, and long sequences."""
     from deep_ner_spark.operators.viterbi import (
         viterbi_decode,
         viterbi_decode_batch,
+        viterbi_decode_packed,
     )
 
     rng = np.random.default_rng(7)
@@ -350,6 +352,17 @@ def test_viterbi_batch_bitexact_vs_per_sequence():
         for i in range(9):
             ref = viterbi_decode(batch[i], trans)
             assert got[i].tolist() == ref.tolist(), (seq_len, i)
+
+    lens = [0, 1, 3, 0, 1, 17, 3, 3, 64, 0, 2, 1]
+    offsets = np.concatenate([[0], np.cumsum(lens)])
+    packed = rng.standard_normal((offsets[-1], k)).astype(np.float32)
+    packed[offsets[6]:offsets[8]] = np.round(packed[offsets[6]:offsets[8]])
+    packed[offsets[10]:offsets[11]] = 0.0
+    got = viterbi_decode_packed(packed, offsets, trans)
+    assert got.shape == (offsets[-1],)
+    for b in range(len(lens)):
+        ref = viterbi_decode(packed[offsets[b]:offsets[b + 1]], trans)
+        assert got[offsets[b]:offsets[b + 1]].tolist() == ref.tolist(), b
 
 
 def test_streaming_asof_entry_harness_contract(spark):

@@ -21,6 +21,7 @@ REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+from deep_ner_spark import textfns  # noqa: E402
 from deep_ner_spark.textfns import DASH_VARIANTS  # noqa: E402
 
 SESSION_GAP_US = 1800 * 1_000_000
@@ -200,9 +201,9 @@ def _q(name: str, oracle: str | None = None):
 # --- J5: as-of join ---------------------------------------------------------
 
 
-@_q(
-    "asof_latest_purchase",
-    """
+# The latest purchase value of each non-purchase event's user at or before
+# its ts: the twin of both as-of join paths
+_ASOF_PURCHASE_SQL = """
     SELECT t.event_id,
            t.user_id,
            epoch_us(t.ts) AS ts_us,
@@ -210,13 +211,12 @@ def _q(name: str, oracle: str | None = None):
     FROM (SELECT * FROM events WHERE event_type <> 'purchase') t
     ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') s
       ON t.user_id = s.user_id AND t.ts >= s.ts
-    """,
-)
-def q_asof_latest_purchase(spark, sf_dir):
-    """SURVEY J5: latest purchase state attached to every other event,
-    state.ts <= event.ts, zero leakage."""
-    from deep_ner_spark.operators.asof import asof_join
+"""
 
+
+def _purchase_asof(spark, sf_dir, join, **kw) -> DataFrame:
+    """``join(turns, state, ...)`` of the non-purchase events (event_id,
+    user_id, ts) with the purchases' value as ``purchase_value``."""
     ev = _read(spark, sf_dir, "events")
     turns = ev.where(F.col("event_type") != "purchase").select(
         "event_id", "user_id", "ts"
@@ -224,9 +224,18 @@ def q_asof_latest_purchase(spark, sf_dir):
     state = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("value").alias("purchase_value")
     )
-    out = asof_join(
-        turns, state, ["user_id"], "ts", ["purchase_value"], seq_col="event_id"
+    return join(
+        turns, state, ["user_id"], "ts", ["purchase_value"], seq_col="event_id", **kw
     )
+
+
+@_q("asof_latest_purchase", _ASOF_PURCHASE_SQL)
+def q_asof_latest_purchase(spark, sf_dir):
+    """SURVEY J5: latest purchase state attached to every other event,
+    state.ts <= event.ts, zero leakage."""
+    from deep_ner_spark.operators.asof import asof_join
+
+    out = _purchase_asof(spark, sf_dir, asof_join)
     return out.select(
         "event_id", "user_id", _us("ts").alias("ts_us"), "purchase_value"
     )
@@ -386,6 +395,17 @@ def q_merge_value_intervals(spark, sf_dir):
 # --- W1/W2: BIO encode/decode over a deterministic token stream --------------
 
 
+def _space_bounds_sql(keys: str, typ: str) -> str:
+    """Select items ``start, "end"``: the char span of each ``token`` as
+    if the tokens of each ``keys`` group, in ``token_idx`` order, were
+    joined by single spaces; both cast to SQL type ``typ``."""
+    before = (
+        f"coalesce(sum(length(token) + 1) OVER (PARTITION BY {keys} ORDER BY token_idx "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
+    )
+    return f'CAST({before} AS {typ}) AS start, CAST({before} + length(token) AS {typ}) AS "end"'
+
+
 def _token_spans_sql(max_doc: int) -> str:
     """CTEs ``toks`` and ``pos``: the twin of :func:`_token_spans`."""
     return f"""toks AS (
@@ -394,11 +414,7 @@ def _token_spans_sql(max_doc: int) -> str:
       FROM (SELECT doc_id, {_WS_TOKENS} AS t
             FROM documents WHERE doc_id < {max_doc})),
     pos AS (
-      SELECT doc_id, token_idx, token,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY token_idx
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + length(token) AS BIGINT) AS "end"
+      SELECT doc_id, token_idx, token, {_space_bounds_sql("doc_id", "BIGINT")}
       FROM toks)"""
 
 
@@ -686,6 +702,55 @@ def q_normalize_dashes(spark, sf_dir):
 _WORD_TOKEN_RE2 = rf"[\p{{L}}\p{{N}}_]+|[^\p{{L}}\p{{N}}_{_PY_SPACE_RE2}]"
 
 
+def _sql_str(s: str) -> str:
+    """SQL string literal of ``s``."""
+    return "'" + s.replace("'", "''") + "'"
+
+
+# Python's isdigit() beyond RE2's \p{Nd}: superscripts, circled digits and
+# the like (the code points that are digits but not decimals)
+_DIGITS_NOT_ND = "".join(
+    c for c in map(chr, range(sys.maxunicode + 1)) if c.isdigit() and not c.isdecimal()
+)
+
+
+def _contains_sql(chars) -> str:
+    """SQL test: the one-char string ``ch`` is one of ``chars``."""
+    return f"contains({_sql_str(''.join(sorted(chars)))}, ch)"
+
+
+# textfns._char_class as (SQL test on ``ch``, class), in its order
+_CHAR_CLASSES = (
+    (_contains_sql(textfns._UNDERSCORE_CLASS), "_"),
+    (r"regexp_full_match(ch, '\p{Lu}')", "A"),
+    (r"regexp_full_match(ch, '\p{L}')", "a"),
+    (r"regexp_full_match(ch, '\p{Nd}') OR " + _contains_sql(_DIGITS_NOT_ND), "D"),
+    (_contains_sql(textfns._PUNCT), "P"),
+    (_contains_sql(textfns._DASH_CLASS), "-"),
+    (_contains_sql(textfns._DQUOTE_CLASS), '"'),
+    (_contains_sql(textfns._SQUOTE_CLASS), "'"),
+)
+
+
+def _shape_sql(expr: str) -> str:
+    """SQL twin of textfns.shape_of_string over the expression ``expr``:
+    classify each code point, then collapse runs of one class (one
+    ``X+`` -> ``X`` replace per class; RE2 has no backreferences).  The
+    ``ch = ''`` arm keeps an empty text's shape '': ``string_split('', '')``
+    is ``['']``.  Null in, null out.  Read ``expr`` from a MATERIALIZED
+    CTE when it comes out of an ``unnest``: in the projection right after
+    one, DuckDB runs the lambda ~8x slower (shape_vocab on sf0.01: 0.58 s
+    against 0.07 s)."""
+    whens = " ".join(f"WHEN {test} THEN {_sql_str(c)}" for test, c in _CHAR_CLASSES)
+    sql = (
+        f"array_to_string(list_transform(string_split({expr}, ''), "
+        f"ch -> CASE WHEN ch = '' THEN '' {whens} ELSE 'U' END), '')"
+    )
+    for c in [c for _, c in _CHAR_CLASSES] + ["U"]:
+        sql = f"regexp_replace({sql}, {_sql_str(c + '+')}, {_sql_str(c)}, 'g')"
+    return sql
+
+
 @_q(
     "token_explode",
     f"""
@@ -729,12 +794,7 @@ def q_token_explode(spark, sf_dir):
       FROM documents),
     dec AS (SELECT token, upper(substr(token, 1, 1)) || substr(token, 2) || '-12' AS decorated
             FROM toks)
-    SELECT token,
-           regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-             translate(decorated,
-               'ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-',
-               'AAAAAAAAAAAAAAAAAAAAAAAAAAaaaaaaaaaaaaaaaaaaaaaaaaaaDDDDDDDDDDP'),
-             'A+', 'A', 'g'), 'a+', 'a', 'g'), 'D+', 'D', 'g'), 'P+', 'P', 'g') AS shape
+    SELECT token, {_shape_sql("decorated")} AS shape
     FROM dec
     """,
 )
@@ -756,15 +816,11 @@ def q_shape_strings(spark, sf_dir):
 @_q(
     "shape_vocab",
     f"""
-    WITH toks AS (
+    WITH toks AS MATERIALIZED (
       SELECT doc_id, unnest({_WS_TOKENS}) AS token
       FROM documents),
     mixed AS (
-      SELECT regexp_replace(regexp_replace(regexp_replace(
-               translate(upper(substr(token, 1, 1)) || substr(token, 2),
-                 'ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789',
-                 'AAAAAAAAAAAAAAAAAAAAAAAAAAaaaaaaaaaaaaaaaaaaaaaaaaaaDDDDDDDDDD'),
-               'A+', 'A', 'g'), 'a+', 'a', 'g'), 'D+', 'D', 'g') AS shape
+      SELECT {_shape_sql("upper(substr(token, 1, 1)) || substr(token, 2)")} AS shape
       FROM toks)
     SELECT shape, count(*) AS cnt FROM mixed
     GROUP BY shape HAVING count(*) >= 3 ORDER BY shape
@@ -1357,10 +1413,9 @@ def q_simhash_bits(spark, sf_dir):
 
 # --- similarity search --------------------------------------------------------
 
-
-@_q(
-    "cosine_topk",
-    """
+# The exact top-3 of the queries vec_id < 5: the twin of every search that
+# must equal brute force
+_EXACT_TOPK_SQL = """
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
     d AS (SELECT vec_id AS neighbor_id, embedding AS dv FROM embeddings),
     s AS (SELECT query_id, neighbor_id, list_cosine_similarity(qv, dv) AS cos
@@ -1369,16 +1424,23 @@ def q_simhash_bits(spark, sf_dir):
                  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
           FROM s)
     SELECT query_id, rnk, neighbor_id FROM r WHERE rnk <= 3
-    """,
-)
+"""
+
+
+def _topk_query(spark, sf_dir, search) -> DataFrame:
+    """(query_id, rnk, neighbor_id) of ``search(embeddings, queries)``,
+    the queries being the vectors with vec_id < 5."""
+    emb = _read(spark, sf_dir, "embeddings")
+    out = search(emb, emb.where(F.col("vec_id") < 5))
+    return out.select("query_id", F.col("rank").cast("long").alias("rnk"), "neighbor_id")
+
+
+@_q("cosine_topk", _EXACT_TOPK_SQL)
 def q_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k ANN baseline (rank-stable output)."""
     from deep_ner_spark.operators.similarity import cosine_topk
 
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    out = cosine_topk(emb, queries, "vec_id", "embedding", k=3)
-    return out.select("query_id", F.col("rank").cast("long").alias("rnk"), "neighbor_id")
+    return _topk_query(spark, sf_dir, lambda emb, q: cosine_topk(emb, q, k=3))
 
 
 # --- salted as-of join: must equal the plain as-of oracle --------------------
@@ -1386,34 +1448,17 @@ def q_cosine_topk(spark, sf_dir):
 
 @_q(
     "asof_salted",
-    """
-    SELECT t.event_id,
-           t.user_id,
-           s.value AS purchase_value
-    FROM (SELECT * FROM events WHERE event_type <> 'purchase') t
-    ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') s
-      ON t.user_id = s.user_id AND t.ts >= s.ts
-    """,
+    f"SELECT event_id, user_id, purchase_value FROM ({_ASOF_PURCHASE_SQL})",
 )
 def q_asof_salted(spark, sf_dir):
     """SURVEY J5 skew path: the salted as-of join must give identical
     results to the plain one (every user forced down the salted path)."""
     from deep_ner_spark.operators.asof import asof_join_salted
 
-    ev = _read(spark, sf_dir, "events")
-    turns = ev.where(F.col("event_type") != "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    state = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("purchase_value")
-    )
-    out = asof_join_salted(
-        turns,
-        state,
-        ["user_id"],
-        "ts",
-        ["purchase_value"],
-        seq_col="event_id",
+    out = _purchase_asof(
+        spark,
+        sf_dir,
+        asof_join_salted,
         n_salts=4,
         hot_key_threshold=10,  # force the salted path for almost all users
     )
@@ -1811,83 +1856,14 @@ _COS_EXACT_SQL = (
     " * sqrt(list_reduce(list_transform(dv, x -> CAST(x * x AS DOUBLE)), (a,b) -> a + b)))"
 )
 
-_LSH_TOPK_SQL = f"""
-    WITH b AS (
-      SELECT vec_id, embedding, {_lsh_planes_sql()} AS bucket
-      FROM embeddings),
-    q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM b WHERE vec_id < 5),
-    d AS (SELECT vec_id AS neighbor_id, embedding AS dv, bucket FROM b),
-    s AS (SELECT query_id, neighbor_id, {_COS_EXACT_SQL} AS cos
-          FROM q JOIN d USING (bucket) WHERE query_id <> neighbor_id),
-    r AS (SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM s)
-    SELECT query_id, rnk, neighbor_id FROM r WHERE rnk <= 3
-"""
-
-
-@_q("lsh_cosine_topk", _LSH_TOPK_SQL)
-def q_lsh_cosine_topk(spark, sf_dir):
-    """Approximate ANN (hyperplane-LSH bucketed).  Now oracle-paired: the
-    DuckDB twin recomputes the buckets AND the candidate ranking bit-exactly
-    (plane literals embedded in the SQL; float-multiply / double-accumulate
-    semantics mirrored — verified 0 bucket and 0 cosine bit-mismatches on
-    the test corpus); recall vs the exact path also asserted in pytest."""
-    from deep_ner_spark.operators.similarity import lsh_cosine_topk
-
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    out = lsh_cosine_topk(emb, queries, 64, "vec_id", "embedding", k=3, n_planes=6)
-    return out.select("query_id", F.col("rank").cast("long").alias("rnk"), "neighbor_id")
-
-
-@_q(
-    "ann_recall_lsh",
-    f"""
-    WITH ap AS ({_LSH_TOPK_SQL}),
-    q2 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-    d2 AS (SELECT vec_id AS neighbor_id, embedding AS dv FROM embeddings),
-    es AS (SELECT query_id, neighbor_id, {_COS_EXACT_SQL} AS cos
-           FROM q2, d2 WHERE query_id <> neighbor_id),
-    ex AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-           FROM es)
-    SELECT e.query_id,
-           CAST(count(a.neighbor_id) AS INT) AS n_hits,
-           CAST(count(*) AS INT) AS n_exact
-    FROM (SELECT * FROM ex WHERE rnk <= 3) e
-    LEFT JOIN ap a ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-    GROUP BY 1
-    """,
-)
-def q_ann_recall_lsh(spark, sf_dir):
-    """Recall@k of the approximate (LSH-bucketed) ANN vs the exact top-k,
-    as integer rows (query_id, n_hits, n_exact) a DuckDB twin recomputes
-    end-to-end — the hard quality signal for the approximate path."""
-    from deep_ner_spark.operators.similarity import cosine_topk, lsh_cosine_topk
-
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    approx = lsh_cosine_topk(emb, queries, 64, "vec_id", "embedding", k=3, n_planes=6)
-    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=3)
-    hit = approx.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        exact.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("int").alias("n_hits"),
-            F.count("*").cast("int").alias("n_exact"),
-        )
-    )
-
-
 def _lsh_multiprobe_sql(n_probe: int) -> str:
     """Multi-probe twin of similarity.lsh_probe_buckets_col: base sign-bit
     bucket plus the ``n_probe - 1`` single-bit flips at the planes with the
     smallest |dot| margin (ties by plane index == by flip value, since
     1 << i is monotone in i) — the probe CTE yields one (query, bucket) row
     per probe, the data side keeps exactly one bucket per vector, so each
-    candidate pair matches via at most one probe and needs no dedup."""
+    candidate pair matches via at most one probe and needs no dedup.
+    CTE ``ap`` ranks every candidate of each query."""
     dots = _lsh_plane_dots_sql()
     d_cols = ", ".join(f"{d} AS d{i}" for i, d in enumerate(dots))
     base = " + ".join(
@@ -1920,9 +1896,30 @@ def _lsh_multiprobe_sql(n_probe: int) -> str:
 
 
 @_q(
-    "ann_recall_multiprobe",
+    "lsh_cosine_topk",
     f"""
-    WITH {_lsh_multiprobe_sql(3)},
+    WITH {_lsh_multiprobe_sql(1)}
+    SELECT query_id, rnk, neighbor_id FROM ap WHERE rnk <= 3
+    """,
+)
+def q_lsh_cosine_topk(spark, sf_dir):
+    """Approximate ANN (hyperplane-LSH bucketed).  Now oracle-paired: the
+    DuckDB twin recomputes the buckets AND the candidate ranking bit-exactly
+    (plane literals embedded in the SQL; float-multiply / double-accumulate
+    semantics mirrored — verified 0 bucket and 0 cosine bit-mismatches on
+    the test corpus); recall vs the exact path also asserted in pytest."""
+    from deep_ner_spark.operators.similarity import lsh_cosine_topk
+
+    return _topk_query(
+        spark, sf_dir, lambda emb, q: lsh_cosine_topk(emb, q, 64, k=3, n_planes=6)
+    )
+
+
+def _ann_recall_sql(n_probe: int) -> str:
+    """Twin of :func:`_ann_recall`: the exact top-3 left-joined to the
+    ``n_probe``-bucket LSH top-3 (:func:`_lsh_multiprobe_sql`)."""
+    return f"""
+    WITH {_lsh_multiprobe_sql(n_probe)},
     q2 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
     d2 AS (SELECT vec_id AS neighbor_id, embedding AS dv FROM embeddings),
     es AS (SELECT query_id, neighbor_id, {_COS_EXACT_SQL} AS cos
@@ -1937,24 +1934,20 @@ def _lsh_multiprobe_sql(n_probe: int) -> str:
     LEFT JOIN (SELECT * FROM ap WHERE rnk <= 3) a
       ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
     GROUP BY 1
-    """,
-)
-def q_ann_recall_multiprobe(spark, sf_dir):
-    """Recall@k of MULTI-PROBE LSH ANN (3 probe buckets: the base bucket
-    plus the two lowest-|margin| single-bit flips) vs the exact top-k —
-    the DuckDB twin recomputes buckets, margin-ordered flips, candidate
-    ranking, and the recall join end-to-end.  Paired with ann_recall_lsh
-    (single probe, same planes) this puts the probes→recall curve inside
-    the hash-checked contract; the strictly-rising property is pinned in
-    tests/test_dedup_similarity.py::test_lsh_multiprobe_recall_rises."""
+    """
+
+
+def _ann_recall(spark, sf_dir, n_probe_buckets: int) -> DataFrame:
+    """Recall@3 of the 6-plane LSH top-k probing ``n_probe_buckets``
+    buckets against the exact top-k: (query_id, n_hits, n_exact)."""
     from deep_ner_spark.operators.similarity import cosine_topk, lsh_cosine_topk
 
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
     approx = lsh_cosine_topk(
-        emb, queries, 64, "vec_id", "embedding", k=3, n_planes=6, n_probe_buckets=3
+        emb, queries, 64, k=3, n_planes=6, n_probe_buckets=n_probe_buckets
     )
-    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=3)
+    exact = cosine_topk(emb, queries, k=3)
     hit = approx.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     return (
         exact.join(hit, ["query_id", "neighbor_id"], "left")
@@ -1966,19 +1959,27 @@ def q_ann_recall_multiprobe(spark, sf_dir):
     )
 
 
-@_q(
-    "lsh_cosine_topk_exhaustive",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-    d AS (SELECT vec_id AS neighbor_id, embedding AS dv FROM embeddings),
-    s AS (SELECT query_id, neighbor_id, list_cosine_similarity(qv, dv) AS cos
-          FROM q, d WHERE query_id <> neighbor_id),
-    r AS (SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM s)
-    SELECT query_id, rnk, neighbor_id FROM r WHERE rnk <= 3
-    """,
-)
+@_q("ann_recall_lsh", _ann_recall_sql(1))
+def q_ann_recall_lsh(spark, sf_dir):
+    """Recall@k of the approximate (LSH-bucketed) ANN vs the exact top-k,
+    as integer rows (query_id, n_hits, n_exact) a DuckDB twin recomputes
+    end-to-end — the hard quality signal for the approximate path."""
+    return _ann_recall(spark, sf_dir, 1)
+
+
+@_q("ann_recall_multiprobe", _ann_recall_sql(3))
+def q_ann_recall_multiprobe(spark, sf_dir):
+    """Recall@k of MULTI-PROBE LSH ANN (3 probe buckets: the base bucket
+    plus the two lowest-|margin| single-bit flips) vs the exact top-k —
+    the DuckDB twin recomputes buckets, margin-ordered flips, candidate
+    ranking, and the recall join end-to-end.  Paired with ann_recall_lsh
+    (single probe, same planes) this puts the probes→recall curve inside
+    the hash-checked contract; the strictly-rising property is pinned in
+    tests/test_dedup_similarity.py::test_lsh_multiprobe_recall_rises."""
+    return _ann_recall(spark, sf_dir, 3)
+
+
+@_q("lsh_cosine_topk_exhaustive", _EXACT_TOPK_SQL)
 def q_lsh_cosine_topk_exhaustive(spark, sf_dir):
     """LSH ANN with zero hyperplanes (single bucket == exhaustive probe)
     must equal the exact brute-force top-k — hard-verifies the bucket-join
@@ -1986,15 +1987,43 @@ def q_lsh_cosine_topk_exhaustive(spark, sf_dir):
     candidate generation."""
     from deep_ner_spark.operators.similarity import lsh_cosine_topk
 
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    out = lsh_cosine_topk(emb, queries, 64, "vec_id", "embedding", k=3, n_planes=0)
-    return out.select("query_id", F.col("rank").cast("long").alias("rnk"), "neighbor_id")
+    return _topk_query(
+        spark, sf_dir, lambda emb, q: lsh_cosine_topk(emb, q, 64, k=3, n_planes=0)
+    )
+
+
+def _md5_bytes_sql(src: str, seed: str, n: str) -> str:
+    """CTEs ``blk``, ``hx`` and ``byt``: each row of CTE ``src`` once per
+    byte of its md5 chain (multimodal.py ``_md5_chain_bytes``), with
+    ``idx`` < ``n`` and ``val`` = hex pair ``idx % 16`` of
+    md5(seed || ':' || idx // 16)."""
+
+    def nibble(k: int) -> str:  # hex digit k of the byte's pair, as 0..15
+        return f"(strpos('0123456789abcdef', substr(bh, 2 * js.j + {k}, 1)) - 1)"
+
+    return f"""blk AS (
+      SELECT *, unnest(generate_series(0, ({n} + 15) // 16 - 1)) AS b FROM {src}),
+    hx AS (SELECT *, md5({seed} || ':' || b) AS bh FROM blk),
+    byt AS (
+      SELECT hx.*, b * 16 + js.j AS idx, {nibble(1)} * 16 + {nibble(2)} AS val
+      FROM hx CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS j) js
+      WHERE b * 16 + js.j < {n})"""
+
+
+def _media(spark, sf_dir, *meta: "F.Column") -> DataFrame:
+    """The documents with doc_id < 64 as a media frame: media_id, the
+    text's utf-8 bytes as ``content`` and a ``meta`` struct of ``meta``."""
+    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 64)
+    return docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.encode("text", "utf-8").alias("content"),
+        F.struct(*meta).alias("meta"),
+    )
 
 
 @_q(
     "multimodal_video_frames",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id AS media_id, md5(text) AS seedh,
              8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h,
@@ -2004,24 +2033,12 @@ def q_lsh_cosine_topk_exhaustive(spark, sf_dir):
       SELECT media_id, seedh, w, h, nf, ks.k AS sample_idx,
              (ks.k * nf) // 4 AS frame_idx
       FROM d CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS k) ks),
-    fs AS (
-      SELECT *, md5(seedh || ':f' || frame_idx) AS fseed,
-             h * w AS n, (h * w + 15) // 16 AS blocks
-      FROM fr),
-    blk AS (
-      SELECT media_id, sample_idx, frame_idx, n, fseed,
-             unnest(generate_series(0, blocks - 1)) AS b
-      FROM fs),
-    hx AS (SELECT *, md5(fseed || ':' || b) AS bh FROM blk),
-    byt AS (
-      SELECT media_id, sample_idx, frame_idx, n, b * 16 + js.j AS idx,
-             (strpos('0123456789abcdef', substr(bh, 2 * js.j + 1, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(bh, 2 * js.j + 2, 1)) - 1) AS val
-      FROM hx CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS j) js)
+    fs AS (SELECT *, md5(seedh || ':f' || frame_idx) AS fseed, h * w AS n FROM fr),
+    {_md5_bytes_sql("fs", "fseed", "n")}
     SELECT media_id, CAST(sample_idx AS INT) AS sample_idx,
            CAST(frame_idx AS INT) AS frame_idx,
            CAST(CAST(sum(val) AS DOUBLE) / count(*) AS REAL) AS mean_intensity
-    FROM byt WHERE idx < n
+    FROM byt
     GROUP BY 1, 2, 3
     """,
 )
@@ -2034,47 +2051,34 @@ def q_multimodal_video_frames(spark, sf_dir):
     one double division bit-exactly (multimodal.py ``_decode_video_frame``)."""
     from deep_ner_spark.operators.multimodal import video_frame_sample
 
-    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 64)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("content"),
-        F.struct(
-            F.lit("fake").alias("codec"),
-            (8 + F.col("doc_id") % 9).cast("int").alias("width"),
-            (8 + F.col("doc_id") % 7).cast("int").alias("height"),
-            (4 + F.col("doc_id") % 5).cast("int").alias("n_frames"),
-            F.lit(25.0).cast("float").alias("fps"),
-        ).alias("meta"),
+    media = _media(
+        spark,
+        sf_dir,
+        F.lit("fake").alias("codec"),
+        (8 + F.col("doc_id") % 9).cast("int").alias("width"),
+        (8 + F.col("doc_id") % 7).cast("int").alias("height"),
+        (4 + F.col("doc_id") % 5).cast("int").alias("n_frames"),
+        F.lit(25.0).cast("float").alias("fps"),
     )
     return video_frame_sample(media, n_out=4)
 
 
 @_q(
     "multimodal_image_features",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id AS media_id, md5(text) AS seedh,
              16 + doc_id % 17 AS w, 16 + doc_id % 13 AS h
       FROM documents WHERE doc_id < 64),
     dim AS (
       SELECT media_id, seedh, w, h, h * w * 3 AS n,
-             (h * w * 3 + 15) // 16 AS blocks,
              greatest(h // 4, 1) AS gh, greatest(w // 4, 1) AS gw
       FROM d),
-    blk AS (
-      SELECT media_id, seedh, w, h, n, gh, gw,
-             unnest(generate_series(0, blocks - 1)) AS b
-      FROM dim),
-    hx AS (SELECT *, md5(seedh || ':' || b) AS bh FROM blk),
-    byt AS (
-      SELECT media_id, w, h, n, gh, gw, b * 16 + js.j AS idx,
-             (strpos('0123456789abcdef', substr(bh, 2 * js.j + 1, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(bh, 2 * js.j + 2, 1)) - 1) AS val
-      FROM hx CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS j) js),
+    {_md5_bytes_sql("dim", "seedh", "n")},
     px AS (
       SELECT media_id, gh, gw, val,
              (idx // 3) // w AS "row", (idx // 3) % w AS col, idx % 3 AS ch
-      FROM byt WHERE idx < n),
+      FROM byt),
     cell AS (
       SELECT media_id,
              (("row" // gh) * 4 + (col // gw)) * 3 + ch AS cell, val
@@ -2094,16 +2098,13 @@ def q_multimodal_image_features(spark, sf_dir):
     division cast to float32 on both sides."""
     from deep_ner_spark.operators.multimodal import image_features
 
-    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 64)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("content"),
-        F.struct(
-            F.lit("txt").alias("format"),
-            (16 + F.col("doc_id") % 17).cast("int").alias("width"),
-            (16 + F.col("doc_id") % 13).cast("int").alias("height"),
-            F.octet_length("text").cast("long").alias("n_bytes"),
-        ).alias("meta"),
+    media = _media(
+        spark,
+        sf_dir,
+        F.lit("txt").alias("format"),
+        (16 + F.col("doc_id") % 17).cast("int").alias("width"),
+        (16 + F.col("doc_id") % 13).cast("int").alias("height"),
+        F.octet_length("text").cast("long").alias("n_bytes"),
     )
     out = image_features(media, grid=4)
     return out.select(
@@ -2113,24 +2114,13 @@ def q_multimodal_image_features(spark, sf_dir):
 
 @_q(
     "multimodal_audio_energy",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id AS media_id, md5(text) AS seedh,
              400 + (doc_id % 23) * 71 AS ns
       FROM documents WHERE doc_id < 64),
-    blk AS (
-      SELECT media_id, seedh, ns,
-             unnest(generate_series(0, (ns + 15) // 16 - 1)) AS b
-      FROM d),
-    hx AS (SELECT *, md5(seedh || ':' || b) AS bh FROM blk),
-    byt AS (
-      SELECT media_id, ns, b * 16 + js.j AS idx,
-             (strpos('0123456789abcdef', substr(bh, 2 * js.j + 1, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(bh, 2 * js.j + 2, 1)) - 1) AS val
-      FROM hx CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS j) js),
-    smp AS (
-      SELECT media_id, ns, idx, (val - 128) * (val - 128) AS sq
-      FROM byt WHERE idx < ns),
+    {_md5_bytes_sql("d", "seedh", "ns")},
+    smp AS (SELECT media_id, ns, idx, (val - 128) * (val - 128) AS sq FROM byt),
     frames AS (SELECT media_id, ns, unnest(generate_series(0, 7)) AS k FROM d),
     valid AS (SELECT media_id, k FROM frames WHERE k * 160 + 400 <= ns),
     j AS (
@@ -2150,21 +2140,44 @@ def q_multimodal_audio_energy(spark, sf_dir):
     sum((raw-128)^2) / (16384 * frame_len) cast to float32."""
     from deep_ner_spark.operators.multimodal import audio_frame_sample
 
-    docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 64)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("content"),
-        F.struct(
-            F.lit("pcm16").alias("codec"),
-            F.lit(16000).cast("int").alias("sample_rate"),
-            (400 + (F.col("doc_id") % 23) * 71).cast("long").alias("n_samples"),
-        ).alias("meta"),
+    media = _media(
+        spark,
+        sf_dir,
+        F.lit("pcm16").alias("codec"),
+        F.lit(16000).cast("int").alias("sample_rate"),
+        (400 + (F.col("doc_id") % 23) * 71).cast("long").alias("n_samples"),
     )
     out = audio_frame_sample(media, frame_len=400, hop=160, max_frames=8)
     return out.select("media_id", "frame_idx", "energy")
 
 
 # --- flagship featurize (rows-only: feature matrices are not SQL) -------------
+
+
+def _union_asof_sql(turn_cols: list[str]) -> str:
+    """CTEs ``s``, ``u`` and ``filled``: the union-tag as-of of the turns in
+    CTE ``t`` (conv_id, ``turn_cols``, ts; the first turn column orders
+    equal-ts turns) against the purchases of ``events``.  ``filled`` holds
+    every turn and state row with ``state_value``, the latest purchase value
+    at or before its ts (a state at a turn's ts counts; ties by event_id);
+    ``is_state`` = 0 marks the turns."""
+    cols = ", ".join(turn_cols)
+    nulls = ", ".join("NULL" for _ in turn_cols)
+    return f"""s AS (
+      SELECT CAST(user_id AS VARCHAR) AS conv_id, ts, event_id AS state_seq, value AS sv
+      FROM events WHERE event_type = 'purchase'),
+    u AS (
+      SELECT conv_id, {cols}, ts,
+             CAST(NULL AS DOUBLE) AS sv, CAST(NULL AS BIGINT) AS state_seq, 0 AS is_state
+      FROM t
+      UNION ALL
+      SELECT conv_id, {nulls}, ts, sv, state_seq, 1 FROM s),
+    filled AS (
+      SELECT *, last_value(CASE WHEN is_state = 1 THEN sv END IGNORE NULLS) OVER (
+          PARTITION BY conv_id
+          ORDER BY ts, is_state DESC, state_seq ASC NULLS FIRST, {turn_cols[0]} ASC NULLS FIRST
+          ROWS UNBOUNDED PRECEDING) AS state_value
+      FROM u)"""
 
 
 @_q(
@@ -2174,24 +2187,10 @@ def q_multimodal_audio_energy(spark, sf_dir):
       SELECT CAST(user_id AS VARCHAR) AS conv_id,
              CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
              CASE WHEN event_type = 'error' THEN NULL ELSE event_type END AS role,
-             event_type || ' ' || props AS text,
+             concat_ws(' ', event_type, props) AS text,
              ts
       FROM events),
-    s AS (
-      SELECT CAST(user_id AS VARCHAR) AS conv_id, ts, event_id AS state_seq, value AS sv
-      FROM events WHERE event_type = 'purchase'),
-    u AS (
-      SELECT conv_id, turn_idx, role, text, ts,
-             CAST(NULL AS DOUBLE) AS sv, CAST(NULL AS BIGINT) AS state_seq, 0 AS is_state
-      FROM t
-      UNION ALL
-      SELECT conv_id, NULL, NULL, NULL, ts, sv, state_seq, 1 FROM s),
-    filled AS (
-      SELECT *, last_value(CASE WHEN is_state = 1 THEN sv END IGNORE NULLS) OVER (
-          PARTITION BY conv_id
-          ORDER BY ts, is_state DESC, state_seq ASC NULLS FIRST, turn_idx ASC NULLS FIRST
-          ROWS UNBOUNDED PRECEDING) AS state_value
-      FROM u),
+    {_union_asof_sql(["turn_idx", "role", "text"])},
     turns AS (
       SELECT conv_id, turn_idx, role, text, ts, state_value FROM filled WHERE is_state = 0),
     sess AS (
@@ -2204,7 +2203,7 @@ def q_multimodal_audio_energy(spark, sf_dir):
                        THEN 1 ELSE 0 END AS is_new
         FROM turns)),
     tok AS (
-      SELECT *, CAST(least(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')), 16) AS INT) AS n_tokens
+      SELECT *, CAST(least(len(regexp_extract_all(text, '{_WORD_TOKEN_RE2}')), 16) AS INT) AS n_tokens
       FROM sess)
     SELECT conv_id, turn_idx, session_id,
            last_value(role IGNORE NULLS) OVER (PARTITION BY conv_id ORDER BY turn_idx
@@ -2221,9 +2220,9 @@ def q_flagship_featurize(spark, sf_dir):
     phase (sessionize + role ffill + token-count lag/lead + as-of state) is
     oracle-paired: the SQL twin composes the union-tag as-of, gap sessionize
     and window fills over the same events table.  The feature matrices
-    themselves stay pytest-validated (not SQL-expressible).  Token counting
-    is portable here because the derived text is ASCII (DuckDB RE2 \\w ==
-    Spark (?U)\\w on ASCII)."""
+    themselves stay pytest-validated (not SQL-expressible).  Both sides
+    count tokens with the Unicode word tokenizer (``_WORD_TOKEN_RE2``,
+    ``functions.text.JVM_TOKEN``)."""
     from deep_ner_spark.pipeline import featurize_transcripts
 
     transcripts = _derived_transcripts(spark, sf_dir)
@@ -2249,19 +2248,7 @@ def q_flagship_featurize(spark, sf_dir):
     )
 
 
-@_q(
-    "ivf_cosine_topk_exhaustive",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-    d AS (SELECT vec_id AS neighbor_id, embedding AS dv FROM embeddings),
-    s AS (SELECT query_id, neighbor_id, list_cosine_similarity(qv, dv) AS cos
-          FROM q, d WHERE query_id <> neighbor_id),
-    r AS (SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM s)
-    SELECT query_id, rnk, neighbor_id FROM r WHERE rnk <= 3
-    """,
-)
+@_q("ivf_cosine_topk_exhaustive", _EXACT_TOPK_SQL)
 def q_ivf_cosine_topk(spark, sf_dir):
     """IVF coarse-quantized ANN with exhaustive probing (n_probe == n_lists)
     must equal the exact brute-force top-k REGARDLESS of the codebook —
@@ -2271,11 +2258,10 @@ def q_ivf_cosine_topk(spark, sf_dir):
     (`_ivf_codebook_cached`) — deterministic, so identical to refitting."""
     from deep_ner_spark.operators.similarity import ivf_cosine_topk
 
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
     cb = _ivf_codebook_cached(spark, sf_dir, n_lists=8, kmeans_iters=2, seed=42)
-    out = ivf_cosine_topk(emb, queries, cb, k=3, n_probe=8)
-    return out.select("query_id", F.col("rank").cast("long").alias("rnk"), "neighbor_id")
+    return _topk_query(
+        spark, sf_dir, lambda emb, q: ivf_cosine_topk(emb, q, cb, k=3, n_probe=8)
+    )
 
 
 @_q(
@@ -2337,26 +2323,12 @@ def q_rolling_fingerprint(spark, sf_dir):
 
 @_q(
     "streaming_asof",
-    """
+    f"""
     WITH t AS (
       SELECT CAST(user_id AS VARCHAR) AS conv_id, event_id AS turn_seq,
              epoch_us(ts) AS ts_us, ts
       FROM events),
-    s AS (
-      SELECT CAST(user_id AS VARCHAR) AS conv_id, ts, event_id AS state_seq, value AS sv
-      FROM events WHERE event_type = 'purchase'),
-    u AS (
-      SELECT conv_id, turn_seq, ts,
-             CAST(NULL AS DOUBLE) AS sv, CAST(NULL AS BIGINT) AS state_seq, 0 AS is_state
-      FROM t
-      UNION ALL
-      SELECT conv_id, NULL, ts, sv, state_seq, 1 FROM s),
-    filled AS (
-      SELECT *, last_value(CASE WHEN is_state = 1 THEN sv END IGNORE NULLS) OVER (
-          PARTITION BY conv_id
-          ORDER BY ts, is_state DESC, state_seq ASC NULLS FIRST, turn_seq ASC NULLS FIRST
-          ROWS UNBOUNDED PRECEDING) AS state_value
-      FROM u)
+    {_union_asof_sql(["turn_seq"])}
     SELECT conv_id, turn_seq, epoch_us(ts) AS ts_us, state_value
     FROM filled WHERE is_state = 0
     """,
@@ -2557,37 +2529,28 @@ def _sanitized_featurized(spark, sf_dir):
 
 # The predict twins' featurize half: the sanitized derived transcripts
 # of conv_id < 50 (t), their tokens and shapes, the fitted shape
-# vocabulary and each token's char bounds as window sums (bnd).
-_PREDICT_TOKENS_SQL = """t AS (
+# vocabulary and each token's char bounds as window sums (bnd).  toks is
+# MATERIALIZED for _shape_sql, shaped because the Viterbi recursion would
+# recompute it once per step (predict_entities on sf0.01: 136 s without).
+_PREDICT_TOKENS_SQL = f"""t AS (
       SELECT CAST(user_id AS VARCHAR) AS conv_id,
              CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-             trim(regexp_replace(regexp_replace(event_type || ' ' || props,
+             trim(regexp_replace(regexp_replace(concat_ws(' ', event_type, props),
                   '[^A-Za-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS text
       FROM events WHERE user_id < 50),
-    toks AS (
+    toks AS MATERIALIZED (
       SELECT conv_id, turn_idx, unnest(s) AS token,
              unnest(generate_series(1, len(s))) - 1 AS token_idx
       FROM (SELECT conv_id, turn_idx, string_split(text, ' ') AS s FROM t)),
-    shaped AS (
-      SELECT conv_id, turn_idx, token_idx, token,
-             regexp_replace(regexp_replace(regexp_replace(
-               translate(token,
-                 'ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789',
-                 'AAAAAAAAAAAAAAAAAAAAAAAAAAaaaaaaaaaaaaaaaaaaaaaaaaaaDDDDDDDDDD'),
-               'A+', 'A', 'g'), 'a+', 'a', 'g'), 'D+', 'D', 'g') AS shape
+    shaped AS MATERIALIZED (
+      SELECT conv_id, turn_idx, token_idx, token, {_shape_sql("token")} AS shape
       FROM toks WHERE token <> ''),
     vocab AS (
       SELECT shape, row_number() OVER (ORDER BY shape) - 1 AS vidx
       FROM (SELECT shape FROM shaped GROUP BY shape HAVING count(*) >= 3)),
     vsize AS (SELECT count(*) AS s FROM vocab),
     bnd AS (
-      SELECT conv_id, turn_idx, token_idx,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY conv_id, turn_idx
-                  ORDER BY token_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS INT) AS start,
-             CAST(coalesce(sum(length(token) + 1) OVER (PARTITION BY conv_id, turn_idx
-                  ORDER BY token_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  + length(token) AS INT) AS "end",
+      SELECT conv_id, turn_idx, token_idx, {_space_bounds_sql("conv_id, turn_idx", "INT")},
              shape
       FROM shaped)"""
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deep_ner_spark.functions.text import tokens_col
+from deep_ner_spark.operators.dedup import _word_grams
 
 EN_STOPWORDS = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
@@ -173,14 +174,12 @@ def rolling_fingerprint(
 def ngrams_of_tokens(toks: Column, n: int) -> Column:
     """Word n-grams WITH multiplicity from a token-array column (unlike
     dedup.shingles_of_tokens, which is distinct — repetition stats need
-    occurrence counts).  Pass an ATTRIBUTE (a projected token array), not
-    an expression: HOF lambdas get no common-subexpression elimination, so
-    an embedded split+filter would re-run per gram element (measured 8x on
-    repetition_stats at sf0.1)."""
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    # sequence(0, neg) counts DOWN — gate short docs to an empty array
-    return F.when(F.size(toks) >= n, grams).otherwise(
+    occurrence counts), built by the same ``dedup._word_grams``.  Pass an
+    ATTRIBUTE (a projected token array), not an expression: HOF lambdas
+    get no common-subexpression elimination, so an embedded split+filter
+    would re-run per gram element (measured 8x on repetition_stats at
+    sf0.1)."""
+    return F.when(F.size(toks) >= n, _word_grams(toks, n)).otherwise(
         F.array().cast("array<string>")
     )
 

@@ -1,6 +1,9 @@
 """``queries()`` agree with their ``oracle_sql()`` DuckDB twins on edge
-texts: null, "", whitespace-only, tab/newline edges, doubled spaces and a
-vertical tab."""
+texts: null, "", whitespace-only, tab/newline edges, doubled spaces, a
+vertical tab, a non-breaking space, Cyrillic words and punctuation."""
+
+import sys
+import unicodedata
 
 import duckdb
 import numpy as np
@@ -8,6 +11,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as e
+from deep_ner_spark.textfns import shape_of_string
 from tools.check_oracles import compare
 
 # every twin that splits through _WS_TOKENS, the twins of the text
@@ -28,6 +32,9 @@ _EDGES = (
     lambda s: "\t" + s + "\n",
     lambda s: s.replace(" ", "  "),
     lambda s: s.replace(" ", "\x0b", 2),
+    lambda s: s.replace(" ", "\xa0", 1),
+    lambda s: "Привет " + s + " мир",
+    lambda s: s.replace(" ", ", ", 1) + ".",
 )
 _TEXTS = [
     "\tspark shuffle join",  # 0 and 1: one token set, so simhash distance 0
@@ -104,3 +111,66 @@ def test_token_explode_twin_tokenizes_normalized_text(spark, tmp_path):
     con.close()
     assert compare("token_explode", got, want) == "OK"
     assert "-" in set(got.token) and "—" not in set(got.token)
+
+
+def _events_view(tmp_path, props):
+    """A small events table (every column of the fixture's) whose i-th
+    row has props ``props[i]``, as a DuckDB connection with an ``events``
+    view; the parquet lands in ``tmp_path``."""
+    n = len(props)
+    pd.DataFrame(
+        {
+            "event_id": np.arange(n, dtype="int64"),
+            "ts": pd.Timestamp("2024-01-01")
+            + pd.to_timedelta(np.arange(n) * 7919 % 86400, unit="s"),
+            "user_id": np.arange(n, dtype="int64") % 3,
+            "event_type": [("click", "view", "purchase", "error")[i % 4] for i in range(n)],
+            "value": np.round(np.arange(n) * 1.37 % 50, 2),
+            "props": props,
+        }
+    ).astype({"ts": "datetime64[us]"}).to_parquet(tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    return con
+
+
+@pytest.mark.parametrize(
+    "name", ["flagship_featurize", "predict_entities", "predict_entities_shape_head"]
+)
+def test_events_twins_agree_on_edge_props(spark, tmp_path, name):
+    """The twins over the derived transcripts agree on Unicode and null
+    props: flagship_featurize's twin counts tokens with the Unicode word
+    tokenizer, as ``word_token_count_col`` does (a Cyrillic word is one
+    token, an NBSP separates two), and a null props leaves the text
+    ``event_type``, as ``concat_ws`` does."""
+    props = [
+        ('{"k": %d}' % i, "Привет, мир", "a\xa0b", None, "Ёлка ёж 12", "x,\xa0y")[i % 6]
+        for i in range(40)
+    ]
+    con = _events_view(tmp_path, props)
+    got = e.queries()[name](spark, str(tmp_path)).toPandas()
+    want = con.execute(e.oracle_sql()[name]).df()
+    con.close()
+    assert compare(name, got, want) == "OK"
+    assert len(got) > 0
+
+
+def test_shape_sql_matches_shape_of_string():
+    """``_shape_sql`` classifies every code point Python assigns (not Cn;
+    surrogates have no UTF-8 form) as textfns.shape_of_string does, and
+    collapses runs in whole tokens the same way."""
+    chars = [
+        c
+        for c in map(chr, range(sys.maxunicode + 1))
+        if unicodedata.category(c) not in ("Cn", "Cs")
+    ]
+    tokens = ["", "Ab12-x", "1²3", "ǅa", "x—y", "«q»", "'s", "__a__", "e\u0301x", "Ёлка"]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"x": chars + tokens}))
+    got = con.execute(f"SELECT x, {e._shape_sql('x')} AS shape FROM t").df()
+    con.close()
+    shape = shape_of_string.__wrapped__  # 280k one-off keys: skip the cache
+    bad = [(x, s) for x, s in zip(got["x"], got["shape"]) if s != shape(x)]
+    assert not bad, bad[:10]

@@ -22,6 +22,7 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 from deep_ner_spark import textfns  # noqa: E402
+from deep_ner_spark.compat import CONNECT_ERRS  # noqa: E402
 from deep_ner_spark.textfns import DASH_VARIANTS  # noqa: E402
 
 SESSION_GAP_US = 1800 * 1_000_000
@@ -37,13 +38,14 @@ _WS_TOKENS = f"list_filter(string_split_regex(text, '[{_WS}]+'), x -> x <> '')"
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship the package to executors (idempotent; driver may own the session)."""
+    """Ship the package to executors (idempotent: a second ``addPyFile`` of
+    the same zip only logs a warning; driver may own the session)."""
     from deep_ner_spark.session import package_zip
 
     try:
         spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added
+    except CONNECT_ERRS:
+        pass  # Spark Connect: no SparkContext to ship through
 
 
 
@@ -113,10 +115,7 @@ def _ivf_codebook_cached(
     from deep_ner_spark.operators.similarity import fit_ivf_codebook
 
     emb = _read(spark, sf_dir, "embeddings")
-    cb = fit_ivf_codebook(
-        emb.orderBy("vec_id").select("embedding"), "embedding", n_lists,
-        kmeans_iters, seed=seed,
-    )
+    cb = fit_ivf_codebook(emb, "vec_id", "embedding", n_lists, kmeans_iters, seed=seed)
     path.parent.mkdir(parents=True, exist_ok=True)
     tmp = path.with_name(f"{path.name}.{os.getpid()}.tmp")
     tmp.write_text(json.dumps(cb))
@@ -714,6 +713,25 @@ _DIGITS_NOT_ND = "".join(
 )
 
 
+# the code points whose uppercase is more than one char ('ß' -> 'SS',
+# 'ﬁ' -> 'FI'): Spark's upper (Java full case mapping) agrees with Python
+# on them, DuckDB's upper maps one code point to one
+_UPPER_MULTI = {
+    c: c.upper() for c in map(chr, range(sys.maxunicode + 1)) if len(c.upper()) > 1
+}
+
+
+def _upper_first_sql(expr: str) -> str:
+    """SQL twin of Spark's ``concat(upper(substring(expr, 1, 1)),
+    substring(expr, 2))``: DuckDB ``upper`` on the first char, except on
+    the ``_UPPER_MULTI`` code points.  (Known gap: ~70 single-char mappings
+    differ between DuckDB's and the JVM's Unicode tables, see
+    ENGINEERING_NOTES.)"""
+    first = f"substr({expr}, 1, 1)"
+    whens = " ".join(f"WHEN {_sql_str(c)} THEN {_sql_str(u)}" for c, u in _UPPER_MULTI.items())
+    return f"(CASE {first} {whens} ELSE upper({first}) END) || substr({expr}, 2)"
+
+
 def _contains_sql(chars) -> str:
     """SQL test: the one-char string ``ch`` is one of ``chars``."""
     return f"contains({_sql_str(''.join(sorted(chars)))}, ch)"
@@ -792,7 +810,7 @@ def q_token_explode(spark, sf_dir):
     WITH toks AS (
       SELECT DISTINCT unnest({_WS_TOKENS}) AS token
       FROM documents),
-    dec AS (SELECT token, upper(substr(token, 1, 1)) || substr(token, 2) || '-12' AS decorated
+    dec AS (SELECT token, {_upper_first_sql("token")} || '-12' AS decorated
             FROM toks)
     SELECT token, {_shape_sql("decorated")} AS shape
     FROM dec
@@ -820,7 +838,7 @@ def q_shape_strings(spark, sf_dir):
       SELECT doc_id, unnest({_WS_TOKENS}) AS token
       FROM documents),
     mixed AS (
-      SELECT {_shape_sql("upper(substr(token, 1, 1)) || substr(token, 2)")} AS shape
+      SELECT {_shape_sql(_upper_first_sql("token"))} AS shape
       FROM toks)
     SELECT shape, count(*) AS cnt FROM mixed
     GROUP BY shape HAVING count(*) >= 3 ORDER BY shape

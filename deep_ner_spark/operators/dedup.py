@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from deep_ner_spark.compat import CONNECT_ERRS, local_checkpoint
 from deep_ner_spark.functions.text import tokens_col
+from deep_ner_spark.obs import named
 
 # past this many candidate documents the verify joins shuffle instead of
 # broadcasting the per-doc shingle-id arrays (~0.5 GB at web-doc shingle
@@ -118,6 +119,7 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
     ).where(F.col("shingle").isNotNull())
 
 
+@named("dedup.jaccard")
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -291,6 +293,7 @@ def jaccard_pairs(
     return out.select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard")
 
 
+@named("dedup.cc")
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,

@@ -32,8 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deep_ner_spark import textfns
+from deep_ner_spark.obs import named
 
 
+@named("features.fit")
 def fit_shape_vocab_from_text(
     turns: DataFrame, min_freq: int = 3, text_col: str = "text"
 ) -> Tuple[str, ...]:
@@ -90,6 +92,7 @@ def fit_shape_vocab_from_text(
     return tuple(sorted(r["shape"] for r in rows))
 
 
+@named("features.classes")
 def fit_classes_list(entity_spans: DataFrame, ne_col: str = "ne_type") -> Tuple[str, ...]:
     """Sorted distinct entity types (elmo_ner.py:1124-1141,1155)."""
     rows = entity_spans.select(ne_col).distinct().orderBy(ne_col).collect()

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from deep_ner_spark.compat import local_checkpoint
+from deep_ner_spark.obs import named
 
 _LSH_SEED = 42
 # k-means training-sample size, see fit_ivf_codebook
@@ -189,8 +190,10 @@ def lsh_probe_buckets_col(vec: Column, planes, n_probe_buckets: int = 1) -> Colu
     )
 
 
+@named("similarity.ivf_fit")
 def fit_ivf_codebook(
     data: DataFrame,
+    id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_lists: int = 16,
     kmeans_iters: int = 0,
@@ -205,30 +208,30 @@ def fit_ivf_codebook(
     mean via one small aggregation whose output is n_lists x dim rows —
     driver traffic is the codebook itself, nothing corpus-sized.
 
-    ``kmeans_iters=0`` returns the seed codebook (the first ``n_lists``
-    rows).  Pass ``data.orderBy(id)`` to make it the lowest-id vectors:
-    Catalyst plans that orderBy under the limit as TakeOrderedAndProject
-    (per-partition top-k, then a driver merge of n_lists rows; no sort
-    exchange).  Empty lists keep their previous centroid.  Returns a plain
-    list of ``n_lists`` float lists.
+    The seed codebook is the ``n_lists`` lowest-id vectors of the training
+    sample (of ``data`` itself when ``kmeans_iters=0``), read with an
+    ordered limit: Catalyst plans it as TakeOrderedAndProject (per-partition
+    top-k, then a driver merge of n_lists rows), so nothing sorts or
+    range-partitions the corpus.  Empty lists keep their previous centroid.
+    Returns a plain list of ``n_lists`` float lists.
     """
+
+    def seed_codebook(frame: DataFrame) -> list:
+        rows = frame.orderBy(id_col).select(vec_col).limit(n_lists).collect()
+        if len(rows) < n_lists:
+            raise ValueError(f"not enough vectors ({len(rows)}) for {n_lists} lists")
+        return [list(r[0]) for r in rows]
+
     if kmeans_iters == 0:
-        # seed codebook only: a bounded limit() read, no corpus-sized
-        # count() pass (the count is only needed to size the training
-        # sample fraction for Lloyd iterations)
-        cents = [list(r[0]) for r in data.select(vec_col).limit(n_lists).collect()]
-        if len(cents) < n_lists:
-            raise ValueError(f"not enough vectors ({len(cents)}) for {n_lists} lists")
-        return cents
+        # seed codebook only: no corpus-sized count() pass (the count only
+        # sizes the training sample fraction for Lloyd iterations)
+        return seed_codebook(data)
     n_data = data.count()
     frac = min(1.0, IVF_SAMPLE_ROWS / max(n_data, 1))
-    sample = data.select(vec_col) if frac >= 1.0 else data.select(vec_col).sample(
-        frac, seed=seed
-    )
-    sample = local_checkpoint(sample)  # reused every iteration
-    cents = [list(r[0]) for r in sample.limit(n_lists).collect()]
-    if len(cents) < n_lists:
-        raise ValueError(f"not enough vectors ({len(cents)}) for {n_lists} lists")
+    sample = data.select(id_col, vec_col)
+    # checkpointed: every iteration reads it
+    sample = local_checkpoint(sample if frac >= 1.0 else sample.sample(frac, seed=seed))
+    cents = seed_codebook(sample)
     dim = len(cents[0])
     for _ in range(kmeans_iters):
         assign = F.array(
@@ -319,6 +322,7 @@ def ivf_cosine_topk(
     )
 
 
+@named("similarity.near_dup")
 def embedding_near_dup_pairs(
     data: DataFrame,
     dim: int,

@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deep_ner_spark.obs import named
+
 # most sample ids split_assignment / sample_assignment hold on the driver
 # (~hundreds of MB of heap at 10M)
 MAX_DRIVER_SAMPLES = 10_000_000
@@ -58,6 +60,7 @@ def _class_sets(spans: DataFrame, sample_col: str, class_col: str):
     return {r[sample_col]: frozenset(r["classes"]) for r in rows}
 
 
+@named("splitting.split")
 def split_assignment(
     units: DataFrame,
     spans: DataFrame,
@@ -137,6 +140,7 @@ def md5_threshold_hex(test_part: float) -> str:
     return format(int(test_part * 16**12), "012x") + "0" * 20
 
 
+@named("splitting.split_hashed")
 def split_assignment_hashed(
     units: DataFrame,
     spans: DataFrame,
@@ -222,6 +226,7 @@ def split_dataset_df(
     )
 
 
+@named("splitting.sample")
 def sample_assignment(
     units: DataFrame,
     spans: DataFrame,

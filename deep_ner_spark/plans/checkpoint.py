@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deep_ner_spark.obs import named
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
@@ -35,6 +37,7 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+@named("checkpoint.lineage")
 def lineage_metrics(df: DataFrame, checksum_cols: Sequence[str], ts_col: str | None):
     """One-row aggregate: row count, crc32-sum checksum, max watermark.
 
@@ -76,6 +79,7 @@ class CheckpointTable:
         except Exception:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
+    @named("checkpoint.completed_units")
     def completed_units(self, run_id: str) -> set:
         try:
             rows = (
@@ -94,6 +98,7 @@ class CheckpointTable:
         df.coalesce(1).write.mode("append").parquet(self.path)
 
 
+@named("checkpoint.backfill")
 def resumable_backfill(
     spark: SparkSession,
     units: Sequence[str],

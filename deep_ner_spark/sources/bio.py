@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from deep_ner_spark.obs import named
+
 _CLOSING = {")", "}", "]", ">", ".", ",", "?", ":", ";"}
 
 
@@ -75,6 +77,7 @@ _UNIT_SCHEMA = T.StructType(
 )
 
 
+@named("bio.load")
 def load_bio_dataset(
     spark: SparkSession,
     path: str,
@@ -168,6 +171,7 @@ def load_bio_dataset(
     return units.select("sample_id", "text"), spans
 
 
+@named("bio.save")
 def save_bio_predictions(
     spark: SparkSession,
     source_path: str,

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deep_ner_spark.obs import named
+
 
 def parse_ann(ann_text: str, full_text: str, name: str = "") -> Dict[str, List[Tuple[int, int]]]:
     """Parse + validate .ann lines against the text (utils.py:683-714)."""
@@ -152,6 +154,7 @@ _OUT_SCHEMA = T.StructType(
 )
 
 
+@named("brat.load")
 def load_brat_dataset(
     spark: SparkSession, data_dir: str, split_by_paragraphs: bool = True
 ) -> Tuple[DataFrame, DataFrame]:

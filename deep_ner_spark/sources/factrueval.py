@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from deep_ner_spark.obs import named
+
 _BASE = F.regexp_extract(F.input_file_name(), r"([^/]+)\.(tokens|spans|objects|txt)$", 1)
 
 
@@ -44,6 +46,7 @@ def _read_lines(spark: SparkSession, pattern: str) -> DataFrame:
     )
 
 
+@named("factrueval.tokens")
 def load_tokens(spark: SparkSession, src_dir: str) -> DataFrame:
     """Token table: (base_name, token_id, start, end, token, sentence_idx).
 
@@ -210,6 +213,7 @@ def paragraph_bounds(spark: SparkSession, src_dir: str, tokens: DataFrame) -> Da
     return joined.mapInPandas(lambda it: (run(p) for p in it), schema=schema)
 
 
+@named("factrueval.spans")
 def load_spans(spark: SparkSession, src_dir: str, tokens: DataFrame) -> DataFrame:
     """S3: (base_name, span_id, token_id) long form, FK-validated.
 
@@ -265,6 +269,7 @@ def load_spans(spark: SparkSession, src_dir: str, tokens: DataFrame) -> DataFram
     return ids.select("base_name", "span_id", "token_id")
 
 
+@named("factrueval.objects")
 def load_objects(spark: SparkSession, src_dir: str, spans: DataFrame) -> DataFrame:
     """S4: (base_name, object_id, ne_type, span_id) long form.
 
@@ -347,6 +352,7 @@ def factrueval_to_dataset(
     return docs, ents, bounds
 
 
+@named("factrueval.task1_predictions")
 def load_task1_predictions(spark: SparkSession, recognized_dir: str) -> DataFrame:
     """S6 (utils.py:424-495): parse ``.task1`` prediction files.
 
@@ -389,6 +395,7 @@ def load_task1_predictions(spark: SparkSession, recognized_dir: str) -> DataFram
     )
 
 
+@named("factrueval.write_task1")
 def write_task1(
     predictions: DataFrame, out_dir: str
 ) -> None:

@@ -24,6 +24,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from deep_ner_spark.obs import named
+
 
 def _is_catalog_table(location: str) -> bool:
     """Catalog table names have no path separators ('db.tbl'); paths do."""
@@ -105,6 +107,7 @@ def write_table(
         w.parquet(location)
 
 
+@named("table_io.snapshot_id")
 def snapshot_id(spark: SparkSession, location: str) -> str:
     """Stable input-snapshot identifier for lineage records.
 

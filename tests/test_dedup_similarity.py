@@ -226,7 +226,7 @@ def test_cosine_topk_exact_and_lsh_recall(spark):
     want = _numpy_topk(base, query_ids, k)
     assert [want[(7, r)][0] for r in (1, 2, 3)] == [12, 25, 30]
     qs = emb.where(F.col("vec_id") < 10)
-    cb = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=4)
+    cb = fit_ivf_codebook(emb, n_lists=4)
     for name, out in (
         ("cosine_topk", cosine_topk(emb, qs, k=k)),
         ("lsh_cosine_topk", lsh_cosine_topk(emb, qs, 16, k=k, n_planes=0)),
@@ -458,7 +458,7 @@ def test_ivf_cosine_topk(spark):
         pd.DataFrame({"vec_id": range(60), "embedding": [list(map(float, v)) for v in base]})
     )
     q = emb.where(F.col("vec_id") == 7)
-    cb = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=8)
+    cb = fit_ivf_codebook(emb, n_lists=8)
     approx = ivf_cosine_topk(emb, q, cb, k=1, n_probe=2).collect()
     assert approx and approx[0]["neighbor_id"] == 30
     # with n_probe == n_lists the probe is exhaustive -> equals exact top-k
@@ -487,8 +487,8 @@ def test_ivf_kmeans_codebook(spark):
     emb = spark.createDataFrame(
         pd.DataFrame({"vec_id": range(100), "embedding": [list(map(float, v)) for v in base]})
     )
-    cb1 = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=4, kmeans_iters=3)
-    cb2 = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=4, kmeans_iters=3)
+    cb1 = fit_ivf_codebook(emb, n_lists=4, kmeans_iters=3)
+    cb2 = fit_ivf_codebook(emb, n_lists=4, kmeans_iters=3)
     assert cb1 == cb2  # deterministic
     assert len(cb1) == 4 and len(cb1[0]) == 16
 
@@ -499,7 +499,7 @@ def test_ivf_kmeans_codebook(spark):
                for r in ivf_cosine_topk(emb, q, cb1, k=1, n_probe=2).collect()}
     assert refined == exact  # clustered data + refined codebook -> full recall
     # exhaustive probe equals exact top-k regardless of kmeans_iters
-    cb2 = fit_ivf_codebook(emb.orderBy("vec_id").select("embedding"), n_lists=4, kmeans_iters=2)
+    cb2 = fit_ivf_codebook(emb, n_lists=4, kmeans_iters=2)
     full = {(r["query_id"], r["rank"]): r["neighbor_id"]
             for r in ivf_cosine_topk(emb, q, cb2, k=3, n_probe=4).collect()}
     exact3 = {(r["query_id"], r["rank"]): r["neighbor_id"]

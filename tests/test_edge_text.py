@@ -174,3 +174,25 @@ def test_shape_sql_matches_shape_of_string():
     shape = shape_of_string.__wrapped__  # 280k one-off keys: skip the cache
     bad = [(x, s) for x, s in zip(got["x"], got["shape"]) if s != shape(x)]
     assert not bad, bad[:10]
+
+
+def test_shape_twins_uppercase_the_first_char_as_spark_does(spark, tmp_path):
+    """shape_strings and shape_vocab uppercase each token's first char as
+    Spark's ``upper`` does (Java full case mapping), also where that
+    uppercase is more than one char: 'ﬁnd' -> 'FInd', 'ŉa' -> 'ʼNa'."""
+    multi = [c for c in map(chr, range(sys.maxunicode + 1)) if len(c.upper()) > 1]
+    tokens = [c + "x" for c in multi] + ["ﬁnd", "ŉa", "ßx"]
+    texts = [" ".join(tokens[i : i + 8]) for i in range(0, len(tokens), 8)]
+    pd.DataFrame(
+        {"doc_id": np.arange(len(texts), dtype="int64"), "text": texts, "lang": "en"}
+    ).to_parquet(tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    for name in ("shape_strings", "shape_vocab"):
+        got = e.queries()[name](spark, str(tmp_path)).toPandas()
+        assert compare(name, got, con.execute(e.oracle_sql()[name]).df()) == "OK", name
+    con.close()
+    shapes = dict(zip(got["shape"], got["cnt"]))
+    assert shapes.get("Aa", 0) >= 3  # 'FInd', 'FIx', 'SSx', ... all shape Aa

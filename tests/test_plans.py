@@ -106,22 +106,29 @@ def test_cosine_topk_broadcasts_query_side(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
-def executed_plans(spark, description: str, action) -> list:
+def executed_plans(spark, group: str, action) -> list:
     """Physical plans (final, after AQE) of the SQL executions ``action``
-    ran, read from the SQL status store under a unique job description."""
+    ran, read from the SQL status store: those with a job in the unique job
+    group ``group``.  (The group, not the description: the library names
+    its own jobs, so their descriptions are not the caller's.)"""
     sc = spark.sparkContext
-    sc.setJobDescription(description)
+    sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         action()
     finally:
-        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
+    jobs = {str(j) for j in sc.statusTracker().getJobIdsForGroup(group)}
     store = spark._jsparkSession.sharedState().statusStore()
     n = store.executionsCount()
     tail = store.executionsList(max(n - 50, 0), 50)
     runs = [tail.apply(i) for i in range(tail.size())]
-    return [x.physicalPlanDescription() for x in runs if x.description() == description]
+    return [
+        x.physicalPlanDescription()
+        for x in runs
+        if jobs & set(x.jobs().keys().mkString(",").split(","))
+    ]
 
 
 def test_vocab_agg_has_partial_aggregation(tables, spark):
@@ -283,6 +290,31 @@ def test_jaccard_default_uses_prefix_filtering(spark):
         assert any("row_number" in p for p in plans), (
             f"t={t}: prefix ranking missing\n" + "\n".join(p[:500] for p in plans)
         )
+
+
+def test_ivf_fit_never_sorts_the_corpus(spark, tmp_path):
+    """A k-means IVF fit takes its seeds as the lowest ids of the unordered
+    training sample with an ordered limit (TakeOrderedAndProject): no plan
+    it runs has a range-partitioning (sort) exchange."""
+    import numpy as np
+
+    from deep_ner_spark.operators.similarity import fit_ivf_codebook
+
+    vecs = np.random.default_rng(2).standard_normal((40, 8))
+    spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    ).repartition(3).write.parquet(str(tmp_path / "emb"))
+    emb = spark.read.parquet(str(tmp_path / "emb"))
+    # the seed codebook is the lowest-id vectors whatever the file order
+    assert fit_ivf_codebook(emb, n_lists=4) == [list(v) for v in vecs[:4]]
+    plans = executed_plans(
+        spark, "test.ivf_fit_plans", lambda: fit_ivf_codebook(emb, n_lists=4, kmeans_iters=2)
+    )
+    # the count, the seed read and one recentering aggregate per iteration
+    assert len(plans) == 4, plans
+    assert any("TakeOrderedAndProject" in p for p in plans), plans
+    assert not any("rangepartitioning" in p for p in plans), plans
 
 
 def test_chunk_documents_zero_exchange(spark):

@@ -54,8 +54,18 @@ def _us(col) -> "F.Column":
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
 
+# The parquet schemas of the tables the queries read: a read with its
+# schema given runs no schema-inference job.
+_SCHEMAS = {
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+    "value double, props string",
+}
+
+
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _tmpfs_root() -> str:
@@ -1228,11 +1238,15 @@ def q_exact_dup_groups(spark, sf_dir):
 
 def _shingles_sql(n: int) -> str:
     """CTEs ``toks`` and ``sh``: the distinct word n-gram shingles of each
-    document, the twin of dedup.shingles_of_tokens over tokens_col."""
+    document, the twin of dedup.shingles_of_tokens over tokens_col.  Each
+    shingle concatenates its n tokens by index: a list slice per shingle
+    (``array_to_string(t[i:i+n-1], ' ')``) made the twin quadratic in the
+    document's length."""
+    shingle = " || ' ' || ".join(f"t[i + {k}]" for k in range(n))
     return f"""toks AS (SELECT doc_id, {_WS_TOKENS} AS t FROM documents),
     sh AS (SELECT DISTINCT doc_id, shingle FROM (
         SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t) - {n - 1}, 0)),
-               i -> array_to_string(t[i:i+{n - 1}], ' '))) AS shingle
+               i -> {shingle})) AS shingle
         FROM toks))"""
 
 

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 _TAG = "__is_state"
-_SEQ = "__seq"
 
 
 def _prepare(
@@ -116,25 +115,23 @@ def asof_join_salted(
     seq_col: str | None = None,
     state_seq_col: str | None = None,
     n_salts: int = 8,
-    hot_keys: DataFrame | None = None,
     hot_key_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Skew-hardened as-of join: salt only detected heavy keys.
 
     Conversations are Zipfian; salting every key doubles shuffle volume for
     the long tail for no benefit, so we salt only keys whose turn count
-    exceeds ``hot_key_threshold`` (or an explicit ``hot_keys`` frame with the
-    key columns).  Hot-key state rows are replicated ``n_salts`` ways; hot
-    turns are salted by a deterministic hash of their seq/ts so one hot key's
-    window splits into ``n_salts`` independent sorted partitions.
+    exceeds ``hot_key_threshold``.  Hot-key state rows are replicated
+    ``n_salts`` ways; hot turns are salted by a deterministic hash of their
+    seq/ts so one hot key's window splits into ``n_salts`` independent
+    sorted partitions.
     """
-    if hot_keys is None:
-        hot_keys = (
-            turns.groupBy(*key_cols)
-            .count()
-            .where(F.col("count") > hot_key_threshold)
-            .select(*key_cols)
-        )
+    hot_keys = (
+        turns.groupBy(*key_cols)
+        .count()
+        .where(F.col("count") > hot_key_threshold)
+        .select(*key_cols)
+    )
     hot = F.broadcast(hot_keys.withColumn("__hot", F.lit(1)))
 
     salt_src = (

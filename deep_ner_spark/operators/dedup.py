@@ -164,13 +164,9 @@ def jaccard_pairs(
     exchange and ``array_intersect`` re-hashed ~100 strings per pair.  Two
     changes, exact by construction, took it to 7.8s:
 
-    * shingles are dictionary-encoded to dense ints (``row_number`` over
-      the distinct-shingle frame; the bijection makes int-array
-      intersection counts equal string-set intersection counts).  At
-      corpus scale the single-partition id window would not fly — swap in
-      ``monotonically_increasing_id`` over the checkpointed dictionary
-      (injectivity is all that is needed) when the dictionary outgrows one
-      task.
+    * shingles are dictionary-encoded to ints (``monotonically_increasing_id``
+      over the checkpointed distinct-shingle frame; the bijection makes
+      int-array intersection counts equal string-set intersection counts).
     * the per-doc array side is BROADCAST when it has at most
       ``VERIFY_BROADCAST_MAX_DOCS`` rows: candidates then flow through two
       broadcast hash joins with no exchange at all.  Catalyst's own size
@@ -185,11 +181,9 @@ def jaccard_pairs(
     sh = local_checkpoint(doc_shingles(df, id_col, text_col, n))
 
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    # dense-int dictionary: sid monotone in shingle, so ordering by
-    # (df, sid) equals the canonical (df, shingle) rare-first order
-    sids = local_checkpoint(
-        freq.withColumn("sid", F.row_number().over(Window.orderBy("shingle")))
-    )
+    # int dictionary: any injective sid makes (df, sid) a fixed global
+    # rare-first order, which is all the prefix filter needs
+    sids = local_checkpoint(freq.withColumn("sid", F.monotonically_increasing_id()))
     sh_i = sh.join(sids, "shingle").select(id_col, "size", "df", "sid")
 
     w = Window.partitionBy(id_col).orderBy("df", "sid")

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deep_ner_spark.obs import named
+from deep_ner_spark.operators.windows import number_units
+
 _SENT_RE = re.compile(r"[^.!?…]*[.!?…]+(?:\s+|$)|[^.!?…]+$")
 
 
@@ -97,7 +100,7 @@ def divide_unit_by_sentences(
 
 _OUT_SCHEMA = T.StructType(
     [
-        T.StructField("sample_id", T.LongType()),
+        T.StructField("unit_id", T.LongType()),
         T.StructField("sent_idx", T.IntegerType()),
         T.StructField("text", T.StringType()),
         T.StructField("ne_type", T.StringType()),
@@ -107,6 +110,7 @@ _OUT_SCHEMA = T.StructType(
 )
 
 
+@named("segment.divide")
 def divide_units_by_sentences(
     units: DataFrame,
     spans: DataFrame,
@@ -114,8 +118,6 @@ def divide_units_by_sentences(
 ) -> Tuple[DataFrame, DataFrame]:
     """(units, spans) -> sentence-level (units, spans); new sample ids are
     dense in (old sample, sentence) order."""
-    from pyspark.sql.window import Window
-
     def run(key, unit_pdf: pd.DataFrame, span_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(unit_pdf):
             return pd.DataFrame(columns=[f.name for f in _OUT_SCHEMA.fields])
@@ -141,18 +143,9 @@ def divide_units_by_sentences(
         .cogroup(spans.groupBy("sample_id"))
         .applyInPandas(run, schema=_OUT_SCHEMA)
     )
-    new_units = per_sent.select("sample_id", "sent_idx", "text").distinct()
-    w = Window.orderBy("sample_id", "sent_idx")
-    new_units = new_units.withColumn("new_sample_id", F.row_number().over(w) - 1)
-    new_spans = (
-        per_sent.where(F.col("ne_type").isNotNull())
-        .join(new_units.select("sample_id", "sent_idx", "new_sample_id"),
-              ["sample_id", "sent_idx"])
-        .select(
-            F.col("new_sample_id").alias("sample_id"), "ne_type", "start", "end"
-        )
+    new_units, new_spans = number_units(
+        per_sent.select("unit_id", "sent_idx", "text").distinct(),
+        per_sent.where(F.col("ne_type").isNotNull()),
+        ["unit_id", "sent_idx"],
     )
-    return (
-        new_units.select(F.col("new_sample_id").alias("sample_id"), "text"),
-        new_spans,
-    )
+    return new_units.select("sample_id", "text"), new_spans

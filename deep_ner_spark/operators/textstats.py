@@ -330,6 +330,7 @@ def mixture_weights(
         F.count("*").alias("n_docs"),
         F.sum(token_count_col(F.col(text_col)).cast("long")).alias("n_tokens"),
     )
+    # global window kept on purpose: it runs over g, one row per group
     w = Window.partitionBy()
     if target is None:
         weight = (F.sum("n_tokens").over(w) / F.col("n_tokens")) / F.count(
@@ -375,5 +376,7 @@ def term_frequencies(
         .agg(F.count("*").alias("cnt"))
         .where(F.col("cnt") >= min_count)
     )
+    # global window kept on purpose: a rank over the min_count-filtered
+    # vocabulary, whose size is bounded by the vocabulary, not the corpus
     w = Window.orderBy(F.col("cnt").desc(), F.col("token").asc())
     return counts.select("token", "cnt", F.row_number().over(w).alias("rank"))

@@ -1,9 +1,9 @@
 """Windowed / ordered operators (SURVEY §2.5 W1-W8, §2.4 A4).
 
 All pure Window specs — no UDFs, fully codegen'd JVM execution.  Each
-operator shuffles at most once (the window's hash partition on its key); a
-chain of operators over the same (key, order) reuses one exchange because
-Catalyst collapses compatible window specs into a single Window node.
+per-key operator shuffles once (the window's hash partition on its key); a
+chain over the same (key, order) reuses one exchange because Catalyst
+collapses compatible window specs.  Global order: :func:`running_sum`.
 """
 
 from __future__ import annotations
@@ -13,6 +13,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from deep_ner_spark.compat import local_checkpoint
 
 
 def _w(part: Sequence[str], order: Sequence[str | Column]):
@@ -137,6 +139,44 @@ def with_row_index(
     return df.withColumn(
         out_col, F.row_number().over(_w(key_cols, list(order_cols))) - 1
     )
+
+
+def running_sum(
+    df: DataFrame, order_cols: Sequence[str], value: str | Column, out_col: str
+) -> DataFrame:
+    """Running sum of ``value`` in global ``order_cols`` order without a
+    single-partition exchange (``RDD.zipWithIndex``'s scheme): range-
+    partition, collect one total per partition, prefix-sum the totals on
+    the driver, add each partition's offset to its own running sum.  The
+    checkpoint makes the totals and the sums read the same rows.  Exact
+    when the order columns are unique."""
+    tagged = local_checkpoint(
+        df.repartitionByRange(*order_cols).withColumn("__pid", F.spark_partition_id())
+    )
+    totals = dict(tagged.groupBy("__pid").agg(F.sum(value)).collect())
+    offsets, acc = [], 0
+    for pid in sorted(totals):
+        offsets += [F.lit(pid), F.lit(acc)]
+        acc += totals[pid]
+    offset = F.create_map(*offsets)[F.col("__pid")] if offsets else F.lit(0)
+    w = _w(["__pid"], list(order_cols)).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return tagged.withColumn(out_col, F.sum(value).over(w) + offset).drop("__pid")
+
+
+def number_units(
+    units: DataFrame, spans: DataFrame, key_cols: Sequence[str]
+) -> tuple[DataFrame, DataFrame]:
+    """(units + dense 0-based ``sample_id`` in key order, spans
+    ``(sample_id, ne_type, start, end)``) from ``(keys..., text)`` units and
+    ``(keys..., ne_type, start, end)`` spans: the reference loaders' list
+    positions."""
+    numbered = running_sum(units, key_cols, F.lit(1), "sample_id").withColumn(
+        "sample_id", F.col("sample_id") - 1
+    )
+    rekeyed = spans.join(numbered.select(*key_cols, "sample_id"), list(key_cols))
+    return numbered, rekeyed.select("sample_id", "ne_type", "start", "end")
 
 
 def bio_encode_window(

@@ -7,9 +7,9 @@ reference's punctuation-aware detokenizer (closing punctuation attaches
 without a space, ``%`` attaches after a digit, ``'`` doubles up) and
 derives entity char spans from the B-/I- runs.
 
-Spark shape: ``spark.read.text`` + line-order window -> gap-based unit
-grouping (cumulative boundary sum = sessionize over line numbers, the W4
-pattern at char scale) -> per-unit ``applyInPandas`` detokenization (W7 is
+Spark shape: ``spark.read.text`` -> gap-based unit grouping (a global
+running sum of the boundary flag over line numbers, the W4 pattern at char
+scale) -> per-unit ``applyInPandas`` detokenization (W7 is
 order-dependent *within* a unit — it stays inside one group call, units
 parallelize freely).
 """
@@ -22,9 +22,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from deep_ner_spark.obs import named
+from deep_ner_spark.operators.windows import number_units, running_sum
 
 _CLOSING = {")", "}", "]", ">", ".", ",", "?", ":", ";"}
 
@@ -98,7 +98,6 @@ def load_bio_dataset(
     lines = spark.read.text(path).withColumn(
         "line_no", F.monotonically_increasing_id()
     )
-    w = Window.orderBy("line_no")
     parsed = lines.select(
         "line_no",
         F.trim(F.col("value")).alias("line"),
@@ -133,16 +132,9 @@ def load_bio_dataset(
         boundary = F.col("token").isin(list(seps))
     else:
         boundary = F.length("line") == 0
-    grouped = parsed.withColumn(
-        "unit_id",
-        F.sum(boundary.cast("int")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    ).where(
-        (F.length("line") > 0)
-        & ~F.col("token").isin(list(seps) if seps else ["\u0000_none_"])
-        & ~F.col("token").isin(list(stops) if stops else ["\u0000_none_"])
-    )
+    grouped = running_sum(
+        parsed, ["line_no"], boundary.cast("int"), "unit_id"
+    ).where((F.length("line") > 0) & ~F.col("token").isin(list(seps | stops)))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("line_no")
@@ -160,13 +152,10 @@ def load_bio_dataset(
         return pd.DataFrame(rows)
 
     per_unit = grouped.groupBy("unit_id").applyInPandas(run, schema=_UNIT_SCHEMA)
-    units = per_unit.select("unit_id", "text").distinct()
-    w_unit = Window.orderBy("unit_id")
-    units = units.withColumn("sample_id", F.row_number().over(w_unit) - 1)
-    spans = (
-        per_unit.where(F.col("ne_type").isNotNull())
-        .join(units.select("unit_id", "sample_id"), "unit_id")
-        .select("sample_id", "ne_type", "start", "end")
+    units, spans = number_units(
+        per_unit.select("unit_id", "text").distinct(),
+        per_unit.where(F.col("ne_type").isNotNull()),
+        ["unit_id"],
     )
     return units.select("sample_id", "text"), spans
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deep_ner_spark.obs import named
+from deep_ner_spark.operators.windows import number_units
 
 
 def parse_ann(ann_text: str, full_text: str, name: str = "") -> Dict[str, List[Tuple[int, int]]]:
@@ -164,7 +165,6 @@ def load_brat_dataset(
     spans: (sample_id, ne_type, start, end).
     """
     import pandas as pd
-    from pyspark.sql.window import Window
 
     base = lambda: F.regexp_extract(F.input_file_name(), r"([^/]+)\.(txt|ann)$", 1)
     txts = (
@@ -197,12 +197,9 @@ def load_brat_dataset(
         return pd.DataFrame(rows, columns=[f.name for f in _OUT_SCHEMA.fields])
 
     per_unit = pairs.mapInPandas(lambda it: (run(p) for p in it), schema=_OUT_SCHEMA)
-    units = per_unit.select("base_name", "unit_idx", "text").distinct()
-    w = Window.orderBy("base_name", "unit_idx")
-    units = units.withColumn("sample_id", F.row_number().over(w) - 1)
-    spans = (
-        per_unit.where(F.col("ne_type").isNotNull())
-        .join(units.select("base_name", "unit_idx", "sample_id"), ["base_name", "unit_idx"])
-        .select("sample_id", "ne_type", "start", "end")
+    units, spans = number_units(
+        per_unit.select("base_name", "unit_idx", "text").distinct(),
+        per_unit.where(F.col("ne_type").isNotNull()),
+        ["base_name", "unit_idx"],
     )
     return units.select("sample_id", "base_name", "unit_idx", "text"), spans

@@ -12,8 +12,10 @@ Spark shape:
   gaps) and paragraph alignment are order-dependent within one document ->
   per-document ``applyInPandas`` (documents parallelize; SURVEY J4 note);
 * spans and objects parse relationally and resolve their FK lists through
-  **validating joins** (SURVEY J2): inner join + an anti-join count that
-  must be zero, the relational form of the reference's existence checks;
+  **validating joins** (SURVEY J2): a left join whose unmatched count must
+  be zero, the relational form of the reference's existence checks;
+* each parsed frame's checks are ONE aggregate of conditional counts (one
+  Spark action), raised in the reference's order;
 * the S5 ETL composes them: object -> union of member tokens -> (min start,
   max end) per object (SURVEY A5/SO2) -> per-document entity map.
 
@@ -68,13 +70,13 @@ def load_tokens(spark: SparkSession, src_dir: str) -> DataFrame:
         "base_name",
         "line_no",
         "sentence_idx",
-        parts.getItem(0).cast("long").alias("token_id"),
-        parts.getItem(1).cast("long").alias("start"),
-        parts.getItem(2).cast("long").alias("len"),
+        parts.getItem(0).try_cast("long").alias("token_id"),
+        parts.getItem(1).try_cast("long").alias("start"),
+        parts.getItem(2).try_cast("long").alias("len"),
         parts.getItem(3).alias("token"),
         F.size(parts).alias("n_fields"),
     )
-    bad = toks.where(
+    bad = (
         (F.col("n_fields") != 4)
         | F.col("token_id").isNull()
         | (F.col("token_id") < 0)
@@ -84,11 +86,13 @@ def load_tokens(spark: SparkSession, src_dir: str) -> DataFrame:
         | (F.col("len") < 0)
         | (F.length("token") != F.col("len"))
     )
-    if bad.count() > 0:
-        row = bad.first()
+    n_bad, n_dup = toks.agg(
+        F.count_if(bad), F.count("*") - F.count_distinct("base_name", "token_id")
+    ).first()
+    if n_bad:
+        row = toks.where(bad).first()
         raise ValueError(f"Invalid .tokens line for {row['base_name']}: id={row['token_id']}")
-    dup = toks.groupBy("base_name", "token_id").count().where(F.col("count") > 1)
-    if dup.count() > 0:
+    if n_dup:
         raise ValueError("Duplicate token ids in .tokens input")
     return toks.select(
         "base_name",
@@ -115,13 +119,8 @@ def reconstructed_text(tokens: DataFrame) -> DataFrame:
     aggregation per document.
     """
     w = Window.partitionBy("base_name").orderBy("start", "token_id")
-    prev_end = F.coalesce(F.lag("end").over(w), F.lit(0))
-    pieces = tokens.withColumn(
-        "piece",
-        F.concat(F.expr("repeat(' ', CAST(start - coalesce(lag(end) over "
-                        "(partition by base_name order by start, token_id), 0) AS INT))"),
-                 F.col("token")),
-    )
+    gap = (F.col("start") - F.coalesce(F.lag("end").over(w), F.lit(0))).cast("int")
+    pieces = tokens.withColumn("piece", F.concat(F.repeat(F.lit(" "), gap), F.col("token")))
     return pieces.groupBy("base_name").agg(
         F.concat_ws(
             "", F.transform(F.array_sort(F.collect_list(F.struct("start", "token_id", "piece"))),
@@ -219,8 +218,8 @@ def load_spans(spark: SparkSession, src_dir: str, tokens: DataFrame) -> DataFram
 
     Line format: ``span_id type start len token_id n # id1..idn text1..``;
     first occurrence of a span_id wins (utils.py:199).  The reference's
-    per-id existence check becomes a validating join: anti-join against the
-    token table must be empty.
+    per-id existence check becomes a validating join: no id may miss the
+    token table.
     """
     lines = _read_lines(spark, f"{src_dir}/*.spans").where(F.length("line") > 0)
     parts = F.split("line", r"\s+")
@@ -228,12 +227,12 @@ def load_spans(spark: SparkSession, src_dir: str, tokens: DataFrame) -> DataFram
     parsed = lines.select(
         "base_name",
         "line_no",
-        parts.getItem(0).cast("long").alias("span_id"),
+        parts.getItem(0).try_cast("long").alias("span_id"),
         parts.alias("parts"),
         hash_idx.alias("hash_idx"),
         F.size(parts).alias("n_fields"),
     )
-    bad = parsed.where(
+    bad = (
         (F.col("n_fields") < 9)
         | F.col("span_id").isNull()
         | (F.col("span_id") < 0)
@@ -241,8 +240,8 @@ def load_spans(spark: SparkSession, src_dir: str, tokens: DataFrame) -> DataFram
         | (((F.col("n_fields") - F.col("hash_idx")) % 2) != 0)
         | ((F.col("n_fields") - F.col("hash_idx")) < 2)
     )
-    if bad.count() > 0:
-        raise ValueError(f"Invalid .spans line: {bad.first()['base_name']}")
+    if parsed.agg(F.count_if(bad)).first()[0]:
+        raise ValueError(f"Invalid .spans line: {parsed.where(bad).first()['base_name']}")
     # first occurrence per span_id wins
     w = Window.partitionBy("base_name", "span_id").orderBy("line_no")
     first = parsed.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
@@ -253,18 +252,25 @@ def load_spans(spark: SparkSession, src_dir: str, tokens: DataFrame) -> DataFram
         F.explode(
             F.slice(F.col("parts"), F.col("hash_idx") + 1, n_ids)
         ).alias("token_id_str"),
-    ).withColumn("token_id", F.col("token_id_str").cast("long"))
-    if ids.where(F.col("token_id").isNull() | (F.col("token_id") < 0)).count() > 0:
-        raise ValueError("Non-numeric token id in .spans")
-    # validating join (J2): every referenced token must exist
-    missing = ids.join(
-        tokens.select("base_name", "token_id"), ["base_name", "token_id"], "left_anti"
+    ).withColumn("token_id", F.col("token_id_str").try_cast("long"))
+    # validating join (J2): every referenced token must exist.  Token ids
+    # are unique (load_tokens), so the left join keeps ids one for one.
+    checked = ids.join(
+        tokens.select("base_name", "token_id", F.lit(True).alias("known")),
+        ["base_name", "token_id"],
+        "left",
     )
-    if missing.count() > 0:
-        r = missing.first()
+    n_bad, n_unknown, n_dup = checked.agg(
+        F.count_if(F.col("token_id").isNull() | (F.col("token_id") < 0)),
+        F.count_if(F.col("known").isNull()),
+        F.count("*") - F.count_distinct("base_name", "span_id", "token_id"),
+    ).first()
+    if n_bad:
+        raise ValueError("Non-numeric token id in .spans")
+    if n_unknown:
+        r = checked.where(F.col("known").isNull()).first()
         raise ValueError(f"Span references unknown token {r['token_id']} in {r['base_name']}")
-    dup = ids.groupBy("base_name", "span_id", "token_id").count().where(F.col("count") > 1)
-    if dup.count() > 0:
+    if n_dup:
         raise ValueError("Duplicate token id inside one span")
     return ids.select("base_name", "span_id", "token_id")
 
@@ -275,49 +281,51 @@ def load_objects(spark: SparkSession, src_dir: str, spans: DataFrame) -> DataFra
 
     Types outside {PERSON, LOCATION, ORG, LOCORG} are skipped (not errors);
     LOCORG remaps to LOCATION (utils.py:257-258).  Span FKs validate via
-    anti-join, duplicate object ids raise.
+    left join, duplicate object ids raise.
     """
     lines = _read_lines(spark, f"{src_dir}/*.objects").where(F.length("line") > 0)
     parts = F.split("line", r"\s+")
     parsed = lines.select(
         "base_name",
         "line_no",
-        parts.getItem(0).cast("long").alias("object_id"),
+        parts.getItem(0).try_cast("long").alias("object_id"),
         F.upper(parts.getItem(1)).alias("raw_type"),
         parts.alias("parts"),
         F.array_position(parts, "#").alias("hash_idx"),
         F.size(parts).alias("n_fields"),
     )
-    bad = parsed.where(
-        (F.col("n_fields") < 5) | F.col("object_id").isNull() | (F.col("object_id") < 0)
-    )
-    if bad.count() > 0:
+    known_type = F.col("raw_type").isin("PERSON", "LOCATION", "ORG", "LOCORG")
+    n_bad, n_dup, n_early = parsed.agg(
+        F.count_if(
+            (F.col("n_fields") < 5) | F.col("object_id").isNull() | (F.col("object_id") < 0)
+        ),
+        F.count("*") - F.count_distinct("base_name", "object_id"),
+        F.count_if(known_type & (F.col("hash_idx") < 3)),
+    ).first()
+    if n_bad:
         raise ValueError("Invalid .objects line")
-    dup = parsed.groupBy("base_name", "object_id").count().where(F.col("count") > 1)
-    if dup.count() > 0:
+    if n_dup:
         raise ValueError("Duplicate object id in .objects")
-    known = parsed.where(
-        F.col("raw_type").isin("PERSON", "LOCATION", "ORG", "LOCORG")
-    ).withColumn(
+    if n_early:
+        raise ValueError("Invalid .objects line: '#' too early")
+    known = parsed.where(known_type).withColumn(
         "ne_type",
         F.when(F.col("raw_type") == "LOCORG", "LOCATION").otherwise(F.col("raw_type")),
     )
-    if known.where(F.col("hash_idx") < 3).count() > 0:
-        raise ValueError("Invalid .objects line: '#' too early")
     span_ids = known.select(
         "base_name",
         "object_id",
         "ne_type",
         F.explode(F.slice(F.col("parts"), 3, (F.col("hash_idx") - 3).cast("int"))).alias("span_id_str"),
-    ).withColumn("span_id", F.col("span_id_str").cast("long"))
-    if span_ids.where(F.col("span_id").isNull() | (F.col("span_id") < 0)).count() > 0:
+    ).withColumn("span_id", F.col("span_id_str").try_cast("long"))
+    known_spans = spans.select("base_name", "span_id", F.lit(True).alias("known")).distinct()
+    n_bad, n_unknown = span_ids.join(known_spans, ["base_name", "span_id"], "left").agg(
+        F.count_if(F.col("span_id").isNull() | (F.col("span_id") < 0)),
+        F.count_if(F.col("known").isNull()),
+    ).first()
+    if n_bad:
         raise ValueError("Non-numeric span id in .objects")
-    missing = span_ids.join(
-        spans.select("base_name", "span_id").distinct(),
-        ["base_name", "span_id"],
-        "left_anti",
-    )
-    if missing.count() > 0:
+    if n_unknown:
         raise ValueError("Object references unknown span")
     return span_ids.select("base_name", "object_id", "ne_type", "span_id")
 
@@ -369,11 +377,11 @@ def load_task1_predictions(spark: SparkSession, recognized_dir: str) -> DataFram
     parsed = lines.select(
         "base_name",
         F.upper(parts.getItem(0)).alias("t"),
-        parts.getItem(1).cast("long").alias("start"),
-        parts.getItem(2).cast("long").alias("len"),
+        parts.getItem(1).try_cast("long").alias("start"),
+        parts.getItem(2).try_cast("long").alias("len"),
         F.size(parts).alias("n_fields"),
     )
-    bad = parsed.where(
+    bad = (
         (F.col("n_fields") != 3)
         | ~F.col("t").isin("PER", "LOC", "ORG")
         | F.col("start").isNull()
@@ -381,8 +389,8 @@ def load_task1_predictions(spark: SparkSession, recognized_dir: str) -> DataFram
         | F.col("len").isNull()
         | (F.col("len") < 0)
     )
-    if bad.count() > 0:
-        r = bad.first()
+    if parsed.agg(F.count_if(bad)).first()[0]:
+        r = parsed.where(bad).first()
         raise ValueError(f"Invalid .task1 line in {r['base_name']}")
     return parsed.select(
         "base_name",

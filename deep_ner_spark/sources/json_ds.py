@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from deep_ner_spark.obs import named
+from deep_ner_spark.operators.windows import number_units
+
 JSON_SCHEMA = T.StructType(
     [
         T.StructField("text", T.StringType()),
@@ -41,6 +44,7 @@ JSON_SCHEMA = T.StructType(
 )
 
 
+@named("json.load")
 def load_json_dataset(
     spark: SparkSession, path: str
 ) -> Tuple[DataFrame, DataFrame]:
@@ -73,41 +77,33 @@ def load_json_dataset(
         .json(path)
         .withColumn("doc_id", F.monotonically_increasing_id())
     )
-    # stabilize doc ids to dense 0..n-1 in file order
-    w_doc = Window.orderBy("doc_id")
-    raw = raw.withColumn("doc_idx", F.row_number().over(w_doc) - 1)
 
-    has_paras = raw.where(F.col("paragraph_bounds").isNotNull())
-    no_paras = raw.where(F.col("paragraph_bounds").isNull())
-
-    # --- documents without paragraph bounds: unit == document
-    units_flat = no_paras.select(
-        "doc_idx", F.lit(0).alias("para_idx"), F.col("text").alias("unit_text")
-    )
-    spans_flat = no_paras.select(
-        "doc_idx",
-        F.lit(0).alias("para_idx"),
-        F.explode_outer("named_entities").alias("ne_type", "bounds"),
-    ).select(
-        "doc_idx",
-        "para_idx",
-        "ne_type",
-        F.explode("bounds").alias("b"),
-    ).select(
-        "doc_idx",
-        "para_idx",
+    flat = F.col("paragraph_bounds").isNull()
+    ents = raw.select(
+        "doc_id", flat.alias("flat"), F.explode("named_entities").alias("ne_type", "bounds")
+    ).select("doc_id", "flat", "ne_type", F.explode("bounds").alias("b")).select(
+        "doc_id",
+        "flat",
         "ne_type",
         F.col("b").getItem(0).alias("start"),
         F.col("b").getItem(1).alias("end"),
     )
 
+    # --- documents without paragraph bounds: unit == document
+    units_flat = raw.where(flat).select(
+        "doc_id", F.lit(0).alias("para_idx"), F.col("text").alias("unit_text")
+    )
+    spans_flat = ents.where("flat").select(
+        "doc_id", F.lit(0).alias("para_idx"), "ne_type", "start", "end"
+    )
+
     # --- documents with paragraph bounds: explode + rebase
-    paras = has_paras.select(
-        "doc_idx",
+    paras = raw.where(~flat).select(
+        "doc_id",
         "text",
         F.posexplode("paragraph_bounds").alias("para_idx", "pb"),
     ).select(
-        "doc_idx",
+        "doc_id",
         "para_idx",
         F.col("pb").getItem(0).alias("p0"),
         F.col("pb").getItem(1).alias("p1"),
@@ -116,42 +112,31 @@ def load_json_dataset(
             (F.col("pb").getItem(1) - F.col("pb").getItem(0)).cast("int"),
         ).alias("unit_text"),
     )
-    ents = has_paras.select(
-        "doc_idx", F.explode("named_entities").alias("ne_type", "bounds")
-    ).select("doc_idx", "ne_type", F.explode("bounds").alias("b")).select(
-        "doc_idx",
-        "ne_type",
-        F.col("b").getItem(0).alias("start"),
-        F.col("b").getItem(1).alias("end"),
-    )
     # paragraph-membership predicate (utils.py:498-505): start in [p0,p1),
     # end <= p1; first matching paragraph (paragraphs are disjoint/sorted in
     # valid data, so the join is unique)
-    assigned = ents.join(paras.select("doc_idx", "para_idx", "p0", "p1"), "doc_idx").where(
+    assigned = ents.where(~F.col("flat")).join(
+        paras.select("doc_id", "para_idx", "p0", "p1"), "doc_id"
+    ).where(
         (F.col("start") >= F.col("p0"))
         & (F.col("start") < F.col("p1"))
         & (F.col("end") > F.col("start"))
         & (F.col("end") <= F.col("p1"))
     )
     spans_paras = assigned.select(
-        "doc_idx",
+        "doc_id",
         "para_idx",
         "ne_type",
         (F.col("start") - F.col("p0")).alias("start"),
         (F.col("end") - F.col("p0")).alias("end"),
     )
 
-    units_paras = paras.select("doc_idx", "para_idx", "unit_text")
+    units_paras = paras.select("doc_id", "para_idx", "unit_text")
     units = units_flat.unionByName(units_paras)
-    spans = spans_flat.where(F.col("ne_type").isNotNull()).unionByName(spans_paras)
+    spans = spans_flat.unionByName(spans_paras)
 
     # dense sample ids in (doc, paragraph) order
-    w_unit = Window.orderBy("doc_idx", "para_idx")
-    units = units.withColumn("sample_id", F.row_number().over(w_unit) - 1)
-    spans = spans.join(
-        units.select("doc_idx", "para_idx", "sample_id"), ["doc_idx", "para_idx"]
-    )
-
+    units, spans = number_units(units, spans, ["doc_id", "para_idx"])
     merged = merge_spans_reference(spans)
     return (
         units.select("sample_id", F.col("unit_text").alias("text")),

@@ -525,11 +525,13 @@ def test_ivf_codebook_cache_misses_on_fixture_regeneration(
 
     def write_emb(scale):
         vecs = (rng.standard_normal((40, 8)) * scale).astype("float32")
+        # the embeddings table's own column types (__spark_entry__._SCHEMAS)
         df = spark.createDataFrame(
             pd.DataFrame({
                 "vec_id": range(40),
                 "embedding": [list(map(float, v)) for v in vecs],
-            })
+            }),
+            "vec_id long, embedding array<float>",
         )
         df.coalesce(1).write.mode("overwrite").parquet(
             str(tmp_path / "embeddings.parquet")

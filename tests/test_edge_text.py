@@ -196,3 +196,30 @@ def test_shape_twins_uppercase_the_first_char_as_spark_does(spark, tmp_path):
     con.close()
     shapes = dict(zip(got["shape"], got["cnt"]))
     assert shapes.get("Aa", 0) >= 3  # 'FInd', 'FIx', 'SSx', ... all shape Aa
+
+
+@pytest.mark.parametrize("n", [3, 4])
+def test_shingles_sql_matches_python(n):
+    """The shingle CTE of six twins gives Python's shingle sets on texts of
+    0, 1, n-1 and n tokens, a null text and one ~20k-token text (linear in
+    the text's length, so the long one takes milliseconds)."""
+    import re
+
+    words = [f"w{i % 997}" for i in range(20_000)]
+    texts = ["", "one", " ".join(words[: n - 1]), "\t".join(words[:n]), None,
+             " ".join(words) + "\n"]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
+    got = {}
+    for doc_id, shingle in con.execute(
+        f"WITH {e._shingles_sql(n)} SELECT doc_id, shingle FROM sh"
+    ).fetchall():
+        got.setdefault(doc_id, set()).add(shingle)
+    want = {}
+    for doc_id, text in enumerate(texts):
+        toks = [t for t in re.split(r"[\t\n\x0b\f\r ]+", text or "") if t]
+        sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        if sh:
+            want[doc_id] = sh
+    assert got == want
+    assert set(want) == {3, 5}

@@ -380,3 +380,107 @@ def test_repetition_stats_two_exchanges(spark):
     hash_ex = [e for e in exchanges(plan) if e[0] == "hashpartitioning"]
     assert len(hash_ex) == 2, hash_ex
     assert "Join" not in plan.split("== Initial Plan ==")[0], plan
+
+
+def single_partition_exchanges(plan: str) -> list:
+    """Ids of the final tree's ``Exchange SinglePartition`` nodes that move
+    rows, i.e. whose child is not a partial aggregate (a global count's
+    exchange moves one row per task and is fine).  Formatted plans number
+    nodes in post-order, so a unary node's child has the id before it."""
+    tree = plan.split("== Initial Plan ==")[0]
+    blocks = {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=\n\n|\Z)", plan, re.M | re.S)
+    }
+    return [
+        i for i in sorted({int(i) for i in re.findall(r"Exchange \((\d+)\)", tree)})
+        if "Arguments: SinglePartition" in blocks[i]
+        and "[partial_" not in blocks.get(i - 1, "")
+    ]
+
+
+@pytest.mark.parametrize("name", ["bio", "brat", "json", "segment", "jaccard"])
+def test_no_single_partition_window_in_loaders_or_jaccard(spark, tmp_path, name):
+    """Dense numbering and the shingle dictionary run without a global
+    ``Window.orderBy``: no plan they execute funnels rows through one task."""
+    import json
+
+    import pandas as pd
+    from test_loader_pins import BIO_TEXT, BRAT_DOCS, JSON_DOCS
+
+    from deep_ner_spark.operators.dedup import jaccard_pairs
+    from deep_ner_spark.operators.segment import divide_units_by_sentences
+    from deep_ner_spark.sources.bio import load_bio_dataset
+    from deep_ner_spark.sources.brat import load_brat_dataset
+    from deep_ner_spark.sources.json_ds import load_json_dataset
+
+    (tmp_path / "syn.bio").write_text(BIO_TEXT)
+    (tmp_path / "syn.json").write_text(json.dumps(JSON_DOCS))
+    brat = tmp_path / "brat"
+    brat.mkdir()
+    for base, (text, ann) in BRAT_DOCS.items():
+        (brat / f"{base}.txt").write_text(text, encoding="utf-8")
+        (brat / f"{base}.ann").write_text(ann, encoding="utf-8")
+    units = spark.createDataFrame(
+        pd.DataFrame({"sample_id": [0, 1], "text": ["A b. C d.", "E f."]})
+    )
+    spans = spark.createDataFrame(
+        pd.DataFrame({"sample_id": [0], "ne_type": ["X"], "start": [0], "end": [1]})
+    )
+    docs = spark.createDataFrame(
+        [(i, "a b c d e f g" if i % 2 else "a b c d e f h") for i in range(6)],
+        ["doc_id", "text"],
+    )
+    runs = {
+        "bio": lambda: load_bio_dataset(spark, str(tmp_path / "syn.bio")),
+        "brat": lambda: load_brat_dataset(spark, str(brat)),
+        "json": lambda: load_json_dataset(spark, str(tmp_path / "syn.json")),
+        "segment": lambda: divide_units_by_sentences(units, spans),
+        "jaccard": lambda: (jaccard_pairs(docs, "doc_id", "text", n=2, threshold=0.5),),
+    }
+    plans = executed_plans(
+        spark, f"test.single_partition.{name}",
+        lambda: [out.collect() for out in runs[name]()],
+    )
+    assert plans
+    for plan in plans:
+        assert single_partition_exchanges(plan) == [], plan
+    # the check sees a global count's exchange and lets it pass
+    if name == "jaccard":
+        assert any("Arguments: SinglePartition" in p for p in plans)
+
+
+def test_factrueval_validation_runs_one_action_per_parsed_frame(spark, tmp_path):
+    """tokens 1, spans 2, objects 2, task1 1 (12 count actions before):
+    each parsed frame's checks are one conditional-count aggregate.
+    Counted as SQL executions (one per action): Spark job ids would also
+    count each adaptive shuffle stage."""
+    from test_loader_pins import FRE_DOC1, FRE_DOC2, write_fre
+
+    from deep_ner_spark.sources.factrueval import (
+        load_objects,
+        load_spans,
+        load_task1_predictions,
+        load_tokens,
+    )
+
+    src = write_fre(tmp_path, book_1=FRE_DOC1, book_2=FRE_DOC2)
+    (tmp_path / "book_1.task1").write_text("per 0 4\nloc 14 8\n")
+    out = {}
+
+    def load(fn, *args):
+        return lambda: out.setdefault(fn.__name__, fn(spark, src, *args))
+
+    counts = {}
+    counts["tokens"] = len(executed_plans(spark, "test.fre.tokens", load(load_tokens)))
+    counts["spans"] = len(
+        executed_plans(spark, "test.fre.spans", load(load_spans, out["load_tokens"]))
+    )
+    counts["objects"] = len(
+        executed_plans(spark, "test.fre.objects", load(load_objects, out["load_spans"]))
+    )
+    counts["task1"] = len(
+        executed_plans(spark, "test.fre.task1", load(load_task1_predictions))
+    )
+    assert counts == {"tokens": 1, "spans": 2, "objects": 2, "task1": 1}
+    assert out["load_objects"].count() == 5

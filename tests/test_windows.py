@@ -13,6 +13,7 @@ from deep_ner_spark.operators.windows import (
     forward_fill,
     lag_lead,
     merge_intervals,
+    running_sum,
     sessionize,
     with_row_index,
 )
@@ -96,6 +97,76 @@ def test_with_row_index(tdf, spark):
     df, t = tdf
     got = with_row_index(df, ["conv_id"], ["turn_idx"], "ridx")
     assert got.where(F.col("ridx") != F.col("turn_idx")).count() == 0
+
+
+@pytest.fixture
+def eight_partitions(spark):
+    """8 shuffle partitions that AQE does not merge back into one."""
+    conf = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def keyed_frame(spark, a):
+    """Rows with unique (a, b) keys in scrambled order and a 0/1 flag."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    pdf = pd.DataFrame(
+        {"a": a, "b": rng.permutation(len(a)), "flag": rng.integers(0, 2, len(a))}
+    )
+    return spark.createDataFrame(pdf).repartition(3)
+
+
+def global_running_sums(df):
+    """(a, b) -> (row_number - 1, running sum of flag) from Spark's own
+    single-partition global window."""
+    from pyspark.sql.window import Window
+
+    w = Window.orderBy("a", "b")
+    return {
+        (r["a"], r["b"]): (r["idx"], r["cum"])
+        for r in df.select(
+            "a", "b",
+            (F.row_number().over(w) - 1).alias("idx"),
+            F.sum("flag").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
+        ).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "a",
+    [
+        [i % 30 for i in range(8980)],
+        # 90% of rows share the first order column's value
+        [0] * 4500 + list(range(1, 501)),
+    ],
+    ids=["spread", "skewed"],
+)
+def test_running_sum_equals_global_window(spark, eight_partitions, a):
+    df = keyed_frame(spark, a)
+    assert df.repartitionByRange("a", "b").select(F.spark_partition_id()).distinct().count() > 1
+    idx = running_sum(df, ["a", "b"], F.lit(1), "idx")
+    cum = running_sum(df, ["a", "b"], "flag", "cum")
+    got_idx = {(r["a"], r["b"]): r["idx"] - 1 for r in idx.collect()}
+    got_cum = {(r["a"], r["b"]): r["cum"] for r in cum.collect()}
+    want = global_running_sums(df)
+    assert len(got_idx) == len(got_cum) == len(a)
+    assert got_idx == {k: v[0] for k, v in want.items()}
+    assert got_cum == {k: v[1] for k, v in want.items()}
+
+
+def test_running_sum_empty_input(spark, eight_partitions):
+    empty = spark.createDataFrame([], "a long, b long, flag int")
+    out = running_sum(empty, ["a", "b"], "flag", "cum")
+    assert out.columns == ["a", "b", "flag", "cum"] and out.collect() == []
 
 
 def test_bio_encode_decode_window_roundtrip(spark):

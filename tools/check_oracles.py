@@ -112,5 +112,10 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
 
 
 if __name__ == "__main__":
-    only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
-    raise SystemExit(1 if main(only=only) else 0)
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("--sf", dest="sf_dir", help="table directory (default: main's)")
+    ap.add_argument("--only", type=lambda s: s.split(","), help="query names, comma-separated")
+    given = {k: v for k, v in vars(ap.parse_args()).items() if v}
+    raise SystemExit(1 if main(**given) else 0)

@@ -37,3 +37,22 @@ def local_checkpoint(frame: DataFrame) -> DataFrame:
         return frame.localCheckpoint(eager=False)
     except CONNECT_ERRS:
         return frame
+
+
+def spread_small_scan(frame: DataFrame) -> DataFrame:
+    """``frame`` round-robin repartitioned to the session's default
+    parallelism when it has fewer partitions than that, else as-is.
+
+    For a scan with fewer splits than cores (one small file is one
+    split), placed on the slim columns right before an expensive
+    per-row projection so that projection runs on every core.  A
+    many-split corpus-scale scan skips the branch.  Sessions without
+    ``.rdd`` (Spark Connect) keep the frame as-is.
+    """
+    try:
+        parallelism = frame.sparkSession.sparkContext.defaultParallelism
+        if frame.rdd.getNumPartitions() < parallelism:
+            return frame.repartition(parallelism)
+    except CONNECT_ERRS:
+        pass
+    return frame

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deep_ner_spark.compat import CONNECT_ERRS, local_checkpoint
+from deep_ner_spark.compat import CONNECT_ERRS, local_checkpoint, spread_small_scan
 from deep_ner_spark.functions.text import tokens_col
 from deep_ner_spark.obs import named
 
@@ -99,16 +99,10 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
       attribute — CollapseProject keeps non-cheap aliases used twice, so
       the array is not inlined into the size expression;
     * a small scan (fewer splits than cores) is repartitioned on the slim
-      (id, text) columns first so the expensive projection parallelizes; a
-      many-split corpus-scale input skips the branch.
+      (id, text) columns first so the expensive projection parallelizes
+      (:func:`~deep_ner_spark.compat.spread_small_scan`).
     """
-    docs = df.select(F.col(id_col), F.col(text_col).alias("__text"))
-    try:  # .rdd/sparkContext are classic-session-only; skip under Connect
-        sc = df.sparkSession.sparkContext
-        if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-            docs = docs.repartition(sc.defaultParallelism)
-    except CONNECT_ERRS:
-        pass
+    docs = spread_small_scan(df.select(F.col(id_col), F.col(text_col).alias("__text")))
     base = docs.select(
         F.col(id_col), tokens_col(F.col("__text")).alias("__toks")
     ).select(
@@ -310,20 +304,28 @@ def connected_components(
     ``lab <- lab(lab)``, one self-join.  The jump speeds propagation but
     does not bound the rounds by log(diameter): when ids are not ordered
     along the graph, the rounds grow with the diameter.  Replayed in NumPy
-    over 30 shuffles each, paths need up to 24 rounds at 30 nodes, 34 at
-    40, 56 at 60 and 62 at 100 (hence ``CC_MAX_ROUNDS`` = 100),
-    and 10k-node random trees need 15-20; near-dup graphs are mostly
-    short-diameter, where 3-5 rounds is typical.  No step enumerates
+    over 30 shuffles each, paths need up to 23 rounds at 30 nodes, 33 at
+    40, 55 at 60 and 61 at 100 (hence ``CC_MAX_ROUNDS`` = 100), and
+    10k-node random recursive trees 13-30; near-dup graphs are mostly
+    short-diameter, where 2-4 rounds is typical.  No step enumerates
     a component's cross product, and every shuffle is keyed on node ids or
     label values — skewed (giant) components cost nothing extra because a
     component is never collected onto one task.
 
-    Convergence detection is the monotone label-sum invariant: labels only
-    ever decrease, so ``sum(lab)`` strictly decreases until fixpoint — one
-    tiny aggregate per round (decimal(38,0), overflow-safe at any id
-    range), no change-count join.  If ``CC_MAX_ROUNDS`` rounds pass without
-    the sum settling, the call raises ``RuntimeError`` rather than return
-    split clusters.
+    Convergence detection is edge agreement: the round's one action counts
+    the edges whose two endpoints carry different labels, and the loop
+    stops at 0.  That is exact, because two invariants hold in every round:
+    a label is always the id of a node in the node's own component (a
+    neighbor's label or the label of its label's node), and it is never
+    larger than the node's own id (it starts there and only takes minima).
+    When labels agree on every edge, all nodes of a component carry one
+    label L; L is an id of that component, so L >= its minimum id, and L
+    is at most every node's own id, so L <= its minimum id.  Hence L is
+    the component minimum, with no confirming extra round.  An edge to an
+    id absent from ``nodes`` joins no label and is ignored, as by the
+    propagation itself.  If ``CC_MAX_ROUNDS`` rounds pass with edges still
+    disagreeing, the call raises ``RuntimeError`` rather than return split
+    clusters.
 
     Each round checkpoints the new label frame so lineage does not grow
     across rounds, and then rebuilds it as a fresh relation over the
@@ -333,11 +335,11 @@ def connected_components(
     checkpoint call took 0.3-0.5 s through round 15, then 1.2, 1.9, 4.3,
     11.4 and 27.4 s at rounds 16-20 (``local[4]``).
     """
-    # the label-sum convergence scalar below needs integral node ids: with a
-    # string id column (ANSI off) the decimal cast yields NULL per row, the
-    # sum is NULL every round, and None == None would break the loop after
-    # one iteration returning silently unconverged clusters — fail fast
-    # instead (hash string ids to long, e.g. xxhash64, before calling)
+    # node and pair ids share one integral label domain: every round joins
+    # pair ids against node ids, and a string id on one side meets an
+    # integral one through an implicit cast that turns a non-numeric string
+    # into NULL (ANSI off), silently dropping its edges — fail fast instead
+    # (hash string ids to long, e.g. xxhash64, before calling)
     from pyspark.sql import types as T
 
     integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType)
@@ -347,10 +349,7 @@ def connected_components(
             f"connected_components needs an integral id column; {id_col!r} "
             f"is {id_type} — hash it to long (e.g. F.xxhash64) first"
         )
-    # the pair columns feed the same label domain: a string-typed edge side
-    # with integral nodes would equally NULL the label-sum convergence
-    # scalar after the first neighbor-min join, silently stopping after one
-    # iteration — guard both sides, not just the node frame
+    # guard both pair sides, not just the node frame
     pair_types = {f.name: f.dataType for f in pairs.schema.fields}
     for side in (id_a, id_b):
         if not isinstance(pair_types.get(side), integral):
@@ -378,16 +377,15 @@ def connected_components(
     labels = nodes.select(
         F.col(id_col).alias("id"), F.col(id_col).alias("lab")
     )
-    prev_sum = None
     for _ in range(CC_MAX_ROUNDS):
         # (1) neighbor-min.  (Round-7 note: a union+groupBy fold of this
         # join+coalesce was tried and is SLOWER — the left join lets AQE
         # broadcast the small nmin side and keep the label frame narrow,
         # while a union forces both branches through a full exchange.  The
-        # convergence scalar below is already fused into this round's
-        # single action via the lazy checkpoint; the residual per-round
-        # cost is AQE stage-materialization job latency, measured ~6
-        # jobs/round at fixture scale.)
+        # edge-agreement count below is fused into this round's single
+        # action via the lazy checkpoint; the residual per-round cost is
+        # AQE stage-materialization job latency, measured ~6 jobs/round at
+        # fixture scale.)
         lab_of = labels.select(
             F.col("id").alias("dst"), F.col("lab").alias("nlab")
         )
@@ -411,16 +409,18 @@ def connected_components(
             F.least(F.col("lab"), F.coalesce("plab", F.col("lab"))).alias("lab"),
         )
         labels = _fresh_relation(local_checkpoint(jumped))
-        cur_sum = labels.agg(
-            F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if cur_sum == prev_sum:
+        src_lab = labels.select(F.col("id").alias("src"), F.col("lab").alias("ls"))
+        dst_lab = labels.select(F.col("id").alias("dst"), F.col("lab").alias("ld"))
+        disagree = (
+            edges.join(src_lab, "src").join(dst_lab, "dst")
+            .where(F.col("ls") != F.col("ld")).count()
+        )
+        if disagree == 0:
             return labels.select(
                 F.col("id").alias(id_col), F.col("lab").alias("cluster_id")
             )
-        prev_sum = cur_sum
     raise RuntimeError(
-        f"connected_components: labels still changing after {CC_MAX_ROUNDS} "
+        f"connected_components: labels still disagree after {CC_MAX_ROUNDS} "
         f"rounds (rounds grow with the pair graph's diameter)"
     )
 

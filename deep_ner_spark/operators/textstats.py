@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deep_ner_spark.compat import spread_small_scan
 from deep_ner_spark.functions.text import tokens_col
 from deep_ner_spark.operators.dedup import _word_grams
 
@@ -212,11 +213,11 @@ def repetition_stats(
     (the tokens are projected once — HOF no-CSE), then two hash aggs keyed
     by (id, n, gram) and id — uniformly distributed keys, partial
     aggregation on both, no per-doc quadratic HOF work, so long documents
-    cost O(len), not O(len^2).
+    cost O(len), not O(len^2).  A small scan is spread over the cores
+    before the tokenize (:func:`~deep_ner_spark.compat.spread_small_scan`).
     """
-    toks = df.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
-    )
+    docs = spread_small_scan(df.select(F.col(id_col), F.col(text_col)))
+    toks = docs.select(F.col(id_col), tokens_col(F.col(text_col)).alias("__toks"))
     both = toks.select(
         id_col,
         F.concat(

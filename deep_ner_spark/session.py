@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# compiled-class cache size: the library's working set (see get_spark)
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def package_zip() -> str:
     """Zip this package for --py-files-style shipping to executors.
@@ -89,6 +92,14 @@ def get_spark(
         # driver, for every frame built.  The cost of turning it off:
         # analysis errors lose that call-site context.  extra_conf wins.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Spark's cache of compiled generated classes holds 100 by
+        # default, fewer than one near-dup job's ~150 distinct classes, so
+        # every warm dup_clusters + SimHash job compiled ~145 classes again
+        # (~40% of its time).  The 59 driver queries at sf0.01 use ~750
+        # distinct classes; with room for 1000, a second pass over them
+        # compiles 13 instead of 914 (local[4]).  A static conf: it takes
+        # effect only when this call starts the JVM.  extra_conf wins.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if master.startswith("local"):
         # Locally the driver JVM runs every task.  G1's adaptive young

@@ -16,7 +16,10 @@ text``) pair.  Reference semantics reproduced by the pure per-document core
 Spark shape: ``wholetext`` reads of both extensions + an inner pair-join on
 base name (anti-join -> missing-pair error), then one ``applyInPandas``
 call per document — documents parallelize, the sequential work never
-crosses a document.
+crosses a document.  Every Spark file source skips a 0-byte file when it
+splits the scan, so the ``.ann`` side starts from the listed file names
+and reads an empty annotation for a file that yields no row: a document
+without entities keeps its units.
 """
 
 from __future__ import annotations
@@ -166,14 +169,18 @@ def load_brat_dataset(
     """
     import pandas as pd
 
-    base = lambda: F.regexp_extract(F.input_file_name(), r"([^/]+)\.(txt|ann)$", 1)
+    base = lambda path: F.regexp_extract(path, r"([^/]+)\.(txt|ann)$", 1)
     txts = (
         spark.read.text(f"{data_dir}/*.txt", wholetext=True)
-        .select(base().alias("base_name"), F.col("value").alias("full_text"))
+        .select(base(F.input_file_name()).alias("base_name"), F.col("value").alias("full_text"))
     )
-    anns = (
-        spark.read.text(f"{data_dir}/*.ann", wholetext=True)
-        .select(base().alias("base_name"), F.col("value").alias("ann_text"))
+    ann_read = spark.read.text(f"{data_dir}/*.ann", wholetext=True)
+    listed = spark.createDataFrame([(p,) for p in ann_read.inputFiles()], "path string")
+    anns = listed.join(
+        ann_read.select(F.input_file_name().alias("path"), "value"), "path", "left"
+    ).select(
+        base(F.col("path")).alias("base_name"),
+        F.coalesce("value", F.lit("")).alias("ann_text"),
     )
     missing = anns.join(txts, "base_name", "left_anti")
     if missing.count() > 0:

@@ -638,7 +638,7 @@ def test_connected_components_vs_union_find(spark, monkeypatch):
     """Hash-min + pointer-jumping CC equals a Python union-find on a graph
     with a chain (forces multi-round propagation), a star, a triangle and
     isolated nodes, and on a 30-node path whose ids are shuffled along it
-    (23 rounds).  With too few rounds it raises instead of returning split
+    (22 rounds).  With too few rounds it raises instead of returning split
     clusters."""
     from deep_ner_spark.operators import dedup
     from deep_ner_spark.operators.dedup import connected_components
@@ -665,15 +665,19 @@ def test_connected_components_vs_union_find(spark, monkeypatch):
     path = list(zip(perm, perm[1:]))
     assert run(range(30), path) == {v: 0 for v in range(30)}
 
+    # an edge to an id absent from `nodes` joins no label: 2 and 3 stay
+    # apart although both touch 99
+    assert run([1, 2, 3], [(1, 2), (2, 99), (3, 99)]) == {1: 1, 2: 1, 3: 3}
+
     monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 3)
     with pytest.raises(RuntimeError, match="after 3 rounds"):
         run(range(30), path)
 
 
 def test_connected_components_rejects_string_ids(spark):
-    """A string id column would NULL the label-sum convergence scalar every
-    round (cast to decimal fails under ANSI-off), silently breaking the
-    loop after one iteration — the operator must fail fast instead."""
+    """String ids would meet integral ones through an implicit cast that
+    NULLs non-numeric strings (ANSI off) and silently drops their edges —
+    the operator must fail fast instead."""
     import pytest
 
     from deep_ner_spark.operators.dedup import connected_components

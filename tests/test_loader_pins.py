@@ -178,6 +178,20 @@ def test_brat_paragraph_units_pinned(spark, brat_dir):
     ]
 
 
+def test_brat_empty_annotation_file_loads_units(spark, brat_dir, tmp_path):
+    """A 0-byte ``.ann`` loads like the one-newline ``.ann`` of
+    ``c_empty``: the document's units, with no spans."""
+    from deep_ner_spark.sources.brat import load_brat_dataset
+
+    (tmp_path / "c_empty.ann").write_bytes(b"")
+    units, spans = load_brat_dataset(spark, brat_dir)
+    assert [tuple(r) for r in units.orderBy("sample_id").collect()][4:] == [
+        (4, "c_empty", 0, "No entities here."),
+        (5, "c_empty", 1, "Second line."),
+    ]
+    assert [r["sample_id"] for r in spans.collect() if r["sample_id"] >= 4] == []
+
+
 def test_brat_missing_text_file_raises(spark, brat_dir, tmp_path):
     from deep_ner_spark.sources.brat import load_brat_dataset
 

@@ -1,10 +1,12 @@
 """Per-stage profile of driver-contract queries by the library's job names.
 
 Each query runs through a ``noop`` sink: one warm-up run, then N timed
-runs.  Prints the min wall time and the jobs of each run, then for the
-fastest run the totals per job name (busy: the union of its stage
-intervals; idle: the gaps inside their span) and one row per stage
-(``deep_ner_spark.obs.stage_report``).  Unnamed jobs carry the query name.
+runs.  Prints the min wall time, the jobs of each run and the classes
+each run compiled (a working set larger than the session's codegen cache
+recompiles on every run), then for the fastest run the totals per job
+name (busy: the union of its stage intervals; idle: the gaps inside
+their span) and one row per stage (``deep_ner_spark.obs.stage_report``).
+Unnamed jobs carry the query name.
 
 Run: python tools/profile_queries.py QUERY [QUERY ...] [--sf DIR] [--reps N]
 """
@@ -69,6 +71,8 @@ def main(argv=None) -> None:
     args = ap.parse_args(argv)
     spark = get_spark("profile", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     def run(query):
         wall = []
@@ -78,16 +82,19 @@ def main(argv=None) -> None:
             qs[query](spark, args.sf).write.format("noop").mode("overwrite").save()
             wall.append(time.perf_counter() - t0)
 
+        before = compiles.getCount()
         rows = stage_report(spark, action)
-        return wall[0], rows
+        return wall[0], rows, compiles.getCount() - before
 
     for query in args.queries:
         spark.sparkContext.setJobDescription(query)
         runs = [run(query) for _ in range(args.reps + 1)][1:]
-        wall, rows = min(runs, key=lambda r: r[0])
-        jobs = " ".join(str(len({r["job"] for r in rs})) for _, rs in runs)
+        wall, rows, _ = min(runs, key=lambda r: r[0])
+        jobs = " ".join(str(len({r["job"] for r in rs})) for _, rs, _ in runs)
+        classes = " ".join(str(n) for _, _, n in runs)
         print(f"== {query} @ {args.sf} ({spark.sparkContext.master}): "
-              f"min {wall:.3f} s over {args.reps} runs, jobs/run {jobs}")
+              f"min {wall:.3f} s over {args.reps} runs, jobs/run {jobs}, "
+              f"classes compiled/run {classes}")
         print_report(rows)
     spark.stop()
 

@@ -134,8 +134,8 @@ def jaccard_pairs(
     t/(1+t)*(|x|+|y|) since |y| >= |x| — which cuts the candidate join ~35%
     over symmetric prefixes.  Candidates are further pruned by PPJoin's
     length filter (min(|x|,|y|) >= t*max(|x|,|y|)) and positional filter
-    (for the matched prefix shingle at positions (pa, pb), overlap <=
-    1 + min(|x|-pa, |y|-pb), which must reach the Jaccard-equivalent
+    (for the matched prefix shingle at 0-based positions (pa, pb), overlap
+    <= min(|x|-pa, |y|-pb), which must reach the Jaccard-equivalent
     overlap t/(1+t)*(|x|+|y|); the first common shingle of a qualifying
     pair always survives all three filters, so recall stays exact).  On a
     web-scale corpus a stop-shingle's join group no longer scales with the
@@ -144,12 +144,21 @@ def jaccard_pairs(
 
     Output: (id_a, id_b, inter, size_a, size_b, jaccard), id_a < id_b.
 
-    Checkpoints (:func:`~deep_ner_spark.compat.local_checkpoint`): the
-    shingle, dictionary, prefix, candidate and array frames each feed more
-    than one consumer (the prefix frame feeds BOTH sides of the candidate
-    self-join), and Spark would otherwise duplicate the whole upstream plan
-    (scan -> shingle -> freq join -> window) per consumer — checkpointing
-    computes each intermediate once (measured ~2x end-to-end).
+    One per-document frame ``(id, size, __sh)`` carries the whole global
+    order: ``__sh`` is the document's shingle ids sorted by (df, sid).  The
+    probe prefix is ``slice(__sh, 1, probe_len)``, posexploded with its
+    0-based position, and the verify joins the candidates back to that same
+    frame — PPJoin's prefix and verification read one object, each record's
+    tokens in one global order.
+
+    Three checkpointed frames (:func:`~deep_ner_spark.compat.local_checkpoint`):
+    the shingle, dictionary and per-document frames each feed more than one
+    consumer (the per-document frame feeds BOTH sides of the candidate
+    self-join and both verify joins), and Spark would otherwise duplicate
+    the whole upstream plan (scan -> shingle -> freq join -> collect) per
+    consumer — checkpointing computes each intermediate once (measured ~2x
+    end-to-end).  The candidate frame has one consumer and is not
+    checkpointed.
 
     Verification physics (r8, measured at a 50k-doc sf with a SATURATED
     shingle space — 28k distinct shingles, mean df 94, 18.5M candidates
@@ -162,14 +171,17 @@ def jaccard_pairs(
       over the checkpointed distinct-shingle frame; the bijection makes
       int-array intersection counts equal string-set intersection counts).
     * the per-doc array side is BROADCAST when it has at most
-      ``VERIFY_BROADCAST_MAX_DOCS`` rows: candidates then flow through two
+      ``VERIFY_BROADCAST_MAX_DOCS`` rows (every document with at least one
+      shingle, candidate or not): candidates then flow through two
       broadcast hash joins with no exchange at all.  Catalyst's own size
       estimate for a collect_list aggregate is far above threshold, so the
       hint is explicit; past the cap the shuffle join keeps working at any
       scale.
     """
-    from pyspark.sql.window import Window
-
+    # at t <= 0 a pair sharing no shingle qualifies yet is never a
+    # candidate; past 1 the prefix length goes negative
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # doc_shingles carries the per-doc size narrowly (no groupBy pass) and
     # evaluates the shingle HOF exactly once per row
     sh = local_checkpoint(doc_shingles(df, id_col, text_col, n))
@@ -178,26 +190,25 @@ def jaccard_pairs(
     # int dictionary: any injective sid makes (df, sid) a fixed global
     # rare-first order, which is all the prefix filter needs
     sids = local_checkpoint(freq.withColumn("sid", F.monotonically_increasing_id()))
-    sh_i = sh.join(sids, "shingle").select(id_col, "size", "df", "sid")
+    # one row per doc: its shingle ids in that order (shingle sets are
+    # distinct by construction, so the array is the doc's set)
+    docs = local_checkpoint(
+        sh.join(sids, "shingle")
+        .groupBy(id_col, "size")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "sid"))).alias("__ord"))
+        .select(id_col, "size", F.transform("__ord", lambda s: s["sid"]).alias("__sh"))
+    )
 
-    w = Window.partitionBy(id_col).orderBy("df", "sid")
     probe_len = F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1
     index_len = (
         F.col("size")
         - F.ceil(F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("size"))
         + 1
     )
-    prefix = local_checkpoint(
-        sh_i.withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= probe_len)
-        .select(
-            id_col,
-            "sid",
-            "pos",
-            "size",
-            (F.col("pos") <= index_len).alias("in_index"),
-        )
-    )
+    # pos is 0-based: the shingle at pos has size - pos shingles from it on
+    prefix = docs.select(
+        id_col, "size", F.posexplode(F.slice("__sh", 1, probe_len)).alias("pos", "sid")
+    ).withColumn("in_index", F.col("pos") < index_len)
     a = prefix.alias("a")  # index side: lesser (size, id)
     b = prefix.alias("b")  # probe side
     sa_c, sb_c = F.col("a.size"), F.col("b.size")
@@ -212,44 +223,22 @@ def jaccard_pairs(
         # length filter: min size must reach t * max size
         .where(F.least(sa_c, sb_c) >= F.lit(threshold) * F.greatest(sa_c, sb_c))
         # positional filter: remaining-suffix overlap bound
-        .where(
-            F.least(sa_c - F.col("a.pos"), sb_c - F.col("b.pos")) + 1
-            >= overlap_needed
-        )
+        .where(F.least(sa_c - F.col("a.pos"), sb_c - F.col("b.pos")) >= overlap_needed)
         .select(F.least(aid, bid).alias("id_a"), F.greatest(aid, bid).alias("id_b"))
         .distinct()
     )
-    # the candidate frame feeds BOTH the id semi-join below and the
-    # verify joins; unchecked, the whole candidate self-join runs twice
-    # (measured ~3.8s/pass at the 50k-doc sf)
-    cand = local_checkpoint(cand)
-    # exact verification: JVM array_intersect on the two shingle-id
-    # arrays.  The arrays are REBUILT from the checkpointed long form
-    # (semi-join on candidate ids, then collect_list) — the shingle HOF
-    # chain is never re-evaluated and the corpus text is never re-scanned
-    # for this step (shingle sets are distinct by construction, so
-    # collect_list reconstructs the set and order is irrelevant to
-    # array_intersect).
-    cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    cand_arrays = local_checkpoint(
-        sh_i.join(cand_ids, id_col)
-        .groupBy(id_col, "size")
-        .agg(F.collect_list("sid").alias("__sh"))
-    )
-    # broadcast the (checkpointed, hence cheaply countable) array side
-    # when small: candidates then never enter an exchange
-    bcast = cand_arrays.count() <= VERIFY_BROADCAST_MAX_DOCS
+    # exact verification: JVM array_intersect on the two shingle-id arrays
+    # of the frame the prefix read.  Broadcast the (checkpointed, hence
+    # cheaply countable) array side when small: candidates then never
+    # enter an exchange
+    bcast = docs.count() <= VERIFY_BROADCAST_MAX_DOCS
     wrap = F.broadcast if bcast else (lambda d: d)
-    arr_a = cand_arrays.select(
+    arr_a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("__sh").alias("__sh_a"),
         F.col("size").alias("size_a"),
     )
-    arr_b = cand_arrays.select(
+    arr_b = docs.select(
         F.col(id_col).alias("id_b"),
         F.col("__sh").alias("__sh_b"),
         F.col("size").alias("size_b"),

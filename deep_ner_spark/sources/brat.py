@@ -17,9 +17,9 @@ Spark shape: ``wholetext`` reads of both extensions + an inner pair-join on
 base name (anti-join -> missing-pair error), then one ``applyInPandas``
 call per document — documents parallelize, the sequential work never
 crosses a document.  Every Spark file source skips a 0-byte file when it
-splits the scan, so the ``.ann`` side starts from the listed file names
-and reads an empty annotation for a file that yields no row: a document
-without entities keeps its units.
+splits the scan, so both sides start from the listed file names and read
+``""`` for a file that yields no row: a document without entities keeps
+its units, and an empty text file is an empty document, not a missing one.
 """
 
 from __future__ import annotations
@@ -158,6 +158,19 @@ _OUT_SCHEMA = T.StructType(
 )
 
 
+def _read_listed(spark: SparkSession, pattern: str, value_col: str) -> DataFrame:
+    """(base_name, value_col): every file ``pattern`` lists, with its whole
+    text, or ``""`` for a 0-byte file, which the ``wholetext`` scan skips."""
+    read = spark.read.text(pattern, wholetext=True)
+    listed = spark.createDataFrame([(p,) for p in read.inputFiles()], "path string")
+    return listed.join(
+        read.select(F.input_file_name().alias("path"), "value"), "path", "left"
+    ).select(
+        F.regexp_extract("path", r"([^/]+)\.(txt|ann)$", 1).alias("base_name"),
+        F.coalesce("value", F.lit("")).alias(value_col),
+    )
+
+
 @named("brat.load")
 def load_brat_dataset(
     spark: SparkSession, data_dir: str, split_by_paragraphs: bool = True
@@ -169,19 +182,8 @@ def load_brat_dataset(
     """
     import pandas as pd
 
-    base = lambda path: F.regexp_extract(path, r"([^/]+)\.(txt|ann)$", 1)
-    txts = (
-        spark.read.text(f"{data_dir}/*.txt", wholetext=True)
-        .select(base(F.input_file_name()).alias("base_name"), F.col("value").alias("full_text"))
-    )
-    ann_read = spark.read.text(f"{data_dir}/*.ann", wholetext=True)
-    listed = spark.createDataFrame([(p,) for p in ann_read.inputFiles()], "path string")
-    anns = listed.join(
-        ann_read.select(F.input_file_name().alias("path"), "value"), "path", "left"
-    ).select(
-        base(F.col("path")).alias("base_name"),
-        F.coalesce("value", F.lit("")).alias("ann_text"),
-    )
+    txts = _read_listed(spark, f"{data_dir}/*.txt", "full_text")
+    anns = _read_listed(spark, f"{data_dir}/*.ann", "ann_text")
     missing = anns.join(txts, "base_name", "left_anti")
     if missing.count() > 0:
         raise ValueError(

@@ -558,8 +558,11 @@ def test_jaccard_prefix_exact_at_all_thresholds(spark):
     """The PPJoin prefix + length + positional candidate filters must be
     EXACT (no lost pairs) at any threshold — jaccard_pairs equals a
     pure-Python all-pairs Jaccard over the same distinct word 2-gram sets,
-    pair for pair, on a corpus with heavy shingle overlap, near-duplicates
-    and a containment pair."""
+    pair for pair, on a corpus with heavy shingle overlap, near-duplicates,
+    a containment pair, two exact-duplicate pairs and a one-token document
+    (no shingles, so in no pair).  At t=1.0 the probe and index prefixes
+    are one shingle long: an off-by-one in the prefix position shows
+    there.  A threshold outside (0, 1] raises."""
     from deep_ner_spark.operators.dedup import jaccard_pairs
 
     rng = np.random.default_rng(17)
@@ -568,10 +571,12 @@ def test_jaccard_prefix_exact_at_all_thresholds(spark):
     for i in range(40):
         n = int(rng.integers(4, 20))
         docs.append(" ".join(rng.choice(words, n)))
-    # near-dups and a containment pair
+    # near-dups, a containment pair, exact duplicates, a one-token doc
     docs.append(docs[0] + " extra")
     docs.append(docs[1])
     docs.append(" ".join(docs[2].split()[:-2]))
+    docs.append(docs[3])
+    docs.append("w7")
     df = spark.createDataFrame(pd.DataFrame({"doc_id": range(len(docs)), "text": docs}))
 
     sets = []
@@ -579,7 +584,7 @@ def test_jaccard_prefix_exact_at_all_thresholds(spark):
         toks = text.split()
         sets.append({" ".join(toks[i:i + 2]) for i in range(len(toks) - 1)})
 
-    for t in (0.3, 0.5, 0.7, 0.9):
+    for t in (0.3, 0.5, 0.7, 0.9, 1.0):
         got = {
             (r["id_a"], r["id_b"]): (r["inter"], r["size_a"], r["size_b"], round(r["jaccard"], 9))
             for r in jaccard_pairs(df, "doc_id", "text", n=2, threshold=t).collect()
@@ -593,6 +598,9 @@ def test_jaccard_prefix_exact_at_all_thresholds(spark):
                     want[(i, j)] = (inter, len(sets[i]), len(sets[j]), round(inter / union, 9))
         assert got == want, f"threshold {t}: {len(got)} pairs != reference {len(want)}"
         assert want, f"threshold {t}: corpus has no qualifying pair"
+    for t in (0.0, 1.5):
+        with pytest.raises(ValueError, match="threshold must be in"):
+            jaccard_pairs(df, "doc_id", "text", n=2, threshold=t)
 
 
 def test_embedding_near_dup_occupancy_guard(spark, monkeypatch):

@@ -192,6 +192,27 @@ def test_brat_empty_annotation_file_loads_units(spark, brat_dir, tmp_path):
     assert [r["sample_id"] for r in spans.collect() if r["sample_id"] >= 4] == []
 
 
+def test_brat_empty_text_file_loads_one_empty_unit(spark, tmp_path):
+    """A 0-byte ``.txt`` is an empty document, not a missing one: the
+    ``wholetext`` scan skips it, so the loader reads it from the listed
+    files.  ``b`` (empty ``.txt`` and ``.ann``) gives the one empty unit
+    that the per-document core returns for it."""
+    from deep_ner_spark.sources.brat import load_brat_dataset, process_brat_document
+
+    text, ann = BRAT_DOCS["a_first"]
+    (tmp_path / "a.txt").write_text(text, encoding="utf-8")
+    (tmp_path / "a.ann").write_text(ann, encoding="utf-8")
+    (tmp_path / "b.txt").write_bytes(b"")
+    (tmp_path / "b.ann").write_bytes(b"")
+    units, spans = load_brat_dataset(spark, str(tmp_path))
+    assert process_brat_document("", "") == [("", {})]
+    assert [tuple(r) for r in units.orderBy("sample_id").collect()] == [
+        (0, "a", 0, "Anna met Ivan Petrov in Paris."),
+        (1, "b", 0, ""),
+    ]
+    assert [r["sample_id"] for r in spans.collect() if r["sample_id"] == 1] == []
+
+
 def test_brat_missing_text_file_raises(spark, brat_dir, tmp_path):
     from deep_ner_spark.sources.brat import load_brat_dataset
 

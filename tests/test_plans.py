@@ -274,8 +274,9 @@ def test_bench_flagship_agg_keeps_all_stages_live(tables, spark):
 def test_jaccard_default_uses_prefix_filtering(spark):
     """VERDICT r1 flagged the naive shared-shingle self-join as the
     scale-killer at t<0.6; EVERY threshold must run the PPJoin prefix
-    path (row_number ranking present in the plans the call executed —
-    checkpoints cut the upstream window out of the final plan text)."""
+    path: the self-join input is the posexploded ``slice`` of each
+    document's ordered shingle-id array (checked in the plans the call
+    executed), and no plan ranks shingles with a window."""
     from deep_ner_spark.operators.dedup import jaccard_pairs
 
     df = spark.createDataFrame(
@@ -287,8 +288,12 @@ def test_jaccard_default_uses_prefix_filtering(spark):
             f"test.jaccard_prefix_plan_{t}",
             lambda: jaccard_pairs(df, "doc_id", "text", n=2, threshold=t).collect(),
         )
-        assert any("row_number" in p for p in plans), (
-            f"t={t}: prefix ranking missing\n" + "\n".join(p[:500] for p in plans)
+        shown = "\n".join(p[:500] for p in plans)
+        assert any(re.search(r"posexplode\(slice\(__sh#\d+, 1, ", p) for p in plans), (
+            f"t={t}: the self-join does not read the prefix slice\n" + shown
+        )
+        assert not any(re.search(r"\bWindow\b", p) for p in plans), (
+            f"t={t}: a Window ranks the shingles\n" + shown
         )
 
 

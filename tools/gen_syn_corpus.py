@@ -37,7 +37,7 @@ while doc_id < N_DOCS:
                      len(t2)))
         doc_id += 1
 
-spark = get_spark("gen-syn", master="local[16]")
+spark = get_spark("gen-syn")
 spark.sparkContext.setLogLevel("ERROR")
 df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string, n_chars long")
 df.repartition(64).write.mode("overwrite").parquet(f"{OUT}/documents.parquet")
